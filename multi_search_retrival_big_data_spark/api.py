@@ -123,11 +123,14 @@ class SearchEngine:
             for ch, toks in channels.items()
             if toks
         }
-        if not channel_qterms:
-            return self.spark.createDataFrame([], "doc_id BIGINT, score DOUBLE")
-        hits = sparse.multichannel_tfidf_score(
-            self._postings, channel_qterms, k_per_channel=k, k=k, round_to=6
-        )
+        if channel_qterms:
+            hits = sparse.multichannel_tfidf_score(
+                self._postings, channel_qterms, k_per_channel=k, k=k, round_to=6
+            )
+        else:
+            # an empty panel still takes the grouping branch, so both
+            # shapes keep their schema (Catalyst folds the empty plan)
+            hits = tables.local_frame(self.spark, [], "doc_id BIGINT, score DOUBLE")
         if not group:
             return hits
         hydrated = grouping.hydrate(hits, self.docs, "doc_id", ["source"])
@@ -137,7 +140,8 @@ class SearchEngine:
     def feedback(
         self, prev_hits: DataFrame, pos_ids: list[int], neg_ids: list[int], k: int = 50
     ) -> DataFrame:
-        votes = self.spark.createDataFrame(
+        votes = tables.local_frame(
+            self.spark,
             [(i, 1.0) for i in pos_ids] + [(i, -1.0) for i in neg_ids],
             "vec_id BIGINT, sign DOUBLE",
         )

@@ -501,7 +501,7 @@ def pq_trained(
             for mi, book in sorted(books.items())
             for code, cv in book
         ]
-        book_df = spark.createDataFrame(rows, "m INT, code INT, cv ARRAY<DOUBLE>")
+        book_df = tables.local_frame(spark, rows, "m INT, code INT, cv ARRAY<DOUBLE>")
         _drop_stale_location(spark, bname)
         book_df.write.mode("overwrite").format("parquet").saveAsTable(bname)
         codes = ann.pq_encode(
@@ -1427,8 +1427,8 @@ def ivfpq(
                 "parquet"
             ).saveAsTable(cname)
             _drop_stale_location(spark, bname)
-            spark.createDataFrame(
-                book_rows, "m INT, code INT, cv ARRAY<DOUBLE>"
+            tables.local_frame(
+                spark, book_rows, "m INT, code INT, cv ARRAY<DOUBLE>"
             ).write.mode("overwrite").format("parquet").saveAsTable(bname)
             codes = ann.pq_encode(
                 res, vec_col="r", dim=dim, m=m, ks=ks, stride=pq_stride,

@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.operators import bridges, temporal
 
 FPS = 25.0
@@ -50,8 +51,8 @@ def synth_videos(spark: SparkSession, collections: int = 2, videos_per: int = 3,
         for c in range(1, collections + 1)
         for v in range(1, videos_per + 1)
     ]
-    return spark.createDataFrame(
-        rows, "collection STRING, video STRING, fps DOUBLE, n_frames INT"
+    return tables.local_frame(
+        spark, rows, "collection STRING, video STRING, fps DOUBLE, n_frames INT"
     )
 
 

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.functions.rounding import det_round
 from multi_search_retrival_big_data_spark.functions.vector import (
     cosine_sim,
@@ -905,8 +906,8 @@ def batch_lsh_topk(
         probe_pairs.extend(
             (qid, b, qband) for b, qband in query_bands(qsig, bands, rows)
         )
-    probe_df = spark.createDataFrame(
-        probe_pairs, "query_id INT, band INT, bval STRING"
+    probe_df = tables.local_frame(
+        spark, probe_pairs, "query_id INT, band INT, bval STRING"
     )
     if banded is None:
         banded = banded_signatures(emb, id_col, vec_col, dim, num_planes, bands)
@@ -920,7 +921,8 @@ def batch_lsh_topk(
         .select("query_id", id_col)
         .distinct()
     )
-    qdf = spark.createDataFrame(
+    qdf = tables.local_frame(
+        spark,
         [(qid, [float(x) for x in qv]) for qid, qv in queries],
         "query_id INT, __qv ARRAY<DOUBLE>",
     )
@@ -991,8 +993,9 @@ def batch_ivf_topk(
         ranked = sorted(cent, key=lambda c: (_l2_py(c[1], qv), c[0]))
         probe_pairs.extend((qid, cid) for cid, _ in ranked[:nprobe])
     all_cids = sorted({cid for _, cid in probe_pairs})
-    probe_df = spark.createDataFrame(probe_pairs, "query_id INT, cid BIGINT")
-    qdf = spark.createDataFrame(
+    probe_df = tables.local_frame(spark, probe_pairs, "query_id INT, cid BIGINT")
+    qdf = tables.local_frame(
+        spark,
         [(qid, [float(x) for x in qv]) for qid, qv in queries],
         "query_id INT, __qv ARRAY<DOUBLE>",
     )
@@ -1425,7 +1428,8 @@ def ivfpq_residuals(
 
     spark = emb.sparkSession
     cents_df = F.broadcast(
-        spark.createDataFrame(
+        tables.local_frame(
+            spark,
             [(int(c), [float(x) for x in cv]) for c, cv in cents],
             "cid INT, __cv ARRAY<DOUBLE>",
         )

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
 # MinHash defaults shared with the oracle-SQL generators in
@@ -586,7 +587,8 @@ def connected_components_auto(
                         parent[hi] = lo
                 rows = [(n, find(n)) for n in parent]
                 node_type = dict(pairs.dtypes)[id_a]
-                return pairs.sparkSession.createDataFrame(
+                return tables.local_frame(
+                    pairs.sparkSession,
                     rows, f"node {node_type}, cluster_id {node_type}"
                 )
         # distributed fallback reuses the persisted/deduped edges (both
@@ -1500,7 +1502,7 @@ def keep_canonical(
     shuffles. The membership sides carry explicit broadcast hints for
     the same reason jaccard_for_pairs broadcasts its candidate set:
     the verified-duplicate population is assumed ≪ corpus (without the
-    hints their createDataFrame/driver-union-find lineage has no size
+    hints the distributed components lineage has no usable size
     stats and Spark falls back to sort-merge, shuffling the corpus
     twice — measured 6.3× vs 3.8× on the 10× stress tier). No
     corpus-wide window, no skew exposure: the join key is the unique

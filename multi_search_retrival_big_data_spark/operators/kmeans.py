@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
 
 KMEANS_ITERS = 2
@@ -235,7 +236,8 @@ def centroids_df(spark_df_like: DataFrame, cents: Centroids) -> DataFrame:
     persistence in the index store — 65×64 doubles, always broadcast-
     sized)."""
     spark = spark_df_like.sparkSession
-    return spark.createDataFrame(
+    return tables.local_frame(
+        spark,
         [(int(cid), [float(x) for x in cv]) for cid, cv in cents],
         "cid INT, cv ARRAY<DOUBLE>",
     )
@@ -310,7 +312,7 @@ def train_lloyd_pq(
                 for code, cv in book
             ]
             bdf = F.broadcast(
-                spark.createDataFrame(book_rows, "m INT, code INT, cv ARRAY<DOUBLE>")
+                tables.local_frame(spark, book_rows, "m INT, code INT, cv ARRAY<DOUBLE>")
             )
             slices = [
                 F.struct(

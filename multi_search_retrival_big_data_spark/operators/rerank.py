@@ -32,6 +32,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.encoders import CrossEncoder, FakeCrossEncoder
 from multi_search_retrival_big_data_spark.functions.rounding import det_round
 
@@ -104,7 +105,9 @@ def mmr_rerank(
     (utils/faiss_processing.py re-query path). Every arithmetic step
     (λ·rel − (1−λ)·max sim, IEEE doubles over det-rounded inputs) is
     replicated verbatim by the recursive-CTE oracle, so the selection
-    is engine-exact. Returns (sel_rank, id, rel)."""
+    is engine-exact. The selected page goes back as a driver-built
+    `LocalTableScan` (tables.local_frame): collecting it runs no job
+    and starts no Python worker. Returns (sel_rank, id, rel)."""
     from multi_search_retrival_big_data_spark.functions.rounding import det_round
     from multi_search_retrival_big_data_spark.functions.vector import cosine_sim
 
@@ -172,9 +175,7 @@ def mmr_rerank(
         selected.append(best[1])
         remaining.discard(best[1])
     rows = [(i + 1, cid, rel[cid]) for i, cid in enumerate(selected)]
-    return spark.createDataFrame(
-        rows, f"sel_rank BIGINT, {id_col} BIGINT, rel DOUBLE"
-    )
+    return tables.local_frame(spark, rows, f"sel_rank BIGINT, {id_col} BIGINT, rel DOUBLE")
 
 
 def cross_encoder_rerank(

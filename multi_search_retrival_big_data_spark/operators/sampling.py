@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.operators.dedup import shingle_int_value
 
 # 2^32 — the hash-space size of the 32-bit md5-prefix value used by
@@ -139,7 +140,7 @@ def binned_quantiles(
     )
     total = df.agg(F.count(F.lit(1)).alias("N"))
     ps_df = (
-        df.sparkSession.createDataFrame([(float(p),) for p in ps], "p double")
+        tables.local_frame(df.sparkSession, [(float(p),) for p in ps], "p double")
         .crossJoin(F.broadcast(total))
         .select("p", (F.col("p") * F.col("N")).alias("t"))
     )

@@ -34,7 +34,9 @@ from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.functions.text import (
     char_ngrams,
     tokenize,
@@ -172,9 +174,16 @@ def query_terms(
 def query_vector(postings: DataFrame, qterms: list[tuple[str, int]]) -> DataFrame:
     """(term, qw) — the L2-normalized TF-IDF query vector in the
     corpus vector space. OOV query terms drop out (the fitted model
-    defines the space)."""
-    spark = postings.sparkSession
-    q = spark.createDataFrame([(t, float(c)) for t, c in qterms], "term STRING, qtf DOUBLE")
+    defines the space).
+
+    The query norm is a window sum over the request-sized (term, idf)
+    rows, computed in the same pass as the weights: the idf lookup
+    (a scan of the postings) runs once per request. A separate 1-row
+    norm aggregate would read `qv` a second time — a second postings
+    scan plus a nested-loop join to attach the scalar."""
+    q = tables.local_frame(
+        postings.sparkSession, [(t, float(c)) for t, c in qterms], "term STRING, qtf DOUBLE"
+    )
     # idf is only needed for the query's own terms — an isin filter
     # (pushed into the scan) before the distinct keeps this a
     # few-row lookup instead of a full-vocabulary de-duplication
@@ -183,10 +192,9 @@ def query_vector(postings: DataFrame, qterms: list[tuple[str, int]]) -> DataFram
         .select("term", "idf")
         .distinct()
     )
-    qv = q.join(idf, "term")
-    qnorm = qv.agg(F.sqrt(F.sum((F.col("qtf") * F.col("idf")) ** 2)).alias("__qnorm"))
-    return qv.crossJoin(F.broadcast(qnorm)).select(
-        "term", ((F.col("qtf") * F.col("idf")) / F.col("__qnorm")).alias("qw")
+    qnorm = F.sqrt(F.sum((F.col("qtf") * F.col("idf")) ** 2).over(Window.partitionBy()))
+    return q.join(idf, "term").select(
+        "term", ((F.col("qtf") * F.col("idf")) / qnorm).alias("qw")
     )
 
 
@@ -410,8 +418,11 @@ def bm25_score(
 ) -> DataFrame:
     """Score = Σ_t qtf(t) · score_w(t, doc) over matched terms.
     (BM25Okapi.get_scores counts each query occurrence — bm25.py:99.)"""
-    spark = bm25_postings.sparkSession
-    q = spark.createDataFrame([(t, float(c)) for t, c in qterms], "term STRING, qtf DOUBLE")
+    q = tables.local_frame(
+        bm25_postings.sparkSession,
+        [(t, float(c)) for t, c in qterms],
+        "term STRING, qtf DOUBLE",
+    )
     base = bm25_postings
     if subset is not None:
         base = base.join(
@@ -504,11 +515,12 @@ def multichannel_tfidf_score(
     Replaces C independent score+fuse branches (each recomputing its
     fit) with shared shuffles keyed by channel. Per-channel top-k is a
     row_number window partitioned by channel — the windowed relation
-    holds only query-matched candidates, not the corpus."""
-    from pyspark.sql.window import Window
-
-    spark = postings.sparkSession
-    q = spark.createDataFrame(
+    holds only query-matched candidates, not the corpus. Each channel's
+    query norm is a window sum over the request-sized (channel, term,
+    idf) rows, so the idf lookup scans the postings once (see
+    query_vector)."""
+    q = tables.local_frame(
+        postings.sparkSession,
         [
             (ch, t, float(c))
             for ch, terms in channel_qterms.items()
@@ -522,12 +534,11 @@ def multichannel_tfidf_score(
         .select("channel", "term", "idf")
         .distinct()
     )
-    qv = q.join(idf, ["channel", "term"])
-    qnorm = qv.groupBy("channel").agg(
-        F.sqrt(F.sum((F.col("qtf") * F.col("idf")) ** 2)).alias("__qnorm")
+    qnorm = F.sqrt(
+        F.sum((F.col("qtf") * F.col("idf")) ** 2).over(Window.partitionBy("channel"))
     )
-    qv = qv.join(qnorm, "channel").select(
-        "channel", "term", ((F.col("qtf") * F.col("idf")) / F.col("__qnorm")).alias("qw")
+    qv = q.join(idf, ["channel", "term"]).select(
+        "channel", "term", ((F.col("qtf") * F.col("idf")) / qnorm).alias("qw")
     )
     addend = F.col("qw") * F.col("weight")
     score = (
@@ -605,10 +616,8 @@ def batch_tfidf_score(
     the broadcast query side carries (query_id, term, qw).
 
     Returns (query_id, doc_id, score)."""
-    from pyspark.sql.window import Window
-
-    spark = postings.sparkSession
-    q = spark.createDataFrame(
+    q = tables.local_frame(
+        postings.sparkSession,
         [(qid, t, float(c)) for qid, terms in batch_qterms.items() for t, c in terms],
         "query_id INT, term STRING, qtf DOUBLE",
     )

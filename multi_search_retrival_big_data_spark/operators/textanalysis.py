@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.functions.text import tokenize
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
@@ -316,7 +317,8 @@ def language_id(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     The stopword table is a literal inline dimension — broadcast join,
     no shuffle of the token stream beyond the groupBy."""
     spark = docs.sparkSession
-    sw = spark.createDataFrame(
+    sw = tables.local_frame(
+        spark,
         [(lang, word) for lang, words in STOPWORDS.items() for word in words],
         "lang STRING, word STRING",
     )

@@ -1721,7 +1721,8 @@ def ann_pq_batch_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     code-table scan is even cheaper to amortize)."""
     emb = tables.load(spark, "embeddings", sf_dir)
     codes = index_store.pq_codes(spark, sf_dir)
-    qdf = spark.createDataFrame(
+    qdf = tables.local_frame(
+        spark,
         [(0, [float(x) for x in QUERY_VEC]), (1, [float(x) for x in QUERY_VEC_B])],
         "query_id INT, qvec ARRAY<DOUBLE>",
     )

@@ -756,8 +756,8 @@ def curation_quality_threshold_grid(spark: SparkSession, sf_dir: str) -> DataFra
 
     docs = tables.load(spark, "documents", sf_dir)
     qual = ta.quality_features(docs, "doc_id", "text").select("doc_id", "quality")
-    thr = spark.createDataFrame(
-        [(float(t),) for t in _QT_THRESHOLDS], "threshold DOUBLE"
+    thr = tables.local_frame(
+        spark, [(float(t),) for t in _QT_THRESHOLDS], "threshold DOUBLE"
     )
     total = docs.agg(F.count(F.lit(1)).alias("total"))
     kept = F.sum(F.when(F.col("quality") >= F.col("threshold"), 1).otherwise(0))

@@ -122,7 +122,7 @@ def dense_rocchio_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep_vec: the rerank consumes the candidate vectors directly, so
     # the plan scans the corpus twice (top-k + vote fetch), not thrice
     candidates = dense.topk_cosine(emb, QUERY_VEC, k=20, round_to=6, keep_vec=True)
-    votes = spark.createDataFrame(ROCCHIO_VOTES, "vec_id BIGINT, sign DOUBLE")
+    votes = tables.local_frame(spark, ROCCHIO_VOTES, "vec_id BIGINT, sign DOUBLE")
     return dense.rocchio_rerank(emb, candidates, votes, k=10, round_to=6)
 
 
@@ -172,7 +172,8 @@ def dense_batch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from multi_search_retrival_big_data_spark.operators.dense import batch_topk_cosine
 
     emb = tables.load(spark, "embeddings", sf_dir)
-    qdf = spark.createDataFrame(
+    qdf = tables.local_frame(
+        spark,
         [(i, [float(x) for x in v]) for i, v in _BATCH_QUERIES],
         "query_id INT, qvec ARRAY<DOUBLE>",
     )

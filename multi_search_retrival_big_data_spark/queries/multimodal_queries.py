@@ -1305,7 +1305,8 @@ def multimodal_audio_family_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         planted.unpersist()
     finally:
         clips.unpersist()
-    return spark.createDataFrame(
+    return tables.local_frame(
+        spark,
         rows,
         "arm STRING, n_landmarks BIGINT, kept_landmarks BIGINT, "
         "candidates BIGINT, planted BIGINT, found BIGINT, recall DOUBLE",
@@ -1556,7 +1557,8 @@ def multimodal_image_family_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         fpairs.unpersist()
     finally:
         frames.unpersist()
-    return spark.createDataFrame(
+    return tables.local_frame(
+        spark,
         rows,
         "arm STRING, all_pairs BIGINT, capped_pairs BIGINT, "
         "max_bucket_size BIGINT, planted BIGINT, found BIGINT, recall DOUBLE",

@@ -246,4 +246,4 @@ def index_gc_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     }
     rows = sorted((k, int(v)) for k, v in probes.items())
-    return spark.createDataFrame(rows, "probe STRING, ok INT")
+    return tables.local_frame(spark, rows, "probe STRING, ok INT")

@@ -683,7 +683,7 @@ def index_lifecycle_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         and spark.catalog.tableExists(gen_b),
     }
     rows = sorted((k, int(v)) for k, v in probes.items())
-    return spark.createDataFrame(rows, "probe STRING, ok INT")
+    return tables.local_frame(spark, rows, "probe STRING, ok INT")
 
 
 @query(

@@ -83,7 +83,7 @@ def search_space_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     source group (the 'whole shot'), complement is an anti-join,
     intersections are semi-joins."""
     docs = tables.load(spark, "documents", sf_dir)
-    ignore = spark.createDataFrame([(1,), (5,), (9,)], "doc_id BIGINT")
+    ignore = tables.local_frame(spark, [(1,), (5,), (9,)], "doc_id BIGINT")
     keep = docs.filter(F.col("lang").isin("en", "de")).select("doc_id")
     space = docs.filter(F.col("n_chars") > 200).select("doc_id")
     allowed = filters.build_search_space(

@@ -48,13 +48,40 @@ def test_panel_search_runs_and_empty_panel_is_empty(engine):
     out = engine.panel_search(panel, k=10)
     assert out.columns == ["doc_id", "score"]
     out.collect()  # grid tokens won't match the synthetic corpus; tags may
-    assert engine.panel_search({"dragObject": [], "tags": [], "amount": ""}).count() == 0
+    empty = {"dragObject": [], "tags": [], "amount": ""}
+    assert engine.panel_search(empty).count() == 0
+    # an empty panel keeps the shape its `group` flag asks for
+    ungrouped = engine.panel_search(empty, group=False)
+    assert ungrouped.columns == ["doc_id", "score"]
+    assert engine.panel_search(panel, k=10, group=False).schema == ungrouped.schema
+    grouped = engine.panel_search(empty, group=True)
+    assert grouped.columns == ["source", "best_score", "hit_count", "best_id"]
+    assert engine.panel_search(panel, k=10, group=True).schema == grouped.schema
+    assert grouped.count() == 0
 
 
 def test_feedback_rerank(engine):
     prev = engine.text_search("anything", k=20, group=False)
     out = engine.feedback(prev, pos_ids=[prev.first()["vec_id"]], neg_ids=[], k=5).collect()
     assert len(out) == 5
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_serving_plans_build_request_rows_in_the_driver(engine):
+    """Request-sized rows (panel terms, votes) are LocalTableScans: no
+    `Scan ExistingRDD`, whose PythonRDD starts Python workers on every
+    evaluation."""
+    panel = {"dragObject": [], "tags": ["scan", "window"], "amount": ""}
+    prev = engine.text_search("anything", k=20, group=False)
+    for df in (
+        engine.panel_search(panel, k=10, group=True),
+        engine.feedback(prev, pos_ids=[1, 2], neg_ids=[3], k=5),
+    ):
+        assert "ExistingRDD" not in _executed_plan(df)
 
 
 def test_related_neighborhood_same_source(engine):

@@ -96,6 +96,12 @@ def test_mmr_deterministic_and_k_clamped(spark):
     assert rerank.mmr_rerank(_mmr_cands(spark), k=1).count() == 1
 
 
+def test_mmr_page_is_a_local_table_scan(spark):
+    page = rerank.mmr_rerank(_mmr_cands(spark), k=3)
+    plan = page._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+
+
 def test_mmr_pure_relevance_at_lambda_one(spark):
     got = rerank.mmr_rerank(_mmr_cands(spark), k=3, lam=1.0).collect()
     assert [r.vec_id for r in got] == [1, 2, 3]  # rel order, no diversity term

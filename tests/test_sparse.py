@@ -214,3 +214,32 @@ def test_prf_is_deterministic(spark):
     a = [(r.doc_id, r.score) for r in sparse.tfidf_prf_search(postings, q, k=10, round_to=6).collect()]
     b = [(r.doc_id, r.score) for r in sparse.tfidf_prf_search(postings, q, k=10, round_to=6).collect()]
     assert a == b
+
+
+def _postings_reads(df) -> int:
+    """Catalog-table leaves in the optimized plan — one per read of the
+    persisted postings index (the only table these plans touch)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(1 for line in plan.splitlines() if "Relation spark_catalog." in line)
+
+
+def test_query_norm_shares_the_single_idf_lookup(spark, sf_dir):
+    """The query side reads the postings once (idf lookup, norm in the
+    same pass) and the scoring join once more — a separate norm
+    aggregate would add a third read and a nested-loop join. The query
+    literal is a LocalTableScan, never a PythonRDD scan."""
+    from multi_search_retrival_big_data_spark import index_store
+
+    post = index_store.tfidf_postings(spark, sf_dir)
+    single = sparse.tfidf_score(post, sparse.query_terms("slow scan table filter"), k=10)
+    mc = index_store.multichannel_postings(
+        spark, sf_dir, {"bbox": (1, 1), "color": (1, 1), "tag": (1, 1), "number": (1, 1)}
+    )
+    multi = sparse.multichannel_tfidf_score(
+        mc, {"tag": [("scan", 1), ("window", 1)], "color": [("red", 2)]}, 10, 10
+    )
+    for df in (single, multi):
+        assert _postings_reads(df) == 2
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "NestedLoopJoin" not in plan

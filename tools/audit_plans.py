@@ -18,32 +18,23 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 # queries where a nested-loop join is BY DESIGN: broadcasting a 1-row
-# aggregate (min/max/norm/count) back into the plan.
+# aggregate (min/max/count) back into the plan. Sparse query norms are
+# not on this list: they are window sums over the request-sized query
+# vector (operators/sparse.query_vector), so no sparse scorer adds one.
 SCALAR_BROADCAST_OK = {
     "fusion_dual_model_ensemble",
     "fusion_dual_model_d64_arms",  # min-max norm: 1-row scalar broadcast per list
     "fusion_dual_model_true_d768",  # same min-max 1-row broadcasts, at width
     "fusion_l2_dedup_max",
-    "fusion_hybrid_sparse_dense",
-    "fusion_rrf_hybrid",  # sparse scorer's 1-row qnorm broadcast (rank fuse itself is shuffle-only)
-    "rerank_cross_encoder",  # sparse first stage's 1-row qnorm broadcast; rerank side is request-sized
+    "fusion_hybrid_sparse_dense",  # min-max norm: 1-row min/max broadcast per fused list
     "trimodal_context_search",
-    "sparse_tfidf_topk",
-    "sparse_tfidf_topk_subset",
-    "sparse_tfidf_ngram13_topk",
-    "sparse_bm25_topk",
     "speech_asr_bm25_search",  # in-plan BM25 fit: 1-row n/avgdl/avgidf scalar broadcasts
-    "ocr_tfidf_search",        # in-plan TF-IDF fit: 1-row n/qnorm scalar broadcasts
-    "sparse_tfidf_char_fallback",
-    "sparse_multichannel_context",
-    "sparse_prf_expansion_topk",  # two qnorm 1-row broadcasts (initial + re-score pass)
+    "ocr_tfidf_search",        # in-plan TF-IDF fit: 1-row corpus-size (n) scalar broadcasts
     "dense_knn_by_id",       # 1-row reconstructed query vector
     "endpoint_image_search",  # same knn_by_id 1-row anchor, behind the facade
     "monitor_text_oov_rate",  # fit_tfidf's 1-row corpus-size broadcast in the model branch
     "dense_rocchio_rerank",  # tiny vote set cross candidates
     "endpoint_feedback_rerank",  # same rocchio vote-set cross, behind the facade
-    "group_hits_by_source",  # sparse scorer's 1-row qnorm broadcast
-    "group_quota_topk",      # same sparse first stage's 1-row qnorm broadcast
     "emb_near_dup_exact",    # all-pairs audit path: cross join BY DESIGN
     # (ann_ivf_topk_cosine / ann_recall_at_k no longer need an entry:
     # the quantizer assignment is precomputed — index_store.ivf_assignments)
