@@ -11,11 +11,17 @@ scan + 3 shuffles.
 
 This module is the Spark-native analogue of the fitted-artifact load:
 each fitted index is materialized ONCE per (corpus, config) as a
-parquet table bucketed + sorted by `term` (sparse.write_postings_bucketed)
-and every query reads the table. Bucketing by the join/agg key means
-repeated scoring joins and idf lookups read pre-clustered buckets with
-no Exchange on the index side. The first call in a session builds (or
-overwrites) the table; subsequent calls are a catalog lookup.
+parquet table bucketed + sorted by `term` and every query reads the
+table. Bucketing by the join/agg key means repeated scoring joins and
+idf lookups read pre-clustered buckets with no Exchange on the index
+side. The first call in a session builds (or overwrites) the table;
+subsequent calls are a catalog lookup.
+
+Every index table goes through the same two helpers: `_materialize`
+decides whether to build (under a per-table lock) and drops what the
+build replaces, `_write` is the one writer and owns the three at-rest
+layouts (bucketed, partitioned, plain). The builders below only say
+what to compute and which layout it gets.
 
 At real scale this build is the ingest job that maintains the index as
 the corpus grows. Table names carry a CONTENT fingerprint of the
@@ -47,17 +53,21 @@ retraining.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import re
 import shutil
+import tempfile
+import threading
 import urllib.parse
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.operators import ann, dedup, sparse
+from multi_search_retrival_big_data_spark.session import scratch_dir
 
 POSTINGS_BUCKETS = 32
 
@@ -98,7 +108,8 @@ def _drop_stale_location(spark: SparkSession, name: str) -> None:
     file: URI, so plain filesystem removal suffices (on a
     metastore-backed cluster the catalog entry survives sessions and
     this branch never fires; dropping there goes through
-    spark.sql('DROP TABLE'), which owns the location)."""
+    spark.sql('DROP TABLE'), which owns the location). Called only by
+    _materialize, right before a build."""
     wh = spark.conf.get("spark.sql.warehouse.dir")
     parsed = urllib.parse.urlparse(wh)
     if parsed.scheme not in ("", "file"):
@@ -158,13 +169,85 @@ def gc_stale_index_tables(
     return dropped
 
 
-def _read_or_build(
-    spark: SparkSession, name: str, build: "callable", buckets: int = POSTINGS_BUCKETS
-) -> DataFrame:
-    if not spark.catalog.tableExists(name):
-        _drop_stale_location(spark, name)
-        sparse.write_postings_bucketed(build(), name, buckets=buckets)
-    return spark.table(name)
+def _write(
+    df: DataFrame, name: str, layout: tuple[str, ...], mode: str = "overwrite"
+) -> None:
+    """The package's one index-table writer. `layout` is the table's
+    at-rest layout:
+
+    - ("bucket", col): POSTINGS_BUCKETS buckets on `col`, sorted by
+      it. Joins and aggregations keyed by `col` then read
+      pre-clustered buckets and Catalyst drops the Exchange on the
+      index side (tests assert no shuffle in the postings groupBy
+      plan). At 100 TB this is the difference between re-shuffling
+      the index per query batch and a shuffle-free co-located join
+      against a similarly bucketed query-batch table. Appends must
+      carry the same spec, hence one bucket count for every table.
+    - ("partition", *cols): one directory per value of `cols`, so a
+      probe on them (IVF nprobe cells, LSH band values) is partition
+      pruning — FAISS's inverted-list seek. Rows are clustered by
+      `cols` before the write (r10, guide §6 "small files hurt
+      twice"): otherwise every write task emits a file into every
+      partition it holds rows for — up to tasks × partitions tiny
+      files (~10⁴ at the 10× tier's nlist=324, measured 13.6 s of
+      pure file creation/commit for a 20k-row table). One exchange
+      yields one file per populated partition; content is identical.
+    - ("plain",): model tables (centroids, codebooks, bounds) and
+      corpora read whole.
+
+    `mode` is "overwrite" or "append". An append leaves the writing
+    session's cached file listing of the table stale — a later read
+    would serve the pre-append snapshot — so the table is refreshed."""
+    kind, *cols = layout
+    if kind == "partition":
+        df = df.repartition(*[df[c] for c in cols])
+    w = df.write.mode(mode).format("parquet")
+    if kind == "bucket":
+        w = w.bucketBy(POSTINGS_BUCKETS, cols[0]).sortBy(cols[0])
+    elif kind == "partition":
+        w = w.partitionBy(*cols)
+    w.saveAsTable(name)
+    if mode == "append":
+        df.sparkSession.catalog.refreshTable(name)
+
+
+_BUILD_LOCKS: dict[str, threading.RLock] = {}
+_BUILD_LOCKS_GUARD = threading.Lock()
+
+
+def _materialize(
+    spark: SparkSession,
+    names: Sequence[str],
+    build: Callable[[], None],
+    rebuild: bool = False,
+) -> tuple[DataFrame, ...]:
+    """The package's one build-or-read path: returns `spark.table(n)`
+    for each of `names`, first running `build()` — which writes every
+    one of them through `_write` — when any is missing from the
+    catalog or `rebuild` is set (the *_incremental proofs rebuild on
+    every call: a cached post-append table would hide a regression in
+    the append path). Before the build each name is dropped from the
+    catalog and its stale warehouse location removed.
+
+    The check and the build run under one lock per table name, so
+    threads of one process asking for the same index wait for a single
+    build instead of racing it through drop and CREATE
+    (TABLE_OR_VIEW_ALREADY_EXISTS, or a write into a location the
+    other thread just removed). A build may materialize the tables it
+    reads (minhash_sigs reads doc_shingles), never one it writes, so
+    nested waits follow that acyclic order and cannot deadlock.
+    Separate JVMs sharing one warehouse directory still race."""
+    with _BUILD_LOCKS_GUARD:
+        locks = [_BUILD_LOCKS.setdefault(n, threading.RLock()) for n in sorted(names)]
+    with contextlib.ExitStack() as held:
+        for lock in locks:
+            held.enter_context(lock)
+        if rebuild or not all(spark.catalog.tableExists(n) for n in names):
+            for n in names:
+                spark.sql(f"DROP TABLE IF EXISTS {n}")
+                _drop_stale_location(spark, n)
+            build()
+        return tuple(spark.table(n) for n in names)
 
 
 def tfidf_postings(
@@ -179,23 +262,24 @@ def tfidf_postings(
     (object_retrieval.py:79-89) as its own persisted index."""
     prefix = "c" if analyzer == "char" else ""
     name = _table_name("tfidf", sf_dir, f"{prefix}{ngram_range[0]}{ngram_range[1]}", "documents")
-    return _read_or_build(
-        spark,
-        name,
-        lambda: sparse.fit_tfidf(
-            tables.load(spark, "documents", sf_dir),
-            ngram_range=ngram_range,
-            analyzer=analyzer,
-        ),
-    )
+
+    def build() -> None:
+        docs = tables.load(spark, "documents", sf_dir)
+        postings = sparse.fit_tfidf(docs, ngram_range=ngram_range, analyzer=analyzer)
+        _write(postings, name, ("bucket", "term"))
+
+    return _materialize(spark, [name], build)[0]
 
 
 def bm25_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(term, doc_id, score_w) — BM25Okapi posting lists, persisted."""
     name = _table_name("bm25", sf_dir, "11", "documents")
-    return _read_or_build(
-        spark, name, lambda: sparse.fit_bm25(tables.load(spark, "documents", sf_dir))
-    )
+
+    def build() -> None:
+        docs = tables.load(spark, "documents", sf_dir)
+        _write(sparse.fit_bm25(docs), name, ("bucket", "term"))
+
+    return _materialize(spark, [name], build)[0]
 
 
 def multichannel_postings(
@@ -207,13 +291,12 @@ def multichannel_postings(
     exchange-free on the index side."""
     variant = "_".join(f"{ch}{a}{b}" for ch, (a, b) in sorted(channels.items()))
     name = _table_name("mc", sf_dir, variant, "documents")
-    return _read_or_build(
-        spark,
-        name,
-        lambda: sparse.fit_tfidf_multichannel(
-            tables.load(spark, "documents", sf_dir), channels
-        ),
-    )
+
+    def build() -> None:
+        docs = tables.load(spark, "documents", sf_dir)
+        _write(sparse.fit_tfidf_multichannel(docs, channels), name, ("bucket", "term"))
+
+    return _materialize(spark, [name], build)[0]
 
 
 def ivf_assignments(
@@ -233,24 +316,14 @@ def ivf_assignments(
     this the final rank re-probed the whole corpus to fetch vectors,
     which at 100 TB reads 1000× more than the cells it ranks."""
     name = _table_name("ivf", sf_dir, f"s{stride}v2", "embeddings")
-    if not spark.catalog.tableExists(name):
-        _drop_stale_location(spark, name)
+
+    def build() -> None:
         emb = tables.load(spark, "embeddings", sf_dir)
         _, assign = ann.ivf_assign(emb, stride=stride)
-        ann.write_ivf_assignments(
-            assign.join(emb.select("vec_id", "embedding"), "vec_id"), name
-        )
-    return spark.table(name)
+        lists = assign.join(emb.select("vec_id", "embedding"), "vec_id")
+        _write(lists, name, ("partition", "cid"))
 
-
-def _save_partitioned(df: DataFrame, name: str, cols: list[str]) -> None:
-    # cluster by the partition columns before the write (r10, guide §6):
-    # otherwise every task writes a file into every partition directory
-    # it holds rows for — tasks × |partition values| tiny files. One
-    # exchange → one file per populated partition; content identical.
-    df.repartition(*[df[c] for c in cols]).write.mode("overwrite").partitionBy(
-        *cols
-    ).format("parquet").saveAsTable(name)
+    return _materialize(spark, [name], build)[0]
 
 
 def emb_lsh_bands(
@@ -268,14 +341,13 @@ def emb_lsh_bands(
     16-hyperplane signature pass over every vector moves to ingest."""
     variant = f"b{bands}p{num_planes}" + (f"d{dim}" if dim != 64 else "")
     name = _table_name("lshband", sf_dir, variant, "embeddings")
-    if not spark.catalog.tableExists(name):
-        _drop_stale_location(spark, name)
+
+    def build() -> None:
         emb = tables.load(spark, "embeddings", sf_dir)
-        banded = ann.banded_signatures(
-            emb, dim=dim, bands=bands, num_planes=num_planes
-        )
-        _save_partitioned(banded, name, ["band", "bval"])
-    return spark.table(name)
+        banded = ann.banded_signatures(emb, dim=dim, bands=bands, num_planes=num_planes)
+        _write(banded, name, ("partition", "band", "bval"))
+
+    return _materialize(spark, [name], build)[0]
 
 
 def doc_shingles(
@@ -286,18 +358,12 @@ def doc_shingles(
     aggregation key). The explode+distinct over the corpus — the
     widest stage of the dedup pipeline — runs once at ingest."""
     name = _table_name("shingle", sf_dir, f"k{k}", "documents")
-    if not spark.catalog.tableExists(name):
-        _drop_stale_location(spark, name)
+
+    def build() -> None:
         docs = tables.load(spark, "documents", sf_dir)
-        sh = dedup.char_shingles(docs, "doc_id", "text", k)
-        (
-            sh.write.mode("overwrite")
-            .bucketBy(POSTINGS_BUCKETS, "doc_id")
-            .sortBy("doc_id")
-            .format("parquet")
-            .saveAsTable(name)
-        )
-    return spark.table(name)
+        _write(dedup.char_shingles(docs, "doc_id", "text", k), name, ("bucket", "doc_id"))
+
+    return _materialize(spark, [name], build)[0]
 
 
 def minhash_sigs(
@@ -311,17 +377,12 @@ def minhash_sigs(
     md5-per-shingle permutation pass — the dedup pipeline's dominant
     CPU cost — happens only here, at build time."""
     name = _table_name("minhash", sf_dir, f"k{k}p{num_perm}", "documents")
-    if not spark.catalog.tableExists(name):
-        _drop_stale_location(spark, name)
+
+    def build() -> None:
         sig = dedup.minhash_signatures(doc_shingles(spark, sf_dir, k), "doc_id", num_perm)
-        (
-            sig.write.mode("overwrite")
-            .bucketBy(POSTINGS_BUCKETS, "doc_id")
-            .sortBy("doc_id")
-            .format("parquet")
-            .saveAsTable(name)
-        )
-    return spark.table(name)
+        _write(sig, name, ("bucket", "doc_id"))
+
+    return _materialize(spark, [name], build)[0]
 
 
 def pq_codes(
@@ -336,11 +397,12 @@ def pq_codes(
     persisted bucketed by vec_id. The ADC query path reads ONLY this
     table — M small ints per vector — never the embeddings."""
     name = _table_name("pq", sf_dir, f"m{m}k{ks}s{stride}", "embeddings")
-    if not spark.catalog.tableExists(name):
-        _drop_stale_location(spark, name)
+
+    def build() -> None:
         emb = tables.load(spark, "embeddings", sf_dir)
-        ann.write_pq_codes(ann.pq_encode(emb, m=m, ks=ks, stride=stride), name)
-    return spark.table(name)
+        _write(ann.pq_encode(emb, m=m, ks=ks, stride=stride), name, ("bucket", "vec_id"))
+
+    return _materialize(spark, [name], build)[0]
 
 
 # --- Lloyd-trained quantizers (operators/kmeans.py) ------------------------
@@ -367,23 +429,33 @@ def ivf_trained(
         iters = kmeans.KMEANS_ITERS
     cname = _table_name("ivftc", sf_dir, f"s{stride}i{iters}", "embeddings")
     aname = _table_name("ivfta", sf_dir, f"s{stride}i{iters}v2", "embeddings")
-    if not spark.catalog.tableExists(cname) or not spark.catalog.tableExists(aname):
-        emb = tables.load(spark, "embeddings", sf_dir)
-        cents = kmeans.train_lloyd(emb, kmeans.stride_init(emb, stride=stride), iters)
-        from pyspark.sql import functions as F
 
-        assign = emb.select(
-            F.col("vec_id"),
-            F.col("embedding"),
-            kmeans.assign_cid("embedding", cents).alias("cid"),
-        )
-        _drop_stale_location(spark, cname)
-        kmeans.centroids_df(emb, cents).write.mode("overwrite").format(
-            "parquet"
-        ).saveAsTable(cname)
-        _drop_stale_location(spark, aname)
-        ann.write_ivf_assignments(assign, aname)
-    return spark.table(cname), spark.table(aname)
+    def build() -> None:
+        _train_ivf(tables.load(spark, "embeddings", sf_dir), stride, iters, cname, aname)
+
+    return _materialize(spark, [cname, aname], build)
+
+
+def _train_ivf(emb: DataFrame, stride: int, iters: int, cname: str, aname: str) -> None:
+    """Build body of ivf_trained and ivf_trained_dim: Lloyd-train the
+    coarse centroids over `emb` from the stride seed, write them to
+    `cname` and the cid-partitioned lists, vectors co-located, to
+    `aname`."""
+    from multi_search_retrival_big_data_spark.operators import kmeans
+
+    cents = kmeans.train_lloyd(emb, kmeans.stride_init(emb, stride=stride), iters)
+    _write(kmeans.centroids_df(emb, cents), cname, ("plain",))
+    _write(_ivf_lists(emb, cents), aname, ("partition", "cid"))
+
+
+def _ivf_lists(emb: DataFrame, cents: list) -> DataFrame:
+    """(vec_id, embedding, cid): `emb` assigned to its nearest of
+    `cents`, the vectors co-located in their inverted lists."""
+    from multi_search_retrival_big_data_spark.operators import kmeans
+
+    return emb.select(
+        "vec_id", "embedding", kmeans.assign_cid("embedding", cents).alias("cid")
+    )
 
 
 def dim_corpus(spark: SparkSession, sf_dir: str, out_dim: int = 768) -> DataFrame:
@@ -399,12 +471,12 @@ def dim_corpus(spark: SparkSession, sf_dir: str, out_dim: int = 768) -> DataFram
     from multi_search_retrival_big_data_spark.operators import dense
 
     name = _table_name("dimcorp", sf_dir, f"o{out_dim}", "embeddings")
-    if not spark.catalog.tableExists(name):
+
+    def build() -> None:
         emb = tables.load(spark, "embeddings", sf_dir)
-        wide = dense.expand_to_dim(emb, out_dim=out_dim, in_dim=64)
-        _drop_stale_location(spark, name)
-        wide.write.mode("overwrite").format("parquet").saveAsTable(name)
-    return spark.table(name)
+        _write(dense.expand_to_dim(emb, out_dim=out_dim, in_dim=64), name, ("plain",))
+
+    return _materialize(spark, [name], build)[0]
 
 
 def model_b_dim_corpus(
@@ -420,13 +492,13 @@ def model_b_dim_corpus(
     from multi_search_retrival_big_data_spark.operators import dense
 
     name = _table_name("dimcorpb", sf_dir, f"o{out_dim}", "embeddings")
-    if not spark.catalog.tableExists(name):
-        emb = tables.load(spark, "embeddings", sf_dir)
-        b48 = dense.model_b_embeddings(emb)
+
+    def build() -> None:
+        b48 = dense.model_b_embeddings(tables.load(spark, "embeddings", sf_dir))
         wide = dense.expand_to_dim(b48, out_dim=out_dim, in_dim=MODEL_B_DIM)
-        _drop_stale_location(spark, name)
-        wide.write.mode("overwrite").format("parquet").saveAsTable(name)
-    return spark.table(name)
+        _write(wide, name, ("plain",))
+
+    return _materialize(spark, [name], build)[0]
 
 
 def ivf_trained_dim(
@@ -442,27 +514,13 @@ def ivf_trained_dim(
     build time; query plans only scan the persisted tables — the same
     build/serve split as ivf_trained, which is what keeps the d=768
     serving plans Catalyst-sized."""
-    from multi_search_retrival_big_data_spark.operators import kmeans
-
     cname = _table_name("ivftcd", sf_dir, f"o{out_dim}s{stride}i{iters}", "embeddings")
     aname = _table_name("ivftad", sf_dir, f"o{out_dim}s{stride}i{iters}", "embeddings")
-    if not spark.catalog.tableExists(cname) or not spark.catalog.tableExists(aname):
-        emb = dim_corpus(spark, sf_dir, out_dim)
-        cents = kmeans.train_lloyd(emb, kmeans.stride_init(emb, stride=stride), iters)
-        from pyspark.sql import functions as F
 
-        assign = emb.select(
-            F.col("vec_id"),
-            F.col("embedding"),
-            kmeans.assign_cid("embedding", cents).alias("cid"),
-        )
-        _drop_stale_location(spark, cname)
-        kmeans.centroids_df(emb, cents).write.mode("overwrite").format(
-            "parquet"
-        ).saveAsTable(cname)
-        _drop_stale_location(spark, aname)
-        ann.write_ivf_assignments(assign, aname)
-    return spark.table(cname), spark.table(aname)
+    def build() -> None:
+        _train_ivf(dim_corpus(spark, sf_dir, out_dim), stride, iters, cname, aname)
+
+    return _materialize(spark, [cname, aname], build)
 
 
 def pq_trained(
@@ -482,35 +540,41 @@ def pq_trained(
     UNSQUARED to match the trainer's assignment) and persisted
     id-bucketed like pq_codes; ADC queries then pay exactly the same
     plan as the stride-codebook path, only with better cell shapes."""
-    from pyspark.sql import functions as F
-
     from multi_search_retrival_big_data_spark.operators import kmeans
 
     if iters is None:
         iters = kmeans.KMEANS_ITERS
     bname = _table_name("pqtb", sf_dir, f"m{m}k{ks}s{stride}i{iters}", "embeddings")
     cname = _table_name("pqtc", sf_dir, f"m{m}k{ks}s{stride}i{iters}", "embeddings")
-    if not spark.catalog.tableExists(bname) or not spark.catalog.tableExists(cname):
+
+    def build() -> None:
         emb = tables.load(spark, "embeddings", sf_dir)
         books = kmeans.train_lloyd_pq(
             emb, kmeans.pq_stride_init(emb, dim=dim, m=m, ks=ks, stride=stride), dim,
             iters,
         )
-        rows = [
-            (int(mi), int(code), [float(x) for x in cv])
-            for mi, book in sorted(books.items())
-            for code, cv in book
-        ]
-        book_df = tables.local_frame(spark, rows, "m INT, code INT, cv ARRAY<DOUBLE>")
-        _drop_stale_location(spark, bname)
-        book_df.write.mode("overwrite").format("parquet").saveAsTable(bname)
+        _write(_codebook_frame(spark, books), bname, ("plain",))
         codes = ann.pq_encode(
             emb, dim=dim, m=m, ks=ks, stride=stride,
             codebook=spark.table(bname), squared=False,
         )
-        _drop_stale_location(spark, cname)
-        ann.write_pq_codes(codes, cname)
-    return spark.table(bname), spark.table(cname)
+        _write(codes, cname, ("bucket", "vec_id"))
+
+    return _materialize(spark, [bname, cname], build)
+
+
+def _codebook_frame(spark: SparkSession, books: dict) -> DataFrame:
+    """Trained sub-space codebooks {m: [(code, cv)]} as (m, code, cv)
+    rows for persistence."""
+    return tables.local_frame(
+        spark,
+        [
+            (int(mi), int(code), [float(x) for x in cv])
+            for mi, book in sorted(books.items())
+            for code, cv in book
+        ],
+        "m INT, code INT, cv ARRAY<DOUBLE>",
+    )
 
 
 # --- incremental index maintenance -----------------------------------------
@@ -579,22 +643,14 @@ def lsh_bands_incremental(
     name = _table_name(
         "lshinc", sf_dir, f"b{bands}p{num_planes}", "embeddings"
     )
-    # rebuilt every call: the query exists to PROVE the append path, so
-    # a cached post-append table would hide regressions
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
     emb = tables.load(spark, "embeddings", sf_dir)
-    base = ann.banded_signatures(
-        emb.filter(base_filter), bands=bands, num_planes=num_planes
-    )
-    _save_partitioned(base, name, ["band", "bval"])
-    delta = ann.banded_signatures(
-        emb.filter(delta_filter), bands=bands, num_planes=num_planes
-    )
-    delta.write.mode("append").partitionBy("band", "bval").format("parquet").saveAsTable(
-        name
-    )
-    return spark.table(name)
+
+    def build() -> None:
+        for f, mode in ((base_filter, "overwrite"), (delta_filter, "append")):
+            banded = ann.banded_signatures(emb.filter(f), bands=bands, num_planes=num_planes)
+            _write(banded, name, ("partition", "band", "bval"), mode)
+
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def ivf_assignments_incremental(
@@ -606,7 +662,7 @@ def ivf_assignments_incremental(
 ) -> DataFrame:
     """Incremental IVF inverted-list maintenance under a FROZEN trained
     quantizer: the cid-partitioned assignment table (vectors co-located,
-    ann.write_ivf_assignments layout) is built from the BASE corpus
+    ivf_trained's layout) is built from the BASE corpus
     slice, then the DELTA slice's assignments are APPENDED — given
     fixed centroids, a vector's cell is a pure function of that vector,
     so each new vector adds rows to its cid partition and nothing is
@@ -617,33 +673,18 @@ def ivf_assignments_incremental(
     shapes are model state, not per-row state); that boundary is the
     same as FAISS's train/add split. Rebuilt every call — the function
     exists to PROVE the append path."""
-    from pyspark.sql import functions as F
-
-    from multi_search_retrival_big_data_spark.operators import kmeans
-
     if iters is None:
         iters = 2
     cent_df, _ = ivf_trained(spark, sf_dir, iters=iters)
     cents = [(r["cid"], r["cv"]) for r in cent_df.collect()]
     name = _table_name("ivfinc", sf_dir, f"i{iters}", "embeddings")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
     emb = tables.load(spark, "embeddings", sf_dir)
 
-    def assign(df: "DataFrame") -> "DataFrame":
-        return df.select(
-            "vec_id", "embedding", kmeans.assign_cid("embedding", cents).alias("cid")
-        )
+    def build() -> None:
+        for f, mode in ((base_filter, "overwrite"), (delta_filter, "append")):
+            _write(_ivf_lists(emb.filter(f), cents), name, ("partition", "cid"), mode)
 
-    ann.write_ivf_assignments(assign(emb.filter(base_filter)), name)
-    (
-        assign(emb.filter(delta_filter))
-        .write.mode("append")
-        .partitionBy("cid")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return spark.table(name)
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def ivf_assignments_drifted(
@@ -670,8 +711,6 @@ def ivf_assignments_drifted(
     PROVE the drift measurement, not to serve."""
     from pyspark.sql import functions as F
 
-    from multi_search_retrival_big_data_spark.operators import kmeans
-
     base_f, (d1, d2) = incremental_split_filters(spark, sf_dir)
     emb = tables.load(spark, "embeddings", sf_dir)
     v = F.col("embedding").cast("array<double>")
@@ -689,23 +728,12 @@ def ivf_assignments_drifted(
     fcents = [(r["cid"], r["__cv"]) for r in fcent.collect()]
     o_tag = str(float(offset)).replace(".", "p").replace("-", "m")
     name = _table_name("ivfdrift", sf_dir, f"s{stride}o{o_tag}", "embeddings")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
 
-    def assign(df: "DataFrame") -> "DataFrame":
-        return df.select(
-            "vec_id", "embedding", kmeans.assign_cid("embedding", fcents).alias("cid")
-        )
+    def build() -> None:
+        for f, mode in ((base_f, "overwrite"), (f"({d1}) OR ({d2})", "append")):
+            _write(_ivf_lists(drift.filter(f), fcents), name, ("partition", "cid"), mode)
 
-    ann.write_ivf_assignments(assign(drift.filter(F.expr(base_f))), name)
-    (
-        assign(drift.filter(f"({d1}) OR ({d2})"))
-        .write.mode("append")
-        .partitionBy("cid")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return spark.table(name), drift
+    return _materialize(spark, [name], build, rebuild=True)[0], drift
 
 
 def ivf_retrain_arms(
@@ -803,22 +831,13 @@ def pq_codes_incremental(
         )
     codebook = ann.pq_codebook(base, m=m, ks=ks, stride=stride)
     name = _table_name("pqinc", sf_dir, f"m{m}k{ks}s{stride}", "embeddings")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
-    ann.write_pq_codes(
-        ann.pq_encode(base, m=m, ks=ks, stride=stride, codebook=codebook), name
-    )
-    delta_codes = ann.pq_encode(
-        emb.filter(delta_filter), m=m, ks=ks, stride=stride, codebook=codebook
-    )
-    (
-        delta_codes.write.mode("append")
-        .bucketBy(32, delta_codes.columns[0])
-        .sortBy(delta_codes.columns[0])
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return spark.table(name)
+
+    def build() -> None:
+        for f, mode in ((base_filter, "overwrite"), (delta_filter, "append")):
+            codes = ann.pq_encode(emb.filter(f), m=m, ks=ks, stride=stride, codebook=codebook)
+            _write(codes, name, ("bucket", "vec_id"), mode)
+
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def tfidf_postings_incremental(
@@ -843,25 +862,18 @@ def tfidf_postings_incremental(
     (index_incremental_tfidf_parity)."""
     docs = tables.load(spark, "documents", sf_dir)
     name = _table_name("tfidfinc", sf_dir, "11", "documents")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
-    sparse.write_postings_bucketed(
-        sparse.fit_tfidf(docs.filter(base_filter)), name
-    )
-    # materialize the (term, idf) model OUT of the table before the
-    # append — a lazy read of the same table the append writes into is
-    # a self-referential plan (and the model is vocabulary-sized, the
-    # same state sklearn keeps on the vectorizer object)
-    model = spark.table(name).select("term", "idf").distinct().localCheckpoint()
-    delta_post = sparse.transform_tfidf(docs.filter(delta_filter), model)
-    (
-        delta_post.write.mode("append")
-        .bucketBy(POSTINGS_BUCKETS, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return spark.table(name)
+
+    def build() -> None:
+        _write(sparse.fit_tfidf(docs.filter(base_filter)), name, ("bucket", "term"))
+        # materialize the (term, idf) model OUT of the table before the
+        # append — a lazy read of the same table the append writes into
+        # is a self-referential plan (and the model is vocabulary-sized,
+        # the same state sklearn keeps on the vectorizer object)
+        model = spark.table(name).select("term", "idf").distinct().localCheckpoint()
+        delta = sparse.transform_tfidf(docs.filter(delta_filter), model)
+        _write(delta, name, ("bucket", "term"), "append")
+
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def manifest_media_state_incremental(
@@ -899,38 +911,19 @@ def manifest_media_state_incremental(
     docs = tables.load(spark, "documents", sf_dir)
     out: dict[str, DataFrame] = {}
 
-    def _write_split(kind: str, make, bucket_col: str | None) -> DataFrame:
+    def _write_split(kind: str, make, layout: tuple[str, ...]) -> DataFrame:
         name = _table_name(kind, sf_dir, "inc", "documents")
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        _drop_stale_location(spark, name)
-        base = make(docs.filter(base_filter))
-        if bucket_col is not None:
-            (
-                base.write.mode("overwrite")
-                .bucketBy(POSTINGS_BUCKETS, bucket_col)
-                .sortBy(bucket_col)
-                .format("parquet")
-                .saveAsTable(name)
-            )
-            (
-                make(docs.filter(delta_filter))
-                .write.mode("append")
-                .bucketBy(POSTINGS_BUCKETS, bucket_col)
-                .sortBy(bucket_col)
-                .format("parquet")
-                .saveAsTable(name)
-            )
-        else:
-            base.write.mode("overwrite").format("parquet").saveAsTable(name)
-            make(docs.filter(delta_filter)).write.mode("append").format(
-                "parquet"
-            ).saveAsTable(name)
-        return spark.table(name)
+
+        def build() -> None:
+            for f, mode in ((base_filter, "overwrite"), (delta_filter, "append")):
+                _write(make(docs.filter(f)), name, layout, mode)
+
+        return _materialize(spark, [name], build, rebuild=True)[0]
 
     out["shingles"] = _write_split(
         "mshinginc",
         lambda d: dedup.char_shingles(d, "doc_id", "text", dedup.SHINGLE_K),
-        "doc_id",
+        ("bucket", "doc_id"),
     )
     # signatures derive from the SLICE's shingles (per-doc pure): the
     # delta signature pass reads only delta shingles, never the base
@@ -941,7 +934,7 @@ def manifest_media_state_incremental(
             "doc_id",
             dedup.NUM_PERM,
         ),
-        "doc_id",
+        ("bucket", "doc_id"),
     )
     # image fingerprints on the WIDE production geometry (r10
     # promotion — the keep pipeline this state feeds runs
@@ -953,21 +946,21 @@ def manifest_media_state_incremental(
             rows=_mm.WIDE_DHASH_ROWS,
             fill_empty=True,
         ),
-        None,
+        ("plain",),
     )
     out["audio_landmarks"] = _write_split(
         "maudlminc",
         lambda d: _mm.audio_landmarks(
             _mm.synth_audio_clips(_mm.as_media_table(d))
         ),
-        None,
+        ("plain",),
     )
     out["video_fp"] = _write_split(
         "mvidfpinc",
         lambda d: _mm.dhash_fingerprints(
             _mm.synth_video_sequences(_mm.as_media_table(d))
         ),
-        None,
+        ("plain",),
     )
     return out
 
@@ -991,26 +984,15 @@ def multichannel_postings_incremental(
     docs = tables.load(spark, "documents", sf_dir)
     variant = "_".join(f"{ch}{a}{b}" for ch, (a, b) in sorted(channels.items()))
     name = _table_name("mcinc", sf_dir, variant, "documents")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
-    sparse.write_postings_bucketed(
-        sparse.fit_tfidf_multichannel(docs.filter(base_filter), channels), name
-    )
-    model = (
-        spark.table(name).select("channel", "term", "idf").distinct().localCheckpoint()
-    )
-    delta_post = sparse.transform_tfidf_multichannel(
-        docs.filter(delta_filter), model, channels
-    )
-    (
-        delta_post.write.mode("append")
-        .bucketBy(POSTINGS_BUCKETS, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    spark.catalog.refreshTable(name)
-    return spark.table(name)
+
+    def build() -> None:
+        base = sparse.fit_tfidf_multichannel(docs.filter(base_filter), channels)
+        _write(base, name, ("bucket", "term"))
+        model = spark.table(name).select("channel", "term", "idf").distinct().localCheckpoint()
+        delta = sparse.transform_tfidf_multichannel(docs.filter(delta_filter), model, channels)
+        _write(delta, name, ("bucket", "term"), "append")
+
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def compact_postings_table(spark: SparkSession, src_name: str) -> DataFrame:
@@ -1030,17 +1012,11 @@ def compact_postings_table(spark: SparkSession, src_name: str) -> DataFrame:
     generation once nothing references it).
     `index_compacted_tfidf_parity` proves the rewrite lossless."""
     name = f"{src_name}_cmp"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
-    src = spark.table(src_name)
-    (
-        src.write.mode("overwrite")
-        .bucketBy(POSTINGS_BUCKETS, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return spark.table(name)
+
+    def build() -> None:
+        _write(spark.table(src_name), name, ("bucket", "term"))
+
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def bm25_postings_incremental(
@@ -1060,20 +1036,14 @@ def bm25_postings_incremental(
     docs = tables.load(spark, "documents", sf_dir)
     base = docs.filter(base_filter)
     name = _table_name("bm25inc", sf_dir, "11", "documents")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
-    sparse.write_postings_bucketed(sparse.fit_bm25(base), name)
-    tf_base = sparse.term_counts(base)
-    idf, avgdl = sparse.bm25_model(tf_base, base)
-    delta_post = sparse.transform_bm25(docs.filter(delta_filter), idf, avgdl)
-    (
-        delta_post.write.mode("append")
-        .bucketBy(POSTINGS_BUCKETS, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return spark.table(name)
+
+    def build() -> None:
+        _write(sparse.fit_bm25(base), name, ("bucket", "term"))
+        idf, avgdl = sparse.bm25_model(sparse.term_counts(base), base)
+        delta = sparse.transform_bm25(docs.filter(delta_filter), idf, avgdl)
+        _write(delta, name, ("bucket", "term"), "append")
+
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def sq8_codes_incremental(
@@ -1099,25 +1069,69 @@ def sq8_codes_incremental(
     base = emb.filter(base_filter)
     bounds = ann.sq8_train(base)
     name = _table_name("sq8inc", sf_dir, "d64", "embeddings")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
-    (
-        ann.sq8_encode(base, bounds)
-        .write.mode("overwrite")
-        .bucketBy(POSTINGS_BUCKETS, "vec_id")
-        .sortBy("vec_id")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    (
-        ann.sq8_encode(emb.filter(delta_filter), bounds)
-        .write.mode("append")
-        .bucketBy(POSTINGS_BUCKETS, "vec_id")
-        .sortBy("vec_id")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return spark.table(name)
+
+    def build() -> None:
+        for f, mode in ((base_filter, "overwrite"), (delta_filter, "append")):
+            _write(ann.sq8_encode(emb.filter(f), bounds), name, ("bucket", "vec_id"), mode)
+
+    return _materialize(spark, [name], build, rebuild=True)[0]
+
+
+def _stream_append(
+    spark: SparkSession,
+    name: str,
+    layout: tuple[str, ...],
+    batches: Sequence[DataFrame],
+    transform: Callable[[DataFrame], DataFrame],
+    prepare: Callable[[DataFrame], DataFrame] = lambda stream: stream,
+) -> None:
+    """Feed `batches` through a real Structured Streaming query and
+    append `transform(micro_batch)` to table `name` from a foreachBatch
+    sink. Each batch lands as one file in a watched directory and
+    maxFilesPerTrigger=1 makes it one micro-batch; `prepare` shapes the
+    stream before the sink (watermark, dedup). The checkpoint log gives
+    exactly-once appends across restarts.
+
+    Landing, staging and checkpoint directories live under
+    session.scratch_dir(), not /tmp (external /tmp cleanup has removed
+    files from under a running job), and are removed even when the
+    stream fails."""
+    root = tempfile.mkdtemp(prefix="index_stream_", dir=scratch_dir())
+    try:
+        landing = os.path.join(root, "landing")
+        os.mkdir(landing)
+        for i, batch in enumerate(batches):
+            stage = os.path.join(root, "stage", f"d{i}")
+            batch.coalesce(1).write.parquet(stage)
+            parts = sorted(p for p in os.listdir(stage) if p.endswith(".parquet"))
+            for j, part in enumerate(parts):
+                shutil.copy(
+                    os.path.join(stage, part),
+                    os.path.join(landing, f"delta_{i}_{j}.parquet"),
+                )
+        stream = (
+            spark.readStream.schema(batches[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(landing)
+        )
+        (
+            prepare(stream)
+            .writeStream.foreachBatch(
+                lambda batch_df, _batch_id: _write(
+                    transform(batch_df), name, layout, "append"
+                )
+            )
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    # the micro-batches appended (and refreshed) in the stream's own
+    # session; this session may still hold the table's pre-stream file
+    # listing, and a read would silently serve the base-only snapshot
+    spark.catalog.refreshTable(name)
 
 
 def lsh_bands_stream_incremental(
@@ -1142,58 +1156,20 @@ def lsh_bands_stream_incremental(
     points default to corpus-derived 60/20/20 slices
     (incremental_split_filters) asserted non-empty, so the proof can
     never degenerate on a small corpus."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     if base_filter is None or delta_filters is None:
         base_filter, delta_filters = incremental_split_filters(spark, sf_dir)
     name = _table_name("lshstr", sf_dir, f"b{bands}p{num_planes}", "embeddings")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
     emb = tables.load(spark, "embeddings", sf_dir)
-    base = ann.banded_signatures(
-        emb.filter(base_filter), bands=bands, num_planes=num_planes
-    )
-    _save_partitioned(base, name, ["band", "bval"])
+    layout = ("partition", "band", "bval")
 
-    landing = _tempfile.mkdtemp(prefix="lsh_delta_landing_")
-    stage = _tempfile.mkdtemp(prefix="lsh_delta_stage_")
-    for i, f in enumerate(delta_filters):
-        d = _os.path.join(stage, f"d{i}")
-        emb.filter(f).write.mode("overwrite").parquet(d)
-        for j, part in enumerate(sorted(_os.listdir(d))):
-            if part.endswith(".parquet"):
-                _shutil.copy(
-                    _os.path.join(d, part),
-                    _os.path.join(landing, f"delta_{i}_{j}.parquet"),
-                )
+    def band(df: DataFrame) -> DataFrame:
+        return ann.banded_signatures(df, bands=bands, num_planes=num_planes)
 
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    def build() -> None:
+        _write(band(emb.filter(base_filter)), name, layout)
+        _stream_append(spark, name, layout, [emb.filter(f) for f in delta_filters], band)
 
-    def _append_bands(batch_df: DataFrame, _batch_id: int) -> None:
-        banded = ann.banded_signatures(
-            batch_df, bands=bands, num_planes=num_planes
-        )
-        banded.write.mode("append").partitionBy("band", "bval").format(
-            "parquet"
-        ).saveAsTable(name)
-
-    ckpt = _tempfile.mkdtemp(prefix="lsh_stream_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(_append_bands)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    for d in (landing, stage, ckpt):
-        _shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name)
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def tfidf_postings_stream_incremental(
@@ -1213,65 +1189,24 @@ def tfidf_postings_stream_incremental(
     gives exactly-once appends across restarts;
     `index_incremental_tfidf_stream_parity` proves the post-stream
     table ≡ the batch fit+transform answer."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     base_filter, delta_filters = incremental_split_filters(
         spark, sf_dir, table="documents", id_col="doc_id"
     )
     name = _table_name("tfidfstr", sf_dir, "11", "documents")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
     docs = tables.load(spark, "documents", sf_dir)
-    sparse.write_postings_bucketed(
-        sparse.fit_tfidf(docs.filter(base_filter)), name
-    )
-    model = spark.table(name).select("term", "idf").distinct().localCheckpoint()
 
-    landing = _tempfile.mkdtemp(prefix="tfidf_delta_landing_")
-    stage = _tempfile.mkdtemp(prefix="tfidf_delta_stage_")
-    for i, f in enumerate(delta_filters):
-        d = _os.path.join(stage, f"d{i}")
-        docs.filter(f).write.mode("overwrite").parquet(d)
-        for j, part in enumerate(sorted(_os.listdir(d))):
-            if part.endswith(".parquet"):
-                _shutil.copy(
-                    _os.path.join(d, part),
-                    _os.path.join(landing, f"delta_{i}_{j}.parquet"),
-                )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-
-    def _append_postings(batch_df: DataFrame, _batch_id: int) -> None:
-        (
-            sparse.transform_tfidf(batch_df, model)
-            .write.mode("append")
-            .bucketBy(POSTINGS_BUCKETS, "term")
-            .sortBy("term")
-            .format("parquet")
-            .saveAsTable(name)
+    def build() -> None:
+        _write(sparse.fit_tfidf(docs.filter(base_filter)), name, ("bucket", "term"))
+        model = spark.table(name).select("term", "idf").distinct().localCheckpoint()
+        _stream_append(
+            spark,
+            name,
+            ("bucket", "term"),
+            [docs.filter(f) for f in delta_filters],
+            lambda batch: sparse.transform_tfidf(batch, model),
         )
 
-    ckpt = _tempfile.mkdtemp(prefix="tfidf_stream_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(_append_postings)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    for d in (landing, stage, ckpt):
-        _shutil.rmtree(d, ignore_errors=True)
-    # the model read above cached this session's file listing for the
-    # table BEFORE the micro-batch sessions appended to it — refresh,
-    # or the final read silently serves the base-only snapshot
-    spark.catalog.refreshTable(name)
-    return spark.table(name)
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def lsh_bands_stream_latedata(
@@ -1298,21 +1233,12 @@ def lsh_bands_stream_latedata(
     operator keeps one (vec_id, event_time) entry per key inside the
     watermark horizon — bounded by ingest rate × delay, independent of
     corpus size."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     base_filter, (d1, d2) = incremental_split_filters(spark, sf_dir)
     name = _table_name("lshlate", sf_dir, f"b{bands}p{num_planes}", "embeddings")
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _drop_stale_location(spark, name)
     emb = tables.load(spark, "embeddings", sf_dir)
-    base = ann.banded_signatures(
-        emb.filter(base_filter), bands=bands, num_planes=num_planes
-    )
-    _save_partitioned(base, name, ["band", "bval"])
+    layout = ("partition", "band", "bval")
 
     # synthetic bounded-disorder event time: span ≤ 3600 s, so the 2 h
     # watermark delay can never expire a first occurrence mid-run
@@ -1323,53 +1249,25 @@ def lsh_bands_stream_latedata(
     replay_a = early_half.filter(F.col("vec_id") % 2 == 0)   # cross-batch dups
     replay_b = late_half.filter(F.col("vec_id") % 3 == 0)    # duplicate-only batch
 
-    landing = _tempfile.mkdtemp(prefix="lsh_late_landing_")
-    stage = _tempfile.mkdtemp(prefix="lsh_late_stage_")
-    batches = [
-        early_half,
-        late_half.unionByName(replay_a),
-        replay_b,
-    ]
-    for i, b in enumerate(batches):
-        d = _os.path.join(stage, f"d{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(d)
-        j = 0
-        for part in sorted(_os.listdir(d)):
-            if part.endswith(".parquet"):
-                _shutil.copy(
-                    _os.path.join(d, part),
-                    _os.path.join(landing, f"delta_{i}_{j}.parquet"),
-                )
-                j += 1
-
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    deduped = stream.withWatermark("event_time", "2 hours").dropDuplicatesWithinWatermark(
-        ["vec_id"]
-    )
-
-    def _append_bands(batch_df: DataFrame, _batch_id: int) -> None:
-        banded = ann.banded_signatures(
-            batch_df.drop("event_time"), bands=bands, num_planes=num_planes
+    def band(df: DataFrame) -> DataFrame:
+        return ann.banded_signatures(
+            df.drop("event_time"), bands=bands, num_planes=num_planes
         )
-        banded.write.mode("append").partitionBy("band", "bval").format(
-            "parquet"
-        ).saveAsTable(name)
 
-    ckpt = _tempfile.mkdtemp(prefix="lsh_late_ckpt_")
-    q = (
-        deduped.writeStream.foreachBatch(_append_bands)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    for d in (landing, stage, ckpt):
-        _shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name)
+    def build() -> None:
+        _write(band(emb.filter(base_filter)), name, layout)
+        _stream_append(
+            spark,
+            name,
+            layout,
+            [early_half, late_half.unionByName(replay_a), replay_b],
+            band,
+            lambda stream: stream.withWatermark(
+                "event_time", "2 hours"
+            ).dropDuplicatesWithinWatermark(["vec_id"]),
+        )
+
+    return _materialize(spark, [name], build, rebuild=True)[0]
 
 
 def ivfpq(
@@ -1390,8 +1288,6 @@ def ivfpq(
     (coarse train → residuals → residual-PQ train → encode, each one
     corpus pass per iteration); queries read three tables and touch no
     vectors."""
-    from pyspark.sql import functions as F
-
     from multi_search_retrival_big_data_spark.operators import kmeans
 
     if iters is None:
@@ -1400,9 +1296,8 @@ def ivfpq(
     cname = _table_name("ivfpqc", sf_dir, v, "embeddings")
     bname = _table_name("ivfpqb", sf_dir, v, "embeddings")
     kname = _table_name("ivfpqk", sf_dir, v, "embeddings")
-    if not all(
-        spark.catalog.tableExists(n) for n in (cname, bname, kname)
-    ):
+
+    def build() -> None:
         emb = tables.load(spark, "embeddings", sf_dir)
         cents = kmeans.train_lloyd(
             emb, kmeans.stride_init(emb, stride=coarse_stride), iters
@@ -1417,31 +1312,17 @@ def ivfpq(
                 res, vec_col="r", dim=dim, m=m, ks=ks, stride=pq_stride
             )
             books = kmeans.train_lloyd_pq(res, init, dim, iters, vec_col="r")
-            book_rows = [
-                (int(mi), int(code), [float(x) for x in cv])
-                for mi, book in sorted(books.items())
-                for code, cv in book
-            ]
-            _drop_stale_location(spark, cname)
-            kmeans.centroids_df(emb, cents).write.mode("overwrite").format(
-                "parquet"
-            ).saveAsTable(cname)
-            _drop_stale_location(spark, bname)
-            tables.local_frame(
-                spark, book_rows, "m INT, code INT, cv ARRAY<DOUBLE>"
-            ).write.mode("overwrite").format("parquet").saveAsTable(bname)
+            _write(kmeans.centroids_df(emb, cents), cname, ("plain",))
+            _write(_codebook_frame(spark, books), bname, ("plain",))
             codes = ann.pq_encode(
                 res, vec_col="r", dim=dim, m=m, ks=ks, stride=pq_stride,
                 codebook=spark.table(bname), squared=False,
             ).join(res.select("vec_id", "cid"), "vec_id")
-            _drop_stale_location(spark, kname)
-            # cluster by cid first — see _save_partitioned (guide §6)
-            codes.repartition("cid").write.mode("overwrite").partitionBy(
-                "cid"
-            ).format("parquet").saveAsTable(kname)
+            _write(codes, kname, ("partition", "cid"))
         finally:
             res.unpersist()
-    return spark.table(cname), spark.table(bname), spark.table(kname)
+
+    return _materialize(spark, [cname, bname, kname], build)
 
 
 def sq8(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -1452,18 +1333,10 @@ def sq8(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     encode is one projection against the collected dim-row model."""
     bname = _table_name("sq8b", sf_dir, "d64", "embeddings")
     cname = _table_name("sq8c", sf_dir, "d64", "embeddings")
-    if not (spark.catalog.tableExists(bname) and spark.catalog.tableExists(cname)):
+
+    def build() -> None:
         emb = tables.load(spark, "embeddings", sf_dir)
-        bounds = ann.sq8_train(emb)
-        _drop_stale_location(spark, bname)
-        bounds.write.mode("overwrite").format("parquet").saveAsTable(bname)
-        codes = ann.sq8_encode(emb, spark.table(bname))
-        _drop_stale_location(spark, cname)
-        (
-            codes.write.mode("overwrite")
-            .bucketBy(POSTINGS_BUCKETS, "vec_id")
-            .sortBy("vec_id")
-            .format("parquet")
-            .saveAsTable(cname)
-        )
-    return spark.table(bname), spark.table(cname)
+        _write(ann.sq8_train(emb), bname, ("plain",))
+        _write(ann.sq8_encode(emb, spark.table(bname)), cname, ("bucket", "vec_id"))
+
+    return _materialize(spark, [bname, cname], build)

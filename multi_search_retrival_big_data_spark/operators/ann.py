@@ -711,7 +711,7 @@ def ivf_assign(
     real IVF shape). Returns (centroids, assignments(id, cid)).
 
     This is NOT the query path: persist the assignments cid-partitioned
-    (index_store.ivf_assignments / write_ivf_assignments) and pass the
+    (index_store.ivf_assignments) and pass the
     stored table to `ann_ivf_topk(assign=...)`, which then only probes
     and prunes. Assignment cost is a broadcast join against
     |centroids| rows + per-row argmin — one corpus pass at build
@@ -744,31 +744,6 @@ def centroids(
     read in O(scan of one column-pruned slice)."""
     return emb.filter(F.col(id_col) % stride == 0).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv")
-    )
-
-
-def write_ivf_assignments(assign: DataFrame, table_name: str) -> None:
-    """Persist the inverted lists PARTITIONED BY cid — the at-rest
-    layout where a query's nprobe cell probe becomes partition pruning
-    (reads nprobe/nlist of the table, exactly FAISS's inverted-list
-    seek). Pass (vec_id, embedding, cid) to co-locate the vectors in
-    the lists (FAISS IndexIVFFlat stores vectors inside the inverted
-    lists): ann_ivf_topk then ranks straight out of the pruned
-    partitions with no second corpus scan.
-
-    Clustered by cid before the write (r10, guide §6 "small files hurt
-    twice"): without it every write task emits a file into every cid
-    directory it holds rows for — up to tasks × nlist tiny files
-    (~10⁴ at the 10× tier's nlist=324, measured 13.6 s of pure file
-    creation/commit for a 20k-row table). One exchange of the
-    assignment rows yields one file per populated cid. Result content
-    is identical; only the file layout changes."""
-    (
-        assign.repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .format("parquet")
-        .saveAsTable(table_name)
     )
 
 
@@ -1223,19 +1198,6 @@ def pq_encode(
         for i in range(m)
     ]
     return paired.groupBy(id_col).agg(*aggs)
-
-
-def write_pq_codes(codes: DataFrame, table_name: str, buckets: int = 32) -> None:
-    """Persist the code table bucketed by id — the at-rest PQ index
-    (M small ints per vector; 100 TB of 768-d floats become ~100 GB of
-    codes, which is the entire point)."""
-    (
-        codes.write.mode("overwrite")
-        .bucketBy(buckets, codes.columns[0])
-        .sortBy(codes.columns[0])
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
 
 
 def ann_pq_adc_topk(

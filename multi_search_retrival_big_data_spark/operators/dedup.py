@@ -180,15 +180,26 @@ def lsh_candidate_pairs(
     m ≤ B still emit all pairs, but each MEGA bucket emits only a
     deterministic SPANNING pair set — the id-sorted consecutive chain
     (m-1 pairs) plus a star to the bucket minimum (m-1 pairs) — so a
-    bucket contributes O(m), not O(m²), and the downstream
-    connected-components closure still sees every member of a genuine
-    duplicate cluster connected (any bucket that large IS one dup
-    cluster; transitive closure needs a spanning set, not all pairs).
-    The chain+star redundancy keeps the cluster connected through the
-    exact-Jaccard verify even when a stray false-positive member lands
-    mid-chain. Cost shape: the windows (count/min/lag over (band,
-    bucket)) are ONE sort-shuffle on the bucket key — a 10⁶-member
-    bucket is 10⁶ rows in one task instead of 10¹² join outputs."""
+    bucket contributes O(m), not O(m²).
+
+    The cap is NOT cluster-preserving in general. The downstream
+    closure runs over the pairs that pass the exact-Jaccard verify, so
+    a mega bucket keeps a member in its cluster only if that member
+    verifies against its id-sorted neighbour or the bucket minimum (or
+    reaches the cluster through a pair from another bucket). It fails
+    (a) when a mega bucket mixes a near-duplicate pair with unrelated
+    documents that collided on the same band key: the chain and star
+    run through members that fail the verify and the pair itself is
+    never emitted; and (b) when a member verifies only against a
+    non-adjacent, non-minimum member, since Jaccard is not transitive
+    at the threshold. Both happen on perfbench/gen.py's curate_batch
+    corpora at B=3: seed 8's (170, 297) at J=0.88 shares only a
+    4-member bucket with two documents at J≈0.2, and seed 22's 531
+    verifies only with 112 in a 5-member bucket; 7 of seeds 1-40 lose
+    1-2 documents from the capped closure. Cost shape: the windows
+    (count/min/lag over (band, bucket)) are ONE sort-shuffle on the
+    bucket key — a 10⁶-member bucket is 10⁶ rows in one task instead
+    of 10¹² join outputs."""
     if max_bucket is None:
         a = buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
         b = buckets.select(F.col(id_col).alias("id_b"), "band", "bucket")

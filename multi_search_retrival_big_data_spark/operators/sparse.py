@@ -126,7 +126,7 @@ def fit_tfidf(
     consumes postings TWICE (query-idf branch + match branch), and
     without materialization both branches recompute the fit. The
     production analogue is the persisted, term-bucketed index table
-    (write_postings_bucketed)."""
+    (index_store.tfidf_postings)."""
     tf = term_counts(docs, id_col, text_col, ngram_range, analyzer)
     dfreq = doc_frequencies(tf)
     n = _corpus_size(docs, id_col)
@@ -576,31 +576,6 @@ def multichannel_tfidf_score(
         fused = F.floor(fused * m6 + F.lit(0.5)).cast("double") / m6
     out = normed.groupBy("doc_id").agg(fused.alias("score"))
     return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def write_postings_bucketed(
-    postings: DataFrame, table_name: str, buckets: int = 32
-) -> None:
-    """Persist a fitted posting-list index bucketed + sorted by `term`
-    (the production layout the module header promises): repeated
-    scoring joins and df/idf re-aggregations on `term` then read
-    pre-clustered buckets — Catalyst drops the Exchange entirely
-    (verified in tests by asserting no shuffle in the groupBy plan).
-
-    At 100 TB this is the difference between re-shuffling the index per
-    query batch and a shuffle-free co-located join against a similarly
-    bucketed query-batch table."""
-    (
-        postings.write.mode("overwrite")
-        .bucketBy(buckets, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def read_postings_table(spark, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def batch_tfidf_score(

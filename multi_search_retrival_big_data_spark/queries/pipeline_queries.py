@@ -349,11 +349,13 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_cluster_components_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters computed from the CAPPED candidate path,
     checked against the UNCAPPED recursive-closure oracle — i.e. this
-    row passing proves the cap changes NO cluster assignment on this
-    corpus: a spanning pair set per mega bucket is enough for the
-    transitive closure to reconstruct every duplicate cluster that the
-    full all-pairs candidate set finds. This is the soundness claim
-    that justifies capping at crawl scale."""
+    row passing shows the cap changes no cluster assignment on THIS
+    corpus. It is not a general soundness proof: the closure only
+    keeps a mega-bucket member whose chain or star pair passes the
+    Jaccard verify (dedup.lsh_candidate_pairs states the condition),
+    and corpora where a near-duplicate pair shares only a mega bucket
+    with unrelated documents lose that pair's cluster (perfbench/gen.py
+    curate_batch seeds 8, 11, 22, 24, 30, 32, 33 of 1-40)."""
     from pyspark.sql.window import Window
 
     from multi_search_retrival_big_data_spark import index_store
@@ -428,10 +430,12 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Runs the PRODUCTION config: CAPPED candidates (max_bucket — the
     viral-boilerplate guard) feeding the auto components router. The
-    oracle is the UNCAPPED recursive closure, so this row passing
-    doubles as the cap-soundness proof for the product table (same
-    argument as dedup_cluster_components_capped: a spanning pair set
-    per mega bucket preserves every cluster, hence every winner)."""
+    oracle is the UNCAPPED recursive closure, so this row passing shows
+    the cap changes no cluster, hence no winner, on THIS corpus — not
+    in general: a mega-bucket member whose chain and star pairs fail
+    the Jaccard verify drops out of its cluster and keeps itself (the
+    condition is in dedup.lsh_candidate_pairs; counterexamples as in
+    dedup_cluster_components_capped)."""
     from multi_search_retrival_big_data_spark import index_store
 
     docs = tables.load(spark, "documents", sf_dir)

@@ -35,16 +35,263 @@ def test_second_read_skips_build(spark, sf_dir):
 
 def test_bucketed_groupby_term_has_no_exchange(spark, sf_dir):
     """The whole point of the persisted layout: aggregations keyed by
-    `term` read pre-clustered buckets — no Exchange on the index."""
-    postings = index_store.tfidf_postings(spark, sf_dir)
-    plan = (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    `term` read pre-clustered buckets — no Exchange on the index —
+    whereas the same aggregation over an unbucketed fit must shuffle."""
+
+    def plan(df):
+        return (
+            df.groupBy("term")
+            .agg(F.count("*").alias("df"))
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+
+    assert "Exchange" not in plan(index_store.tfidf_postings(spark, sf_dir))
+    docs = tables.load(spark, "documents", sf_dir)
+    assert "Exchange" in plan(sparse.fit_tfidf(docs))
+
+
+def test_concurrent_build_same_index(spark, sf_dir, tmp_path):
+    """Two threads asking for the same missing index in one session
+    both get the one table: the second waits for the first's build
+    instead of racing it through drop/create."""
+    import shutil
+    import threading
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    shutil.copy(f"{sf_dir}/documents.parquet", d / "documents.parquet")
+    barrier = threading.Barrier(2)
+    counts: list[int] = []
+    errors: list[BaseException] = []
+
+    def build() -> None:
+        try:
+            barrier.wait()
+            counts.append(index_store.tfidf_postings(spark, str(d)).count())
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    spark.sql(
+        f"DROP TABLE IF EXISTS {index_store._table_name('tfidf', str(d), '11', 'documents')}"
     )
-    assert "Exchange" not in plan
+    assert not errors, errors
+    assert len(counts) == 2 and counts[0] == counts[1] > 0
+
+
+def _table_of(df) -> str:
+    import re
+
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return re.search(r"spark_catalog\.default\.(\w+)", plan).group(1)
+
+
+def _layout(spark, name: str) -> tuple[int, list[str], list[str], list[str]]:
+    """(num buckets, bucket cols, sort cols, partition cols) as the
+    catalog records them."""
+    info = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+    }
+
+    def cols(key: str) -> list[str]:
+        raw = info.get(key, "[]").strip("[]")
+        return [c.strip().strip("`") for c in raw.split(",") if c.strip()]
+
+    parts = [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
+    return int(info.get("Num Buckets", 0)), cols("Bucket Columns"), cols(
+        "Sort Columns"
+    ), parts
+
+
+def _bucket(col: str):
+    return (32, [col], [col], [])
+
+
+def _partition(*cols: str):
+    return (0, [], [], list(cols))
+
+
+_PLAIN = (0, [], [], [])
+
+
+def _halves(spark, sf_dir, **kw) -> tuple[str, str]:
+    base, (d1, d2) = index_store.incremental_split_filters(spark, sf_dir, **kw)
+    return base, f"({d1}) OR ({d2})"
+
+
+def _doc_halves(spark, sf_dir) -> tuple[str, str]:
+    return _halves(spark, sf_dir, table="documents", id_col="doc_id")
+
+
+_MC = {"w": (1, 1), "b": (2, 2)}
+
+_LAYOUT_CASES = [
+    pytest.param(
+        lambda s, d: index_store.tfidf_postings(s, d), [_bucket("term")],
+        id="tfidf_postings",
+    ),
+    pytest.param(
+        lambda s, d: index_store.tfidf_postings(s, d, (3, 5), "char"),
+        [_bucket("term")],
+        id="tfidf_postings_char",
+    ),
+    pytest.param(
+        lambda s, d: index_store.bm25_postings(s, d), [_bucket("term")],
+        id="bm25_postings",
+    ),
+    pytest.param(
+        lambda s, d: index_store.multichannel_postings(s, d, _MC),
+        [_bucket("term")],
+        id="multichannel_postings",
+    ),
+    pytest.param(
+        lambda s, d: index_store.ivf_assignments(s, d), [_partition("cid")],
+        id="ivf_assignments",
+    ),
+    pytest.param(
+        lambda s, d: index_store.emb_lsh_bands(s, d), [_partition("band", "bval")],
+        id="emb_lsh_bands",
+    ),
+    pytest.param(
+        lambda s, d: index_store.doc_shingles(s, d), [_bucket("doc_id")],
+        id="doc_shingles",
+    ),
+    pytest.param(
+        lambda s, d: index_store.minhash_sigs(s, d), [_bucket("doc_id")],
+        id="minhash_sigs",
+    ),
+    pytest.param(
+        lambda s, d: index_store.pq_codes(s, d), [_bucket("vec_id")],
+        id="pq_codes",
+    ),
+    pytest.param(
+        lambda s, d: index_store.ivf_trained(s, d),
+        [_PLAIN, _partition("cid")],
+        id="ivf_trained",
+    ),
+    pytest.param(
+        lambda s, d: index_store.dim_corpus(s, d), [_PLAIN],
+        id="dim_corpus",
+    ),
+    pytest.param(
+        lambda s, d: index_store.model_b_dim_corpus(s, d),
+        [_PLAIN],
+        marks=pytest.mark.slow,
+        id="model_b_dim_corpus",
+    ),
+    pytest.param(
+        lambda s, d: index_store.ivf_trained_dim(s, d),
+        [_PLAIN, _partition("cid")],
+        marks=pytest.mark.slow,
+        id="ivf_trained_dim",
+    ),
+    pytest.param(
+        lambda s, d: index_store.pq_trained(s, d), [_PLAIN, _bucket("vec_id")],
+        id="pq_trained",
+    ),
+    pytest.param(
+        lambda s, d: index_store.ivfpq(s, d),
+        [_PLAIN, _PLAIN, _partition("cid")],
+        id="ivfpq",
+    ),
+    pytest.param(
+        lambda s, d: index_store.sq8(s, d), [_PLAIN, _bucket("vec_id")],
+        id="sq8",
+    ),
+    pytest.param(
+        lambda s, d: index_store.lsh_bands_incremental(s, d, *_halves(s, d)),
+        [_partition("band", "bval")],
+        id="lsh_bands_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.ivf_assignments_incremental(s, d, *_halves(s, d)),
+        [_partition("cid")],
+        id="ivf_assignments_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.ivf_assignments_drifted(s, d)[0],
+        [_partition("cid")],
+        id="ivf_assignments_drifted",
+    ),
+    pytest.param(
+        lambda s, d: index_store.pq_codes_incremental(s, d, *_halves(s, d), stride=16),
+        [_bucket("vec_id")],
+        id="pq_codes_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.tfidf_postings_incremental(s, d, *_doc_halves(s, d)),
+        [_bucket("term")],
+        id="tfidf_postings_incremental",
+    ),
+    pytest.param(
+        lambda s, d: tuple(
+            index_store.manifest_media_state_incremental(s, d, *_doc_halves(s, d)).values()
+        ),
+        [_bucket("doc_id"), _bucket("doc_id"), _PLAIN, _PLAIN, _PLAIN],
+        id="manifest_media_state_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.multichannel_postings_incremental(
+            s, d, *_doc_halves(s, d), _MC
+        ),
+        [_bucket("term")],
+        id="multichannel_postings_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.compact_postings_table(
+            s, _table_of(index_store.tfidf_postings(s, d))
+        ),
+        [_bucket("term")],
+        id="compact_postings_table",
+    ),
+    pytest.param(
+        lambda s, d: index_store.bm25_postings_incremental(s, d, *_doc_halves(s, d)),
+        [_bucket("term")],
+        id="bm25_postings_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.sq8_codes_incremental(s, d, *_halves(s, d)),
+        [_bucket("vec_id")],
+        id="sq8_codes_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.lsh_bands_stream_incremental(s, d),
+        [_partition("band", "bval")],
+        marks=pytest.mark.slow,
+        id="lsh_bands_stream_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.tfidf_postings_stream_incremental(s, d),
+        [_bucket("term")],
+        id="tfidf_postings_stream_incremental",
+    ),
+    pytest.param(
+        lambda s, d: index_store.lsh_bands_stream_latedata(s, d),
+        [_partition("band", "bval")],
+        marks=pytest.mark.slow,
+        id="lsh_bands_stream_latedata",
+    ),
+]
+
+
+@pytest.mark.parametrize("build, expected", _LAYOUT_CASES)
+def test_index_table_layouts(spark, sf_dir, build, expected):
+    """Every persisted index and every append proof keeps its at-rest
+    layout: bucket count, bucket and sort columns, partition columns.
+    Scan plans (no Exchange on bucketed keys, partition pruning on
+    probes) depend on these specs, and a write that loses one still
+    returns the same rows."""
+    out = build(spark, sf_dir)
+    frames = out if isinstance(out, tuple) else (out,)
+    got = [_layout(spark, _table_of(df)) for df in frames]
+    assert got == expected
 
 
 def test_scoring_on_stored_postings_matches_inline(spark, sf_dir):
@@ -408,3 +655,36 @@ def test_manifest_media_state_append_matches_rebuild(spark, sf_dir):
     assert {
         (r["frame_id"], r["dhash"]) for r in st["image_fp"].collect()
     } == scratch_fp
+
+
+def test_index_tables_written_only_through_write_and_materialize():
+    """The package has one way to materialize an index table:
+    `_write` owns every saveAsTable and bucket spec, `_materialize`
+    owns every drop of a stale table location. A call elsewhere
+    reintroduces a hand-rolled check/drop/build/save block."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(index_store.__file__).parent
+    owners = {
+        n.name: (n.lineno, n.end_lineno)
+        for n in ast.parse(pathlib.Path(index_store.__file__).read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name in ("_write", "_materialize")
+    }
+    assert set(owners) == {"_write", "_materialize"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            hits = [
+                m
+                for m in ("saveAsTable(", ".bucketBy(", "_drop_stale_location(")
+                if m in line
+            ]
+            if not hits or line.lstrip().startswith("def _drop_stale_location("):
+                continue
+            if path.name == "index_store.py" and any(
+                lo <= lineno <= hi for lo, hi in owners.values()
+            ):
+                continue
+            offenders.append(f"{path.relative_to(pkg)}:{lineno} {hits}")
+    assert not offenders, f"write index tables through index_store._write: {offenders}"

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark import partitioning, tables
-from multi_search_retrival_big_data_spark.operators import sparse
 
 
 def test_ensure_min_partitions_widens_and_noops(spark, sf_dir):
@@ -39,34 +38,3 @@ def test_salted_join_rejects_outer(spark):
     df = spark.range(2).select(F.col("id").alias("k"))
     with pytest.raises(ValueError):
         partitioning.salted_join(df, df, ["k"], how="full")
-
-
-def test_bucketed_postings_groupby_has_no_shuffle(spark, sf_dir):
-    # saveAsTable writes under ./spark-warehouse; DROP TABLE cleans it up
-    docs = tables.load(spark, "documents", sf_dir)
-    postings = sparse.fit_tfidf(docs)
-    sparse.write_postings_bucketed(postings, "postings_bucketed_test", buckets=8)
-    try:
-        bucketed = sparse.read_postings_table(spark, "postings_bucketed_test")
-        # same content round-trips
-        assert bucketed.count() == postings.count()
-        # groupBy on the bucket key reads pre-clustered buckets: no Exchange
-        plan = (
-            bucketed.groupBy("term")
-            .agg(F.count("*"))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan
-        # whereas the unbucketed frame must shuffle
-        plan_unbucketed = (
-            postings.groupBy("term")
-            .agg(F.count("*"))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" in plan_unbucketed
-    finally:
-        spark.sql("DROP TABLE IF EXISTS postings_bucketed_test")
