@@ -535,9 +535,9 @@ def pq_trained(
     """(codebook(m, code, cv), codes(vec_id, c0..c{M-1})) under Lloyd-
     TRAINED sub-space codebooks (kmeans.train_lloyd_pq — the FAISS
     IndexPQ.train analogue). The code table is re-encoded by the
-    long-format encode job (ann.pq_encode over the trained codebook —
-    broadcast join + one map-side-combined argmin reduce; ranks
-    UNSQUARED to match the trainer's assignment) and persisted
+    encode job (ann.pq_encode over the trained codebook — one narrow
+    Arrow-kernel projection; ranks UNSQUARED to match the trainer's
+    assignment) and persisted
     id-bucketed like pq_codes; ADC queries then pay exactly the same
     plan as the stride-codebook path, only with better cell shapes."""
     from multi_search_retrival_big_data_spark.operators import kmeans

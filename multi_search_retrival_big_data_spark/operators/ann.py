@@ -12,11 +12,11 @@ the recall/candidate-count trade-off exactly like MinHash-LSH does for
 Jaccard.
 
 Determinism: hyperplane components are ±1 derived from md5 of
-"(plane, dim)" — generated driver-side in pure Python and embedded as
-literals in BOTH the Spark plan and the DuckDB oracle SQL, so the two
-engines bucket identically (dot products are sequential double folds,
-verified bit-identical between `aggregate(zip_with(...))` and DuckDB's
-`list_dot_product`).
+"(plane, dim)" — generated driver-side in pure Python, closed over by
+the Arrow signature kernel and embedded as literals in the DuckDB
+oracle SQL, so the two engines bucket identically (dot products are
+sequential double folds, bit-identical between the kernel's prefix
+sum and DuckDB's `list_dot_product`; see `signature_bits`).
 
 Scale notes: the signature computation is one narrow projection (no
 shuffle); candidate selection is a partition-pruned scan when the
@@ -46,6 +46,7 @@ from multi_search_retrival_big_data_spark.functions.vector import (
     dot,
     lit_vec,
 )
+from multi_search_retrival_big_data_spark.operators import dense, kmeans
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
 NUM_PLANES = 16
@@ -132,85 +133,39 @@ def hyperplanes(dim: int, num_planes: int = NUM_PLANES) -> list[list[float]]:
     return [hyperplane(p, dim) for p in range(num_planes)]
 
 
-def signature_bits(vec_col: str, planes: Sequence[Sequence[float]]) -> Column:
-    """LSH signature as a bit string: bit p = 1 iff vec·plane_p ≥ 0."""
-    bits = [
-        F.when(dot(vec_col, lit_vec(p)) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for p in planes
-    ]
-    return F.concat(*bits)
-
-
-def signature_bits_packed(
+def signature_bits(
     vec_col: str | Column, planes: Sequence[Sequence[float]]
 ) -> Column:
-    """signature_bits with each ±1 hyperplane PACKED into one string
-    literal ('1' = +1) instead of a 768-element array literal. The
-    per-plane dot becomes a sign-conditional sequential fold:
-    x·(+1) ≡ x and x·(−1) ≡ −x exactly in IEEE, and both the
-    transform and the fold preserve index order, so the bits are
-    BIT-IDENTICAL to signature_bits / the oracle's list_dot_product —
-    only the PLAN shrinks (~10 expression nodes per plane instead of
-    ~3·dim). That matters at production width: 48 planes × 768 dims as
-    literal arrays is a ~10⁵-node expression tree that stalls Catalyst
-    analysis for minutes; packed, the same signature analyzes
-    instantly. Use this for any num_planes·dim ≳ 10⁴."""
-    v = (F.col(vec_col) if isinstance(vec_col, str) else vec_col).cast("array<double>")
-    for p in planes:
-        if any(abs(float(c)) != 1.0 for c in p):
-            raise ValueError(
-                "signature_bits_packed requires ±1 hyperplanes (the packed "
-                "string encodes only the sign)"
-            )
+    """LSH signature as a bit string: bit p = 1 iff vec·plane_p ≥ 0 —
+    the one sign kernel of the package, evaluated per Arrow batch in
+    NumPy at every width (index builds, serving probes, SemDeDup's
+    mega-cell sub-buckets, the recall grids).
 
-    def plane_bit(plane: Sequence[float]) -> Column:
-        pat = F.lit("".join("1" if c > 0 else "0" for c in plane))
-        signed = F.transform(
-            v,
-            lambda x, i: F.when(pat.substr(i + F.lit(1), F.lit(1)) == "1", x).otherwise(
-                -x
-            ),
-        )
-        dot_p = F.aggregate(signed, F.lit(0.0), lambda acc, x: acc + x)
-        return F.when(dot_p >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-    return F.concat(*[plane_bit(p) for p in planes])
-
-
-def signature_bits_arrow(
-    vec_col: str | Column, planes: Sequence[Sequence[float]]
-) -> Column:
-    """signature_bits_packed's ARROW twin — BIT-IDENTICAL, vectorized.
-
-    Identity argument (why the bits cannot differ from the Catalyst
-    fold / the oracle's list_dot_product):
+    Identity argument (why the bits equal the oracle's
+    `list_dot_product(v, plane) >= 0`):
     - applying the sign is `x * (±1.0)`, exact in IEEE;
     - the per-plane total is `np.cumsum(signed, axis=1)[:, -1]` — a
       prefix scan, which is BY DEFINITION a sequential left fold (a
       pairwise regrouping could not produce the intermediate
       prefixes), i.e. the same `((0+x0)+x1)+…` double accumulation as
-      `F.aggregate`'s lambda chain and DuckDB's list fold;
+      DuckDB's list fold;
     - the only divergence window is the fold seed (0.0 + x0 vs x0),
       which differs solely in the sign of a zero total, and the bit
       predicate `total >= 0` maps −0.0 and +0.0 to the same bit.
-    `tests/test_ann.py` pins the equality on real embeddings at the
-    production width rather than trusting this argument.
+    `tests/test_ann.py` pins the equality against DuckDB on real
+    embeddings at d=64 and at the production width (48 planes × 768,
+    reference CLIP, data_extraction/create_bin.ipynb cells 3,8).
 
-    Why it exists: the packed fold keeps the PLAN small but still
-    evaluates interpreted per-element lambdas — at the production
-    geometry (48 planes × 768 dims, reference CLIP width,
-    data_extraction/create_bin.ipynb cells 3,8) that is ~75k lambda
-    dispatches PER ROW, measured ~180 s for a 2k-row index build.
-    One Arrow batch does the same math as `num_planes` vectorized C
-    passes (~ms). This is the scale path for signature INGEST at
-    100 TB; the Catalyst forms stay the serving/oracle reference at
-    d=64 where the expression tree is small and codegen-fast."""
+    Why a batch kernel: as a Catalyst expression the signature is
+    either num_planes·dim array literals (a ~10⁵-node tree at 48×768
+    that stalls analysis) or num_planes·dim interpreted lambda
+    dispatches per row (~180 s for a 2k-row d=768 build); one Arrow
+    batch does the same math as `num_planes` vectorized C passes.
+    Planes must be ±1 (the `hyperplanes` family): the sign-only
+    contract is what makes `x * (±1.0)` exact."""
     for p in planes:
         if any(abs(float(c)) != 1.0 for c in p):
-            raise ValueError(
-                "signature_bits_arrow requires ±1 hyperplanes (same "
-                "contract as signature_bits_packed)"
-            )
+            raise ValueError("signature_bits requires ±1 hyperplanes")
     signs = np.asarray(
         [[1.0 if float(c) > 0 else -1.0 for c in p] for p in planes],
         dtype=np.float64,
@@ -228,15 +183,6 @@ def signature_bits_arrow(
         return pd.Series(["".join(row) for row in bits])
 
     return _sig(F.col(vec_col) if isinstance(vec_col, str) else vec_col)
-
-
-# one signature dispatch for every build/serving site: small geometries
-# stay on the codegen-friendly literal expression (oracle-proven,
-# zero Python), big ones (the d=768 production width) go Arrow — the
-# packed Catalyst fold remains as the pure-SQL reference twin that the
-# equality test checks the Arrow path against
-def _sig_fn(num_planes: int, dim: int):
-    return signature_bits_arrow if num_planes * dim >= 10_000 else signature_bits
 
 
 def signature_of(vec: Sequence[float], planes: Sequence[Sequence[float]]) -> str:
@@ -288,10 +234,7 @@ def banded_signatures(
     is the at-rest layout the module header promises."""
     planes = hyperplanes(dim, num_planes)
     rows = num_planes // bands
-    # the packed variant is bit-identical; switch to it when the
-    # literal-array form would become a Catalyst-stalling tree
-    sig_fn = _sig_fn(num_planes, dim)
-    sig = emb.select(F.col(id_col), sig_fn(vec_col, planes).alias("__sig"))
+    sig = emb.select(F.col(id_col), signature_bits(vec_col, planes).alias("__sig"))
     return sig.select(
         id_col,
         F.explode(
@@ -353,9 +296,8 @@ def ann_lsh_topk(
             emb.join(cand, id_col, "left_semi"),
             query_vec, k, id_col, vec_col, round_to,
         )
-    emb = ensure_min_partitions(emb)  # 16 fold-expressions/row: CPU-bound
-    sig_fn = _sig_fn(num_planes, dim)
-    sig = sig_fn(vec_col, planes)
+    emb = ensure_min_partitions(emb)  # one signature per row: CPU-bound
+    sig = signature_bits(vec_col, planes)
     cond = None
     for b, qband in query_bands(qsig, bands, rows):
         c = F.substring(F.col("__sig"), b * rows + 1, rows) == F.lit(qband)
@@ -383,21 +325,19 @@ def ranked_cosine_topk(
     round_to: int | None,
 ) -> DataFrame:
     """det-rounded-cosine descending top-k of a candidate set — the
-    shared final rank of every pruned ANN serving path, with a
-    WIDTH-GATED Arrow twin (r11, guide §4; verdict r10 item 8 applied
-    to the serving side the way r10 did the encode/train side).
+    shared final rank of every pruned ANN serving path, gated on width.
 
-    dim < ARROW_RANK_MIN_DIM (or round_to None): the proven Catalyst
+    dim < ARROW_RANK_MIN_DIM (or round_to None): the Catalyst
     expression det_round(cosine_sim(...)) — what every oracle-gate
-    corpus (d=64) executes, byte-identical plans to r10.
+    corpus (d=64) executes.
 
-    dim ≥ ARROW_RANK_MIN_DIM: per Arrow batch the candidate slab
-    scores in ONE BLAS matvec and is quantized INSIDE the UDF with
-    floor(x·10^s + 0.5)/10^s before the top-k sort — exactly
-    dense.topk_cosine_arrow's established determinism contract (its
-    oracle row pins the quantize-then-rank semantics; at d=768 the
-    interpreted 3·768-dispatch fold per row is the measured dominant
-    cost of the tuned LSH/IVF ranks)."""
+    dim ≥ ARROW_RANK_MIN_DIM: dense.topk_cosine_arrow — per Arrow batch
+    the candidate slab scores in ONE BLAS matvec, quantized inside the
+    UDF before the top-k sort (at d=768 the interpreted 3·768-dispatch
+    fold per row is the measured dominant cost of the tuned LSH/IVF
+    ranks). The gate is not a twin of one kernel: the BLAS rank is not
+    bit-identical to det_round(cosine_sim) at d=64, so the oracle-gate
+    width keeps the expression form."""
     dim = len(query_vec)
     if round_to is None or dim < ARROW_RANK_MIN_DIM:
         score = cosine_sim(vec_col, lit_vec(query_vec))
@@ -408,23 +348,7 @@ def ranked_cosine_topk(
             .orderBy(F.desc("score"), F.asc(id_col))
             .limit(k)
         )
-    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    qn = float(np.sqrt(q @ q))
-    scale = float(10**round_to)
-
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m_ = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            s = (m_ @ q) / (np.sqrt((m_ * m_).sum(axis=1)) * qn)
-            s = np.floor(s * scale + 0.5) / scale
-            yield pd.DataFrame({id_col: pdf[id_col], "score": s})
-
-    scored = cand.select(id_col, vec_col).mapInPandas(
-        _score, f"{id_col} long, score double"
-    )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    return dense.topk_cosine_arrow(cand, query_vec, k, id_col, vec_col, round_to)
 
 
 CASCADE_MIN_CANDIDATES = 100  # default gate: 2×k at the k=50 serving default
@@ -542,8 +466,7 @@ def ann_lsh_multiprobe_topk(
             .limit(k)
         )
     emb = ensure_min_partitions(emb)
-    sig_fn = _sig_fn(num_planes, dim)
-    sig = sig_fn(vec_col, planes)
+    sig = signature_bits(vec_col, planes)
     cond = None
     for b, vals in probes:
         c = F.substring(F.col("__sig"), b * rows + 1, rows).isin(vals)
@@ -713,24 +636,16 @@ def ivf_assign(
     This is NOT the query path: persist the assignments cid-partitioned
     (index_store.ivf_assignments) and pass the
     stored table to `ann_ivf_topk(assign=...)`, which then only probes
-    and prunes. Assignment cost is a broadcast join against
-    |centroids| rows + per-row argmin — one corpus pass at build
-    time, zero at query time."""
-    from pyspark.sql.window import Window
-
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist
-
-    cent = centroids(emb, id_col, vec_col, stride)
-    pairs = emb.select(F.col(id_col), F.col(vec_col)).crossJoin(F.broadcast(cent))
-    w = Window.partitionBy(id_col).orderBy(
-        l2_dist(vec_col, "__cv").asc(), F.col("cid").asc()
+    and prunes. The |N|/stride centroids are collected to the driver
+    (kmeans.stride_init) and the assignment is `kmeans.assign_cid` — a
+    narrow projection, one corpus pass at build time, no join, no
+    shuffle, zero work at query time."""
+    cents = kmeans.stride_init(emb, id_col, vec_col, stride)
+    id_type = dict(emb.dtypes)[id_col]
+    assign = emb.select(
+        F.col(id_col), kmeans.assign_cid(vec_col, cents).cast(id_type).alias("cid")
     )
-    assign = (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, "cid")
-    )
-    return cent, assign
+    return centroids(emb, id_col, vec_col, stride), assign
 
 
 def centroids(
@@ -1025,33 +940,37 @@ def pq_codebook(
     )
 
 
-def pq_codes_arrow(
+def pq_codes(
     vec_col: str | Column,
     books: dict[int, list[tuple[int, Sequence[float]]]],
     dim: int,
     squared: bool = True,
 ) -> Column:
-    """pq_encode's per-row argmin as a BIT-IDENTICAL Arrow column:
-    returns ARRAY<INT> of the M sub-space codes.
+    """The per-sub-space PQ argmin — the one encode kernel behind
+    pq_encode and kmeans.train_lloyd_pq, evaluated per Arrow batch in
+    NumPy: returns ARRAY<INT> of the M sub-space codes, code m being
+    argmin over (rank(sub_m, cv), code) of sub-space m's book.
 
-    Identity argument (the signature_bits_arrow/_assign_cid_arrow
-    family): `(x−c)` and its square are single IEEE ops; the distance
-    fold is np.cumsum(sq)[:, -1] — the sequential left fold l2_dist
-    evaluates (all addends are squares ≥ +0.0, so the seed difference
-    cannot even flip a zero's sign); np.sqrt is correctly rounded on
-    both engines; `squared` ranks d·d — sqrt THEN square, replicating
-    the join path's `(d * d)` spelling ulp-for-ulp rather than
-    skipping the sqrt; codes are scanned in ascending order with a
-    STRICT `<` update, which is MIN(struct(dist, code))'s tiebreak.
-    tests/test_ann.py pins equality against the join path on real
-    data at the trained d=768 geometry.
+    Identity argument (the signature_bits/kmeans.assign_cid family):
+    `(x−c)` and its square are single IEEE ops; the distance fold is
+    np.cumsum(sq)[:, -1] — the sequential left fold DuckDB's
+    list_distance evaluates (all addends are squares ≥ +0.0, so the
+    seed difference cannot even flip a zero's sign); np.sqrt is
+    correctly rounded on both engines; `squared` ranks d·d — sqrt THEN
+    square, replicating the stride oracle's `list_distance *
+    list_distance` spelling ulp-for-ulp rather than skipping the sqrt
+    (`squared=False` is the trained oracle's plain list_distance);
+    codes are scanned in ascending order with a STRICT `<` update —
+    the oracle's ORDER BY rank, code. tests/test_ann.py pins equality
+    against DuckDB on real data, under planted ties, and at the
+    trained d=768 geometry.
 
-    Why: the broadcast-join argmin evaluates interpreted per-element
-    lambdas — corpus × M × KS × dsub × 2 dispatches (~10⁹ at the
+    Why a batch kernel: as Catalyst expressions the argmin is corpus ×
+    M × KS × dsub × 2 interpreted lambda dispatches (~10⁹ at the
     width×scale cross: 20k rows × 16 × 32 × 48) — minutes of CPU the
     Arrow batch does in one vectorized pass."""
     m_count = len(books)
-    dsub = dim // m_count
+    dsub = dim // m_count if m_count else 0
     mats, code_ids = [], []
     for mi in range(m_count):
         ordered = sorted(books[mi], key=lambda t: int(t[0]))
@@ -1068,7 +987,7 @@ def pq_codes_arrow(
     @F.pandas_udf("array<int>")
     def _enc(v: pd.Series) -> pd.Series:
         # GEMM prefilter + exact re-rank of margin candidates, the
-        # _assign_cid_arrow pattern (see its docstring for the error
+        # kmeans.assign_cid pattern (see its docstring for the error
         # bound): the per-code fold loop touched n·KS·dsub doubles per
         # subspace; the matmul prefilter touches n·KS. Monotonicity of
         # x² and sqrt on nonnegatives makes the squared/plain rank
@@ -1098,9 +1017,8 @@ def pq_codes_arrow(
                     # non-finite sub-vector: no candidate survives the
                     # GEMM prefilter (NaN comparisons are all False) —
                     # exact fold over every code; strict `<` never
-                    # fires on NaN, keeping the lowest code, matching
-                    # MIN(struct(dist, code)) under Spark's
-                    # NaN-is-largest ordering (r10 advice).
+                    # fires on NaN, keeping the lowest code — the
+                    # (rank, code) order under NaN-is-largest.
                     js = np.arange(cmat.shape[0])
                 br, bc = np.inf, int(cids[js[0]])
                 for j in js:  # ascending code order (cids sorted)
@@ -1124,80 +1042,37 @@ def pq_encode(
     stride: int = PQ_STRIDE,
     codebook: DataFrame | None = None,
     squared: bool = True,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """PQ BUILD job (FAISS `IndexPQ.add`): encode every vector as M
     sub-space codes → one WIDE row (id, c0..c{M-1}). Persist this
     (index_store.pq_codes) and the query path never touches the
     vectors again — M bytes per vector at rest.
 
-    Plan: explode each vector into M sub-slices (M rows/vector), join
-    the broadcast codebook on `m` (KS-way fanout), then ONE map-side-
-    combined groupBy(id) computes all M argmins at once via
-    MIN(struct(dist, code)) — struct ordering gives the deterministic
-    (distance, code) tiebreak, and no window function appears anywhere
-    (a per-(id, m) row_number would shuffle the same rows for less).
+    Plan: the (m, code, cv) codebook is broadcast-sized by construction
+    (M·KS rows of dim/M doubles), so it is collected once into the
+    `pq_codes` kernel's closure and the encode is ONE narrow projection
+    over the corpus — no join, no shuffle, no window.
 
     `codebook` overrides the default stride-sampled codebook with any
     (m, code, cv) table — e.g. the Lloyd-trained one from
     operators/kmeans.py. `squared=False` ranks by the unsquared
-    distance (kmeans._assign_sub / the trained oracle's ORDER BY
+    distance (kmeans.train_lloyd_pq / the trained oracle's ORDER BY
     list_distance); the default squared ranking matches the stride
     oracle. Same argmin either way except ulp-level ties — the rank
-    expression just has to MATCH the oracle's spelling."""
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist
-
-    dsub = dim // m
+    spelling just has to MATCH the oracle's."""
     if codebook is None:
         codebook = pq_codebook(emb, id_col, vec_col, dim, m, ks, stride)
-    if use_arrow is None:
-        use_arrow = m * ks * dsub >= 10_000
-    if use_arrow:
-        # the codebook is broadcast-sized by construction (M·KS rows)
-        # — collecting it into the Arrow encoder's closure is the same
-        # movement the broadcast join does
-        books: dict[int, list[tuple[int, list[float]]]] = {}
-        for r in codebook.collect():
-            books.setdefault(int(r["m"]), []).append(
-                (int(r["code"]), [float(x) for x in r["cv"]])
-            )
-        codes = pq_codes_arrow(
-            F.col(vec_col).cast("array<double>"), books, dim, squared=squared
+    books: dict[int, list[tuple[int, list[float]]]] = {}
+    for r in codebook.collect():
+        books.setdefault(int(r["m"]), []).append(
+            (int(r["code"]), [float(x) for x in r["cv"]])
         )
-        return (
-            ensure_min_partitions(emb)
-            .select(F.col(id_col), codes.alias("__codes"))
-            .select(
-                id_col, *[F.col("__codes").getItem(i).alias(f"c{i}") for i in range(m)]
-            )
-        )
-    cb = F.broadcast(codebook)
-    slices = [
-        F.struct(
-            F.lit(i).alias("m"),
-            F.slice(F.col(vec_col).cast("array<double>"), i * dsub + 1, dsub).alias(
-                "sub"
-            ),
-        )
-        for i in range(m)
-    ]
-    longf = ensure_min_partitions(emb).select(
-        F.col(id_col), F.explode(F.array(*slices)).alias("e")
-    ).select(id_col, "e.m", "e.sub")
-    d = l2_dist("sub", "cv")
-    paired = longf.join(cb, "m").select(
-        F.col(id_col),
-        F.col("m"),
-        F.col("code"),
-        ((d * d) if squared else d).alias("__d2"),
+    codes = pq_codes(F.col(vec_col).cast("array<double>"), books, dim, squared=squared)
+    return (
+        ensure_min_partitions(emb)
+        .select(F.col(id_col), codes.alias("__codes"))
+        .select(id_col, *[F.col("__codes").getItem(i).alias(f"c{i}") for i in range(m)])
     )
-    aggs = [
-        F.min(F.when(F.col("m") == i, F.struct(F.col("__d2"), F.col("code"))))
-        .getField("code")
-        .alias(f"c{i}")
-        for i in range(m)
-    ]
-    return paired.groupBy(id_col).agg(*aggs)
 
 
 def ann_pq_adc_topk(
@@ -1382,12 +1257,10 @@ def ivfpq_residuals(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cid, r): coarse assignment (literal-centroid argmin — a
-    pure projection) plus the residual vector. The broadcast join only
+    """(id, cid, r): coarse assignment (kmeans.assign_cid — a narrow
+    projection) plus the residual vector. The broadcast join only
     attaches the k·dim centroid table to fetch each row's centroid for
     the subtraction."""
-    from multi_search_retrival_big_data_spark.operators import kmeans
-
     spark = emb.sparkSession
     cents_df = F.broadcast(
         tables.local_frame(

@@ -434,86 +434,6 @@ def _symmetrize_pairs(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     ).select("__e.src", "__e.dst")
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Duplicate-cluster assignment: connected components over the
-    near-duplicate pair graph → (node, cluster_id) with cluster_id =
-    the minimum doc id reachable from the node. The reference dedupes
-    pairwise only; a training pipeline needs the transitive closure
-    (A~B, B~C ⇒ {A,B,C} is ONE cluster with ONE kept representative).
-
-    Iterative min-label propagation: labels start as the node's own id;
-    each round takes the min of a node's label and its neighbors'
-    labels. Each round is ONE shuffle (groupBy node) over an edge⋈label
-    equi-join; rounds needed = graph diameter, and near-dup clusters
-    are shallow (diameter ≤ ~3 for transitive near-duplicates), so this
-    converges in 2-4 rounds in practice. `localCheckpoint` truncates
-    the lineage each round — without it the plan doubles per iteration
-    and Catalyst analysis cost explodes long before data cost does. At
-    a 100 TB corpus the same loop runs with the edge table persisted
-    and bucketed by `dst`; for adversarial deep-chain graphs switch to
-    the large-star/small-star variant (Kiveris et al., "Connected
-    Components in MapReduce"), which squares the label-jump per round.
-    Convergence is detected by an exact per-round change count — an
-    action per round, unavoidable for any fixed-point loop.
-
-    Raises RuntimeError if the fixed point is not reached within
-    `max_iter` rounds (since round 3; earlier versions returned the
-    partial — silently wrong — labels). Callers that cannot bound the
-    graph diameter should use connected_components_auto, which falls
-    back to the O(log² n)-round large-star/small-star algorithm.
-    """
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    edges = _symmetrize_pairs(pairs, id_a, id_b).distinct().localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
-    changed = -1
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels.select(F.col("node").alias("src"), "label"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        # min-label propagation needs ~diameter rounds; a deep chain can
-        # exhaust max_iter and the partial labels would be silently wrong
-        # (nodes not yet holding their component's minimum). Fail loudly —
-        # callers on adversarial graphs should raise max_iter or use
-        # connected_components_lss (large-star/small-star).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter or use "
-            "connected_components_lss for deep-chain graphs"
-        )
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
-
-
 DRIVER_CC_MAX_EDGES = 200_000
 
 
@@ -521,12 +441,15 @@ def connected_components_auto(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    shallow_rounds: int = 4,
     max_iter: int = 20,
     driver_max_edges: int = DRIVER_CC_MAX_EDGES,
 ) -> DataFrame:
-    """Duplicate-cluster assignment for graphs of UNKNOWN shape — the
-    default entry point a dedup job should call.
+    """Duplicate-cluster assignment: connected components over the
+    near-duplicate pair graph → (node, cluster_id) with cluster_id =
+    the minimum doc id reachable from the node — the default entry
+    point a dedup job should call. The reference dedupes pairwise
+    only; a training pipeline needs the transitive closure (A~B, B~C ⇒
+    {A,B,C} is ONE cluster with ONE kept representative).
 
     Size-gated routing, mirroring how the PQ/IVF serving paths treat
     driver-sized model state: the VERIFIED near-dup pair graph is
@@ -539,26 +462,24 @@ def connected_components_auto(
     scheduling overhead for work one core finishes in milliseconds.
 
     Above the gate (billions of edges at crawl scale) the distributed
-    path runs: min-label propagation first — near-dup graphs are
-    almost always shallow (transitive near-dups have diameter ≤ ~3),
-    so it usually wins in `shallow_rounds` one-shuffle rounds — with
-    the O(log² n)-round large-star/small-star algorithm as the
-    diameter-proof fallback. `driver_max_edges=0` forces the
-    distributed path (used by tests).
+    large-star/small-star algorithm runs (connected_components_lss,
+    O(log² n) rounds on ANY graph shape — per-round min-label
+    propagation needs ~diameter rounds and stalls on chains).
+    `driver_max_edges=0` forces the distributed path (used by tests).
 
     Self-pairs (a, a) are legal input: node a is emitted as a
-    singleton cluster (cluster_id = a) by ALL THREE routes — the
-    node set is seeded from the UNFILTERED pair list, so route choice
-    can never change which nodes appear in the output (r4 advice).
+    singleton cluster (cluster_id = a) by BOTH routes — the node set
+    is seeded from the UNFILTERED pair list, so route choice can never
+    change which nodes appear in the output.
 
     The deduped edge list is persisted before the gate probe: the
     probe's limit(B+1)-collect is the FIRST evaluation of the
     expensive upstream pair pipeline (shingle/verify joins), and when
-    the graph exceeds the gate the distributed fallback re-reads the
-    SAME persisted edges instead of re-deriving the pipeline from
-    `pairs` — the crawl-scale case pays the dominant cost once, not
-    twice. (The probe's early-exit means only the partitions it
-    touched are cached; the fallback recomputes just the rest.)"""
+    the graph exceeds the gate the distributed path re-reads the SAME
+    persisted edges instead of re-deriving the pipeline from `pairs` —
+    the crawl-scale case pays the dominant cost once, not twice. (The
+    probe's early-exit means only the partitions it touched are
+    cached; the distributed path recomputes just the rest.)"""
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).distinct()
     use_gate = driver_max_edges > 0
     if use_gate:
@@ -592,8 +513,8 @@ def connected_components_auto(
                     ra, rb = find(a), find(b)
                     if ra != rb:
                         # union by MIN root so the final label is the
-                        # minimum reachable id, matching the distributed
-                        # algorithms
+                        # minimum reachable id, matching
+                        # connected_components_lss
                         lo, hi = (ra, rb) if ra < rb else (rb, ra)
                         parent[hi] = lo
                 rows = [(n, find(n)) for n in parent]
@@ -602,16 +523,13 @@ def connected_components_auto(
                     pairs.sparkSession,
                     rows, f"node {node_type}, cluster_id {node_type}"
                 )
-        # distributed fallback reuses the persisted/deduped edges (both
-        # algorithms symmetrize internally, so one direction suffices)
-        try:
-            return connected_components(edges, "src", "dst", max_iter=shallow_rounds)
-        except RuntimeError:
-            return connected_components_lss(edges, "src", "dst", max_iter=max_iter)
+        # the distributed path reuses the persisted/deduped edges (LSS
+        # symmetrizes internally, so one direction suffices)
+        return connected_components_lss(edges, "src", "dst", max_iter=max_iter)
     finally:
         if use_gate:
-            # both distributed paths localCheckpoint eagerly inside, so
-            # the returned DataFrame no longer depends on this cache
+            # LSS localCheckpoints eagerly inside, so the returned
+            # DataFrame no longer depends on this cache
             edges.unpersist()
 
 
@@ -623,11 +541,12 @@ def connected_components_lss(
 ) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the documented escape hatch for graphs whose diameter
-    defeats per-round min-label propagation (connected_components):
-    star operations SQUARE the label-jump per round, so convergence is
-    O(log² n) rounds on ANY graph shape, including an n-node chain
-    (propagation needs ~n rounds there).
+    SoCC'14) — the package's one distributed connected-components
+    algorithm (connected_components_auto's route above its driver
+    gate): star operations SQUARE the label-jump per round, so
+    convergence is O(log² n) rounds on ANY graph shape, including an
+    n-node chain (per-round min-label propagation needs ~n rounds
+    there).
 
     large-star(u): connect every strictly-greater neighbor of u to
     m(u) = min(Γ(u) ∪ {u}); small-star(u): connect every
@@ -640,7 +559,9 @@ def connected_components_lss(
     Scale notes: per round the edge set only shrinks-or-rewires (never
     grows beyond 2|E|); both stars are equi-joins + map-side-combined
     mins — no cross joins, no windows; `localCheckpoint` truncates
-    lineage per round like the propagation loop. The fixed point is
+    lineage per round (without it the plan doubles per iteration and
+    Catalyst analysis cost explodes long before data cost does). The
+    fixed point is
     detected by an exact edge-set difference, gated behind a cheap
     count compare: counts read off the checkpointed rounds are nearly
     free, and only when they match does the one-directional exceptAll
@@ -648,8 +569,8 @@ def connected_components_lss(
     empty) — the expensive check fires once, at the actual fixed
     point, not every round.
 
-    Node-set semantics match connected_components / the driver
-    union-find (r4 advice): the output node set is captured from the
+    Node-set semantics match the driver union-find
+    (connected_components_auto): the output node set is captured from the
     UNFILTERED symmetric pair list before self-loops are dropped, so a
     node appearing only as (a, a) is emitted as a singleton cluster
     instead of silently vanishing from the star fixed point.
@@ -853,7 +774,7 @@ def _cell_cosine_pairs_arrow(
     the m² candidate cosines are ONE BLAS GEMM — no pair ever exists
     as a row unless it survives.
 
-    BIT-IDENTITY argument (the _assign_cid_arrow pattern, r10):
+    BIT-IDENTITY argument (the kmeans.assign_cid pattern):
     - PREFILTER: approximate cosines C̃ = (X·Xᵀ)/outer(n,n) from one
       GEMM; float64 GEMM differs from the exact sequential fold by
       ≤ ~(d+3)·u·(1+|cos|) ≈ 1e-14 ≪ the 2e-6 margin, so every pair
@@ -1491,7 +1412,7 @@ def keep_canonical(
     node_col: str = "node",
 ) -> DataFrame:
     """The dedup PRODUCT: per-document keep/drop decisions given a
-    duplicate-cluster table (connected_components* output). Nearest
+    duplicate-cluster table (connected_components_* output). Nearest
     reference behavior: the idempotent skip-if-exists re-ingest
     (/root/reference/data_extraction/clip/clip.ipynb cell 7,
     SKIP_EXISTING — "keep the first copy per id"), generalized to

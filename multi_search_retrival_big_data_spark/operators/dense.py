@@ -309,6 +309,8 @@ def topk_cosine_arrow(
 
     def score_batches(batches):
         for pdf in batches:
+            if len(pdf) == 0:
+                continue
             m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             s = (m @ q) / (np.sqrt((m * m).sum(axis=1)) * qn)
             if scale is not None:

@@ -59,7 +59,7 @@ def pagerank(
     N-row rank table and ONE map-side-combined aggregate on the target
     node — the identical plan per round regardless of edge count, with
     `localCheckpoint` truncating lineage (the same loop discipline as
-    connected_components). Edges and outdegrees are computed once and
+    dedup.connected_components_lss). Edges and outdegrees are computed once and
     cached; at 100 TB the edge table is persisted bucketed by `src` so
     the per-round join never re-shuffles it. Rounds are FIXED (power
     iteration): no per-round convergence action, so a round costs one

@@ -10,9 +10,9 @@ bit-parity, so the trained grids remain hash-matched oracle queries
 rather than weaker rows-only checks:
 
 - init = the same stride sample both engines derive from the data;
-- assignment = argmin over (l2_dist, cid) — `l2_dist` is a sequential
-  double fold identical to DuckDB's `list_distance`, and the (d, cid)
-  struct-min tiebreak mirrors `ORDER BY dist, cid`;
+- assignment = argmin over (l2_dist, cid) — the distance is a
+  sequential double fold identical to DuckDB's `list_distance`, and
+  the ascending-cid strict-< scan mirrors `ORDER BY dist, cid`;
 - update = per-(cluster, dim) QUANTIZED mean: each addend is quantized
   with FLOOR(x·10^s + 0.5), summed exactly as DECIMAL(38,0)
   (order-independent — Spark's partial-agg order cannot diverge from
@@ -24,17 +24,16 @@ rather than weaker rows-only checks:
 Scale notes (MLlib KMeans uses the identical topology): centroids are
 model state — k·dim doubles — and live on the driver between
 iterations, exactly like MLlib collects cluster sums per step. Each
-iteration is ONE corpus pass: the assignment is a pure projection
-against literal centroids (whole-stage codegen, no join, no shuffle of
-the corpus), and the update reduce moves only k·dim quantized partial
-sums per partition (map-side combined). Iteration count is FIXED
+iteration is ONE corpus pass: the assignment is a narrow projection
+(`assign_cid`, one Arrow batch kernel against the driver-resident
+centroids — no join, no shuffle of the corpus), and the update reduce
+moves only k·dim quantized partial sums per partition (map-side
+combined). Iteration count is FIXED
 (not convergence-tested) so the oracle can mirror it as a finite CTE
 chain.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -43,7 +42,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark import tables
-from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
 
 KMEANS_ITERS = 2
 KMEANS_SUM_SCALE = 9
@@ -53,55 +51,29 @@ Centroids = list[tuple[int, list[float]]]
 
 def assign_cid(vec_col: Column | str, cents: Centroids) -> Column:
     """argmin_{cid} l2_dist(vec, centroid) with (distance, cid)
-    tiebreak, as a pure projection over literal centroids: array_min
-    over structs compares field-by-field — (d, cid) — mirroring the
-    oracle's `ORDER BY list_distance ASC, cid ASC` exactly.
-
-    DISPATCH: past ~10⁴ scalar ops per row (k·dim — e.g. a d=768
-    trained quantizer, or the x10 corpus's nlist=⌈N/62⌉ ≈ 324 cells)
-    the literal-struct form is BOTH a Catalyst-canonicalization stall
-    (k·dim literal nodes) and an interpreted-lambda hot loop, so the
-    assignment runs on the Arrow twin below — bit-identical, measured
-    ~60 s → <1 s per Lloyd pass on the d=768 tier corpus. Small
-    geometries (every sf0.01 oracle-gate corpus) stay on this proven
-    expression form."""
-    dim = len(cents[0][1]) if cents else 0
-    if len(cents) * dim >= 10_000:
-        return _assign_cid_arrow(vec_col, cents)
-    entries = [
-        F.struct(
-            l2_dist(vec_col, lit_vec(cv)).alias("d"),
-            F.lit(int(cid)).alias("cid"),
-        )
-        for cid, cv in cents
-    ]
-    return F.array_min(F.array(*entries)).getField("cid")
-
-
-def _assign_cid_arrow(vec_col: Column | str, cents: Centroids) -> Column:
-    """assign_cid's ARROW twin — BIT-IDENTICAL argmin, vectorized.
-
-    Identity argument, mirroring ann.signature_bits_arrow:
+    tiebreak — the one L2-argmin kernel of the package (k-means
+    assignment, IVF coarse quantizer, IVF-PQ residuals, streaming
+    ingest), evaluated per Arrow batch in NumPy. The result equals
+    the oracle's `ORDER BY list_distance ASC, cid ASC` bit for bit:
     - `(x−c)` and its square are single IEEE ops, identical in NumPy
-      and codegen;
-    - the distance fold is `np.cumsum(sq, axis=1)[:, -1]` — a prefix
-      scan IS the sequential left fold `l2_dist` evaluates (and the
-      seed difference can only flip a zero's sign; every addend is a
-      square ≥ +0.0, so the total is never −0.0);
+      and DuckDB;
+    - the distance fold is `np.cumsum(sq)[-1]` — a prefix scan IS the
+      sequential left fold `list_distance` / `functions.vector.l2_dist`
+      evaluate (and the seed difference can only flip a zero's sign;
+      every addend is a square ≥ +0.0, so the total is never −0.0);
     - `np.sqrt` and the JVM's Math.sqrt are both correctly-rounded
       IEEE 754, hence bit-equal;
     - centroids are scanned in ascending-cid order with a STRICT `<`
-      update, so ties keep the lowest cid — exactly array_min's
-      (d, cid) struct order and the oracle's ORDER BY d, cid.
-    tests/test_ann.py pins the equality on real data at width, and on
-    an adversarial duplicated/near-tie centroid set.
+      update, so ties keep the lowest cid — the oracle's ORDER BY d,
+      cid.
+    tests/test_ann.py pins the equality against an in-test
+    `functions.vector.l2_dist` argmin on real d=768 data and on an
+    adversarial duplicated/near-tie centroid set; the d=64 oracle gate
+    checks the trained grids against DuckDB.
 
-    HOW it is fast (r10 optimization; guide §4.2 "hand whole batches
-    to vectorized native libraries"): the r10-build version evaluated
-    the exact fold against EVERY centroid — n·k·d touched doubles per
-    pass, purely memory-bound (the x10 corpus assignment, k≈5161,
-    moved ~TBs and measured ~39 s/build). The exact fold's ORDER makes
-    that traffic irreducible, so the argmin is split into
+    HOW it is fast: the exact fold against EVERY centroid touches
+    n·k·d doubles per pass, purely memory-bound, so the argmin is
+    split into
     (a) a BLAS prefilter: d²(x,c) = ‖x‖² − 2x·C + ‖c‖² via one GEMM —
         compute-bound, n·k output doubles instead of n·k·d temps;
     (b) a PROVABLY SAFE margin: the float64 GEMM result differs from
@@ -112,8 +84,9 @@ def _assign_cid_arrow(vec_col: Column | str, cents: Centroids) -> Column:
         candidate, so the EXACT argmin is always among the candidates;
     (c) the exact sequential fold + (d, cid) strict-< scan re-ranks
         ONLY the candidates (almost always exactly 1; a handful under
-        planted duplicate/viral-cell ties), reproducing the Catalyst
-        result bit-for-bit including sqrt-rounding ties."""
+        planted duplicate/viral-cell ties), reproducing the oracle
+        result bit-for-bit including sqrt-rounding ties.
+    An empty centroid list assigns NULL."""
     ordered = sorted(cents, key=lambda t: int(t[0]))
     cmat = np.asarray([[float(x) for x in cv] for _, cv in ordered], dtype=np.float64)
     cids = np.asarray([int(cid) for cid, _ in ordered], dtype=np.int32)
@@ -129,7 +102,7 @@ def _assign_cid_arrow(vec_col: Column | str, cents: Centroids) -> Column:
         x = np.stack(v.to_numpy()).astype(np.float64)
         n = x.shape[0]
         if cmat.shape[0] == 0:
-            return pd.Series(np.full(n, -1, dtype=np.int32))
+            return pd.Series([None] * n, dtype="Int32")
         # (a) GEMM prefilter: approximate squared distances, one matmul
         xx = np.einsum("ij,ij->i", x, x)
         cc = np.einsum("ij,ij->i", cmat, cmat)
@@ -153,8 +126,8 @@ def _assign_cid_arrow(vec_col: Column | str, cents: Centroids) -> Column:
                 # is False, so no candidate survives the prefilter —
                 # fall back to the exact fold over EVERY centroid. The
                 # strict `<` never fires on NaN distances, keeping the
-                # lowest cid, exactly array_min's (d, cid) result under
-                # Spark's NaN-is-largest double ordering (r10 advice).
+                # lowest cid — the (d, cid) order under the engines'
+                # NaN-is-largest double ordering.
                 js = np.arange(cmat.shape[0])
             bd, bc = np.inf, int(cids[js[0]])
             for j in js:  # ascending cid order (cids sorted ascending)
@@ -251,95 +224,42 @@ def train_lloyd_pq(
     init: dict[int, Centroids],
     dim: int,
     iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     sum_scale: int = KMEANS_SUM_SCALE,
 ) -> dict[int, Centroids]:
     """Train all M sub-space codebooks together: each iteration is ONE
-    corpus pass — explode each vector into its M sub-slices, broadcast-
-    join the M·KS-row codebook on `m`, take the (distance, code)
-    struct-min per (row, sub-space), then one exploded (m, code, dim,
-    x) reduce carries every sub-space's quantized sums at once. The
-    long-format join keeps the plan to a SINGLE distance expression
-    (an M·KS-literal argmin projection compiles M·KS folds into one
-    stage — hundreds of KiB of codegen and tens of seconds of compile
-    at M=16·KS=32). `init` maps sub-space m → its initial (code,
-    sub-centroid) list; sub-centroid length is dim/M. Distances rank
-    UNSQUARED (the oracle's ORDER BY list_distance)."""
+    corpus pass — one Arrow batch kernel (ann.pq_codes, squared=False:
+    the trainer ranks UNSQUARED distances, the oracle's ORDER BY
+    list_distance) assigns every row's M codes, each vector explodes
+    into its M (m, code, sub-slice) entries, and one exploded (m, code,
+    dim, x) reduce carries every sub-space's quantized sums at once.
+    `init` maps sub-space m → its initial (code, sub-centroid) list;
+    sub-centroid length is dim/M."""
+    from multi_search_retrival_big_data_spark.operators import ann
+
     m_count = len(init)
     dsub = dim // m_count
     books = {
         m: [(int(c), [float(x) for x in cv]) for c, cv in book]
         for m, book in init.items()
     }
-    spark = emb.sparkSession
-    ks = len(next(iter(books.values()))) if books else 0
+    v = F.col(vec_col).cast("array<double>")
     for _ in range(iters):
-        v = F.col(vec_col).cast("array<double>")
-        if m_count * ks * dsub >= 10_000:
-            # ARROW assignment (ann.pq_codes_arrow, squared=False — the
-            # trainer's unsquared rank): the join argmin's interpreted
-            # fold is corpus × M·KS·dsub lambda dispatches per
-            # iteration, minutes at the d=768 geometry; the Arrow twin
-            # is bit-identical (same fold order, same (d, code)
-            # tiebreak), so the trained books cannot differ
-            from multi_search_retrival_big_data_spark.operators import ann as _ann
-
-            codes = _ann.pq_codes_arrow(v, books, dim, squared=False)
-            wide = emb.select(
-                codes.alias("__codes"),
-                *[
-                    F.slice(v, m * dsub + 1, dsub).alias(f"__s{m}")
-                    for m in range(m_count)
-                ],
+        wide = emb.select(
+            ann.pq_codes(v, books, dim, squared=False).alias("__codes"),
+            *[F.slice(v, m * dsub + 1, dsub).alias(f"__s{m}") for m in range(m_count)],
+        )
+        entries = [
+            F.struct(
+                F.lit(m).alias("m"),
+                F.col("__codes").getItem(m).alias("code"),
+                F.col(f"__s{m}").alias("sub"),
             )
-            slices2 = [
-                F.struct(
-                    F.lit(m).alias("m"),
-                    F.col("__codes").getItem(m).alias("code"),
-                    F.col(f"__s{m}").alias("sub"),
-                )
-                for m in range(m_count)
-            ]
-            exploded = wide.select(F.explode(F.array(*slices2)).alias("e")).select(
-                "e.m", F.col("e.code").alias("code"),
-                F.posexplode("e.sub").alias("dim", "x"),
-            )
-        else:
-            book_rows = [
-                (int(mi), int(code), [float(x) for x in cv])
-                for mi, book in sorted(books.items())
-                for code, cv in book
-            ]
-            bdf = F.broadcast(
-                tables.local_frame(spark, book_rows, "m INT, code INT, cv ARRAY<DOUBLE>")
-            )
-            slices = [
-                F.struct(
-                    F.lit(m).alias("m"), F.slice(v, m * dsub + 1, dsub).alias("sub")
-                )
-                for m in range(m_count)
-            ]
-            longf = emb.select(
-                F.col(id_col), F.explode(F.array(*slices)).alias("e")
-            ).select(id_col, "e.m", "e.sub")
-            best = (
-                longf.join(bdf, "m")
-                .groupBy(id_col, "m")
-                .agg(
-                    F.min(
-                        F.struct(
-                            l2_dist("sub", "cv").alias("d"),
-                            F.col("code").alias("code"),
-                            F.col("sub").alias("sub"),
-                        )
-                    ).alias("b")
-                )
-            )
-            exploded = best.select(
-                "m", F.col("b.code").alias("code"),
-                F.posexplode("b.sub").alias("dim", "x"),
-            )
+            for m in range(m_count)
+        ]
+        exploded = wide.select(F.explode(F.array(*entries)).alias("e")).select(
+            "e.m", "e.code", F.posexplode("e.sub").alias("dim", "x"),
+        )
         mscale = float(10**sum_scale)
         agg = exploded.groupBy("m", "code", "dim").agg(
             (
@@ -366,17 +286,6 @@ def train_lloyd_pq(
             for m, book in books.items()
         }
     return books
-
-
-def _assign_sub(sub_col: Column, book: Centroids) -> Column:
-    entries = [
-        F.struct(
-            l2_dist(sub_col, lit_vec(cv)).alias("d"),
-            F.lit(int(code)).alias("cid"),
-        )
-        for code, cv in book
-    ]
-    return F.array_min(F.array(*entries)).getField("cid")
 
 
 def stride_init(

@@ -1072,9 +1072,9 @@ _PQ_TRAIN_CTES, _PQ_TRAIN_FINALS = pq_lloyd_ctes(
 
 def _pq_trained_ctes() -> str:
     """Trained-codebook encode + ADC CTEs: ranks sub-space codes by
-    UNSQUARED list_distance (matching kmeans._assign_sub's (d, code)
-    struct-min, which the persisted trained code table was built
-    with), unlike the stride path's squared pq_encode ranking."""
+    UNSQUARED list_distance (matching pq_encode(squared=False), which
+    the persisted trained code table was built with), unlike the
+    stride path's squared pq_encode ranking."""
     parts = []
     for i in range(_PQT_M):
         lo, hi = i * _PQT_DSUB + 1, (i + 1) * _PQT_DSUB
@@ -2567,10 +2567,7 @@ def ann_lsh_d768_tuned_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = num_planes // bands
         planes = ann.hyperplanes(_D768, num_planes)
         qsig = ann.signature_of(qv, planes)
-        # Arrow signature pass (bit-identical to the packed Catalyst
-        # fold — see ann.signature_bits_arrow); at (48, 768) the
-        # interpreted fold costs ~180 s for a 2k-row corpus
-        sig = wide.withColumn("__sig", ann.signature_bits_arrow("embedding", planes))
+        sig = wide.withColumn("__sig", ann.signature_bits("embedding", planes))
         cond = None
         for b, qband in ann.query_bands(qsig, bands, rows):
             c = F.substring(F.col("__sig"), b * rows + 1, rows) == F.lit(qband)

@@ -160,8 +160,8 @@ def _verified_pairs_cte(threshold: float) -> str:
 
 def _components_oracle(max_bucket: int | None = None) -> str:
     """Transitive closure of the verified near-dup pair graph via a
-    recursive CTE (the single-machine spelling of what the Spark side
-    computes by iterated min-label propagation)."""
+    recursive CTE (the single-machine spelling of the closure the Spark
+    side computes by union-find or large-star/small-star)."""
     return f"""
     WITH RECURSIVE {_minhash_cand_ctes(max_bucket)},
     {_verified_pairs_cte(JACCARD_THRESHOLD)},
@@ -248,10 +248,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment: connected components over the
     MinHash-LSH verified pair graph via connected_components_auto —
-    min-label propagation as the shallow-graph fast path (near-dup
-    graphs have diameter ≤ ~3, so it converges in a few one-shuffle
-    rounds, which is what happens on this corpus), with automatic
-    fallback to large-star/small-star for deep graphs. Output:
+    a driver union-find while the verified graph fits the driver gate
+    (what happens on this corpus), large-star/small-star above it.
+    Output:
     (doc_id, cluster_id = min reachable id, cluster_size) for every
     document in a non-singleton cluster — the table a dedup job joins
     against to keep one representative per cluster. The oracle
@@ -282,12 +281,12 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_cluster_components_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same duplicate-cluster table as dedup_cluster_components,
     computed by the alternating large-star/small-star algorithm
-    (dedup.connected_components_lss) instead of min-label propagation —
-    the diameter-robust variant (O(log² n) rounds on ANY graph,
-    including chains that would exhaust the propagation loop). Sharing
-    the recursive-CTE oracle with the propagation query makes the two
-    implementations mutually parity-checked on the real near-dup
-    graph."""
+    (dedup.connected_components_lss) directly, whatever the graph size
+    — the distributed route connected_components_auto takes above its
+    driver gate (O(log² n) rounds on ANY graph, including chains).
+    Sharing the recursive-CTE oracle with the auto query makes the
+    union-find and LSS routes mutually parity-checked on the real
+    near-dup graph."""
     from pyspark.sql.window import Window
 
     from multi_search_retrival_big_data_spark import index_store

@@ -503,30 +503,88 @@ def test_cascade_router_branches(spark):
             assert r.score == hi_scores[r.vec_id]
 
 
-def test_signature_bits_packed_matches_unpacked(spark):
-    from multi_search_retrival_big_data_spark.operators import ann
-    from multi_search_retrival_big_data_spark.queries.common import EMB_DIM
+def _duck_rows(sql: str, **tables_: tuple[list[int], list[list[float]]]) -> list:
+    """Run `sql` in DuckDB over (vec_id BIGINT, v DOUBLE[]) tables given
+    as (ids, vectors) — the reference the registry oracles use, so the
+    kernels are checked against an engine outside the program."""
+    import duckdb
+    import pyarrow as pa
 
+    con = duckdb.connect()
+    for name, (ids, vecs) in tables_.items():
+        con.register(
+            name,
+            pa.table(
+                {
+                    "vec_id": pa.array(ids, pa.int64()),
+                    "v": pa.array(vecs, pa.list_(pa.float64())),
+                }
+            ),
+        )
+    return con.execute(sql).fetchall()
+
+
+def _duck_signatures(ids, vecs, planes) -> dict[int, str]:
+    """The oracles' `list_dot_product(v, plane) >= 0` sign spelling."""
+    rows = _duck_rows(
+        """SELECT e.vec_id,
+                  string_agg(CASE WHEN list_dot_product(e.v, pl.v) >= 0
+                                  THEN '1' ELSE '0' END, '' ORDER BY pl.vec_id)
+           FROM e, pl GROUP BY e.vec_id""",
+        e=(ids, vecs),
+        pl=(list(range(len(planes))), [list(p) for p in planes]),
+    )
+    return dict(rows)
+
+
+def _duck_pq_codes(ids, vecs, book_rows, m_count, dsub, squared) -> dict[int, tuple]:
+    """The oracles' per-sub-space `ORDER BY list_distance, code` argmin
+    (squared: list_distance * list_distance, the stride oracle)."""
+    out: dict[int, list[int]] = {i: [] for i in ids}
+    for mi in range(m_count):
+        book = [(code, cv) for bm, code, cv in book_rows if bm == mi]
+        d = f"list_distance(e.v[{mi * dsub + 1}:{(mi + 1) * dsub}], c.v)"
+        rank = f"({d} * {d})" if squared else d
+        rows = _duck_rows(
+            f"""SELECT vec_id, code FROM (
+                  SELECT e.vec_id, c.vec_id AS code, row_number() OVER (
+                    PARTITION BY e.vec_id ORDER BY {rank} ASC, c.vec_id ASC) AS rn
+                  FROM e, c) WHERE rn = 1""",
+            e=(ids, vecs),
+            c=([code for code, _ in book], [cv for _, cv in book]),
+        )
+        for vid, code in rows:
+            out[vid].append(code)
+    return {vid: tuple(codes) for vid, codes in out.items()}
+
+
+def _ids_vecs(df) -> tuple[list[int], list[list[float]]]:
+    rows = df.select("vec_id", "embedding").collect()
+    return [int(r[0]) for r in rows], [[float(x) for x in r[1]] for r in rows]
+
+
+def test_signature_bits_matches_duckdb_sign(spark):
+    """d=64 signatures, including rows whose plane dots are exactly 0
+    (the integer-valued corpus makes ties likely), equal the oracles'
+    list_dot_product sign."""
     emb = spark.createDataFrame(
         [(i, [((i * 7 + j * 13) % 19 - 9) / 4.0 for j in range(EMB_DIM)])
          for i in range(40)],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>",
     )
     planes = ann.hyperplanes(EMB_DIM, ann.NUM_PLANES)
-    a = emb.select("vec_id", ann.signature_bits("embedding", planes).alias("s"))
-    b = emb.select("vec_id", ann.signature_bits_packed("embedding", planes).alias("s"))
-    assert {(r.vec_id, r.s) for r in a.collect()} == {
-        (r.vec_id, r.s) for r in b.collect()
+    got = {
+        r.vec_id: r.s
+        for r in emb.select(
+            "vec_id", ann.signature_bits("embedding", planes).alias("s")
+        ).collect()
     }
+    assert got == _duck_signatures(*_ids_vecs(emb), planes)
 
 
-def test_signature_bits_packed_rejects_non_sign_planes(spark):
-    import pytest as _pytest
-
-    from multi_search_retrival_big_data_spark.operators import ann
-
-    with _pytest.raises(ValueError, match="±1"):
-        ann.signature_bits_packed("embedding", [[0.5, -1.0]])
+def test_signature_bits_rejects_non_sign_planes(spark):
+    with pytest.raises(ValueError, match="±1"):
+        ann.signature_bits("embedding", [[0.5, -1.0]])
 
 
 # ---- corpus-derived nlist retrain policy -------------------------------
@@ -564,38 +622,30 @@ def test_ivf_retrain_arms_cells_stay_flat(spark, sf_dir):
 
 
 def test_signature_bits_arrow_bit_identical_at_width(spark, sf_dir):
-    """The Arrow signature twin must produce EXACTLY the packed
-    Catalyst fold's bits at the production geometry (48 planes ×
-    d=768) — this is what licenses swapping it into the oracle-checked
-    d=768 rows and the index builds (ann.signature_bits_arrow's
-    identity argument, pinned on real data)."""
+    """The Arrow signature kernel at the production geometry (48 planes
+    × d=768) produces EXACTLY DuckDB's list_dot_product sign bits — the
+    identity argument in ann.signature_bits, pinned on real data."""
     wide = dense.expand_to_dim(
         tables.load(spark, "embeddings", sf_dir).limit(40), out_dim=768, in_dim=EMB_DIM
     )
     planes = ann.hyperplanes(768, 48)
-    got = wide.select(
-        "vec_id",
-        ann.signature_bits_arrow("embedding", planes).alias("a"),
-        ann.signature_bits_packed("embedding", planes).alias("p"),
-    ).collect()
+    got = {
+        r.vec_id: r.s
+        for r in wide.select(
+            "vec_id", ann.signature_bits("embedding", planes).alias("s")
+        ).collect()
+    }
     assert len(got) == 40
-    for r in got:
-        assert r["a"] == r["p"], f"vec {r['vec_id']}: arrow != packed"
+    assert got == _duck_signatures(*_ids_vecs(wide), planes)
 
 
-def test_assign_cid_arrow_bit_identical_at_width(spark, sf_dir):
-    """kmeans._assign_cid_arrow vs the literal-struct argmin on real
-    d=768 vectors: same cid for every row (distance folds, sqrt, and
-    the (d, cid) tiebreak all bit-equal)."""
-    from multi_search_retrival_big_data_spark.operators import kmeans
-
-    wide = dense.expand_to_dim(
-        tables.load(spark, "embeddings", sf_dir).limit(40), out_dim=768, in_dim=EMB_DIM
-    )
-    cents = kmeans.stride_init(wide, stride=7)  # several d=768 centroids
+def _literal_argmin(cents):
+    """In-test reference argmin: array_min over (l2_dist, cid) structs
+    of functions.vector folds — the oracle's ORDER BY list_distance,
+    cid as a Spark expression."""
     from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
 
-    literal = F.array_min(
+    return F.array_min(
         F.array(
             *[
                 F.struct(
@@ -606,10 +656,22 @@ def test_assign_cid_arrow_bit_identical_at_width(spark, sf_dir):
             ]
         )
     ).getField("cid")
+
+
+def test_assign_cid_arrow_bit_identical_at_width(spark, sf_dir):
+    """kmeans.assign_cid vs the in-test literal-struct argmin on real
+    d=768 vectors: same cid for every row (distance folds, sqrt, and
+    the (d, cid) tiebreak all bit-equal)."""
+    from multi_search_retrival_big_data_spark.operators import kmeans
+
+    wide = dense.expand_to_dim(
+        tables.load(spark, "embeddings", sf_dir).limit(40), out_dim=768, in_dim=EMB_DIM
+    )
+    cents = kmeans.stride_init(wide, stride=7)  # several d=768 centroids
     got = wide.select(
         "vec_id",
-        literal.alias("lit_cid"),
-        kmeans._assign_cid_arrow("embedding", cents).alias("arrow_cid"),
+        _literal_argmin(cents).alias("lit_cid"),
+        kmeans.assign_cid("embedding", cents).alias("arrow_cid"),
     ).collect()
     assert len(got) == 40
     for r in got:
@@ -622,8 +684,7 @@ def test_assign_cid_arrow_bit_identical_under_ties(spark, sf_dir):
     shape — stride_init can sample two near-identical vectors) and a
     centroid equal to a data row (distance exactly 0). The prefilter's
     margin must surface every tied candidate and the exact re-rank
-    must keep the LOWEST cid, matching the literal-struct argmin."""
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
+    must keep the LOWEST cid, matching the in-test literal argmin."""
     from multi_search_retrival_big_data_spark.operators import kmeans
 
     emb = tables.load(spark, "embeddings", sf_dir).limit(60)
@@ -633,34 +694,29 @@ def test_assign_cid_arrow_bit_identical_under_ties(spark, sf_dir):
     # cids deliberately non-contiguous; centroid 7 duplicates 3, and 3
     # equals a real data row (zero distance, tie between cid 3 and 7)
     cents = [(3, v0), (5, v1), (7, list(v0)), (11, [x + 1e-13 for x in v0])]
-    literal = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    l2_dist("embedding", lit_vec(cv)).alias("d"),
-                    F.lit(int(cid)).alias("cid"),
-                )
-                for cid, cv in cents
-            ]
-        )
-    ).getField("cid")
     got = emb.select(
         "vec_id",
-        literal.alias("lit_cid"),
-        kmeans._assign_cid_arrow("embedding", cents).alias("arrow_cid"),
+        _literal_argmin(cents).alias("lit_cid"),
+        kmeans.assign_cid("embedding", cents).alias("arrow_cid"),
     ).collect()
     assert len(got) == 60
     for r in got:
         assert r["lit_cid"] == r["arrow_cid"], f"vec {r['vec_id']}"
 
 
+def _pq_codes_by_id(codes_df, m_count) -> dict[int, tuple]:
+    return {
+        int(r["vec_id"]): tuple(int(r[f"c{i}"]) for i in range(m_count))
+        for r in codes_df.collect()
+    }
+
+
 @pytest.mark.slow
 def test_pq_codes_arrow_bit_identical_at_width(spark, sf_dir):
-    """ann.pq_codes_arrow vs the broadcast-join MIN(struct) argmin at
-    the trained d=768 geometry (M=16, KS=32, dsub=48), BOTH rank
+    """pq_encode vs DuckDB's per-sub-space ORDER BY list_distance, code
+    at the trained d=768 geometry (M=16, KS=32, dsub=48), BOTH rank
     spellings — squared (d·d after sqrt, the stride oracle's) and
-    unsquared (the trainer's). Equal codes for every row licenses the
-    Arrow dispatch inside pq_encode/train_lloyd_pq."""
+    unsquared (the trainer's)."""
     wide = dense.expand_to_dim(
         tables.load(spark, "embeddings", sf_dir).limit(30), out_dim=768, in_dim=EMB_DIM
     )
@@ -672,27 +728,24 @@ def test_pq_codes_arrow_bit_identical_at_width(spark, sf_dir):
         for mi, book in sorted(init.items())
         for code, cv in book
     ]
-    cb = spark.createDataFrame(book_rows, "m INT, code INT, cv ARRAY<DOUBLE>")
+    cb = tables.local_frame(spark, book_rows, "m INT, code INT, cv ARRAY<DOUBLE>")
+    ids, vecs = _ids_vecs(wide)
     for squared in (True, False):
-        a = ann.pq_encode(
-            wide, dim=768, m=ann.PQT_M, ks=ann.PQT_KS,
-            codebook=cb, squared=squared, use_arrow=True,
-        ).collect()
-        b = ann.pq_encode(
-            wide, dim=768, m=ann.PQT_M, ks=ann.PQT_KS,
-            codebook=cb, squared=squared, use_arrow=False,
-        ).collect()
-        ka = sorted(tuple(r) for r in a)
-        kb = sorted(tuple(r) for r in b)
-        assert ka == kb, f"squared={squared}: arrow != join"
+        got = _pq_codes_by_id(
+            ann.pq_encode(
+                wide, dim=768, m=ann.PQT_M, ks=ann.PQT_KS, codebook=cb, squared=squared
+            ),
+            ann.PQT_M,
+        )
+        want = _duck_pq_codes(ids, vecs, book_rows, ann.PQT_M, 768 // ann.PQT_M, squared)
+        assert got == want, f"squared={squared}: pq_encode != DuckDB"
 
 
 def test_pq_codes_arrow_bit_identical_under_ties(spark, sf_dir):
-    """GEMM-prefilter tie handling in pq_codes_arrow: codebooks with
-    EXACT DUPLICATE codewords (and one codeword equal to a data
-    sub-vector → zero distance) must keep the LOWEST code, matching the
-    broadcast-join MIN(struct(dist, code)) tiebreak, for BOTH rank
-    spellings."""
+    """GEMM-prefilter tie handling in pq_codes: codebooks with EXACT
+    DUPLICATE codewords (and one codeword equal to a data sub-vector →
+    zero distance) must keep the LOWEST code, matching DuckDB's ORDER
+    BY list_distance, code, for BOTH rank spellings."""
     emb = tables.load(spark, "embeddings", sf_dir).limit(40)
     m_count, dsub = 4, EMB_DIM // 4
     row = [float(x) for x in emb.limit(1).collect()[0]["embedding"]]
@@ -705,23 +758,49 @@ def test_pq_codes_arrow_bit_identical_under_ties(spark, sf_dir):
             (mi, 2, list(sub)),       # exact duplicate of code 1
             (mi, 3, [x + 1e-13 for x in sub]),
         ]
-    cb = spark.sparkSession.createDataFrame(
-        book_rows, "m INT, code INT, cv ARRAY<DOUBLE>"
-    ) if hasattr(spark, "sparkSession") else spark.createDataFrame(
-        book_rows, "m INT, code INT, cv ARRAY<DOUBLE>"
-    )
+    cb = tables.local_frame(spark, book_rows, "m INT, code INT, cv ARRAY<DOUBLE>")
+    ids, vecs = _ids_vecs(emb)
     for squared in (True, False):
-        a = ann.pq_encode(
-            emb, dim=EMB_DIM, m=m_count, ks=4,
-            codebook=cb, squared=squared, use_arrow=True,
-        ).collect()
-        b = ann.pq_encode(
-            emb, dim=EMB_DIM, m=m_count, ks=4,
-            codebook=cb, squared=squared, use_arrow=False,
-        ).collect()
-        ka = sorted(tuple(r) for r in a)
-        kb = sorted(tuple(r) for r in b)
-        assert ka == kb, f"squared={squared}: arrow != join under ties"
+        got = _pq_codes_by_id(
+            ann.pq_encode(
+                emb, dim=EMB_DIM, m=m_count, ks=4, codebook=cb, squared=squared
+            ),
+            m_count,
+        )
+        want = _duck_pq_codes(ids, vecs, book_rows, m_count, dsub, squared)
+        assert got == want, f"squared={squared}: pq_encode != DuckDB under ties"
+
+
+@pytest.mark.parametrize("dim", [EMB_DIM, 768])
+def test_vector_kernels_plan_one_arrow_node_at_every_width(spark, dim):
+    """assign_cid, signature_bits and pq_encode have ONE implementation
+    each: at the oracle-gate width and at the production width their
+    physical plans evaluate the same Arrow batch node (no size-gated
+    Catalyst literal form below some k·dim)."""
+    from multi_search_retrival_big_data_spark.operators import kmeans
+
+    emb = tables.local_frame(
+        spark,
+        [(i, [float((i * 7 + j) % 5) for j in range(dim)]) for i in range(4)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    cents = [(0, [0.0] * dim), (1, [1.0] * dim)]
+    m, ks = 8, 2
+    cb = tables.local_frame(
+        spark,
+        [(mi, c, [float(c)] * (dim // m)) for mi in range(m) for c in range(ks)],
+        "m INT, code INT, cv ARRAY<DOUBLE>",
+    )
+    frames = {
+        "assign_cid": emb.select(kmeans.assign_cid("embedding", cents).alias("cid")),
+        "signature_bits": emb.select(
+            ann.signature_bits("embedding", ann.hyperplanes(dim, 16)).alias("s")
+        ),
+        "pq_encode": ann.pq_encode(emb, dim=dim, m=m, ks=ks, codebook=cb),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" in plan, f"{name} at d={dim}:\n{plan}"
 
 
 def test_ranked_cosine_topk_arrow_matches_expr_at_768(spark, sf_dir):
@@ -755,41 +834,52 @@ def test_ranked_cosine_topk_arrow_matches_expr_at_768(spark, sf_dir):
 
 
 def test_argmin_arrow_nonfinite_row_keeps_lowest_id(spark):
-    """r10 advice: a NaN/Inf embedding makes every GEMM-prefilter
-    comparison False; the kernels must fall back to the exact fold over
-    all centroids/codes (lowest id under NaN, matching array_min /
-    MIN(struct) with Spark's NaN-is-largest ordering) instead of
-    raising IndexError."""
-    import pandas as pd
-
+    """A NaN/Inf embedding makes every GEMM-prefilter comparison False;
+    the kernels must fall back to the exact fold over all
+    centroids/codes (lowest id under NaN — ORDER BY d, id with
+    NaN-is-largest) instead of raising IndexError. Checked at d=8 and
+    at a wide d=1300 geometry: one kernel serves both."""
     from multi_search_retrival_big_data_spark.operators import kmeans
 
-    cents = [(3, [0.0] * 8), (7, [1.0] * 8)]
-    # wide fake geometry to force the Arrow twin through the dispatch
-    wide_cents = [(i, [float(i)] * 1300) for i in range(8)]
-    df = spark.createDataFrame(
-        [
-            (1, [float("nan")] * 1300),
-            (2, [float("inf")] * 1300),
-            (3, [1.0] * 1300),
-        ],
-        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    def frame(dim):
+        return spark.createDataFrame(
+            [
+                (1, [float("nan")] * dim),
+                (2, [float("inf")] * dim),
+                (3, [1.0] * dim),
+            ],
+            "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+        )
+
+    def cids(df, cents):
+        return {
+            r["vec_id"]: r["cid"]
+            for r in df.select(
+                "vec_id", kmeans.assign_cid("embedding", cents).alias("cid")
+            ).collect()
+        }
+
+    def codes(df, books, dim):
+        return {
+            r["vec_id"]: r["c"]
+            for r in df.select(
+                "vec_id", ann.pq_codes("embedding", books, dim).alias("c")
+            ).collect()
+        }
+
+    got = cids(frame(8), [(3, [0.0] * 8), (7, [1.0] * 8)])
+    assert got[1] == 3          # NaN row: lowest cid, no crash
+    assert got[2] == 3          # Inf row: every distance is inf
+    assert got[3] == 7          # finite row still assigns exactly
+    got = cids(frame(1300), [(i, [float(i)] * 1300) for i in range(8)])
+    assert got[1] == 0
+    assert got[3] == 1
+    # pq_codes: same guard per sub-space
+    by_id = codes(frame(8), {mi: [(c, [float(c)] * 4) for c in range(4)] for mi in range(2)}, 8)
+    assert by_id[1] == [0] * 2  # NaN: lowest code everywhere, no crash
+    assert by_id[3] == [1] * 2
+    by_id = codes(
+        frame(1300), {mi: [(c, [float(c)] * 50) for c in range(4)] for mi in range(26)}, 1300
     )
-    got = {
-        r["vec_id"]: r["cid"]
-        for r in df.select(
-            "vec_id", kmeans.assign_cid("embedding", wide_cents).alias("cid")
-        ).collect()
-    }
-    assert got[1] == 0          # NaN row: lowest cid, no crash
-    assert got[3] == 1          # finite row still assigns exactly
-    # pq_codes_arrow: same guard per sub-space
-    books = {
-        mi: [(c, [float(c)] * 50) for c in range(4)] for mi in range(26)
-    }
-    codes = df.select(
-        "vec_id", ann.pq_codes_arrow("embedding", books, 1300).alias("c")
-    ).collect()
-    by_id = {r["vec_id"]: r["c"] for r in codes}
-    assert by_id[1] == [0] * 26  # NaN: lowest code everywhere, no crash
+    assert by_id[1] == [0] * 26
     assert by_id[3] == [1] * 26

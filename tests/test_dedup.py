@@ -77,22 +77,25 @@ def test_jaccard_value_matches_python(docs):
 def test_connected_components_chain_and_triangle(spark):
     """A 4-node chain (10-11-12-13), a triangle (20,21,22), and an
     isolated pair (30,31): every node's cluster_id must be the minimum
-    id reachable via the transitive closure, which for the chain
-    requires more than one propagation round."""
+    id reachable via the transitive closure, on the distributed
+    large-star/small-star path and the driver union-find alike."""
     pairs = spark.createDataFrame(
         [(10, 11), (11, 12), (12, 13), (20, 21), (21, 22), (20, 22), (30, 31)],
         ["id_a", "id_b"],
     )
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in dedup.connected_components(pairs).collect()
-    }
-    assert got == {10: 10, 11: 10, 12: 10, 13: 10, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
+    want = {10: 10, 11: 10, 12: 10, 13: 10, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
+    for out in (
+        dedup.connected_components_lss(pairs),
+        dedup.connected_components_auto(pairs),
+    ):
+        assert {r["node"]: r["cluster_id"] for r in out.collect()} == want
 
 
 def test_lss_components_deep_chain(spark):
-    """A 60-node chain defeats per-round min-label propagation at low
-    max_iter (needs ~diameter rounds) but LSS converges in O(log² n)."""
+    """A 60-node chain (diameter 60 — per-round min-label propagation
+    would need ~60 rounds) converges under LSS in O(log² n) rounds, and
+    a round budget too small for it fails loudly instead of returning
+    partial labels."""
     import pytest as _pytest
 
     from multi_search_retrival_big_data_spark.operators import dedup as _d
@@ -103,7 +106,7 @@ def test_lss_components_deep_chain(spark):
     out = _d.connected_components_lss(chain, max_iter=10)
     assert all(r["cluster_id"] == 0 for r in out.collect())
     with _pytest.raises(RuntimeError, match="did not converge"):
-        _d.connected_components(chain, max_iter=5)
+        _d.connected_components_lss(chain, max_iter=1)
 
 
 def test_lss_components_parity_random_graph(spark):
@@ -115,7 +118,7 @@ def test_lss_components_parity_random_graph(spark):
     pairs = [(rng.randrange(80), rng.randrange(80)) for _ in range(50)]
     pairs = [(a, b) for a, b in pairs if a != b]
     pdf = spark.createDataFrame(pairs, "id_a BIGINT, id_b BIGINT")
-    a = {(r["node"], r["cluster_id"]) for r in _d.connected_components(pdf).collect()}
+    a = {(r["node"], r["cluster_id"]) for r in _d.connected_components_auto(pdf).collect()}
     b = {(r["node"], r["cluster_id"]) for r in _d.connected_components_lss(pdf).collect()}
     assert a == b
 
@@ -156,7 +159,9 @@ def test_lsh_capped_pairs_linear_and_spanning(dup_cluster_docs):
         ).filter(F.col("jaccard") >= 0.8)
         return sorted(
             (r["node"], r["cluster_id"])
-            for r in dedup.connected_components(verified.select("id_a", "id_b")).collect()
+            for r in dedup.connected_components_auto(
+                verified.select("id_a", "id_b")
+            ).collect()
         )
     assert clusters(capped) == clusters(full)
 
@@ -201,15 +206,14 @@ def test_lsh_cap_fires_on_testdata(spark, sf_dir):
 def test_connected_components_max_iter_validation(spark):
     pairs = spark.createDataFrame([(1, 2)], "id_a BIGINT, id_b BIGINT")
     with pytest.raises(ValueError):
-        dedup.connected_components(pairs, max_iter=0)
-    with pytest.raises(ValueError):
         dedup.connected_components_lss(pairs, max_iter=0)
+    with pytest.raises(ValueError):
+        dedup.connected_components_auto(pairs, max_iter=0, driver_max_edges=0)
 
 
 def test_connected_components_auto_shallow_and_deep(spark):
-    """auto (distributed path forced via driver_max_edges=0) takes the
-    propagation fast path on shallow graphs and falls back to LSS on a
-    chain that exhausts shallow_rounds."""
+    """auto with the distributed path forced (driver_max_edges=0) runs
+    LSS on a shallow graph and on a deep chain alike."""
     # shallow: triangle + isolated pair
     shallow = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (10, 11)], "id_a BIGINT, id_b BIGINT"
@@ -219,15 +223,13 @@ def test_connected_components_auto_shallow_and_deep(spark):
         for r in dedup.connected_components_auto(shallow, driver_max_edges=0).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    # deep: a 40-node chain needs ~40 propagation rounds -> LSS fallback
+    # deep: a 40-node chain (~40 rounds of min-label propagation)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 40)], "id_a BIGINT, id_b BIGINT"
     )
     out = {
         r["node"]: r["cluster_id"]
-        for r in dedup.connected_components_auto(
-            chain, shallow_rounds=3, driver_max_edges=0
-        ).collect()
+        for r in dedup.connected_components_auto(chain, driver_max_edges=0).collect()
     }
     assert set(out.values()) == {1} and len(out) == 40
 
@@ -257,9 +259,9 @@ def test_connected_components_auto_driver_fast_path(spark):
 
 def test_connected_components_selfloop_only_node_all_routes(spark):
     """r4 advice: a node appearing ONLY in a self-pair (a, a) must come
-    out of every route as a singleton cluster — driver union-find,
-    min-label propagation, and large-star/small-star must agree on the
-    node SET, not just on shared labels."""
+    out of every route as a singleton cluster — driver union-find and
+    large-star/small-star must agree on the node SET, not just on
+    shared labels."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (9, 9)], "id_a BIGINT, id_b BIGINT"
     )
@@ -269,7 +271,6 @@ def test_connected_components_selfloop_only_node_all_routes(spark):
         "auto-distributed": dedup.connected_components_auto(
             pairs, driver_max_edges=0
         ),
-        "propagation": dedup.connected_components(pairs),
         "lss": dedup.connected_components_lss(pairs),
     }
     for name, df in routes.items():

@@ -5,14 +5,15 @@ which never occurs in a plan string)."""
 
 from __future__ import annotations
 
-import pytest
-
+import os
 import sys
+
+import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from audit_plans import audit  # noqa: E402
 

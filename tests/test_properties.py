@@ -165,7 +165,10 @@ def test_connected_components_fixed_point_property(spark, edges):
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], ["id_a", "id_b"]
     )
-    got = {r["node"]: r["cluster_id"] for r in dedup.connected_components(pairs).collect()}
+    got = {
+        r["node"]: r["cluster_id"]
+        for r in dedup.connected_components_lss(pairs).collect()
+    }
     for a, b in edges:
         assert got[a] == got[b]
     for node, cid in got.items():

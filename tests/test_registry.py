@@ -3,13 +3,13 @@ query, every query executes at sf0.001."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-import sys
+import __spark_entry__ as se
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as se  # noqa: E402
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_oracle_keys_subset_of_queries():
@@ -36,7 +36,7 @@ def test_readme_registry_count_matches():
     # (len(load_registry())); this gate keeps the stated number honest.
     import re
 
-    with open("/root/repo/README.md") as fh:
+    with open(os.path.join(ROOT, "README.md")) as fh:
         m = re.search(r"`len\(load_registry\(\)\)` — (\d+) at this writing", fh.read())
     assert m, "README.md must state the registry count next to its source of truth"
     assert int(m.group(1)) == len(se.queries())
@@ -48,7 +48,7 @@ def test_coverage_registry_count_matches():
     # second document — both stated counts now fail loudly on drift.
     import re
 
-    with open("/root/repo/COVERAGE.md") as fh:
+    with open(os.path.join(ROOT, "COVERAGE.md")) as fh:
         m = re.search(r"(\d+) registered queries", fh.read())
     assert m, "COVERAGE.md must state the registry count"
     assert int(m.group(1)) == len(se.queries())

@@ -38,9 +38,7 @@ def test_registry_sanity():
     """Meta-check: unique names, every query has an oracle, oracles
     only reference the driver-registered tables."""
     import re
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as se
 
     qs, oracles = se.queries(), se.oracle_sql()

@@ -12,10 +12,11 @@ Prints one line per query: flags or 'clean'. Intended red flags:
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # queries where a nested-loop join is BY DESIGN: broadcasting a 1-row
 # aggregate (min/max/count) back into the plan. Sparse query norms are
