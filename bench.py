@@ -150,7 +150,7 @@ def _rotating_omit(pool: set, group: int = ROTATION_INDEX) -> set:
     return set(ordered) - set(ordered[group::ROTATION_GROUPS])
 # d=768 serving paths measured under the driver profile — the TUNED
 # production-geometry configs (what a d=768 deployment actually runs:
-# dimension-derived band/probe depth) plus the two strategies that need
+# dimension-derived band/probe depth) plus the exact scan and SQ8, which need
 # no tuning; the untuned audit variants and PQ (d=768 codebook train)
 # belong in the close run, where their recalls are pinned every round
 DRIVER_DIM_PATHS = (
@@ -198,8 +198,7 @@ DRIFT_WATCH = [
     # r7→r8: dense_batch_topk_cosine measured 2.14× its r1 baseline in a
     # session where every neighboring anchor drifted ~1.3× uniformly and
     # its Arrow twin sat at 1.10× — 5-run min/med/max decides variance
-    # vs a real shift (verdict r7 item 2); the Arrow batch path is
-    # already the designated high-d serving strategy either way
+    # vs a real shift (verdict r7 item 2)
     "dense_batch_topk_cosine",
     # r9→r10: the one headline anchor above its r1 baseline (0.63 vs
     # 0.44, 1.4×) in a session with a pinned ambient factor — 5-run
@@ -734,8 +733,8 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
         # whether the stride-IVF recall at d=768 is a geometry limit or
         # a training limit (FAISS practice trains; same serving shape
         # as ann_ivf_trained_recall_grid: probe the trained centroid
-        # table, rank the co-located pruned inverted lists via the
-        # shared width-gated ranker, r11)
+        # table, rank the co-located pruned inverted lists with the
+        # one cosine kernel)
         cents_t, assign_t = index_store.ivf_trained(spark, dim_dir, iters=2)
         probed = (
             cents_t.select("cid", l2_dist("cv", lit_vec(qv)).alias("__d"))
@@ -743,9 +742,8 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
             .limit(ann.IVF_NPROBE)
             .select("cid")
         )
-        return ann.ranked_cosine_topk(
-            assign_t.join(F.broadcast(probed), "cid"),
-            qv, DIM_K, "vec_id", "embedding", 6,
+        return dense.topk_cosine(
+            assign_t.join(F.broadcast(probed), "cid"), qv, k=DIM_K, round_to=6
         )
 
     def lsh_tuned():
@@ -769,16 +767,12 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
             .limit(nprobe)
             .select("cid")
         )
-        return ann.ranked_cosine_topk(
-            assign_t.join(F.broadcast(probed), "cid"),
-            qv, DIM_K, "vec_id", "embedding", 6,
+        return dense.topk_cosine(
+            assign_t.join(F.broadcast(probed), "cid"), qv, k=DIM_K, round_to=6
         )
 
     thunks = {
-        "dense_topk_cosine_expr": lambda: dense.topk_cosine(
-            emb(), qv, k=100, round_to=6
-        ),
-        "dense_topk_cosine_arrow": lambda: dense.topk_cosine_arrow(
+        "dense_topk_cosine_arrow": lambda: dense.topk_cosine(
             emb(), qv, k=100, round_to=6
         ),
         "ann_lsh_topk": lsh,
@@ -856,7 +850,6 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
         "recall_at_k": {"k": DIM_K, **recalls},
         "candidates": candidates,
         "d64_anchors": {
-            "dense_topk_cosine_expr": "dense_topk_cosine",
             "dense_topk_cosine_arrow": "dense_topk_cosine_arrow",
             "ann_lsh_topk": "ann_lsh_topk_cosine",
             "ann_lsh_topk_tuned": "ann_lsh_d768_tuned_grid",

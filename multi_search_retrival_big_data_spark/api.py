@@ -86,19 +86,12 @@ class SearchEngine:
                 keep_ids=keep_ids,
             )
 
-        def _score(vec):
-            # unfiltered scans take the Arrow/NumPy scorer (the
-            # high-dimension strategy — one BLAS matvec per batch);
-            # subset searches keep the Catalyst fold so the semi-join
-            # prunes BEFORE scoring
-            if subset is None:
-                return dense.topk_cosine_arrow(self.emb, vec, k=k, round_to=6)
-            return dense.topk_cosine(self.emb, vec, k=k, subset=subset, round_to=6)
-
-        hits = _score(qv)
+        # one cosine kernel; a subset search semi-joins before scoring
+        hits = dense.topk_cosine(self.emb, qv, k=k, subset=subset, round_to=6)
         if ensemble:
             qv2 = encoders.encode_query(text[::-1], self.encoder, self.translator)
-            hits = fusion.merge_by_addition([hits, _score(qv2)], k=k, round_to=6)
+            hits2 = dense.topk_cosine(self.emb, qv2, k=k, subset=subset, round_to=6)
+            hits = fusion.merge_by_addition([hits, hits2], k=k, round_to=6)
             hits = hits.withColumnRenamed("id", "vec_id")
         if not group:
             return hits
@@ -197,7 +190,7 @@ class SearchEngine:
             k=100,
             round_to=6,
         )
-        dn = dense.topk_cosine_arrow(self.emb, qv, k=100, round_to=6)
+        dn = dense.topk_cosine(self.emb, qv, k=100, round_to=6)
         fused = fusion.reciprocal_rank_fusion([sp, dn], k=n_fuse)
         cand = (
             self.emb.select("vec_id", "embedding")

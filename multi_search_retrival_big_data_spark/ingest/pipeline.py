@@ -18,9 +18,9 @@ partitioning, sink layout) is the real thing and is what these jobs
 test.
 
 Scale notes: every job is per-video parallel (no cross-video state);
-the only global operation is the dense-id enumeration (S3), kept as the
-exact-parity `row_number` variant here with the zipWithIndex-style
-alternative documented in operators/temporal.dense_global_ids; sinks
+the only global operation is the dense-id enumeration (S3),
+operators/temporal.dense_global_ids — range partitions, a per-partition
+row_number and prefix-sum offsets, never a single-task window; sinks
 are `partitionBy("collection")` so every downstream query prunes
 partitions on the reference's `data_part` key.
 """
@@ -120,7 +120,7 @@ def assign_global_ids(keyframes: DataFrame, shots: DataFrame) -> DataFrame:
         range_end="end_frame",
         keys=["collection", "video"],
     )
-    with_ids = temporal.dense_global_ids_scalable(
+    with_ids = temporal.dense_global_ids(
         assigned, ["collection", "video", "frame_idx"], id_col="keyframe_id"
     )
     return with_ids.select(

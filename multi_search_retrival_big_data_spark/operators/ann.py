@@ -43,7 +43,6 @@ from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.functions.rounding import det_round
 from multi_search_retrival_big_data_spark.functions.vector import (
     cosine_sim,
-    dot,
     lit_vec,
 )
 from multi_search_retrival_big_data_spark.operators import dense, kmeans
@@ -292,9 +291,9 @@ def ann_lsh_topk(
         cand = _subset_semi_join(
             banded.filter(cond).select(id_col).distinct(), subset, id_col
         )
-        return ranked_cosine_topk(
+        return dense.topk_cosine(
             emb.join(cand, id_col, "left_semi"),
-            query_vec, k, id_col, vec_col, round_to,
+            query_vec, k, id_col, vec_col, round_to=round_to,
         )
     emb = ensure_min_partitions(emb)  # one signature per row: CPU-bound
     sig = signature_bits(vec_col, planes)
@@ -302,53 +301,12 @@ def ann_lsh_topk(
     for b, qband in query_bands(qsig, bands, rows):
         c = F.substring(F.col("__sig"), b * rows + 1, rows) == F.lit(qband)
         cond = c if cond is None else cond | c
-    return ranked_cosine_topk(
+    return dense.topk_cosine(
         _subset_semi_join(
             emb.withColumn("__sig", sig).filter(cond), subset, id_col
         ),
-        query_vec, k, id_col, vec_col, round_to,
+        query_vec, k, id_col, vec_col, round_to=round_to,
     )
-
-
-# past this width the 3·dim interpreted lambda dispatches per ranked
-# row (dot + two norm folds) dominate the serving rank; the d=64
-# oracle-gate corpora stay far below it on the proven expression form
-ARROW_RANK_MIN_DIM = 256
-
-
-def ranked_cosine_topk(
-    cand: DataFrame,
-    query_vec: Sequence[float],
-    k: int,
-    id_col: str,
-    vec_col: str,
-    round_to: int | None,
-) -> DataFrame:
-    """det-rounded-cosine descending top-k of a candidate set — the
-    shared final rank of every pruned ANN serving path, gated on width.
-
-    dim < ARROW_RANK_MIN_DIM (or round_to None): the Catalyst
-    expression det_round(cosine_sim(...)) — what every oracle-gate
-    corpus (d=64) executes.
-
-    dim ≥ ARROW_RANK_MIN_DIM: dense.topk_cosine_arrow — per Arrow batch
-    the candidate slab scores in ONE BLAS matvec, quantized inside the
-    UDF before the top-k sort (at d=768 the interpreted 3·768-dispatch
-    fold per row is the measured dominant cost of the tuned LSH/IVF
-    ranks). The gate is not a twin of one kernel: the BLAS rank is not
-    bit-identical to det_round(cosine_sim) at d=64, so the oracle-gate
-    width keeps the expression form."""
-    dim = len(query_vec)
-    if round_to is None or dim < ARROW_RANK_MIN_DIM:
-        score = cosine_sim(vec_col, lit_vec(query_vec))
-        if round_to is not None:
-            score = det_round(score, round_to)
-        return (
-            cand.select(F.col(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
-        )
-    return dense.topk_cosine_arrow(cand, query_vec, k, id_col, vec_col, round_to)
 
 
 CASCADE_MIN_CANDIDATES = 100  # default gate: 2×k at the k=50 serving default
@@ -397,15 +355,8 @@ def ann_cascade_topk(
         cond = c if cond is None else cond | c
     cand = banded.filter(cond).select(id_col).distinct()
     n_cand = cand.count()
-    score = cosine_sim(vec_col, lit_vec(query_vec))
-    if round_to is not None:
-        score = det_round(score, round_to)
     base = emb.join(cand, id_col, "left_semi") if n_cand >= min_candidates else emb
-    return (
-        base.select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return dense.topk_cosine(base, query_vec, k, id_col, vec_col, round_to=round_to)
 
 
 def multiprobe_values(qband: str) -> list[str]:
@@ -447,9 +398,6 @@ def ann_lsh_multiprobe_topk(
     planes = hyperplanes(dim, num_planes)
     rows = num_planes // bands
     qsig = signature_of(query_vec, planes)
-    score = cosine_sim(vec_col, lit_vec(query_vec))
-    if round_to is not None:
-        score = det_round(score, round_to)
     probes = [
         (b, multiprobe_values(qband)) for b, qband in query_bands(qsig, bands, rows)
     ]
@@ -459,11 +407,9 @@ def ann_lsh_multiprobe_topk(
             c = (F.col("band") == b) & F.col("bval").isin(vals)
             cond = c if cond is None else cond | c
         cand = banded.filter(cond).select(id_col).distinct()
-        return (
-            emb.join(cand, id_col, "left_semi")
-            .select(F.col(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
+        return dense.topk_cosine(
+            emb.join(cand, id_col, "left_semi"),
+            query_vec, k, id_col, vec_col, round_to=round_to,
         )
     emb = ensure_min_partitions(emb)
     sig = signature_bits(vec_col, planes)
@@ -471,62 +417,9 @@ def ann_lsh_multiprobe_topk(
     for b, vals in probes:
         c = F.substring(F.col("__sig"), b * rows + 1, rows).isin(vals)
         cond = c if cond is None else cond | c
-    return (
-        emb.withColumn("__sig", sig)
-        .filter(cond)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def score_pairs_arrow(
-    emb: DataFrame,
-    id_pairs: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int | None = None,
-) -> DataFrame:
-    """Vectorized exact-cosine verify of a candidate (id_a, id_b)
-    list: vectors joined once per side, then ONE NumPy pass per Arrow
-    batch (`mapInPandas`) — the designated Arrow scoring strategy
-    (measured ~1.6× the per-row expression fold at sf0.1, the pair
-    list being candidate-volume bound). Rounding is floor(x·10^r+0.5)
-    /10^r inside the UDF — det_round semantics, oracle-parity proven
-    by emb_near_dup_lsh/_delta. Shared by the full LSH mining path
-    and the delta-probe verify so both pay the same (cheapest)
-    per-pair cost."""
-    import numpy as np
-    import pandas as pd
-
-    pairs_v = id_pairs.join(
-        emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")),
-        "id_a",
-    ).join(
-        emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")),
-        "id_b",
-    )
-    scale = None if round_to is None else float(10**round_to)
-
-    def score_batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            va = np.stack(pdf["__va"].to_numpy()).astype(np.float64)
-            vb = np.stack(pdf["__vb"].to_numpy()).astype(np.float64)
-            c = (va * vb).sum(axis=1) / (
-                np.sqrt((va * va).sum(axis=1)) * np.sqrt((vb * vb).sum(axis=1))
-            )
-            if scale is not None:
-                c = np.floor(c * scale + 0.5) / scale
-            out = pd.DataFrame(
-                {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "cosine": c}
-            )
-            yield out[out["cosine"] >= threshold]
-
-    return pairs_v.mapInPandas(
-        score_batches, "id_a long, id_b long, cosine double"
+    return dense.topk_cosine(
+        emb.withColumn("__sig", sig).filter(cond),
+        query_vec, k, id_col, vec_col, round_to=round_to,
     )
 
 
@@ -540,7 +433,6 @@ def embedding_near_dup_pairs(
     dim: int = 64,
     use_lsh: bool = True,
     round_to: int | None = None,
-    strategy: str = "expr",
     banded: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a, id_b, cosine ≥
@@ -548,17 +440,12 @@ def embedding_near_dup_pairs(
 
     use_lsh=True: candidates = pairs sharing ≥1 signature band
     (equi-join on (band, band_value) — shuffle partitions by band
-    value, no cross join). `banded` supplies the PRECOMPUTED (id,
-    band, bval) table (index_store.emb_lsh_bands) so the per-corpus
-    signature pass happens at build time, not per run. use_lsh=False:
-    exact all-pairs via a single self-join (audit path; quadratic —
-    the oracle ground truth).
-
-    strategy="arrow" (LSH path only) scores the candidate pairs with
-    one vectorized NumPy pass per Arrow batch (`mapInPandas`) instead
-    of per-row expression folds — measured ~1.6× faster at sf0.1
-    because the pair list is candidate-volume bound; rounding uses
-    floor(x·10^r + 0.5)/10^r (det_round semantics) inside the UDF."""
+    value, no cross join), verified by dense.cosine_pairs. `banded`
+    supplies the PRECOMPUTED (id, band, bval) table
+    (index_store.emb_lsh_bands) so the per-corpus signature pass
+    happens at build time, not per run. use_lsh=False: exact
+    all-pairs via a single self-join scored by the Catalyst
+    cosine_sim (audit path; quadratic — the oracle ground truth)."""
     emb = ensure_min_partitions(emb)
     if use_lsh:
         if banded is None:
@@ -574,39 +461,11 @@ def embedding_near_dup_pairs(
             .select("id_a", "id_b")
             .distinct()
         )
-        if strategy == "arrow":
-            return score_pairs_arrow(
-                emb, id_pairs, threshold, id_col, vec_col, round_to
-            )
-        # per-id norms computed ONCE and joined — the pair scoring then
-        # folds each pair's arrays once (dot) instead of three times
-        # (dot + both norms), a 3× cut on the dominant cost
-        from multi_search_retrival_big_data_spark.functions.vector import l2_norm
-
-        normed = emb.select(
-            F.col(id_col), F.col(vec_col), l2_norm(vec_col).alias("__n")
-        )
-        pairs = id_pairs.join(
-            normed.select(
-                F.col(id_col).alias("id_a"),
-                F.col(vec_col).alias("__va"),
-                F.col("__n").alias("__na"),
-            ),
-            "id_a",
-        ).join(
-            normed.select(
-                F.col(id_col).alias("id_b"),
-                F.col(vec_col).alias("__vb"),
-                F.col("__n").alias("__nb"),
-            ),
-            "id_b",
-        )
-        score = dot("__va", "__vb") / (F.col("__na") * F.col("__nb"))
-    else:
-        a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-        b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-        score = cosine_sim("__va", "__vb")
+        return dense.cosine_pairs(emb, id_pairs, threshold, id_col, vec_col, round_to)
+    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
+    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    score = cosine_sim("__va", "__vb")
     if round_to is not None:
         score = det_round(score, round_to)
     return (
@@ -696,7 +555,7 @@ def ann_ivf_topk(
 
     `subset` (an allowed-id DataFrame) makes this the FILTERED IVF
     search: the semi-join applies AFTER the cell prune and BEFORE the
-    score expression, so the plan reads nprobe/nlist of the index and
+    cosine kernel, so the plan reads nprobe/nlist of the index and
     ranks only the allowed rows inside those cells — pre-filter
     semantics within the probed shortlist, same placement as
     ann_pq_filtered_topk's prune. At 100 TB the filter column belongs
@@ -720,13 +579,13 @@ def ann_ivf_topk(
         cand = _subset_semi_join(
             assign.join(F.broadcast(probed), "cid"), subset, id_col
         )
-        return ranked_cosine_topk(cand, query_vec, k, id_col, vec_col, round_to)
+        return dense.topk_cosine(cand, query_vec, k, id_col, vec_col, round_to=round_to)
     cand_ids = _subset_semi_join(
         assign.join(F.broadcast(probed), "cid").select(id_col), subset, id_col
     )
-    return ranked_cosine_topk(
+    return dense.topk_cosine(
         emb.join(cand_ids, id_col, "left_semi"),
-        query_vec, k, id_col, vec_col, round_to,
+        query_vec, k, id_col, vec_col, round_to=round_to,
     )
 
 

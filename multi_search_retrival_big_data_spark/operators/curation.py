@@ -21,7 +21,7 @@ Scale shapes:
 - pack_budget_bins: ONE window shuffle per partition column (the
   cumulative token sum). At 100 TB the per-partition window is
   replaced by the same range-partition + per-partition-offset two-pass
-  used by temporal.dense_global_ids_scalable — the bin function is a
+  used by temporal.dense_global_ids — the bin function is a
   pure function of the prefix sum, so it parallelizes identically.
 - weighted_sample_aes: scan + TakeOrderedAndProject(k) — the priority
   is row-local, no shuffle beyond the top-k merge.
@@ -107,7 +107,7 @@ def pack_budget_bins(
 
     One window shuffle on `part_col`. At 100 TB with a single giant
     partition, swap the window for the two-pass range-partitioned
-    prefix sum of temporal.dense_global_ids_scalable — bin assignment
+    prefix sum of temporal.dense_global_ids — bin assignment
     is the same pure function of the prefix sum.
 
     Returns the input columns + `bin_id` (0-based per partition) and

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multi_search_retrival_big_data_spark import tables
+from multi_search_retrival_big_data_spark.functions.cosine import cosine_rows, row_norms
+from multi_search_retrival_big_data_spark.operators import dense
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
 # MinHash defaults shared with the oracle-SQL generators in
@@ -706,52 +708,6 @@ def ngram_jaccard_pairs(
 # ---- SemDeDup: embedding-space semantic dedup (Abbas et al. 2023) ---------
 
 
-def _cosine_verify_pairs(
-    assign: DataFrame,
-    pairs: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    round_to: int,
-) -> DataFrame:
-    """Exact-cosine verify over a distinct (id_a, id_b) candidate list:
-    vectors fetched by two unique-id joins (the jaccard_for_pairs
-    shape), det-rounded cosine ≥ threshold kept. Pair orientation is
-    bit-immaterial (index-ordered dot/norm folds; double multiply
-    commutes exactly). Note: the pairs lineage is evaluated once —
-    broadcasting it into the vector joins was measured SLOWER (the
-    un-cached lineage re-runs per broadcast), so the joins stay
-    shuffle joins on candidate-bounded inputs."""
-    from multi_search_retrival_big_data_spark.functions.rounding import det_round
-    from multi_search_retrival_big_data_spark.functions.vector import dot, l2_norm
-
-    # norms are projected ONCE PER VECTOR before the pair join — the
-    # inline cosine_sim spelling recomputes both 64-term norm folds
-    # per PAIR, tripling the per-candidate expression cost (measured
-    # ~9 µs/pair -> ~3 µs/pair at sf0.1). dot/(na*nb) evaluates the
-    # exact same doubles in the same order as cosine_sim, so the
-    # det-rounded score is bit-identical to the oracle's.
-    va = assign.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        l2_norm(vec_col).alias("__na"),
-    )
-    vb = assign.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        l2_norm(vec_col).alias("__nb"),
-    )
-    cos = det_round(
-        dot("__va", "__vb") / (F.col("__na") * F.col("__nb")), round_to
-    )
-    return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def _cell_cosine_pairs_arrow(
     cells: DataFrame,
     threshold: float,
@@ -784,24 +740,16 @@ def _cell_cosine_pairs_arrow(
       below). Prefilter perturbations (BLAS blocking/threading) only
       move pairs whose exact cosine is ≥ 1e-6 BELOW the bar — they
       fail the exact re-verify either way, so the output is stable.
-    - EXACT RE-VERIFY (survivors only): per-element product then a
-      sequential left fold — np.cumsum after normalizing the first
-      addend with `+ 0.0` IS the aggregate(zip_with(a,b,x*y), 0.0,
-      acc+x) evaluation (the seed can only flip a -0.0 first product
-      to +0.0, exactly what the fold's 0.0 + x does; x + (−x) = +0.0
-      in IEEE round-to-nearest, so no later partial sum is −0.0);
-      norms are the same fold over squares plus the correctly-rounded
-      np.sqrt == Math.sqrt; cosine = dot/(n_a·n_b) is the identical
-      single-divide spelling; det_round = floor(x·10^s + 0.5)/10^s is
-      exact IEEE multiply/add/floor in both engines.
-    - NaN/Inf SEMANTICS: det_round runs floor() THEN a cast to long
-      (Spark's FLOOR(double) → LONG), so a NaN cosine (zero-norm
-      vector) becomes (long) NaN = 0 → 0.0 after the divide — the old
-      plan therefore DROPPED NaN pairs at any positive threshold, and
-      ±Inf saturates at ±Long.MAX. The kernel replicates exactly that
-      (np.where on isnan, clip at ±2⁶³) instead of IEEE NaN
-      propagation; the prefilter keeps NaN candidates so the decision
-      is always made by this exact replica.
+    - EXACT RE-VERIFY (survivors only): the package's one cosine
+      kernel, functions.cosine.cosine_rows — sequential left folds for the dot and
+      the norms, one divide, det_round — whose bits equal
+      det_round(cosine_sim(...)) (see its docstring).
+    - DEGENERATE VECTORS: a zero-norm vector makes the Catalyst divide
+      NULL and the kernel's score NULL (NaN here), so the pair fails
+      `cosine ≥ threshold` and is dropped; a NaN/Inf element gives a
+      NaN cosine that det_round's FLOOR → LONG cast maps to 0.0. The
+      prefilter keeps NaN candidates so the decision is always made by
+      the exact kernel.
     - PAIR SET: ids are sorted ascending per cell and pairs taken from
       the strict upper triangle — exactly the join's id_a < id_b set.
 
@@ -814,7 +762,6 @@ def _cell_cosine_pairs_arrow(
     import pandas as pd
 
     thr = float(threshold)
-    mscale = float(10**round_to)
     out_schema = "id_a BIGINT, id_b BIGINT, cosine DOUBLE"
     empty = pd.DataFrame(
         {
@@ -832,10 +779,7 @@ def _cell_cosine_pairs_arrow(
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
         X = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-        # exact per-vector norms (the l2_norm fold, vectorized)
-        sq = X * X
-        sq[:, 0] = sq[:, 0] + 0.0
-        norms = np.sqrt(np.cumsum(sq, axis=1)[:, -1])
+        norms = row_norms(X)
         ias, ibs, coss = [], [], []
         blk = 512
         for s in range(0, m - 1, blk):
@@ -850,18 +794,7 @@ def _cell_cosine_pairs_arrow(
             if ii.size == 0:
                 continue
             ii = ii + s
-            # exact re-verify: sequential fold per surviving pair
-            P = X[ii] * X[jj]
-            P[:, 0] = P[:, 0] + 0.0
-            dots = np.cumsum(P, axis=1)[:, -1]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (norms[ii] * norms[jj])
-                fl = np.floor(cos * mscale + 0.5)
-                # Spark FLOOR(double) casts to LONG: (long) NaN = 0,
-                # ±Inf saturates at ±Long.MAX — replicate the cast
-                fl = np.where(np.isnan(fl), 0.0, fl)
-                fl = np.clip(fl, -9.223372036854776e18, 9.223372036854776e18)
-                cosr = fl / mscale
+            cosr = cosine_rows(X[ii], X[jj], norms[ii], norms[jj], round_to)
             ok = cosr >= thr
             if ok.any():
                 ias.append(ids[ii[ok]])
@@ -955,7 +888,7 @@ def semantic_candidate_pairs(
         sized.filter(F.col("__m") > max_cell), id_col, vec_col, cid_col, dim,
         sub_cap=max_cell,
     )
-    mega_scored = _cosine_verify_pairs(
+    mega_scored = dense.cosine_pairs(
         assign, mega_pairs, threshold, id_col, vec_col, round_to
     )
     return small_scored.unionByName(mega_scored)
@@ -1146,7 +1079,7 @@ def semantic_delta_candidate_pairs(
         )
         .distinct()
     )
-    return _cosine_verify_pairs(assign, pairs, threshold, id_col, vec_col, round_to)
+    return dense.cosine_pairs(assign, pairs, threshold, id_col, vec_col, round_to)
 
 
 def semantic_dedup(

@@ -1,9 +1,9 @@
 """Dense (embedding) search operators — Q1/Q2/Q3/Q17 of SURVEY.md §2.
 
 The reference serves these with exact FAISS flat indexes
-(utils/faiss_processing.py); here each is a declarative DataFrame plan:
+(utils/faiss_processing.py); here each is a DataFrame plan:
 
-scan embeddings → [semi-join id subset] → score expression → top-k.
+scan embeddings → [semi-join id subset] → cosine kernel → top-k.
 
 Why this scales to 100 TB: the scan is embarrassingly parallel across
 parquet row groups; `ORDER BY score DESC LIMIT k` compiles to
@@ -14,6 +14,14 @@ semi-join placed *before* scoring so Catalyst prunes work exactly like
 FAISS's IDSelectorArray (faiss_processing.py:154-166), and at parquet
 level it can become a Bloom/DPP filter on the scan.
 
+ONE cosine kernel: every literal-query rank (`topk_cosine`,
+`batch_topk_cosine`) and every candidate-pair verify (`cosine_pairs`)
+scores an Arrow batch with `functions.cosine.cosine_rows`, a NumPy
+sequential fold whose bits equal `det_round(cosine_sim(...))` at every
+width. The Catalyst expression `functions.vector.cosine_sim`
+stays where the query vector is a column of the plan (knn_by_id,
+rocchio_rerank, the batched ANN probes, MMR).
+
 Every top-k appends `id ASC` as the tiebreaker: NumPy's argsort is
 stable on row order, SQL sort is not (SURVEY.md §4 item 3).
 """
@@ -22,16 +30,25 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.window import Window
 
+from multi_search_retrival_big_data_spark.functions.cosine import (
+    as_matrix,
+    cosine_rows,
+    partial_topk,
+    row_norms,
+)
 from multi_search_retrival_big_data_spark.functions.rounding import (
     det_round,
     quantized_sum,
 )
 from multi_search_retrival_big_data_spark.functions.vector import (
     cosine_sim,
-    dot,
     l2_dist,
     lit_vec,
 )
@@ -52,26 +69,45 @@ def topk_cosine(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     subset: DataFrame | None = None,
-    normalized: bool = False,
     round_to: int | None = None,
     keep_vec: bool = False,
 ) -> DataFrame:
     """Q1 — text→image dense top-k (reference text_search,
-    utils/faiss_processing.py:118-173). `normalized=True` assumes the
-    ingest-time L2-normalization invariant (cosine == dot), matching
-    IndexFlatIP over pre-normalized vectors. `round_to` rounds the
-    score *before* the sort so oracle comparisons are float-noise-proof.
-    `keep_vec=True` carries the embedding through the top-k (k·dim
-    extra bytes through TakeOrderedAndProject) so a downstream consumer
-    (rocchio_rerank) does not re-join the corpus for k vectors."""
-    q = lit_vec(query_vec)
-    score = dot(vec_col, q) if normalized else cosine_sim(vec_col, q)
-    if round_to is not None:
-        score = det_round(score, round_to)
-    cols = [F.col(id_col), score.alias("score")]
+    utils/faiss_processing.py:118-173): the cosine of every row against
+    a literal query vector, best k by (score DESC, id ASC). `round_to`
+    rounds the score *before* the sort so oracle comparisons are
+    float-noise-proof. `keep_vec=True` carries the embedding through
+    the top-k (k·dim extra bytes through TakeOrderedAndProject) so a
+    downstream consumer (rocchio_rerank, MMR) does not re-join the
+    corpus for k vectors. Every ANN serving path ranks its pruned
+    candidate set through this same call.
+
+    Plan: restrict_ids (semi-join before scoring) → mapInPandas, which
+    scores each Arrow batch with `cosine_rows` (the reference's flat scan,
+    utils/faiss_processing.py:17-22, one vectorized pass per batch) and
+    emits only that batch's top k → TakeOrderedAndProject. A query
+    whose width differs from the corpus's raises ValueError."""
+    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
+    qn = float(row_norms(q[None, :])[0])
+    base = restrict_ids(emb, subset, id_col).select(id_col, vec_col)
+    fields = [base.schema[id_col], StructField("score", DoubleType())]
     if keep_vec:
-        cols.append(F.col(vec_col))
-    scored = restrict_ids(emb, subset, id_col).select(*cols)
+        fields.append(base.schema[vec_col])
+
+    def score_batches(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            m = as_matrix(pdf[vec_col], len(q))
+            s = cosine_rows(m, q, row_norms(m), qn, round_to)
+            ids = pdf[id_col].to_numpy()
+            top = partial_topk(ids, s, k)
+            out = {id_col: ids[top], "score": s[top]}
+            if keep_vec:
+                out[vec_col] = pdf[vec_col].to_numpy()[top]
+            yield pd.DataFrame(out)
+
+    scored = base.mapInPandas(score_batches, StructType(fields))
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -275,55 +311,7 @@ def topk_cosine_dim_routed(
     return topk_cosine(df, query_vec, k=k, id_col=id_col, vec_col=vec_col, round_to=round_to)
 
 
-def topk_cosine_arrow(
-    emb: DataFrame,
-    query_vec: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int | None = None,
-) -> DataFrame:
-    """Q1 via the ALTERNATIVE physical strategy: Arrow-batched NumPy
-    matrix math (`mapInPandas`) instead of the Catalyst
-    `aggregate(zip_with(...))` fold.
-
-    Per Arrow batch the corpus slab becomes one float64 matrix and the
-    whole batch scores in a single BLAS matvec — the same math FAISS's
-    flat scan runs (reference utils/faiss_processing.py:17-22), so this
-    is the drop-in when per-row codegen folds become the CPU
-    bottleneck at high dimension. The plan shape is unchanged: narrow
-    projection → mapInPandas (no shuffle, stays partition-parallel) →
-    TakeOrderedAndProject top-k, so only num_partitions × k rows reach
-    the driver.
-
-    Determinism: scores are quantized INSIDE the UDF with
-    floor(x·1e6 + 0.5)/1e6 (exact IEEE ops — `det_round` semantics,
-    matching `sql_det_round` in the oracle) before the top-k sort, so
-    BLAS pairwise-summation ulps cannot flip membership or order."""
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    qn = float(np.sqrt(q @ q))
-    scale = None if round_to is None else float(10**round_to)
-
-    def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            s = (m @ q) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            if scale is not None:
-                s = np.floor(s * scale + 0.5) / scale
-            yield pd.DataFrame({id_col: pdf[id_col], "score": s})
-
-    scored = emb.select(id_col, vec_col).mapInPandas(
-        score_batches, f"{id_col} long, score double"
-    )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-
-
-def batch_topk_cosine_arrow(
+def batch_topk_cosine(
     emb: DataFrame,
     batch_queries: Sequence[tuple[int, Sequence[float]]],
     k: int,
@@ -331,53 +319,38 @@ def batch_topk_cosine_arrow(
     vec_col: str = "embedding",
     round_to: int | None = None,
 ) -> DataFrame:
-    """Batched multi-query scoring via one NumPy matmul per Arrow
-    batch: S = corpus_slab @ Qᵀ scores EVERY query against the slab in
-    a single BLAS call (the reference's batched FAISS search,
-    faiss_processing.py:307-314, generalized).
+    """Multi-query batched top-k (SURVEY.md §4 custom-work item 2):
+    score EVERY (query_id, vector) of a request-sized batch against the
+    corpus in one scan and keep k per query — the reference's batched
+    FAISS search (faiss_processing.py:307-314 searches all feedback
+    votes in one call) generalized to any query batch.
 
-    The UDF keeps only the per-batch top-k PER QUERY before emitting —
-    a map-side partial top-k, so the shuffle into the final per-query
-    window carries O(batches · |Q| · k) rows instead of O(N · |Q|).
-    Correct because the global top-k is a subset of the union of
-    per-batch top-ks; ties are pre-quantized (see topk_cosine_arrow)
-    and broken by id ASC both locally and globally."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.window import Window
-
-    qids = np.asarray([int(i) for i, _ in batch_queries], dtype=np.int64)
-    qmat = np.asarray([list(v) for _, v in batch_queries], dtype=np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-    scale = None if round_to is None else float(10**round_to)
+    Each Arrow batch's matrix and norms are computed once and scored
+    with `cosine_rows` per query; the UDF emits only the batch's top k PER
+    QUERY — a map-side partial top-k, so the shuffle into the final
+    `row_number() OVER (PARTITION BY query_id ...)` window carries
+    O(batches · |Q| · k) rows instead of O(N · |Q|)."""
+    qids = [int(i) for i, _ in batch_queries]
+    qmat = np.asarray([[float(x) for x in v] for _, v in batch_queries], dtype=np.float64)
+    qnorms = row_norms(qmat)
+    id_type = emb.schema[id_col].dataType.simpleString()
 
     def score_batches(batches):
         for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            if len(pdf) == 0:
+                continue
+            m = as_matrix(pdf[vec_col], qmat.shape[1])
+            mn = row_norms(m)
             ids = pdf[id_col].to_numpy()
-            s = (m @ qmat.T) / (np.sqrt((m * m).sum(axis=1))[:, None] * qnorm[None, :])
-            if scale is not None:
-                s = np.floor(s * scale + 0.5) / scale
-            keep = min(k, len(ids))
-            out_q, out_i, out_s = [], [], []
-            for c in range(len(qids)):
-                # partial top-k: sort by (-score, id) — argsort on the
-                # lexicographic pair via stable double key
-                order = np.lexsort((ids, -s[:, c]))[:keep]
-                out_q.append(np.full(keep, qids[c]))
-                out_i.append(ids[order])
-                out_s.append(s[order, c])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    "score": np.concatenate(out_s),
-                }
-            )
+            for qid, q, qn in zip(qids, qmat, qnorms):
+                s = cosine_rows(m, q, mn, qn, round_to)
+                top = partial_topk(ids, s, k)
+                yield pd.DataFrame(
+                    {"query_id": np.full(len(top), qid), id_col: ids[top], "score": s[top]}
+                )
 
     scored = emb.select(id_col, vec_col).mapInPandas(
-        score_batches, f"query_id long, {id_col} long, score double"
+        score_batches, f"query_id long, {id_col} {id_type}, score double"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
     return (
@@ -388,41 +361,43 @@ def batch_topk_cosine_arrow(
     )
 
 
-def batch_topk_cosine(
+def cosine_pairs(
     emb: DataFrame,
-    queries: DataFrame,
-    k: int,
+    id_pairs: DataFrame,
+    threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = None,
 ) -> DataFrame:
-    """Multi-query batched top-k (SURVEY.md §4 custom-work item 2):
-    score EVERY query in `queries(query_id, qvec)` against the corpus
-    in one plan and keep k per query.
-
-    queries is request-sized → broadcast; the corpus is scanned ONCE
-    for the whole batch (vs once per query in the serving-loop shape),
-    and the per-query top-k is `row_number() OVER (PARTITION BY
-    query_id ORDER BY score DESC, id)` — a partial sort per partition,
-    no global sort. This is the reference's batched FAISS search
-    (faiss_processing.py:307-314 searches all feedback votes in one
-    call) generalized to any query batch."""
-    from pyspark.sql.window import Window
-
-    qid = queries.columns[0]
-    qvec = queries.columns[1]
-    pairs = emb.crossJoin(F.broadcast(queries))
-    score = cosine_sim(vec_col, qvec)
-    if round_to is not None:
-        score = det_round(score, round_to)
-    scored = pairs.select(F.col(qid).alias("query_id"), F.col(id_col), score.alias("score"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-        .orderBy("query_id", F.desc("score"), F.asc(id_col))
+    """Exact-cosine verify of a candidate (id_a, id_b) list → (id_a,
+    id_b, cosine) with cosine ≥ threshold: the vectors are joined once
+    per side (unique-id joins, the jaccard_for_pairs shape), then each
+    Arrow batch of pairs is scored by `cosine_rows` — the verify step of
+    every candidate-pair miner (embedding LSH near-dups, their delta
+    probe, SemDeDup's mega-cell and delta pairs). Pair orientation is
+    bit-immaterial (index-ordered folds; double multiply commutes), and
+    a NULL (zero-norm) cosine never passes the threshold."""
+    pairs_v = id_pairs.select("id_a", "id_b").join(
+        emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")),
+        "id_a",
+    ).join(
+        emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")),
+        "id_b",
     )
+
+    def score_batches(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            va = np.stack(pdf["__va"].to_numpy()).astype(np.float64)
+            vb = as_matrix(pdf["__vb"], va.shape[1])
+            c = cosine_rows(va, vb, row_norms(va), row_norms(vb), round_to)
+            ok = c >= threshold
+            yield pd.DataFrame(
+                {"id_a": pdf["id_a"].to_numpy()[ok], "id_b": pdf["id_b"].to_numpy()[ok], "cosine": c[ok]}
+            )
+
+    return pairs_v.mapInPandas(score_batches, "id_a long, id_b long, cosine double")
 
 
 def label_centroid_norms(

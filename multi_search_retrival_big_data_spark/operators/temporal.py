@@ -38,27 +38,16 @@ def range_assign(
     return out.drop(*(ranges[k] for k in keys)) if keys else out
 
 
-def dense_global_ids(df: DataFrame, order_cols: list[str], id_col: str = "global_id") -> DataFrame:
-    """S3 step 2 — the reference's `dict(enumerate(...))` dense id:
-    row_number over a global order. NOTE: a single un-partitioned
-    window is a scale anti-pattern (one task sees every row) — kept
-    only as the tiny-input/audit variant; the production path is
-    `dense_global_ids_scalable` below (bit-equal ids, partition-
-    parallel), which the ingest chain uses."""
-    w = Window.orderBy(*[F.col(c) for c in order_cols])
-    return df.withColumn(id_col, F.row_number().over(w) - F.lit(1))
-
-
-def dense_global_ids_scalable(
+def dense_global_ids(
     df: DataFrame,
     order_cols: list[str],
     id_col: str = "global_id",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """S3 step 2, scale-safe: the same dense enumeration ids as
-    `dense_global_ids` (reference `dict(enumerate(...))`,
-    data_preparation.ipynb cells 5-6) without ever sorting the corpus
-    in one task — the zipWithIndex shape expressed in DataFrame ops:
+    """S3 step 2 — the reference's `dict(enumerate(...))` dense id
+    (data_preparation.ipynb cells 5-6): the ids of `row_number() OVER
+    (ORDER BY order_cols) - 1`, without ever sorting the corpus in one
+    task — the zipWithIndex shape expressed in DataFrame ops:
 
     1. `repartitionByRange(order_cols)` — partition p holds a
        contiguous key range, every range below partition p+1's;
@@ -68,9 +57,9 @@ def dense_global_ids_scalable(
        over |partitions| rows — trivially small) broadcast-joined
        back: id = offset + local_rank - 1.
 
-    Bit-equal to the global row_number variant whenever `order_cols`
+    Bit-equal to the global row_number window whenever `order_cols`
     is a unique key (here: (collection, video, frame_idx)); with
-    duplicate keys both variants are tie-ambiguous anyway. The only
+    duplicate keys both spellings are tie-ambiguous anyway. The only
     full-data movements are the range shuffle and a narrow broadcast
     join — nothing single-task."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism

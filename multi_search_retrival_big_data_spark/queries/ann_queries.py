@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark import index_store, tables
-from multi_search_retrival_big_data_spark.operators import ann
+from multi_search_retrival_big_data_spark.operators import ann, dense
 from multi_search_retrival_big_data_spark.queries import query
 from multi_search_retrival_big_data_spark.queries.common import (
     EMB_DIM,
@@ -134,9 +134,8 @@ def emb_near_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-pruned embedding near-duplicate mining: candidate pairs
     share ≥1 signature band (equi-join, no cross join), then exact
-    cosine ≥ threshold — scored via the Arrow/NumPy strategy (one
-    vectorized pass per candidate batch; ~1.6× the expression fold at
-    sf0.1, the pair list being candidate-volume bound). Candidate
+    cosine ≥ threshold — verified by dense.cosine_pairs, the one
+    cosine kernel (one vectorized pass per candidate batch). Candidate
     generation reads the persisted banding table
     (index_store.emb_lsh_bands) — no per-run signature pass."""
     emb = tables.load(spark, "embeddings", sf_dir)
@@ -144,7 +143,7 @@ def emb_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ann.embedding_near_dup_pairs(
             emb, COSINE_DUP_THRESHOLD, dim=EMB_DIM, use_lsh=True, round_to=6,
-            strategy="arrow", banded=banded,
+            banded=banded,
         )
         .orderBy(F.desc("cosine"), "id_a", "id_b")
     )
@@ -187,10 +186,9 @@ def emb_near_dup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus band self-join — the embedding sibling of
     dedup_delta_batch_pairs. Cost is O(|delta| × band collision
     rate) reads at the delta's partition keys; candidates with ≥1
-    delta member are then exact-cosine verified through the shared
-    Arrow pair scorer (ann.score_pairs_arrow — the same vectorized
-    pass the full mining path uses, so the probe is never slower per
-    pair than the path it replaces). The oracle derives the SAME
+    delta member are then exact-cosine verified by dense.cosine_pairs
+    (the same pair kernel the full mining path uses, so the probe is
+    never slower per pair than the path it replaces). The oracle derives the SAME
     delta-touching pair set from a full banding, proving the
     probe ≡ full-self-join-restricted equivalence."""
     from multi_search_retrival_big_data_spark.operators import dedup as _dedup
@@ -201,7 +199,7 @@ def emb_near_dup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta_ids = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id")
     cand = _dedup.lsh_delta_candidate_pairs(banded, delta_ids, "vec_id")
-    return ann.score_pairs_arrow(
+    return dense.cosine_pairs(
         emb, cand, COSINE_DUP_THRESHOLD, round_to=6
     ).orderBy(F.desc("cosine"), "id_a", "id_b")
 
@@ -369,7 +367,6 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate lists, and the intersection are all computed inside the
     one plan — at scale this runs as a periodic sampled audit job, the
     same dataflow with a sampled query set."""
-    from multi_search_retrival_big_data_spark.operators import dense
 
     emb = tables.load(spark, "embeddings", sf_dir)
     exact = dense.topk_cosine(emb, QUERY_VEC, k=_RECALL_K, round_to=6).select("vec_id")
@@ -436,7 +433,6 @@ def ann_lsh_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the FAISS recall-vs-nprobe sweep for our hyperplane LSH).
 
     One row per config: (bands, k, candidates, hits, recall)."""
-    from multi_search_retrival_big_data_spark.operators import dense
 
     emb = tables.load(spark, "embeddings", sf_dir)
     exact = dense.topk_cosine(emb, QUERY_VEC, k=_RECALL_K, round_to=6).select("vec_id")
@@ -517,7 +513,6 @@ def ann_ivf_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored lists).
 
     One row per config: (nprobe, k, candidates, hits, recall)."""
-    from multi_search_retrival_big_data_spark.operators import dense
 
     emb = tables.load(spark, "embeddings", sf_dir)
     assign = index_store.ivf_assignments(spark, sf_dir)
@@ -576,7 +571,6 @@ def emb_label_centroid_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels × d rows regardless of corpus size; all float sums are
     quantized so the mean is order-independent (a plain float mean
     over a shuffled partitioning differs run to run)."""
-    from multi_search_retrival_big_data_spark.operators import dense
 
     emb = tables.load(spark, "embeddings", sf_dir)
     return dense.label_centroid_norms(emb).orderBy("label")
@@ -1028,7 +1022,6 @@ def ann_ivf_trained_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/kmeans.py) and doubles as a staleness check on the
     stored model."""
     from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
-    from multi_search_retrival_big_data_spark.operators import dense
 
     emb = tables.load(spark, "embeddings", sf_dir)
     cent_df, assign = index_store.ivf_trained(spark, sf_dir, iters=_KM_ITERS)
@@ -1044,19 +1037,9 @@ def ann_ivf_trained_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cand = assign.join(F.broadcast(probed), "cid")
         n_cand = cand.agg(F.count(F.lit(1)).alias("candidates"))
-        from multi_search_retrival_big_data_spark.functions.vector import cosine_sim
-        from multi_search_retrival_big_data_spark.functions.rounding import det_round
-
         # vectors are co-located in the pruned inverted-list partitions —
         # rank them directly, no second corpus scan
-        topk = (
-            cand.select(
-                "vec_id",
-                det_round(cosine_sim("embedding", lit_vec(QUERY_VEC)), 6).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc("vec_id"))
-            .limit(_RECALL_K)
-        )
+        topk = dense.topk_cosine(cand, QUERY_VEC, k=_RECALL_K, round_to=6)
         return grid_row(_RECALL_K, grid_hits(topk, exact), n_cand, nprobe=nprobe)
 
     return union_rows([cfg_row(p) for p in _IVF_GRID_NPROBE]).orderBy("nprobe")
@@ -2047,7 +2030,6 @@ def ann_ivf_filtered_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep. Same plan shape per cell as ann_ivf_filtered_topk: semi-join
     AFTER the cell prune, BEFORE the rank."""
     from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
-    from multi_search_retrival_big_data_spark.operators import dense
 
     emb = tables.load(spark, "embeddings", sf_dir)
     assign = index_store.ivf_assignments(spark, sf_dir)
@@ -2175,7 +2157,6 @@ def ann_lsh_multiprobe_recall_grid(spark: SparkSession, sf_dir: str) -> DataFram
     and what they cost, so widening the probe set is a measured trade
     exactly like the bands sweep (ann_lsh_recall_grid) and the cap
     (dedup_lsh_bucket_stats)."""
-    from multi_search_retrival_big_data_spark.operators import dense
 
     emb = tables.load(spark, "embeddings", sf_dir)
     banded = index_store.emb_lsh_bands(spark, sf_dir)
@@ -2555,10 +2536,6 @@ def ann_lsh_d768_tuned_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall; see ann.lsh_geometry scale notes). The signature pass is
     an index-build job at scale (index_store.emb_lsh_bands), never a
     per-query cost."""
-    from multi_search_retrival_big_data_spark.functions.rounding import det_round
-    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim, lit_vec
-    from multi_search_retrival_big_data_spark.operators import dense
-
     wide = index_store.dim_corpus(spark, sf_dir, _D768)
     qv = _d768_qv()
     exact = dense.topk_cosine(wide, qv, k=_D768_K, round_to=6).select("vec_id")
@@ -2574,14 +2551,7 @@ def ann_lsh_d768_tuned_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             cond = c if cond is None else cond | c
         cand = sig.filter(cond)
         n_cand = cand.agg(F.count(F.lit(1)).alias("candidates"))
-        topk = (
-            cand.select(
-                "vec_id",
-                det_round(cosine_sim("embedding", lit_vec(qv)), 6).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc("vec_id"))
-            .limit(_D768_K)
-        )
+        topk = dense.topk_cosine(cand, qv, k=_D768_K, round_to=6)
         return grid_row(
             _D768_K, grid_hits(topk, exact), n_cand,
             planes=num_planes, bands=bands,
@@ -2663,13 +2633,7 @@ def ann_ivf_d768_tuned_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan probes the persisted cid-partitioned lists."""
     import math as _math
 
-    from multi_search_retrival_big_data_spark.functions.rounding import det_round
-    from multi_search_retrival_big_data_spark.functions.vector import (
-        cosine_sim,
-        l2_dist,
-        lit_vec,
-    )
-    from multi_search_retrival_big_data_spark.operators import dense
+    from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
 
     wide = index_store.dim_corpus(spark, sf_dir, _D768)
     qv = _d768_qv()
@@ -2686,14 +2650,7 @@ def ann_ivf_d768_tuned_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cand = assign.join(F.broadcast(probed), "cid")
         n_cand = cand.agg(F.count(F.lit(1)).alias("candidates"))
-        topk = (
-            cand.select(
-                "vec_id",
-                det_round(cosine_sim("embedding", lit_vec(qv)), 6).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc("vec_id"))
-            .limit(_D768_K)
-        )
+        topk = dense.topk_cosine(cand, qv, k=_D768_K, round_to=6)
         return grid_row(_D768_K, grid_hits(topk, exact), n_cand, nprobe=nprobe)
 
     tuned = _math.ceil(ann.ivf_nprobe_frac(_D768) * nlist)

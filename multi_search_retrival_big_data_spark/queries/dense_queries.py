@@ -66,7 +66,7 @@ def dense_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dense_topk_cosine_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 with id-subset restriction — the reference's IDSelectorArray
     path (faiss_processing.py:154-166) as a left-semi join pushed
-    below the score expression."""
+    below the cosine kernel."""
     emb = tables.load(spark, "embeddings", sf_dir)
     subset = emb.filter(F.col("label") < 5).select("vec_id")
     return dense.topk_cosine(emb, QUERY_VEC, k=100, subset=subset, round_to=6)
@@ -169,15 +169,8 @@ def dense_batch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus in ONE scan, k per query via a partitioned window — the
     high-throughput serving shape (one corpus pass amortized over the
     whole query batch)."""
-    from multi_search_retrival_big_data_spark.operators.dense import batch_topk_cosine
-
     emb = tables.load(spark, "embeddings", sf_dir)
-    qdf = tables.local_frame(
-        spark,
-        [(i, [float(x) for x in v]) for i, v in _BATCH_QUERIES],
-        "query_id INT, qvec ARRAY<DOUBLE>",
-    )
-    return batch_topk_cosine(emb, qdf, k=25, round_to=6)
+    return dense.batch_topk_cosine(emb, _BATCH_QUERIES, k=25, round_to=6)
 
 
 @query(
@@ -190,12 +183,11 @@ def dense_batch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dense_topk_cosine_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1 via the Arrow/NumPy physical strategy (one BLAS matvec per
-    Arrow batch inside mapInPandas) — same logical operator, same
-    oracle semantics as dense_topk_cosine, alternative execution path
-    for high-dimension corpora where per-row codegen folds bottleneck."""
+    """Q1 as registered when a separate Arrow/NumPy spelling existed;
+    it now runs the one cosine kernel, like dense_topk_cosine (the name
+    stays because the benchmarks address it)."""
     emb = tables.load(spark, "embeddings", sf_dir)
-    return dense.topk_cosine_arrow(emb, QUERY_VEC, k=100, round_to=6)
+    return dense.topk_cosine(emb, QUERY_VEC, k=100, round_to=6)
 
 
 @query(
@@ -219,11 +211,11 @@ def dense_topk_cosine_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dense_batch_topk_cosine_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched multi-query top-k via one NumPy matmul per Arrow batch
-    with map-side partial top-k — the high-throughput alternative
-    physical strategy for the same logical batch operator."""
+    """The batched top-k of dense_batch_topk_cosine, registered when a
+    separate Arrow/NumPy spelling existed; it now runs the same kernel
+    (the name stays because the benchmarks address it)."""
     emb = tables.load(spark, "embeddings", sf_dir)
-    return dense.batch_topk_cosine_arrow(emb, _BATCH_QUERIES, k=25, round_to=6)
+    return dense.batch_topk_cosine(emb, _BATCH_QUERIES, k=25, round_to=6)
 
 
 # --- production-dimension derivation (d=768) --------------------------------
@@ -328,7 +320,7 @@ def dense_dim768_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores with the same sequential-fold dot product — so the d=768
     numbers in bench.py's dim_tier ride a plan whose VALUES are
     hash-matched, not just its derivation. Same plan shape as
-    dense_topk_cosine: narrow projection → codegen fold →
+    dense_topk_cosine: narrow projection → Arrow cosine kernel →
     TakeOrderedAndProject (no shuffle before the final top-k)."""
     emb = tables.load(spark, "embeddings", sf_dir)
     wide = dense.expand_to_dim(emb, out_dim=_D768, in_dim=64, as_float=True)
@@ -337,15 +329,9 @@ def dense_dim768_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dense_dim768_topk_cosine_arrow", oracle=_D768_TOPK_ORACLE)
 def dense_dim768_topk_cosine_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow/NumPy strategy at production width, same oracle as
-    dense_dim768_topk_cosine — at d=768 this is the RECOMMENDED
-    serving strategy (the dim_tier measures the Arrow-vs-expression
-    gap widening ~1.6× → ~3.3× from d=64 to d=768: per-row codegen
-    folds grow linearly in dimension while the BLAS matvec amortizes),
-    so the strategy the tier recommends is itself value-proven, like
-    dense_topk_cosine_arrow at d=64. In-UDF floor-quantization
-    (det_round semantics) absorbs BLAS pairwise-summation ulps before
-    the top-k sort."""
+    """dense_dim768_topk_cosine under the name it was registered with
+    when a separate Arrow/NumPy spelling existed; same kernel, same
+    oracle (the name stays because the benchmarks address it)."""
     emb = tables.load(spark, "embeddings", sf_dir)
     wide = dense.expand_to_dim(emb, out_dim=_D768, in_dim=64, as_float=True)
-    return dense.topk_cosine_arrow(wide, _d768_qv(), k=100, round_to=6)
+    return dense.topk_cosine(wide, _d768_qv(), k=100, round_to=6)

@@ -78,13 +78,12 @@ def _fuse_add_sql(ctes: list[str], k: int, id_name: str = "id") -> str:
 def fusion_dual_model_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13 + Q8 — the reference's clip+clipv2 ensemble (/textsearch
     with both models, app.py:330-357): two dense searches fused by
-    min-max addition. Both dense branches run the Arrow/NumPy scorer
-    (the designated high-dimension strategy, ~8.6× the Catalyst fold
-    at d=64); det-quantization inside the UDF keeps the oracle
-    exact."""
+    min-max addition. Both dense branches run the one cosine kernel
+    (dense.topk_cosine), whose det-rounded scores are bit-equal to the
+    oracle's."""
     emb = tables.load(spark, "embeddings", sf_dir)
-    a = dense.topk_cosine_arrow(emb, QUERY_VEC, k=100, round_to=6)
-    b = dense.topk_cosine_arrow(emb, QUERY_VEC_B, k=100, round_to=6)
+    a = dense.topk_cosine(emb, QUERY_VEC, k=100, round_to=6)
+    b = dense.topk_cosine(emb, QUERY_VEC_B, k=100, round_to=6)
     return fusion.merge_by_addition([a, b], k=50, round_to=6).withColumnRenamed("id", "vec_id")
 
 
@@ -107,11 +106,10 @@ def fusion_dual_model_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fusion_l2_dedup_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 — legacy merge_searching_results (combine_utils.py:4-27):
-    L2-scale each list, dedup keeping the max-scored occurrence. Dense
-    branches via the Arrow scorer (see fusion_dual_model_ensemble)."""
+    L2-scale each list, dedup keeping the max-scored occurrence."""
     emb = tables.load(spark, "embeddings", sf_dir)
-    a = dense.topk_cosine_arrow(emb, QUERY_VEC, k=100, round_to=6)
-    b = dense.topk_cosine_arrow(emb, QUERY_VEC_B, k=100, round_to=6)
+    a = dense.topk_cosine(emb, QUERY_VEC, k=100, round_to=6)
+    b = dense.topk_cosine(emb, QUERY_VEC_B, k=100, round_to=6)
     return fusion.merge_l2_dedup_max([a, b], k=50, round_to=6).withColumnRenamed("id", "vec_id")
 
 
@@ -138,7 +136,7 @@ def fusion_hybrid_sparse_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load(spark, "embeddings", sf_dir)
     postings = index_store.tfidf_postings(spark, sf_dir)
     sparse_list = sparse.tfidf_score(postings, _QSPARSE, k=100, round_to=6)
-    dense_list = dense.topk_cosine_arrow(emb, QUERY_VEC, k=100, round_to=6)
+    dense_list = dense.topk_cosine(emb, QUERY_VEC, k=100, round_to=6)
     return fusion.merge_by_addition([sparse_list, dense_list], k=50, round_to=6).withColumnRenamed(
         "id", "doc_id"
     )
@@ -207,7 +205,7 @@ def fusion_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load(spark, "embeddings", sf_dir)
     postings = index_store.tfidf_postings(spark, sf_dir)
     sparse_list = sparse.tfidf_score(postings, _QSPARSE, k=100, round_to=6)
-    dense_list = dense.topk_cosine_arrow(emb, QUERY_VEC, k=100, round_to=6)
+    dense_list = dense.topk_cosine(emb, QUERY_VEC, k=100, round_to=6)
     return fusion.reciprocal_rank_fusion([sparse_list, dense_list], k=50).withColumnRenamed(
         "id", "doc_id"
     )
@@ -331,7 +329,7 @@ def fusion_dual_model_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     FOR that space; min-max additive fusion merges the two rankings."""
     emb = tables.load(spark, "embeddings", sf_dir)
     emb_b = dense.model_b_embeddings(emb)
-    a = dense.topk_cosine_arrow(emb, QUERY_VEC, k=100, round_to=6)
+    a = dense.topk_cosine(emb, QUERY_VEC, k=100, round_to=6)
     b = dense.topk_cosine(emb_b, _QV_B_TRUE, k=100, round_to=6)
     return fusion.merge_by_addition([a, b], k=50, round_to=6).withColumnRenamed("id", "vec_id")
 
@@ -431,13 +429,12 @@ def fusion_dual_model_true_d768(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13's TRUE two-space ensemble at PRODUCTION width: the query
     encoded separately for each 768-wide model (dim_expand_encode for
     A, model_b_dim_encode for B), each branch a top-100 cosine scan of
-    its own at-rest table (A via the Arrow strategy, B via the
-    expression strategy — the same split the d=64 row pins), min-max
+    its own at-rest table, min-max
     additive fusion to the final 50. This is the reference's
     both-models path (app.py:330-357) at real CLIP width."""
     wide_a = index_store.dim_corpus(spark, sf_dir, _D768F)
     wide_b = index_store.model_b_dim_corpus(spark, sf_dir, _D768F)
-    a = dense.topk_cosine_arrow(wide_a, _QV_A768, k=100, round_to=6)
+    a = dense.topk_cosine(wide_a, _QV_A768, k=100, round_to=6)
     b = dense.topk_cosine(wide_b, _QV_B768, k=100, round_to=6)
     return fusion.merge_by_addition([a, b], k=50, round_to=6).withColumnRenamed(
         "id", "vec_id"

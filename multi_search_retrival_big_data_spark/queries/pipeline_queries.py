@@ -1098,7 +1098,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ids_dense_enumeration_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 dense-id enumeration via the SCALE-SAFE path
-    (temporal.dense_global_ids_scalable): range-partition on the order
+    (temporal.dense_global_ids): range-partition on the order
     key, per-partition row_number, prefix-sum offsets — no
     un-partitioned window anywhere in the executed plan. The oracle is
     the global enumeration itself (reference `dict(enumerate(...))`,
@@ -1108,7 +1108,7 @@ def ids_dense_enumeration_scalable(spark: SparkSession, sf_dir: str) -> DataFram
     from multi_search_retrival_big_data_spark.operators import temporal
 
     docs = tables.load(spark, "documents", sf_dir).select("source", "doc_id")
-    out = temporal.dense_global_ids_scalable(
+    out = temporal.dense_global_ids(
         docs, ["source", "doc_id"], id_col="global_id"
     )
     return out.select("global_id", "doc_id").orderBy("global_id")

@@ -8,10 +8,9 @@ Arrow mapInPandas seam (deterministic fake — encoders.FakeCrossEncoder
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark import index_store, tables
-from multi_search_retrival_big_data_spark.operators import rerank, sparse
+from multi_search_retrival_big_data_spark.operators import dense, rerank, sparse
 from multi_search_retrival_big_data_spark.queries import query
 from multi_search_retrival_big_data_spark.queries.common import sql_det_round
 from multi_search_retrival_big_data_spark.queries.sparse_queries import (
@@ -171,19 +170,10 @@ def rerank_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank-tail placement). The oracle replays the greedy chain as a
     recursive CTE carrying the selected set as a LIST column, so the
     whole selection path — not just the final set — is engine-exact."""
-    from multi_search_retrival_big_data_spark.functions.rounding import det_round
-    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim, lit_vec
-
     emb = tables.load(spark, "embeddings", sf_dir)
-    cand = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            det_round(cosine_sim("embedding", lit_vec(QUERY_VEC)), 6).alias("rel"),
-        )
-        .orderBy(F.desc("rel"), F.asc("vec_id"))
-        .limit(_MMR_N)
-    )
+    cand = dense.topk_cosine(
+        emb, QUERY_VEC, k=_MMR_N, round_to=6, keep_vec=True
+    ).withColumnRenamed("score", "rel")
     return _rr.mmr_rerank(cand, k=_MMR_K, lam=_MMR_LAM)
 
 

@@ -301,7 +301,7 @@ def events_rank_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization needed. NOTE the partition key has tiny cardinality
     (5 event types): at 100 TB a per-type global rank needs the
     range-partition + offset two-pass used by
-    temporal.dense_global_ids_scalable, not a 5-task window — this
+    temporal.dense_global_ids, not a 5-task window — this
     query models the bounded-partition case (per-tenant, per-day)."""
     ev = tables.load(spark, "events", sf_dir).filter(F.col("user_id") < 20)
     w = Window.partitionBy("event_type").orderBy("value", "event_id")

@@ -104,25 +104,39 @@ def test_recall_at_k_query_shape_and_bounds(spark, sf_dir):
         assert abs(r.recall - r.hits / 50.0) < 1e-12
 
 
-def test_near_dup_arrow_strategy_matches_expr(spark, sf_dir):
-    """Both physical strategies for LSH near-dup scoring produce the
-    same pair set with the same rounded cosines."""
+def test_near_dup_pairs_match_catalyst_cosine(spark, sf_dir):
+    """The LSH near-dup verify (dense.cosine_pairs) keeps exactly the
+    band-candidate pairs whose in-test Catalyst det_round(cosine_sim)
+    reaches the threshold, with the same bits — rounded and raw."""
+    from multi_search_retrival_big_data_spark.functions.rounding import det_round
+    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim
+
     emb = tables.load(spark, "embeddings", sf_dir)
-    expr_rows = sorted(
-        (r.id_a, r.id_b, r.cosine)
-        for r in ann.embedding_near_dup_pairs(
-            emb, 0.45, dim=EMB_DIM, use_lsh=True, round_to=6
-        ).collect()
+    banded = ann.banded_signatures(emb, dim=EMB_DIM)
+    a = banded.select(F.col("vec_id").alias("id_a"), "band", "bval")
+    b = banded.select(F.col("vec_id").alias("id_b"), "band", "bval")
+    cand = (
+        a.join(b, ["band", "bval"]).filter("id_a < id_b").select("id_a", "id_b").distinct()
     )
-    arrow_rows = sorted(
-        (r.id_a, r.id_b, r.cosine)
-        for r in ann.embedding_near_dup_pairs(
-            emb, 0.45, dim=EMB_DIM, use_lsh=True, round_to=6, strategy="arrow"
-        ).collect()
-    )
-    assert [(a, b) for a, b, _ in arrow_rows] == [(a, b) for a, b, _ in expr_rows]
-    for (_, _, ca), (_, _, ce) in zip(arrow_rows, expr_rows):
-        assert abs(ca - ce) < 1e-6
+    vecs = cand.join(
+        emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")), "id_a"
+    ).join(emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")), "id_b")
+    for round_to in (6, None):
+        score = cosine_sim("va", "vb")
+        if round_to is not None:
+            score = det_round(score, round_to)
+        want = {
+            (r.id_a, r.id_b): r.c
+            for r in vecs.select("id_a", "id_b", score.alias("c")).collect()
+            if r.c is not None and r.c >= 0.45
+        }
+        got = {
+            (r.id_a, r.id_b): r.cosine
+            for r in ann.embedding_near_dup_pairs(
+                emb, 0.45, dim=EMB_DIM, use_lsh=True, round_to=round_to
+            ).collect()
+        }
+        assert want and got == want, round_to
 
 
 @pytest.mark.slow
@@ -803,34 +817,51 @@ def test_vector_kernels_plan_one_arrow_node_at_every_width(spark, dim):
         assert "ArrowEvalPython" in plan, f"{name} at d={dim}:\n{plan}"
 
 
-def test_ranked_cosine_topk_arrow_matches_expr_at_768(spark, sf_dir):
-    """The width-gated serving rank (r11): at d=768 the Arrow BLAS path
-    must produce the same top-k ids and quantized scores as the proven
-    Catalyst fold (which d<256 corpora keep executing)."""
-    from multi_search_retrival_big_data_spark import tables
+def test_ann_ranks_match_catalyst_cosine_at_768(spark, sf_dir):
+    """At the production width the pruned ANN ranks score through the
+    one cosine kernel: every LSH hit carries the in-test Catalyst
+    det_round(cosine_sim) bits in (score DESC, id ASC) order, and the
+    cascade's exact-scan fallback returns the Catalyst top-k itself."""
     from multi_search_retrival_big_data_spark.encoders import dim_expand_encode
-    from multi_search_retrival_big_data_spark.operators import dense
-    from multi_search_retrival_big_data_spark.queries.common import QUERY_VEC
+    from multi_search_retrival_big_data_spark.functions.rounding import det_round
+    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim, lit_vec
 
     emb = tables.load(spark, "embeddings", sf_dir)
     wide = dense.expand_to_dim(emb, out_dim=768, in_dim=64)
     qv = dim_expand_encode(QUERY_VEC, 64, 768)
-    assert len(qv) >= ann.ARROW_RANK_MIN_DIM  # the gate actually fires
-    got = ann.ranked_cosine_topk(wide, qv, 25, "vec_id", "embedding", 6).collect()
-    # reference: the sub-gate expression spelling on the same rows
-    from multi_search_retrival_big_data_spark.functions.rounding import det_round
-    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim, lit_vec
-
     want = (
         wide.select(
             "vec_id", det_round(cosine_sim("embedding", lit_vec(qv)), 6).alias("score")
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(25)
         .collect()
     )
-    assert [r.vec_id for r in got] == [r.vec_id for r in want]
-    assert [r.score for r in got] == [r.score for r in want]
+    exact = {r.vec_id: r.score for r in want}
+    lsh = [(r.vec_id, r.score) for r in ann.ann_lsh_topk(wide, qv, k=25, round_to=6).collect()]
+    assert lsh and all(exact[i] == sc for i, sc in lsh)
+    assert lsh == sorted(lsh, key=lambda r: (-r[1], r[0]))
+    banded = ann.banded_signatures(wide, dim=768)
+    casc = ann.ann_cascade_topk(wide, qv, 25, banded, min_candidates=10**9, round_to=6)
+    assert [(r.vec_id, r.score) for r in casc.collect()] == [
+        (r.vec_id, r.score) for r in want[:25]
+    ]
+
+
+def test_literal_query_ranks_plan_one_map_in_pandas_node(spark, sf_dir):
+    """At the oracle-gate width (d=64) the exact scan and the pruned LSH,
+    IVF and cascade ranks all execute the Arrow cosine kernel — there
+    is no Catalyst rank below a width gate."""
+    from multi_search_retrival_big_data_spark.queries import load_registry
+
+    reg = load_registry()
+    for name in (
+        "dense_topk_cosine",
+        "ann_lsh_topk_cosine",
+        "ann_ivf_topk_cosine",
+        "ann_cascade_topk_pruned",
+    ):
+        plan = reg[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, f"{name}:\n{plan}"
 
 
 def test_argmin_arrow_nonfinite_row_keeps_lowest_id(spark):

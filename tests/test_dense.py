@@ -3,11 +3,22 @@ engine == reference-math on the same inputs)."""
 
 from __future__ import annotations
 
+import ast
+import os
+import pathlib
+import pickle
+import re
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark import tables
+from multi_search_retrival_big_data_spark.encoders import dim_expand_encode
+from multi_search_retrival_big_data_spark.functions.rounding import det_round
+from multi_search_retrival_big_data_spark.functions.vector import cosine_sim, lit_vec
 from multi_search_retrival_big_data_spark.operators import dense
 from multi_search_retrival_big_data_spark.queries.common import QUERY_VEC
 
@@ -93,31 +104,165 @@ def test_vocab_knn_l2_orders_ascending(spark, sf_dir):
     assert dists == sorted(dists)
 
 
-def test_topk_cosine_arrow_matches_sql_path(spark, sf_dir):
-    """The Arrow/NumPy physical strategy and the Catalyst-expression
-    strategy are the same logical operator: identical rows in
-    identical order after det-rounding."""
+def _catalyst_scores(emb, qv, round_to):
+    """In-test reference: the Catalyst `det_round(cosine_sim(...))`
+    projection, {id: score} (None for a NULL score)."""
+    score = cosine_sim("embedding", lit_vec(qv))
+    if round_to is not None:
+        score = det_round(score, round_to)
+    return {r.vec_id: r.s for r in emb.select("vec_id", score.alias("s")).collect()}
+
+
+def _ranked(scores, k):
+    """(score DESC NULLS LAST, id ASC) top-k of an {id: score} map."""
+    key = lambda kv: (kv[1] is None, -(kv[1] or 0.0), kv[0])  # noqa: E731
+    return [(i, sc) for i, sc in sorted(scores.items(), key=key)][:k]
+
+
+def _wide(spark, sf_dir, dim):
     emb = tables.load(spark, "embeddings", sf_dir)
-    sql_rows = dense.topk_cosine(emb, QUERY_VEC, k=50, round_to=6).collect()
-    arrow_rows = dense.topk_cosine_arrow(emb, QUERY_VEC, k=50, round_to=6).collect()
-    assert [r.vec_id for r in arrow_rows] == [r.vec_id for r in sql_rows]
-    np.testing.assert_allclose(
-        [r.score for r in arrow_rows], [r.score for r in sql_rows], rtol=0, atol=1e-6
-    )
+    if dim == 64:
+        return emb, list(QUERY_VEC)
+    return dense.expand_to_dim(emb, out_dim=dim, in_dim=64), dim_expand_encode(QUERY_VEC, 64, dim)
 
 
-def test_batch_topk_cosine_arrow_matches_per_query(spark, sf_dir):
-    """Batched arrow scoring == independent single-query arrow runs."""
+def test_topk_cosine_arrow_matches_sql_path(spark, sf_dir):
+    """The one cosine kernel (an Arrow batch fold) is bit-equal to the
+    Catalyst SQL expression at d=64: every row's score, rounded or
+    raw, and therefore the top-k rows and order."""
+    emb, qv = _wide(spark, sf_dir, 64)
+    for round_to in (6, None):
+        want = _catalyst_scores(emb, qv, round_to)
+        got = dense.topk_cosine(emb, qv, k=len(want) + 1, round_to=round_to).collect()
+        assert {r.vec_id: r.score for r in got} == want, round_to
+        assert [(r.vec_id, r.score) for r in got[:50]] == _ranked(want, 50), round_to
+
+
+def test_topk_cosine_arrow_matches_expr_at_768(spark, sf_dir):
+    """The same bit-equality at the production width (reference CLIP,
+    d=768): no width gate, one kernel."""
+    wide, qv = _wide(spark, sf_dir, 768)
+    for round_to in (6, None):
+        want = _catalyst_scores(wide, qv, round_to)
+        got = dense.topk_cosine(wide, qv, k=len(want) + 1, round_to=round_to).collect()
+        assert {r.vec_id: r.score for r in got} == want, round_to
+        assert [(r.vec_id, r.score) for r in got[:25]] == _ranked(want, 25), round_to
+
+
+def test_batch_topk_cosine_matches_per_query(spark, sf_dir):
+    """Batched scoring == the Catalyst reference ranked per query,
+    bit for bit (the map-side partial top-k drops nothing)."""
     emb = tables.load(spark, "embeddings", sf_dir)
     queries = [(0, QUERY_VEC), (1, [-v for v in QUERY_VEC])]
-    batched = dense.batch_topk_cosine_arrow(emb, queries, k=10, round_to=6).collect()
+    batched = dense.batch_topk_cosine(emb, queries, k=10, round_to=6).collect()
     for qid, qvec in queries:
-        single = dense.topk_cosine_arrow(emb, qvec, k=10, round_to=6).collect()
-        got = [r for r in batched if r.query_id == qid]
-        assert [r.vec_id for r in got] == [r.vec_id for r in single]
-        np.testing.assert_allclose(
-            [r.score for r in got], [r.score for r in single], rtol=0, atol=1e-12
+        got = [(r.vec_id, r.score) for r in batched if r.query_id == qid]
+        assert got == _ranked(_catalyst_scores(emb, qvec, 6), 10)
+
+
+def test_topk_cosine_degenerate_inputs(spark):
+    """The kernel's contract on degenerate inputs, each the Catalyst
+    expression's (non-ANSI) answer: a zero-norm row scores NULL and
+    ranks after every scored row; a NaN element scores 0.0 (FLOOR →
+    LONG maps NaN to 0); an empty frame and k > N behave like any
+    top-k; a query of another width raises a ValueError naming both."""
+    rows = [
+        (1, [0.0, 0.0]),
+        (2, [1.0, float("nan")]),
+        (3, [1.0, 1.0]),
+        (4, [0.0, 1.0]),
+        (5, [-1.0, 0.0]),
+    ]
+    df = tables.local_frame(spark, rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    q = [1.0, 0.0]
+    got = [(r.vec_id, r.score) for r in dense.topk_cosine(df, q, k=10, round_to=6).collect()]
+    assert got == [(3, 0.707107), (2, 0.0), (4, 0.0), (5, -1.0), (1, None)]
+    assert got == _ranked(_catalyst_scores(df, q, 6), 10)
+    assert dense.topk_cosine(df, q, k=2, round_to=6).collect()[1].vec_id == 2
+    assert dense.topk_cosine(df.limit(0), q, k=10, round_to=6).collect() == []
+    with pytest.raises(Exception, match=r"ValueError: query dim 3 does not match corpus dim 2"):
+        dense.topk_cosine(df, [1.0, 0.0, 0.0], k=10).collect()
+
+
+def test_cosine_kernel_unpickles_without_the_package(tmp_path):
+    """The batch functions of the cosine kernel run in Python workers,
+    which need not have this package on their path: the kernel must
+    travel by value. Unpickled and run in a fresh interpreter whose
+    path lacks the checkout, it returns the same bits."""
+    from pyspark import cloudpickle
+
+    from multi_search_retrival_big_data_spark.functions import cosine
+
+    a = np.array([[1.0, 2.0], [0.0, 0.0], [3.0, -1.0]])
+    q = np.array([2.0, 1.0])
+    qn = float(cosine.row_norms(q[None, :])[0])
+    payload = cloudpickle.dumps((cosine.cosine_rows, cosine.row_norms, a, q, qn))
+    code = (
+        "import pickle, sys\n"
+        "f, n, a, q, qn = pickle.loads(sys.stdin.buffer.read())\n"
+        "sys.stdout.buffer.write(pickle.dumps(f(a, q, n(a), qn, 6)))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        input=payload,
+        capture_output=True,
+        cwd=tmp_path,
+        env=env,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    want = cosine.cosine_rows(a, q, cosine.row_norms(a), qn, 6)
+    np.testing.assert_array_equal(pickle.loads(out.stdout), want)
+
+
+def test_one_cosine_kernel_in_package():
+    """Literal-query ranks and pair verifies go through the dense
+    kernel: no `cosine_sim(..., lit_vec(...))` outside operators/dense.py
+    (directly or through a name bound to a lit_vec), and none of the
+    retired twin spellings, width gate or strategy knob comes back."""
+    pkg = pathlib.Path(dense.__file__).parent.parent
+    retired = re.compile(
+        r"\b(topk_cosine_arrow|batch_topk_cosine_arrow|ranked_cosine_topk"
+        r"|ARROW_RANK_MIN_DIM|score_pairs_arrow|_cosine_verify_pairs"
+        r"|dense_global_ids_scalable)\b|\bstrategy="
+    )
+
+    def called(node, name):
+        f = node.func if isinstance(node, ast.Call) else None
+        return (isinstance(f, ast.Name) and f.id == name) or (
+            isinstance(f, ast.Attribute) and f.attr == name
         )
+
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg)
+        src = path.read_text()
+        for lineno, line in enumerate(src.splitlines(), 1):
+            if retired.search(line):
+                offenders.append(f"{rel}:{lineno}: {line.strip()}")
+        tree = ast.parse(src)
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for a in fn.args.args + fn.args.kwonlyargs:
+                    if a.arg in ("strategy", "normalized"):
+                        offenders.append(f"{rel}:{fn.lineno}: {fn.name}({a.arg}=)")
+        if rel == pathlib.Path("operators/dense.py"):
+            continue
+        lit_names = {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign) and called(n.value, "lit_vec")
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(tree):
+            if called(n, "cosine_sim") and any(
+                called(a, "lit_vec") or (isinstance(a, ast.Name) and a.id in lit_names)
+                for a in n.args
+            ):
+                offenders.append(f"{rel}:{n.lineno}: cosine_sim over a literal vector")
+    assert not offenders, "use dense.topk_cosine / dense.cosine_pairs:\n" + "\n".join(offenders)
 
 
 def test_expand_to_dim_matches_driver_encode(spark, sf_dir):
@@ -125,8 +270,6 @@ def test_expand_to_dim_matches_driver_encode(spark, sf_dir):
     driver-side query encoding (encoders.dim_expand_encode) apply the
     SAME md5-derived components — per-row float-exact up to the
     double→float storage cast."""
-    from multi_search_retrival_big_data_spark.encoders import dim_expand_encode
-
     emb = tables.load(spark, "embeddings", sf_dir)
     rows = (
         dense.expand_to_dim(emb, out_dim=768, in_dim=64)
@@ -145,22 +288,3 @@ def test_expand_to_dim_matches_driver_encode(spark, sf_dir):
             np.asarray(got, dtype=np.float32),
             np.asarray(want, dtype=np.float64).astype(np.float32),
         )
-
-
-def test_topk_cosine_arrow_matches_expr_at_768(spark, sf_dir):
-    """Expression vs Arrow strategies stay the same logical operator at
-    production width: identical top-k at d=768 on the derived corpus."""
-    from multi_search_retrival_big_data_spark.encoders import dim_expand_encode
-
-    emb = tables.load(spark, "embeddings", sf_dir)
-    wide = dense.expand_to_dim(emb, out_dim=768, in_dim=64)
-    qv = dim_expand_encode(QUERY_VEC, 64, 768)
-    expr_rows = dense.topk_cosine(wide, qv, k=25, round_to=6).collect()
-    arrow_rows = dense.topk_cosine_arrow(wide, qv, k=25, round_to=6).collect()
-    assert [r.vec_id for r in arrow_rows] == [r.vec_id for r in expr_rows]
-    np.testing.assert_allclose(
-        [r.score for r in arrow_rows],
-        [r.score for r in expr_rows],
-        rtol=0,
-        atol=1e-6,
-    )

@@ -62,16 +62,20 @@ def test_dense_global_ids_are_dense_and_ordered(spark, sf_dir):
 
 
 def test_dense_global_ids_scalable_parity(spark, sf_dir):
-    """Scale-safe enumeration must be bit-equal to the global
-    row_number variant on a unique order key."""
+    """The partition-parallel enumeration must be bit-equal to a global
+    `row_number() OVER (ORDER BY ...) - 1` on a unique order key."""
+    from pyspark.sql.window import Window
+
     from multi_search_retrival_big_data_spark import tables
     from multi_search_retrival_big_data_spark.operators import temporal
 
     docs = tables.load(spark, "documents", sf_dir).select("source", "doc_id")
-    a = temporal.dense_global_ids(docs, ["source", "doc_id"], id_col="gid")
-    b = temporal.dense_global_ids_scalable(docs, ["source", "doc_id"], id_col="gid")
-    ra = sorted((r["gid"], r["doc_id"]) for r in a.collect())
-    rb = sorted((r["gid"], r["doc_id"]) for r in b.collect())
+    ref = docs.withColumn(
+        "gid", F.row_number().over(Window.orderBy("source", "doc_id")) - F.lit(1)
+    )
+    got = temporal.dense_global_ids(docs, ["source", "doc_id"], id_col="gid")
+    ra = sorted((r["gid"], r["doc_id"]) for r in ref.collect())
+    rb = sorted((r["gid"], r["doc_id"]) for r in got.collect())
     assert ra == rb
     assert [g for g, _ in ra] == list(range(len(ra)))
 
@@ -85,7 +89,7 @@ def test_dense_global_ids_scalable_no_global_window(spark, sf_dir):
     import re
 
     docs = tables.load(spark, "documents", sf_dir).select("source", "doc_id")
-    big = temporal.dense_global_ids_scalable(docs, ["source", "doc_id"], id_col="gid")
+    big = temporal.dense_global_ids(docs, ["source", "doc_id"], id_col="gid")
     plan = big._jdf.queryExecution().executedPlan().toString()
     # every row-level row_number window must be partitioned by the
     # physical partition id — never a global (un-partitioned) sort
