@@ -24,13 +24,24 @@ exact call shape the reference uses (encode(str) -> vector,
 faiss_processing.py:118-131). On a cluster with wheels + weights,
 implement `encode` with open_clip/transformers and nothing else
 changes.
+
+Encoder objects travel into Python workers inside batch functions
+(cross_encoder_rerank's scorer, multimodal.encode_corpus). Those
+workers cannot import this package when the job starts outside the
+checkout, so the module registers itself with PySpark's cloudpickle
+BY VALUE, as functions/cosine.py does: an encoder instance carries its
+class's code. Apart from that registration, import only the standard
+library here.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+import sys
 from collections.abc import Sequence
+
+from pyspark import cloudpickle
 
 
 class TextEncoder:
@@ -290,3 +301,5 @@ __all__: Sequence[str] = (
     "dim_expand_components",
     "dim_expand_encode",
 )
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -938,7 +938,7 @@ def manifest_media_state_incremental(
     )
     # image fingerprints on the WIDE production geometry (r10
     # promotion — the keep pipeline this state feeds runs
-    # wide_image_near_duplicates)
+    # image_near_duplicates(bits=WIDE_DHASH_BITS))
     out["image_fp"] = _write_split(
         "mimgfpinc",
         lambda d: _mm.dhash_fingerprints(

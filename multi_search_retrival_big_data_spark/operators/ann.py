@@ -45,7 +45,7 @@ from multi_search_retrival_big_data_spark.functions.vector import (
     cosine_sim,
     lit_vec,
 )
-from multi_search_retrival_big_data_spark.operators import dense, kmeans
+from multi_search_retrival_big_data_spark.operators import dedup, dense, kmeans
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
 NUM_PLANES = 16
@@ -439,8 +439,8 @@ def embedding_near_dup_pairs(
     threshold).
 
     use_lsh=True: candidates = pairs sharing ≥1 signature band
-    (equi-join on (band, band_value) — shuffle partitions by band
-    value, no cross join), verified by dense.cosine_pairs. `banded`
+    (dedup.lsh_candidate_pairs on (band, bval) — one exchange on the
+    band key, no cross join), verified by dense.cosine_pairs. `banded`
     supplies the PRECOMPUTED (id, band, bval) table
     (index_store.emb_lsh_bands) so the per-corpus signature pass
     happens at build time, not per run. use_lsh=False: exact
@@ -453,14 +453,7 @@ def embedding_near_dup_pairs(
             # shuffles 16-byte keys, not embedding vectors — the
             # vectors are joined back once per side after the distinct
             banded = banded_signatures(emb, id_col, vec_col, dim, num_planes, bands)
-        a = banded.select(F.col(id_col).alias("id_a"), "band", "bval")
-        b = banded.select(F.col(id_col).alias("id_b"), "band", "bval")
-        id_pairs = (
-            a.join(b, ["band", "bval"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+        id_pairs = dedup.lsh_candidate_pairs(banded, id_col, keys=("band", "bval"))
         return dense.cosine_pairs(emb, id_pairs, threshold, id_col, vec_col, round_to)
     a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))

@@ -8,10 +8,11 @@ dedup as a first-class operator. Four families, all shuffle-conscious:
 - **exact**: hash-groupBy on normalized content. One shuffle on a
   16-byte key; partial aggregation map-side. Scales linearly.
 - **MinHash + LSH**: char-shingle → P-permutation minhash signature →
-  band buckets → equi-join on (band, bucket) for candidates → exact
-  Jaccard verify on candidates only. The all-pairs O(n²) comparison
-  collapses to O(candidates); every join is an equi-join Catalyst can
-  hash-partition, no cross join anywhere.
+  band buckets → candidates from the one bucket-pair miner
+  (lsh_candidate_pairs: per-bucket sorted member arrays, one exchange
+  on (band, bucket)) → exact Jaccard verify on candidates only. The
+  all-pairs O(n²) comparison collapses to O(candidates); every join
+  is an equi-join Catalyst can hash-partition, no cross join anywhere.
 - **n-gram Jaccard (exact)**: all-pairs ground truth; intersections
   built by an equi-join on the shingle value (NOT a cross join), so
   cost is O(sum of posting-list² per shingle) — only viable as an
@@ -169,20 +170,34 @@ def lsh_buckets(
 
 
 def lsh_candidate_pairs(
-    buckets: DataFrame, id_col: str, max_bucket: int | None = None
+    rows: DataFrame,
+    id_col: str,
+    max_bucket: int | None = None,
+    keys: tuple[str, ...] = ("band", "bucket"),
+    payload: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Distinct unordered candidate pairs from shared (band, bucket)
-    keys. Equi-join on the bucket key — the shuffle partitions by
-    bucket, so skew only appears when one bucket is huge.
+    """The package's one bucket-pair miner: distinct unordered pairs
+    (id_a < id_b) of rows that share a bucket key `keys`, each side
+    carrying its `payload` columns as `<col>_a` / `<col>_b`. Every
+    banded near-duplicate family calls it: MinHash (band, bucket),
+    SimHash/dHash (chunk_idx, chunk), SemDeDup cells (cid) and mega-cell
+    sub-buckets (cid, band, bval), embedding LSH (band, bval).
 
-    `max_bucket=None` emits ALL pairs per bucket — O(m²) in the bucket
-    size, which on a duplicate-heavy crawl (one viral boilerplate
-    bucket with 10⁶ members → 10¹² pairs) kills the stage. With
-    `max_bucket=B` (production default: a few hundred) buckets of size
-    m ≤ B still emit all pairs, but each MEGA bucket emits only a
-    deterministic SPANNING pair set — the id-sorted consecutive chain
-    (m-1 pairs) plus a star to the bucket minimum (m-1 pairs) — so a
-    bucket contributes O(m), not O(m²).
+    Spelling: one groupBy on the key collects each bucket's members as
+    ONE id-sorted array L (`array_sort(collect_list(struct(id,
+    *payload)))`); `posexplode` yields each member x at position p,
+    and x's partners are `slice(L, p+2, n)`. One exchange and one
+    evaluation of the upstream lineage — no self-join (which re-runs
+    the lineage per side), no window, no union.
+
+    `max_bucket=None` emits ALL pairs per bucket (n = size(L)) —
+    O(m²) in the bucket size, which on a duplicate-heavy crawl (one
+    viral boilerplate bucket with 10⁶ members → 10¹² pairs) kills the
+    stage. With `max_bucket=B` buckets of size m ≤ B still emit all
+    pairs, but each MEGA bucket emits only a deterministic SPANNING
+    pair set: the first (minimum) member keeps n = size(L), the STAR
+    to every other member, and every other member takes n = 1, the
+    next link of the id-sorted CHAIN — 2m-3 distinct pairs, O(m).
 
     The cap is NOT cluster-preserving in general. The downstream
     closure runs over the pairs that pass the exact-Jaccard verify, so
@@ -198,70 +213,65 @@ def lsh_candidate_pairs(
     corpora at B=3: seed 8's (170, 297) at J=0.88 shares only a
     4-member bucket with two documents at J≈0.2, and seed 22's 531
     verifies only with 112 in a 5-member bucket; 7 of seeds 1-40 lose
-    1-2 documents from the capped closure. Cost shape: the windows
-    (count/min/lag over (band, bucket)) are ONE sort-shuffle on the
-    bucket key — a 10⁶-member bucket is 10⁶ rows in one task instead
-    of 10¹² join outputs."""
-    if max_bucket is None:
-        a = buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
-        b = buckets.select(F.col(id_col).alias("id_b"), "band", "bucket")
-        return (
-            a.join(b, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
+    1-2 documents from the capped closure.
+
+    Degenerate inputs: an empty frame or single-member buckets give no
+    pairs; an id listed twice in one bucket never pairs with itself
+    (the strict id_a < id_b filter), capped or not. Memory: a bucket's
+    members sit in one agg buffer (~8 B per id plus payload); the
+    partner slices stream through the generator, so the capped path
+    never holds more than one bucket's array."""
+    keys = list(keys)
+    members = F.array_sort(
+        F.collect_list(
+            F.struct(F.col(id_col).alias("id"), *[F.col(c) for c in payload])
         )
-    w = Window.partitionBy("band", "bucket")
-    wo = w.orderBy(id_col)
-    ann = buckets.select(
-        F.col(id_col).alias("id"),
-        "band",
-        "bucket",
-        F.count(F.lit(1)).over(w).alias("m"),
-        F.min(id_col).over(w).alias("mn"),
-        F.lag(id_col).over(wo).alias("prev"),
     )
-    small = ann.filter(F.col("m") <= max_bucket)
-    sa = small.select(F.col("id").alias("id_a"), "band", "bucket")
-    sb = small.select(F.col("id").alias("id_b"), "band", "bucket")
-    small_pairs = (
-        sa.join(sb, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    mega = ann.filter(F.col("m") > max_bucket)
-    chain = mega.filter(F.col("prev").isNotNull()).select(
-        F.col("prev").alias("id_a"), F.col("id").alias("id_b")
-    )
-    star = mega.filter(F.col("id") > F.col("mn")).select(
-        F.col("mn").alias("id_a"), F.col("id").alias("id_b")
-    )
-    return small_pairs.unionByName(chain).unionByName(star).distinct()
+    per_bucket = rows.groupBy(*keys).agg(members.alias("__L"))
+    n = F.size("__L")
+    if max_bucket is not None:
+        n = F.when((n <= max_bucket) | (F.col("__p") == 0), n).otherwise(F.lit(1))
+    x = per_bucket.select("__L", F.posexplode("__L").alias("__p", "__x"))
+    pairs = x.select(
+        "__x", F.explode(F.slice("__L", F.col("__p") + 2, n)).alias("__y")
+    ).filter(F.col("__x.id") < F.col("__y.id"))
+    return pairs.select(
+        F.col("__x.id").alias("id_a"),
+        F.col("__y.id").alias("id_b"),
+        *[F.col(f"__x.{c}").alias(f"{c}_a") for c in payload],
+        *[F.col(f"__y.{c}").alias(f"{c}_b") for c in payload],
+    ).distinct()
 
 
 def lsh_delta_candidate_pairs(
-    buckets: DataFrame, delta_ids: DataFrame, id_col: str
+    rows: DataFrame,
+    delta_ids: DataFrame,
+    id_col: str,
+    keys: tuple[str, ...] = ("band", "bucket"),
 ) -> DataFrame:
     """Candidate pairs TOUCHING a delta batch: the delta's bucket rows
-    equi-joined against the full bucket table → distinct unordered
-    (id_a < id_b) pairs with at least one delta member.
+    equi-joined on `keys` against the full bucket table → distinct
+    unordered (id_a < id_b) pairs with at least one delta member. The
+    package's one delta probe: MinHash (band, bucket), embedding LSH
+    (band, bval) and SemDeDup cells (cid,) call it.
 
     This is how a continuously-crawling pipeline dedups an incoming
     batch against a 100 TB corpus WITHOUT re-running the corpus
-    self-join: the persisted bucket table (index_store layout) is
-    probed only at the delta's (band, bucket) keys, so the join cost
-    is O(|delta| × bucket collision rate), and the result is provably
+    pair mining: the persisted bucket table (index_store layout) is
+    probed only at the delta's keys, so the join cost is
+    O(|delta| × bucket collision rate), and the result is provably
     the subset of the full candidate set that involves a delta doc
     (same buckets ⇒ same collisions — the oracle checks exactly that
     equivalence). Delta-internal pairs arise twice (once per side) and
     collapse in the distinct; the semi-join prune broadcasts the
     delta id set (batch-sized)."""
-    delta = buckets.join(
+    keys = list(keys)
+    delta = rows.join(
         F.broadcast(delta_ids.select(id_col)), id_col, "left_semi"
-    ).select(F.col(id_col).alias("__id_d"), "band", "bucket")
-    other = buckets.select(F.col(id_col).alias("__id_o"), "band", "bucket")
+    ).select(F.col(id_col).alias("__id_d"), *keys)
+    other = rows.select(F.col(id_col).alias("__id_o"), *keys)
     return (
-        delta.join(other, ["band", "bucket"])
+        delta.join(other, keys)
         .filter(F.col("__id_d") != F.col("__id_o"))
         .select(
             F.least("__id_d", "__id_o").alias("id_a"),
@@ -396,7 +406,7 @@ def minhash_near_duplicates(
     (index_store.doc_shingles / minhash_sigs): the explode+distinct
     and the md5-per-shingle signature pass — the dominant costs — then
     happen once at ingest, and a dedup run is only bucket → candidate
-    equi-join → candidate-bound verify. Without them the artifacts are
+    mining → candidate-bound verify. Without them the artifacts are
     derived inline (self-contained mode; `.cache()` stands in for the
     persisted table within the one plan)."""
     sh = shingles
@@ -865,7 +875,7 @@ def semantic_candidate_pairs(
 
     # Route on a tiny driver probe of the cell-size histogram: a
     # HEALTHY corpus (no cell over the cap) runs the EXACT uncapped
-    # plan — the guard machinery (banding, windows, refetch verify)
+    # plan — the guard machinery (banding, sub-bucket mining, refetch verify)
     # never even enters the plan, so arming the cap costs one
     # aggregation-sized job until the day it fires (the
     # connected_components_auto gate pattern). The probe is a groupBy
@@ -915,11 +925,8 @@ def semantic_candidates(
     is ≤ ~2²⁰, megabytes not corpus-scale."""
     sizes = assign.groupBy(cid_col).agg(F.count(F.lit(1)).alias("__m"))
     sized = assign.join(F.broadcast(sizes), cid_col)
-    small = sized.filter(F.col("__m") <= max_cell)
-    sa = small.select(F.col(cid_col), F.col(id_col).alias("id_a"))
-    sb = small.select(F.col(cid_col), F.col(id_col).alias("id_b"))
-    small_pairs = (
-        sa.join(sb, cid_col).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
+    small_pairs = lsh_candidate_pairs(
+        sized.filter(F.col("__m") <= max_cell), id_col, keys=(cid_col,)
     )
     mega_pairs = _mega_cell_band_pairs(
         sized.filter(F.col("__m") > max_cell), id_col, vec_col, cid_col, dim,
@@ -937,8 +944,8 @@ def _mega_cell_band_pairs(
     sub_cap: int | None = None,
 ) -> DataFrame:
     """SRP band sub-bucket pairs inside over-cap (mega) cells: sign
-    signatures over md5-derived hyperplanes, banded, self-joined on
-    (cid, band, bval).
+    signatures over md5-derived hyperplanes, banded, and mined by
+    lsh_candidate_pairs on (cid, band, bval).
 
     Two guards compose here, each against a different viral shape:
     - DISSIMILAR vectors crowding one Voronoi cell are split by the
@@ -959,9 +966,9 @@ def _mega_cell_band_pairs(
     Only the band pairs need the distinct (the same pair can collide
     in several bands; small-cell pairs are unique by construction), so
     the dedup shuffle is mega-sized, never corpus-pair-sized. The
-    windows (count/min/lag over (cid, band, bval)) are one sort-
-    shuffle of the MEGA subset only — a 10⁶-member viral sub-bucket is
-    10⁶ rows in one task instead of 10¹² join outputs."""
+    member arrays are grouped from the MEGA subset only — a 10⁶-member
+    viral sub-bucket is one 10⁶-element array in one task, emitting
+    O(m) pairs instead of 10¹² join outputs."""
     from multi_search_retrival_big_data_spark.operators import ann as _ann
 
     planes = _ann.hyperplanes(dim, _ann.NUM_PLANES)
@@ -984,43 +991,8 @@ def _mega_cell_band_pairs(
             )
         ).alias("e"),
     ).select(cid_col, id_col, "e.band", "e.bval")
-    if sub_cap is None:
-        ma = banded.select(cid_col, "band", "bval", F.col(id_col).alias("id_a"))
-        mb = banded.select(cid_col, "band", "bval", F.col(id_col).alias("id_b"))
-        return (
-            ma.join(mb, [cid_col, "band", "bval"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    w = Window.partitionBy(cid_col, "band", "bval")
-    wo = w.orderBy(id_col)
-    annb = banded.select(
-        F.col(cid_col),
-        F.col(id_col).alias("id"),
-        "band",
-        "bval",
-        F.count(F.lit(1)).over(w).alias("__m2"),
-        F.min(id_col).over(w).alias("__mn"),
-        F.lag(id_col).over(wo).alias("__prev"),
-    )
-    sm = annb.filter(F.col("__m2") <= sub_cap)
-    pa = sm.select(F.col("id").alias("id_a"), cid_col, "band", "bval")
-    pb = sm.select(F.col("id").alias("id_b"), cid_col, "band", "bval")
-    sub_small = (
-        pa.join(pb, [cid_col, "band", "bval"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    over = annb.filter(F.col("__m2") > sub_cap)
-    chain = over.filter(F.col("__prev").isNotNull()).select(
-        F.col("__prev").alias("id_a"), F.col("id").alias("id_b")
-    )
-    star = over.filter(F.col("id") > F.col("__mn")).select(
-        F.col("__mn").alias("id_a"), F.col("id").alias("id_b")
-    )
-    return (
-        sub_small.unionByName(chain).unionByName(star).distinct()
+    return lsh_candidate_pairs(
+        banded, id_col, sub_cap, keys=(cid_col, "band", "bval")
     )
 
 
@@ -1052,9 +1024,10 @@ def semantic_delta_candidate_pairs(
     round_to: int = 6,
 ) -> DataFrame:
     """Incremental SemDeDup: cosine-duplicate candidates TOUCHING a
-    delta batch — the semantic twin of lsh_delta_candidate_pairs. The
-    delta's cell rows (ids only) equi-join the full cid-partitioned
-    assignment table, unordered pairs collapse in a distinct, and one
+    delta batch — lsh_delta_candidate_pairs with the cell id as the
+    bucket key: the delta's cell rows (ids only) equi-join the full
+    cid-partitioned assignment table, unordered pairs collapse in a
+    distinct, and one
     exact-cosine verify runs on the candidate-bound pair list (vectors
     fetched by unique-id joins, jaccard_for_pairs-style).
 
@@ -1066,19 +1039,7 @@ def semantic_delta_candidate_pairs(
     orientation is immaterial bit-for-bit (dot/norm folds are
     index-ordered; double multiply commutes exactly), so verifying on
     (least, greatest) pairs matches the full-path values."""
-    d = assign.join(
-        F.broadcast(delta_ids.select(id_col)), id_col, "left_semi"
-    ).select(F.col(id_col).alias("__id_d"), cid_col)
-    o = assign.select(F.col(id_col).alias("__id_o"), cid_col)
-    pairs = (
-        d.join(o, cid_col)
-        .filter(F.col("__id_d") != F.col("__id_o"))
-        .select(
-            F.least("__id_d", "__id_o").alias("id_a"),
-            F.greatest("__id_d", "__id_o").alias("id_b"),
-        )
-        .distinct()
-    )
+    pairs = lsh_delta_candidate_pairs(assign, delta_ids, id_col, keys=(cid_col,))
     return dense.cosine_pairs(assign, pairs, threshold, id_col, vec_col, round_to)
 
 

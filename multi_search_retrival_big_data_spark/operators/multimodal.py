@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from multi_search_retrival_big_data_spark.operators import textanalysis
+
 MEDIA_TYPES = ("image", "audio", "video")
 
 FAKE_DECODER = "fake"
@@ -129,6 +131,10 @@ def frame_sample(decoded: DataFrame, every: int = 2) -> DataFrame:
 # WHOLE stage — Arrow batch in, typed feature frame out — is
 # oracle-comparable end to end. A production cluster swaps the body
 # (cv2 probe, TransNetV2, pyannote, wav2vec2) and keeps every plan.
+# The batch functions run in Python workers, which need not be able to
+# import this package: they call only pandas/NumPy, module constants
+# and by-value modules (encoders), so the fake checksum
+# int(sum(blob)) % CHECKSUM_MOD is spelled inline in each.
 
 FPS_BASE, FPS_MOD = 24, 8  # fake probe: fps in 24..31 from the checksum
 SHOT_BASE, SHOT_MOD = 4, 4  # fake detector: uniform shot length 4..7 frames
@@ -141,10 +147,6 @@ SHOT_SCHEMA = (
 )
 VAD_SCHEMA = "media_id BIGINT, seg_id BIGINT, start_ms BIGINT, end_ms BIGINT"
 ASR_SCHEMA = "media_id BIGINT, transcript STRING, n_tokens BIGINT"
-
-
-def _fake_checksum(blob: bytes) -> int:
-    return int(sum(blob)) % CHECKSUM_MOD
 
 
 def probe_video(media: DataFrame) -> DataFrame:
@@ -161,7 +163,8 @@ def probe_video(media: DataFrame) -> DataFrame:
     def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n_frames = pdf["content"].map(len) // FRAME_BYTES + 1
-            fps = pdf["content"].map(_fake_checksum) % FPS_MOD + FPS_BASE
+            checksum = pdf["content"].map(lambda b: int(sum(b)) % CHECKSUM_MOD)
+            fps = checksum % FPS_MOD + FPS_BASE
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -192,7 +195,7 @@ def detect_shots(media: DataFrame) -> DataFrame:
             ids, sids, starts, ends = [], [], [], []
             for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 n_frames = len(blob) // FRAME_BYTES + 1
-                shot_len = SHOT_BASE + _fake_checksum(blob) % SHOT_MOD
+                shot_len = SHOT_BASE + int(sum(blob)) % CHECKSUM_MOD % SHOT_MOD
                 for sid, start in enumerate(range(0, n_frames, shot_len)):
                     ids.append(mid)
                     sids.append(sid)
@@ -227,7 +230,7 @@ def vad_segments(media: DataFrame) -> DataFrame:
             ids, sids, starts, ends = [], [], [], []
             for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 dur_ms = len(blob)
-                seg_len = VAD_BASE + _fake_checksum(blob) % VAD_MOD
+                seg_len = VAD_BASE + int(sum(blob)) % CHECKSUM_MOD % VAD_MOD
                 for sid, start in enumerate(range(0, dur_ms, VAD_PERIOD)):
                     ids.append(mid)
                     sids.append(sid)
@@ -582,15 +585,16 @@ def dhash_fingerprints(
     thousands of times smaller than the JPEG corpus and is what gets
     persisted/banded, exactly like the MinHash signature table. If a
     production corpus still produces a viral chunk bucket (byte-true
-    duplicate storms), the lsh_candidate_pairs max_bucket chain+star
-    pattern applies unchanged to the (chunk_idx, chunk) buckets.
+    duplicate storms), image_near_duplicates(max_bucket=) applies the
+    bucket-pair miner's chain+star cap to the (chunk_idx, chunk)
+    buckets.
 
     `rows`/`cols` widen the fingerprint when the band-density gauge
     (monitor_dhash_band_density) says the default 64-bit / 8-bit-band
     geometry is SATURATING: rows=WIDE_DHASH_ROWS (16) yields the
-    128-bit fingerprint wide_image_near_duplicates bands with 16-bit
-    chunks — same grid arithmetic, same bit rule, 2× the fingerprint
-    bytes, ~256× lower bucket density."""
+    128-bit fingerprint image_near_duplicates(bits=WIDE_DHASH_BITS)
+    bands with 16-bit chunks — same grid arithmetic, same bit rule, 2×
+    the fingerprint bytes, ~256× lower bucket density."""
     if decoder != FAKE_DECODER:
         raise NotImplementedError(
             f"decoder {decoder!r}: real image decode (PIL/cv2 grayscale "
@@ -652,23 +656,28 @@ def image_near_duplicates(
     id_col: str = "frame_id",
     max_hamming: int = DHASH_MAX_HAMMING,
     max_bucket: int | None = None,
+    bits: int = DHASH_BITS,
+    chunks: int = textanalysis.SIMHASH_CHUNKS,
 ) -> DataFrame:
     """Perceptual near-duplicate pairs over dHash fingerprints —
-    REUSES the SimHash Hamming-band LSH verbatim (pigeonhole over 8
-    8-bit chunks guarantees 100% recall for distance ≤ 7, candidates
-    from an equi-join on (chunk_idx, chunk), never all-pairs). Returns
-    (id_a, id_b, hamming). Completes the dedup family across
-    text (MinHash/SimHash/winnowing/spans), embedding (SemDeDup), and
-    image modalities."""
-    from multi_search_retrival_big_data_spark.operators.textanalysis import (
-        simhash_near_duplicates,
-    )
-
-    return simhash_near_duplicates(
+    REUSES the SimHash Hamming-band LSH verbatim (pigeonhole over
+    `chunks` exact chunks guarantees 100% recall for distance ≤
+    chunks-1, candidates from the bucket-pair miner on
+    (chunk_idx, chunk), never all-pairs). Returns (id_a, id_b,
+    hamming). `bits`/`chunks` select the geometry: the 64-bit /
+    8-bit-band default, or `bits=WIDE_DHASH_BITS,
+    chunks=WIDE_BAND_CHUNKS` over dhash_fingerprints(
+    rows=WIDE_DHASH_ROWS) — 128 bits in 16-bit bands. `max_bucket`
+    applies the chain+star viral-bucket guard. Completes the dedup
+    family across text (MinHash/SimHash/winnowing/spans), embedding
+    (SemDeDup), and image modalities."""
+    return textanalysis.simhash_near_duplicates(
         fingerprints.select(F.col(id_col), F.col("dhash").alias("simhash")),
         id_col,
         max_hamming=max_hamming,
+        chunks=chunks,
         max_bucket=max_bucket,
+        bits=bits,
     )
 
 
@@ -686,162 +695,6 @@ WIDE_DHASH_ROWS = 16
 WIDE_DHASH_BITS = WIDE_DHASH_ROWS * (DHASH_COLS - 1)
 WIDE_BAND_CHUNKS = 8
 WIDE_BAND_WIDTH = WIDE_DHASH_BITS // WIDE_BAND_CHUNKS  # 16-bit bands
-
-
-def wide_image_near_duplicates(
-    fingerprints: DataFrame,
-    id_col: str = "frame_id",
-    bits: int = WIDE_DHASH_BITS,
-    chunks: int = WIDE_BAND_CHUNKS,
-    max_hamming: int = DHASH_MAX_HAMMING,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Perceptual near-duplicate pairs over WIDE dHash fingerprints
-    (dhash_fingerprints(rows=WIDE_DHASH_ROWS)) — the Hamming-band LSH
-    generalized to arbitrary bit widths: candidates share one exact
-    (bits/chunks)-bit chunk (pigeonhole: 100% recall for hamming ≤
-    chunks-1), verify packs the '0'/'1' fingerprint into bits/32
-    32-bit words and sums bit_count(xor) per word pair (no per-pair
-    string parsing). `max_bucket` applies the same chain+star
-    viral-bucket guard as the 64-bit path. Returns (id_a, id_b,
-    hamming).
-
-    Scale notes: identical plan shape to
-    textanalysis.simhash_near_duplicates — one equi-join on
-    (chunk_idx, chunk), never all-pairs; the candidate shuffle carries
-    4 bigints per side. The 16-bit default band space divides bucket
-    density ~256× vs 8-bit bands, which is the entire point: at 10⁶+
-    frames the 8-bit geometry's buckets are density-saturated
-    (candidate volume quadratic in corpus size even with zero
-    duplicate storms) while the 16-bit one stays collision-driven."""
-    if bits % 32 != 0 or bits % chunks != 0:
-        raise ValueError(f"bits={bits} must be divisible by 32 and chunks={chunks}")
-    width = bits // chunks
-    words = bits // 32
-    packed = [
-        F.conv(F.substring("dhash", w * 32 + 1, 32), 2, 10)
-        .cast("bigint")
-        .alias(f"p{w}")
-        for w in range(words)
-    ]
-    chunked = fingerprints.select(
-        F.col(id_col),
-        *packed,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_idx"),
-                        F.substring("dhash", c * width + 1, width).alias("chunk"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("e"),
-    ).select(id_col, *[f"p{w}" for w in range(words)], "e.chunk_idx", "e.chunk")
-    wnames = [f"p{w}" for w in range(words)]
-    if max_bucket is None:
-        # one evaluation of the fingerprint lineage via per-bucket
-        # member arrays + chained generators — the
-        # textanalysis.simhash_near_duplicates uncapped spelling (see
-        # its comment for the identity + memory-bound argument),
-        # generalized to `words` packed halves
-        per_bucket = chunked.groupBy("chunk_idx", "chunk").agg(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("id"),
-                    *[F.col(p).alias(p) for p in wnames],
-                )
-            ).alias("__L")
-        )
-        ex = per_bucket.select(F.col("__L"), F.explode("__L").alias("__x"))
-        cand = (
-            ex.select(
-                F.col("__x.id").alias("id_a"),
-                *[
-                    F.col(f"__x.{p}").alias(f"a{w}")
-                    for w, p in enumerate(wnames)
-                ],
-                F.explode(
-                    F.filter(F.col("__L"), lambda y: y["id"] > F.col("__x.id"))
-                ).alias("__y"),
-            )
-            .select(
-                "id_a",
-                F.col("__y.id").alias("id_b"),
-                *[f"a{w}" for w in range(words)],
-                *[
-                    F.col(f"__y.{p}").alias(f"b{w}")
-                    for w, p in enumerate(wnames)
-                ],
-            )
-            .distinct()
-        )
-    else:
-        from pyspark.sql import Window
-
-        w_ = Window.partitionBy("chunk_idx", "chunk")
-        wo = w_.orderBy(id_col)
-        # struct ordering is by the leading id field, matching the
-        # oracle's MIN(id)/LAG(... ORDER BY id) elections
-        me = F.struct(
-            F.col(id_col).alias("id"),
-            *[F.col(p).alias(p) for p in wnames],
-        )
-        ann = chunked.select(
-            me.alias("me"),
-            "chunk_idx",
-            "chunk",
-            F.count(F.lit(1)).over(w_).alias("m"),
-            F.min(me).over(w_).alias("mn"),
-            F.lag(me).over(wo).alias("prev"),
-        )
-        small = ann.filter(F.col("m") <= max_bucket)
-        sa = small.select(
-            F.col("me.id").alias("id_a"),
-            *[F.col(f"me.{p}").alias(f"a{w}") for w, p in enumerate(wnames)],
-            "chunk_idx",
-            "chunk",
-        )
-        sb = small.select(
-            F.col("me.id").alias("id_b"),
-            *[F.col(f"me.{p}").alias(f"b{w}") for w, p in enumerate(wnames)],
-            "chunk_idx",
-            "chunk",
-        )
-        small_pairs = (
-            sa.join(sb, ["chunk_idx", "chunk"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a",
-                "id_b",
-                *[f"a{w}" for w in range(words)],
-                *[f"b{w}" for w in range(words)],
-            )
-        )
-        mega = ann.filter(F.col("m") > max_bucket)
-        chain = mega.filter(F.col("prev").isNotNull()).select(
-            F.col("prev.id").alias("id_a"),
-            *[F.col(f"prev.{p}").alias(f"a{w}") for w, p in enumerate(wnames)],
-            F.col("me.id").alias("id_b"),
-            *[F.col(f"me.{p}").alias(f"b{w}") for w, p in enumerate(wnames)],
-        )
-        star = mega.filter(F.col("me.id") > F.col("mn.id")).select(
-            F.col("mn.id").alias("id_a"),
-            *[F.col(f"mn.{p}").alias(f"a{w}") for w, p in enumerate(wnames)],
-            F.col("me.id").alias("id_b"),
-            *[F.col(f"me.{p}").alias(f"b{w}") for w, p in enumerate(wnames)],
-        )
-        cand = small_pairs.unionByName(chain).unionByName(star).distinct()
-    hamming = sum(
-        F.bit_count(F.col(f"a{w}").bitwiseXOR(F.col(f"b{w}")))
-        for w in range(words)
-    ).cast("int")
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 def dhash_band_density(

@@ -15,8 +15,9 @@ Scale notes:
   partial aggregation; no explode over bit positions.
 - SimHash near-dup pairs: 8-chunk pigeonhole banding — any two
   fingerprints within Hamming distance 7 agree exactly on at least one
-  8-bit chunk, so candidates come from an equi-join on (chunk_idx,
-  chunk_value), never an all-pairs scan.
+  8-bit chunk, so candidates come from the bucket-pair miner
+  (dedup.lsh_candidate_pairs) on (chunk_idx, chunk_value), never an
+  all-pairs scan.
 - Winnowing: window-function MIN over a w-row frame inside each doc
   partition; one shuffle on doc_id.
 """
@@ -29,6 +30,7 @@ from pyspark.sql.window import Window
 
 from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.functions.text import tokenize
+from multi_search_retrival_big_data_spark.operators import dedup
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
 HEX_CHARS = "0123456789abcdef"
@@ -86,8 +88,8 @@ def hamming_distance(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:
     substr(a,p,1) != substr(b,p,1))` evaluated 2·bits interpreted
     variable-position substrings per row and dominated the near-dup
     verify stage (measured 35 s of a 40 s image-near-dup run at sf0.1
-    over 1.15M candidate pairs). simhash_near_duplicates now packs the
-    halves to bigints BEFORE its banding join (narrower shuffle, one
+    over 1.15M candidate pairs). simhash_near_duplicates packs the
+    fingerprint into bigint words BEFORE banding (narrower shuffle, one
     conv per fingerprint instead of per pair), so this string-input
     helper serves ad-hoc comparisons, not the serving path."""
     terms = []
@@ -110,38 +112,46 @@ def simhash_near_duplicates(
     max_hamming: int = SIMHASH_CHUNKS - 1,
     chunks: int = SIMHASH_CHUNKS,
     max_bucket: int | None = None,
+    bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash: candidates share at least one
-    exact 8-bit chunk (pigeonhole guarantees 100% recall for distance
-    ≤ chunks-1), then verified hamming ≤ max_hamming.
-    Returns (id_a, id_b, hamming).
+    exact (bits/chunks)-bit chunk (pigeonhole guarantees 100% recall
+    for distance ≤ chunks-1), then verified hamming ≤ max_hamming.
+    Returns (id_a, id_b, hamming). `bits` is the fingerprint width
+    (a multiple of 32 and of `chunks`): the 64-bit SimHash / dHash
+    default, or the 128-bit wide dHash geometry with 16-bit chunks.
 
-    `max_bucket=None` emits all pairs per (chunk_idx, chunk) bucket —
-    O(m²) in the bucket size. A byte-identical duplicate storm (one
-    viral page / frame replicated 10⁶ times) puts every copy in the
-    SAME buckets and the stage dies at m², exactly the MinHash
-    mega-bucket pathology. With `max_bucket=B`, over-cap buckets emit
-    only the id-sorted consecutive CHAIN plus a STAR to the bucket
-    minimum (the dedup.lsh_candidate_pairs guard, dedup.py:168): O(m)
-    pairs per bucket under any skew. Since members of a byte-identical
-    storm have hamming 0 pairwise, chain+star keeps the whole storm
+    Candidates come from the one bucket-pair miner,
+    dedup.lsh_candidate_pairs, on (chunk_idx, chunk), with the
+    fingerprint packed into bits/32 bigint words as the payload: the
+    miner groups each bucket into one member array (one exchange, one
+    evaluation of the fingerprint lineage — for the image/video
+    consumers that lineage is a decode+dHash mapInPandas pass), and the
+    verify is bits/32 xor/bit_count ops on the carried words, with no
+    fingerprint re-join and no per-pair string parsing.
+
+    `max_bucket=None` emits all pairs per bucket — O(m²) in the bucket
+    size. A byte-identical duplicate storm (one viral page / frame
+    replicated 10⁶ times) puts every copy in the SAME buckets and the
+    stage dies at m², exactly the MinHash mega-bucket pathology. With
+    `max_bucket=B`, over-cap buckets emit only the id-sorted
+    consecutive CHAIN plus a STAR to the bucket minimum: O(m) pairs
+    per bucket under any skew. Since members of a byte-identical storm
+    have hamming 0 pairwise, chain+star keeps the whole storm
     connected through the hamming verify for downstream clustering;
     the pairs dropped are only the non-adjacent combinations inside
     over-cap buckets (the same recall trade the SemDeDup viral-cell
-    guard prices, dedup.py:899)."""
-    width = SIMHASH_BITS // chunks
-    # pack the 64-bit fingerprint into two 32-bit halves BEFORE the
-    # banding join: the candidate shuffle then carries 2 bigints per
-    # side instead of a 64-char string (~8x narrower distinct), and
-    # the verify is two xor/bit_count ops instead of conv-parsing the
-    # string per pair (same exact hamming; image near-dup at sf0.1
-    # measured 6.1 -> 2.1 s warm from this change alone)
-    p0 = F.conv(F.substring("simhash", 1, 32), 2, 10).cast("bigint")
-    p1 = F.conv(F.substring("simhash", 33, 32), 2, 10).cast("bigint")
+    guard prices)."""
+    if bits % 32 != 0 or bits % chunks != 0:
+        raise ValueError(f"bits={bits} must be divisible by 32 and chunks={chunks}")
+    width = bits // chunks
+    words = [f"p{w}" for w in range(bits // 32)]
     chunked = fingerprints.select(
         F.col(id_col),
-        p0.alias("p0"),
-        p1.alias("p1"),
+        *[
+            F.conv(F.substring("simhash", w * 32 + 1, 32), 2, 10).cast("bigint").alias(p)
+            for w, p in enumerate(words)
+        ],
         F.explode(
             F.array(
                 *[
@@ -153,105 +163,12 @@ def simhash_near_duplicates(
                 ]
             )
         ).alias("e"),
-    ).select(id_col, "p0", "p1", "e.chunk_idx", "e.chunk")
-    if max_bucket is None:
-        # ONE evaluation of the fingerprint lineage (r11, guide §2.4):
-        # the old a⋈b self-join on (chunk_idx, chunk) re-ran the whole
-        # upstream per side — for the image/video consumers that is two
-        # decode+dHash mapInPandas passes over the media corpus (the
-        # captured r10 plans broadcast one side, so no exchange reuse
-        # saved it). Grouping the bucket members into ONE array and
-        # pair-generating with nested higher-order functions rides a
-        # single exchange and evaluates the lineage once; the pair SET
-        # (all x,y per bucket with y.id > x.id, then distinct) is
-        # identical to the join's. Memory bound: a bucket's members sit
-        # in one collect_list buffer (~24 B/member) instead of one join
-        # partition — same task-locality as before; the per-x partner
-        # arrays are ≤ bucket size, streamed through two generators,
-        # never the m² pair array at once. The uncapped branch is the
-        # AUDIT path (quadratic by contract); duplicate storms belong
-        # on the capped branch either way.
-        per_bucket = chunked.groupBy("chunk_idx", "chunk").agg(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("id"),
-                    F.col("p0").alias("p0"),
-                    F.col("p1").alias("p1"),
-                )
-            ).alias("__L")
-        )
-        ex = per_bucket.select(F.col("__L"), F.explode("__L").alias("__x"))
-        cand = (
-            ex.select(
-                F.col("__x.id").alias("id_a"),
-                F.col("__x.p0").alias("a0"),
-                F.col("__x.p1").alias("a1"),
-                F.explode(
-                    F.filter(F.col("__L"), lambda y: y["id"] > F.col("__x.id"))
-                ).alias("__y"),
-            )
-            .select(
-                "id_a",
-                F.col("__y.id").alias("id_b"),
-                "a0",
-                "a1",
-                F.col("__y.p0").alias("b0"),
-                F.col("__y.p1").alias("b1"),
-            )
-            .distinct()
-        )
-    else:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("chunk_idx", "chunk")
-        wo = w.orderBy(id_col)
-        # carry (id, packed halves) together through min/lag so
-        # mega-bucket pairs need no fingerprint re-join; struct
-        # ordering is by the leading id field, matching the oracle's
-        # MIN(frame_id)/LAG(... ORDER BY frame_id)
-        me = F.struct(
-            F.col(id_col).alias("id"), F.col("p0").alias("p0"),
-            F.col("p1").alias("p1"),
-        )
-        ann = chunked.select(
-            me.alias("me"),
-            "chunk_idx",
-            "chunk",
-            F.count(F.lit(1)).over(w).alias("m"),
-            F.min(me).over(w).alias("mn"),
-            F.lag(me).over(wo).alias("prev"),
-        )
-        small = ann.filter(F.col("m") <= max_bucket)
-        sa = small.select(
-            F.col("me.id").alias("id_a"), F.col("me.p0").alias("a0"),
-            F.col("me.p1").alias("a1"), "chunk_idx", "chunk",
-        )
-        sb = small.select(
-            F.col("me.id").alias("id_b"), F.col("me.p0").alias("b0"),
-            F.col("me.p1").alias("b1"), "chunk_idx", "chunk",
-        )
-        small_pairs = (
-            sa.join(sb, ["chunk_idx", "chunk"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "a0", "a1", "b0", "b1")
-        )
-        mega = ann.filter(F.col("m") > max_bucket)
-        chain = mega.filter(F.col("prev").isNotNull()).select(
-            F.col("prev.id").alias("id_a"), F.col("prev.p0").alias("a0"),
-            F.col("prev.p1").alias("a1"),
-            F.col("me.id").alias("id_b"), F.col("me.p0").alias("b0"),
-            F.col("me.p1").alias("b1"),
-        )
-        star = mega.filter(F.col("me.id") > F.col("mn.id")).select(
-            F.col("mn.id").alias("id_a"), F.col("mn.p0").alias("a0"),
-            F.col("mn.p1").alias("a1"),
-            F.col("me.id").alias("id_b"), F.col("me.p0").alias("b0"),
-            F.col("me.p1").alias("b1"),
-        )
-        cand = small_pairs.unionByName(chain).unionByName(star).distinct()
-    hamming = (
-        F.bit_count(F.col("a0").bitwiseXOR(F.col("b0")))
-        + F.bit_count(F.col("a1").bitwiseXOR(F.col("b1")))
+    ).select(id_col, *words, "e.chunk_idx", "e.chunk")
+    cand = dedup.lsh_candidate_pairs(
+        chunked, id_col, max_bucket, keys=("chunk_idx", "chunk"), payload=tuple(words)
+    )
+    hamming = sum(
+        F.bit_count(F.col(f"{p}_a").bitwiseXOR(F.col(f"{p}_b"))) for p in words
     ).cast("int")
     return (
         cand.withColumn("hamming", hamming)

@@ -194,11 +194,11 @@ def emb_near_dup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from multi_search_retrival_big_data_spark.operators import dedup as _dedup
 
     emb = tables.load(spark, "embeddings", sf_dir)
-    banded = index_store.emb_lsh_bands(spark, sf_dir).select(
-        "vec_id", "band", F.col("bval").alias("bucket")
-    )
+    banded = index_store.emb_lsh_bands(spark, sf_dir)
     delta_ids = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id")
-    cand = _dedup.lsh_delta_candidate_pairs(banded, delta_ids, "vec_id")
+    cand = _dedup.lsh_delta_candidate_pairs(
+        banded, delta_ids, "vec_id", keys=("band", "bval")
+    )
     return dense.cosine_pairs(
         emb, cand, COSINE_DUP_THRESHOLD, round_to=6
     ).orderBy(F.desc("cosine"), "id_a", "id_b")

@@ -973,8 +973,11 @@ def pipeline_manifest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     keep_img = _keep_table(
         st["image_fp"],
         "frame_id",
-        mm.wide_image_near_duplicates(
-            st["image_fp"], max_bucket=mm.DHASH_MAX_BUCKET
+        mm.image_near_duplicates(
+            st["image_fp"],
+            max_bucket=mm.DHASH_MAX_BUCKET,
+            bits=mm.WIDE_DHASH_BITS,
+            chunks=mm.WIDE_BAND_CHUNKS,
         ),
     )
     clips = mm.synth_audio_clips(mm.as_media_table(docs))

@@ -812,7 +812,7 @@ def multimodal_image_near_dup_capped(spark: SparkSession, sf_dir: str) -> DataFr
     """Image near-dup on the viral-bucket-GUARDED path, two arms in one
     row: 'production' runs max_bucket=DHASH_MAX_BUCKET (a byte-identical
     frame storm lands every copy in the same 8-bit Hamming bands and the
-    uncapped banding join dies at O(m²); the guard emits chain+star
+    uncapped banding dies at O(m²); the guard emits chain+star
     inside over-cap buckets — O(m) pairs that keep hamming-0 storms
     fully connected for downstream clustering); 'guarded' forces
     max_bucket={_DH_BUCKET_GUARDED} so the chain+star election FIRES on
@@ -862,7 +862,7 @@ def multimodal_image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     PROMOTED to the WIDE production geometry (r10, mirroring the audio
     Q=1 promotion): 128-bit interpolated dHash banded as 8×16-bit
     chunks with the production chain+star cap
-    (wide_image_near_duplicates). The band-density gauge this decision
+    (image_near_duplicates(bits=WIDE_DHASH_BITS)). The band-density gauge this decision
     keys on (monitor_dhash_band_density) crossed its ~3× trigger at
     sf0.1 — capped/uncapped saturation 3.14, 102.9 at x10 (density-
     bound quadratic growth) — while the family grid
@@ -879,7 +879,12 @@ def multimodal_image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows=mm.WIDE_DHASH_ROWS,
         fill_empty=True,
     )
-    pairs = mm.wide_image_near_duplicates(fp, max_bucket=mm.DHASH_MAX_BUCKET)
+    pairs = mm.image_near_duplicates(
+        fp,
+        max_bucket=mm.DHASH_MAX_BUCKET,
+        bits=mm.WIDE_DHASH_BITS,
+        chunks=mm.WIDE_BAND_CHUNKS,
+    )
     comp = dedup.connected_components_auto(pairs.select("id_a", "id_b"))
     out = (
         fp.select("frame_id")
@@ -949,7 +954,7 @@ def monitor_dhash_band_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     would hurt. The ACTION this trigger fires is implemented and
     priced since r10: the 128-bit / 16-bit-band geometry
     (dhash_fingerprints(rows=16, fill_empty=True) +
-    wide_image_near_duplicates), graded against this path by
+    image_near_duplicates(bits=128, chunks=8)), graded against this path by
     multimodal_image_family_grid — at sf0.1 it erases the saturation
     entirely (68.1k/68.1k, max bucket 38) at planted recall 1.0."""
     docs = tables.load(spark, "documents", sf_dir)
@@ -1330,8 +1335,8 @@ def _dhash_param_ctes(sfx: str, rows: int, chunk_w: int, cap: int, fill: bool) -
     """Parameterized dHash CTE chain (fingerprint -> chunks -> capped
     chain+star pairs -> hamming verify -> density budgets) for one
     (rows x 9 grid, 8 x chunk_w banding) geometry — the SQL mirror of
-    dhash_fingerprints(rows=, fill_empty=) + wide_image_near_duplicates
-    / image_near_duplicates(max_bucket=cap) + dhash_band_density.
+    dhash_fingerprints(rows=, fill_empty=) +
+    image_near_duplicates(max_bucket=cap, bits=) + dhash_band_density.
     Consumes the shared frames/bytes CTEs. `fill` mirrors the wide
     geometry's nearest-neighbor upsample: an empty cell c copies its
     source byte (c*n)//cells instead of degenerating to a 0 bit."""
@@ -1477,7 +1482,7 @@ def multimodal_image_family_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-density gauge's trigger now has an action): one row per
     banding geometry, production 64-bit/8-bit-band vs WIDE
     128-bit/16-bit-band (dhash_fingerprints(rows=16) +
-    wide_image_near_duplicates), both on the production chain+star cap.
+    image_near_duplicates(bits=128)), both on the production chain+star cap.
     Columns: the uncapped and capped PAIR BUDGETS and max bucket size
     (dhash_band_density — the counted scaling variables), planted
     same-item frame-pair truth, found through the capped verify, and
@@ -1530,14 +1535,12 @@ def multimodal_image_family_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dens = mm.dhash_band_density(
                     fp, chunks=8, width=chunk_w, max_bucket=mm.DHASH_MAX_BUCKET
                 ).collect()[0]
-                if nrows == mm.DHASH_ROWS:
-                    pairs = mm.image_near_duplicates(
-                        fp, max_bucket=mm.DHASH_MAX_BUCKET
-                    )
-                else:
-                    pairs = mm.wide_image_near_duplicates(
-                        fp, max_bucket=mm.DHASH_MAX_BUCKET
-                    )
+                pairs = mm.image_near_duplicates(
+                    fp,
+                    max_bucket=mm.DHASH_MAX_BUCKET,
+                    bits=nrows * (mm.DHASH_COLS - 1),
+                    chunks=8,
+                )
                 found = fpairs.join(
                     pairs.select("id_a", "id_b"), ["id_a", "id_b"]
                 ).count()
@@ -1604,8 +1607,8 @@ def multimodal_image_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFram
     pair — the pair-level proof on top of the grid's count-level one.
 
     Scale notes: identical plan shape to multimodal_image_near_dup —
-    one (chunk_idx, chunk) equi-join over the fingerprint table, never
-    all-pairs; the candidate shuffle carries 4 bigints per side; at
+    one (chunk_idx, chunk) grouping of the fingerprint table into
+    member arrays, never all-pairs; each member carries 4 bigints; at
     sf0.1 the capped candidate budget is 68.1k vs the 64-bit path's
     397k (the whole point of the width)."""
     docs = tables.load(spark, "documents", sf_dir)
@@ -1614,14 +1617,19 @@ def multimodal_image_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFram
         rows=mm.WIDE_DHASH_ROWS,
         fill_empty=True,
     )
-    out = mm.wide_image_near_duplicates(fp, max_bucket=mm.DHASH_MAX_BUCKET)
+    out = mm.image_near_duplicates(
+        fp,
+        max_bucket=mm.DHASH_MAX_BUCKET,
+        bits=mm.WIDE_DHASH_BITS,
+        chunks=mm.WIDE_BAND_CHUNKS,
+    )
     return out.select(
         "id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming")
     ).orderBy("hamming", "id_a", "id_b")
 
 
 # multimodal_image_dedup_keep's oracle (r10 wide-geometry promotion):
-# the keep table now consumes wide_image_near_duplicates, so the
+# the keep table now consumes the wide image_near_duplicates, so the
 # closure runs over dup_w — the SAME parameterized CTE chain the
 # near_dup_wide row is pinned pair-for-pair against. Assigned here
 # (not at the @query site) because the wide CTE helpers are defined in

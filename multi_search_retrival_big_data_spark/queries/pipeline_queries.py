@@ -323,9 +323,10 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (dedup.lsh_candidate_pairs max_bucket=3): mega buckets emit a
     deterministic chain+star spanning pair set instead of all O(m²)
     pairs — the production guard against one viral boilerplate bucket
-    emitting 10¹² candidates. The oracle mirrors the capped candidate
-    generation exactly (window count/min/lag per (band, bucket)), so
-    this row proves the Spark capped path bit-for-bit."""
+    emitting 10¹² candidates. The oracle spells the capped candidate
+    generation independently (window count/min/lag per (band, bucket);
+    the Spark side is the sorted-member-array miner), so this row
+    proves the Spark capped path bit-for-bit."""
     from multi_search_retrival_big_data_spark import index_store
 
     docs = tables.load(spark, "documents", sf_dir)

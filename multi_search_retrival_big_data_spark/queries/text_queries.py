@@ -93,8 +93,8 @@ def text_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs: 8-bit-chunk pigeonhole candidates,
-    verified Hamming ≤ 7 — full recall at that radius with an
-    equi-join, no all-pairs scan."""
+    verified Hamming ≤ 7 — full recall at that radius from the
+    bucket-pair miner, no all-pairs scan."""
     docs = tables.load(spark, "documents", sf_dir)
     fp = ta.simhash_fingerprints(docs, "doc_id", "text")
     out = ta.simhash_near_duplicates(fp, "doc_id")

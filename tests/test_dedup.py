@@ -731,3 +731,126 @@ def test_duplicate_span_windows_array_gate_matches_join(spark):
     assert got == want and got
     # doc 3's duplicated window must appear at BOTH its positions
     assert sum(1 for i, _ in got if i == 3) >= 2
+
+
+# ---- the one bucket-pair miner (lsh_candidate_pairs) -------------------------
+
+
+def _chain_star_reference(buckets, max_bucket):
+    """Pure-Python bucket-pair mining: all pairs for buckets of at most
+    `max_bucket` members (every bucket when None), the id-sorted chain
+    plus a star to the minimum otherwise; strict id_a < id_b."""
+    out = set()
+    for members in buckets.values():
+        ids = sorted(members)
+        if max_bucket is None or len(ids) <= max_bucket:
+            cand = {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]}
+        else:
+            cand = set(zip(ids, ids[1:])) | {(ids[0], b) for b in ids[1:]}
+        out |= {(a, b) for a, b in cand if a < b}
+    return out
+
+
+def _bucket_rows(spark, rows):
+    return spark.createDataFrame(rows, "doc_id BIGINT, band INT, bucket STRING")
+
+
+def test_bucket_pair_miner_degenerate_inputs(spark):
+    """Empty input and single-member buckets give no pairs; an id listed
+    twice in one bucket never pairs with itself, capped or not (a
+    lag-window chain emits (5, 5) on the capped path)."""
+    from multi_search_retrival_big_data_spark.operators.textanalysis import (
+        simhash_near_duplicates,
+    )
+
+    empty = _bucket_rows(spark, [])
+    singles = _bucket_rows(spark, [(1, 0, "a"), (2, 0, "b"), (3, 1, "a")])
+    dup = _bucket_rows(spark, [(i, 0, "x") for i in (1, 5, 5, 7, 9)])
+
+    def pairs(df, cap):
+        return {(r.id_a, r.id_b) for r in dedup.lsh_candidate_pairs(df, "doc_id", cap).collect()}
+
+    for cap in (None, 2):
+        assert pairs(empty, cap) == set()
+        assert pairs(singles, cap) == set()
+    assert pairs(dup, None) == {(1, 5), (1, 7), (1, 9), (5, 7), (5, 9), (7, 9)}
+    assert pairs(dup, 2) == {(1, 5), (1, 7), (1, 9), (5, 7), (7, 9)}
+
+    fp = spark.createDataFrame(
+        [(i, "01" * 32) for i in (1, 5, 5, 7, 9)], "frame_id BIGINT, simhash STRING"
+    )
+    for cap in (None, 2):
+        got = {
+            (r.id_a, r.id_b, r.hamming)
+            for r in simhash_near_duplicates(fp, "frame_id", max_bucket=cap).collect()
+        }
+        assert all(a < b for a, b, _ in got), got
+        assert (5, 5, 0) not in got
+
+
+def test_bucket_pair_miner_matches_chain_star_reference(spark):
+    """Random buckets, over-cap ones included, against the pure-Python
+    reference at every cap; the payload travels with its id."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for key in range(40):
+        m = rng.choice([1, 2, 3, 4, 6, 9, 17])
+        for doc in rng.sample(range(200), m):
+            rows.append((doc, key % 3, f"k{key}"))
+    df = spark.createDataFrame(rows, "doc_id BIGINT, band INT, bucket STRING").withColumn(
+        "w", (F.col("doc_id") * 7 + 3) % 13
+    ).cache()
+    buckets = {}
+    for doc, band, bucket in rows:
+        buckets.setdefault((band, bucket), []).append(doc)
+    for cap in (None, 1, 2, 3, 5):
+        got = dedup.lsh_candidate_pairs(df, "doc_id", cap, payload=("w",)).collect()
+        assert {(r.id_a, r.id_b) for r in got} == _chain_star_reference(buckets, cap), cap
+        assert len(got) == len({(r.id_a, r.id_b) for r in got})
+        assert all(
+            (r.w_a, r.w_b) == ((r.id_a * 7 + 3) % 13, (r.id_b * 7 + 3) % 13) for r in got
+        )
+    df.unpersist()
+
+
+def test_bucket_pair_miner_plans_no_join_or_window(spark):
+    """One exchange on the bucket key: the executed plans, capped and
+    uncapped, carry no join and no window node."""
+    df = _bucket_rows(spark, [(i, i % 2, f"b{i % 3}") for i in range(12)])
+    for cap in (None, 2):
+        out = dedup.lsh_candidate_pairs(df, "doc_id", cap)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "Window" not in plan, plan
+
+
+def test_one_bucket_pair_miner_in_package():
+    """Bucket pairs are mined only by dedup.lsh_candidate_pairs: no
+    `F.lag(` window chain under operators/ outside the span merge of
+    dedup.duplicate_spans (a gaps-and-islands pass, not pair mining),
+    and the 128-bit image twin stays deleted."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(dedup.__file__).parent.parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg)
+        src = path.read_text()
+        if "wide_image_near_duplicates" in src:
+            offenders.append(f"{rel}: wide_image_near_duplicates")
+        if rel.parts[0] != "operators":
+            continue
+        tree = ast.parse(src)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if (rel, fn.name) == (pathlib.Path("operators/dedup.py"), "duplicate_spans"):
+                continue
+            for n in ast.walk(fn):
+                f = n.func if isinstance(n, ast.Call) else None
+                if isinstance(f, ast.Attribute) and f.attr == "lag":
+                    offenders.append(f"{rel}:{n.lineno}: {fn.name} calls lag(")
+    assert not offenders, "use dedup.lsh_candidate_pairs:\n" + "\n".join(sorted(set(offenders)))

@@ -184,36 +184,88 @@ def test_topk_cosine_degenerate_inputs(spark):
         dense.topk_cosine(df, [1.0, 0.0, 0.0], k=10).collect()
 
 
-def test_cosine_kernel_unpickles_without_the_package(tmp_path):
-    """The batch functions of the cosine kernel run in Python workers,
-    which need not have this package on their path: the kernel must
-    travel by value. Unpickled and run in a fresh interpreter whose
-    path lacks the checkout, it returns the same bits."""
+def _run_outside_the_checkout(tmp_path, obj, code):
+    """cloudpickle `obj`, then unpickle it in a fresh interpreter whose
+    path lacks the checkout and run `code` on it (bound to `obj`);
+    `code` writes its pickled result to stdout."""
     from pyspark import cloudpickle
 
-    from multi_search_retrival_big_data_spark.functions import cosine
-
-    a = np.array([[1.0, 2.0], [0.0, 0.0], [3.0, -1.0]])
-    q = np.array([2.0, 1.0])
-    qn = float(cosine.row_norms(q[None, :])[0])
-    payload = cloudpickle.dumps((cosine.cosine_rows, cosine.row_norms, a, q, qn))
-    code = (
-        "import pickle, sys\n"
-        "f, n, a, q, qn = pickle.loads(sys.stdin.buffer.read())\n"
-        "sys.stdout.buffer.write(pickle.dumps(f(a, q, n(a), qn, 6)))\n"
-    )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
-        [sys.executable, "-c", code],
-        input=payload,
+        [sys.executable, "-c", "import pickle, sys\nobj = pickle.loads(sys.stdin.buffer.read())\n" + code],
+        input=cloudpickle.dumps(obj),
         capture_output=True,
         cwd=tmp_path,
         env=env,
         timeout=120,
     )
     assert out.returncode == 0, out.stderr.decode()[-2000:]
+    return pickle.loads(out.stdout)
+
+
+def test_cosine_kernel_unpickles_without_the_package(tmp_path):
+    """The batch functions of the cosine kernel run in Python workers,
+    which need not have this package on their path: the kernel must
+    travel by value. Unpickled and run in a fresh interpreter whose
+    path lacks the checkout, it returns the same bits."""
+    from multi_search_retrival_big_data_spark.functions import cosine
+
+    a = np.array([[1.0, 2.0], [0.0, 0.0], [3.0, -1.0]])
+    q = np.array([2.0, 1.0])
+    qn = float(cosine.row_norms(q[None, :])[0])
+    got = _run_outside_the_checkout(
+        tmp_path,
+        (cosine.cosine_rows, cosine.row_norms, a, q, qn),
+        "f, n, a, q, qn = obj\nsys.stdout.buffer.write(pickle.dumps(f(a, q, n(a), qn, 6)))\n",
+    )
     want = cosine.cosine_rows(a, q, cosine.row_norms(a), qn, 6)
-    np.testing.assert_array_equal(pickle.loads(out.stdout), want)
+    np.testing.assert_array_equal(got, want)
+
+
+def test_worker_functions_unpickle_without_the_package(spark, monkeypatch, tmp_path):
+    """The batch functions that carry encoder objects
+    (cross_encoder_rerank's FakeCrossEncoder, encode_corpus's
+    FakeTextEncoder) and the fake-codec ingest stages (probe_video,
+    detect_shots, vad_segments) run in Python workers too: unpickled
+    outside the checkout they return what they return in the driver."""
+    import pandas as pd
+
+    from multi_search_retrival_big_data_spark.operators import multimodal as mm
+    from multi_search_retrival_big_data_spark.operators import rerank
+
+    captured = []
+
+    def capture(self, f, schema):
+        captured.append(f)
+        return self.sparkSession.createDataFrame([], schema)
+
+    docs = spark.createDataFrame([(0, "a", "s")], "doc_id BIGINT, text STRING, source STRING")
+    monkeypatch.setattr(type(docs), "mapInPandas", capture)
+    media = mm.as_media_table(docs)
+    for stage in (mm.probe_video, mm.detect_shots, mm.vad_segments):
+        stage(media)
+    mm.encode_corpus(docs)
+    cands = spark.createDataFrame([(1, 0.5, "a")], "doc_id BIGINT, score DOUBLE, text STRING")
+    rerank.cross_encoder_rerank(cands, "fox query", max_candidates=None)
+    monkeypatch.undo()
+
+    blobs = [b"the quick brown fox " * 30, b"x" * 777, b"short"]
+    media_pdf = pd.DataFrame({"media_id": [3, 4, 5], "content": blobs})
+    batches = [media_pdf] * 3 + [
+        pd.DataFrame({"doc_id": [1, 2], "text": ["the quick fox", "lazy dog"]}),
+        pd.DataFrame({"id": [1, 2], "s1": [0.5, 0.25], "txt": ["the quick fox", "lazy dog"]}),
+    ]
+    assert len(captured) == len(batches)
+    got = _run_outside_the_checkout(
+        tmp_path,
+        list(zip(captured, batches)),
+        "out = [[o for o in f(iter([b]))] for f, b in obj]\n"
+        "sys.stdout.buffer.write(pickle.dumps(out))\n",
+    )
+    for f, b, outs in zip(captured, batches, got):
+        want = list(f(iter([b])))
+        assert len(outs) == len(want) == 1
+        pd.testing.assert_frame_equal(outs[0], want[0])
 
 
 def test_one_cosine_kernel_in_package():
