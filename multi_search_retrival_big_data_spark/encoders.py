@@ -25,8 +25,9 @@ faiss_processing.py:118-131). On a cluster with wheels + weights,
 implement `encode` with open_clip/transformers and nothing else
 changes.
 
-Encoder objects travel into Python workers inside batch functions
-(cross_encoder_rerank's scorer, multimodal.encode_corpus). Those
+Encoder objects and the fake media codec's checksum travel into Python
+workers inside batch functions (cross_encoder_rerank's scorer,
+multimodal.encode_corpus, the multimodal fake-codec stages). Those
 workers cannot import this package when the job starts outside the
 checkout, so the module registers itself with PySpark's cloudpickle
 BY VALUE, as functions/cosine.py does: an encoder instance carries its
@@ -275,6 +276,15 @@ def model_b_dim_encode(
     return dim_expand_encode(model_b_encode(vec, in_dim), MODEL_B_DIM, out_dim)
 
 
+CHECKSUM_MOD = 997
+
+
+def fake_checksum(blob: bytes) -> int:
+    """The fake media codec's per-blob feature: byte sum mod
+    CHECKSUM_MOD (the DuckDB oracles recompute it as `sum % 997`)."""
+    return int(sum(blob)) % CHECKSUM_MOD
+
+
 def fake_corpus_alignment_note() -> str:
     """The FakeTextEncoder does NOT share a vector space with the
     driver's synthetic `embeddings` table — facade text searches are
@@ -300,6 +310,8 @@ __all__: Sequence[str] = (
     "DIM_EXPAND_OUT",
     "dim_expand_components",
     "dim_expand_encode",
+    "CHECKSUM_MOD",
+    "fake_checksum",
 )
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])

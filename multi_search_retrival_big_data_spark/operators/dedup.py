@@ -217,10 +217,18 @@ def lsh_candidate_pairs(
 
     Degenerate inputs: an empty frame or single-member buckets give no
     pairs; an id listed twice in one bucket never pairs with itself
-    (the strict id_a < id_b filter), capped or not. Memory: a bucket's
-    members sit in one agg buffer (~8 B per id plus payload); the
-    partner slices stream through the generator, so the capped path
-    never holds more than one bucket's array."""
+    (the strict id_a < id_b filter), capped or not.
+
+    Memory: a bucket's members sit in ONE collect_list buffer, a JVM
+    heap object per member while the aggregate runs and then one
+    UnsafeArray of structs (~24 B per id-only member: an 8 B
+    offset/size slot plus a 16 B struct row; payload adds ~8 B per
+    bigint). That buffer does NOT spill within a group and an array is
+    capped near 2 GB, so the capped path's bound on a viral bucket is
+    executor heap per bucket (a 10⁶-member MinHash bucket: ~24 MB
+    finished, several times that while collecting), not disk. The
+    partner slices stream through the generator, so no task holds more
+    than one bucket's array at a time."""
     keys = list(keys)
     members = F.array_sort(
         F.collect_list(
@@ -916,7 +924,12 @@ def semantic_candidates(
     all-pairs + SRP-band sub-bucket pairs inside mega cells, distinct
     (id_a, id_b). Exposed separately so monitoring/bench code can
     count candidate volume — the robust drift/skew signal — without
-    paying the exact-cosine verify.
+    paying the exact-cosine verify. Small cells go through the
+    bucket-pair miner on (cid,), whose distinct removes nothing there
+    (an id sits in one cell) yet shuffles every small-cell pair; that
+    is accepted because bench.py's candidate count is the only caller —
+    the verify path, semantic_candidate_pairs, scores small cells in
+    the grouped GEMM kernel and never materialises their pairs.
 
     Cell sizing is a groupBy on cid (partial-aggregated, |cells| rows)
     broadcast back onto the assignment — NOT a corpus-wide window,
@@ -963,12 +976,10 @@ def _mega_cell_band_pairs(
       scoped to where it is actually valid (a raw k-means cell is NOT
       a clique; a full-band-match sub-bucket of one is).
 
-    Only the band pairs need the distinct (the same pair can collide
-    in several bands; small-cell pairs are unique by construction), so
-    the dedup shuffle is mega-sized, never corpus-pair-sized. The
-    member arrays are grouped from the MEGA subset only — a 10⁶-member
-    viral sub-bucket is one 10⁶-element array in one task, emitting
-    O(m) pairs instead of 10¹² join outputs."""
+    The same pair can collide in several bands; the miner's distinct
+    folds them. The member arrays are grouped from the MEGA subset
+    only — a 10⁶-member viral sub-bucket is one 10⁶-element array in
+    one task, emitting O(m) pairs instead of 10¹² join outputs."""
     from multi_search_retrival_big_data_spark.operators import ann as _ann
 
     planes = _ann.hyperplanes(dim, _ann.NUM_PLANES)

@@ -33,12 +33,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from multi_search_retrival_big_data_spark.encoders import CHECKSUM_MOD, fake_checksum
 from multi_search_retrival_big_data_spark.operators import textanalysis
 
 MEDIA_TYPES = ("image", "audio", "video")
 
 FAKE_DECODER = "fake"
-CHECKSUM_MOD = 997
 FRAME_BYTES = 100  # fake codec: 1 synthetic frame per 100 bytes
 
 DECODE_SCHEMA = (
@@ -103,7 +103,7 @@ def decode_media(media: DataFrame, decoder: str = FAKE_DECODER) -> DataFrame:
                     "media_id": pdf["media_id"],
                     "media_type": pdf["media_type"],
                     "byte_len": byte_len,
-                    "checksum": content.map(lambda b: int(sum(b)) % CHECKSUM_MOD),
+                    "checksum": content.map(fake_checksum),
                     "n_frames": byte_len // FRAME_BYTES + 1,
                 }
             )
@@ -133,8 +133,8 @@ def frame_sample(decoded: DataFrame, every: int = 2) -> DataFrame:
 # (cv2 probe, TransNetV2, pyannote, wav2vec2) and keeps every plan.
 # The batch functions run in Python workers, which need not be able to
 # import this package: they call only pandas/NumPy, module constants
-# and by-value modules (encoders), so the fake checksum
-# int(sum(blob)) % CHECKSUM_MOD is spelled inline in each.
+# and the by-value encoders module (whose fake_checksum is the codec's
+# one checksum rule).
 
 FPS_BASE, FPS_MOD = 24, 8  # fake probe: fps in 24..31 from the checksum
 SHOT_BASE, SHOT_MOD = 4, 4  # fake detector: uniform shot length 4..7 frames
@@ -163,8 +163,7 @@ def probe_video(media: DataFrame) -> DataFrame:
     def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n_frames = pdf["content"].map(len) // FRAME_BYTES + 1
-            checksum = pdf["content"].map(lambda b: int(sum(b)) % CHECKSUM_MOD)
-            fps = checksum % FPS_MOD + FPS_BASE
+            fps = pdf["content"].map(fake_checksum) % FPS_MOD + FPS_BASE
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -195,7 +194,7 @@ def detect_shots(media: DataFrame) -> DataFrame:
             ids, sids, starts, ends = [], [], [], []
             for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 n_frames = len(blob) // FRAME_BYTES + 1
-                shot_len = SHOT_BASE + int(sum(blob)) % CHECKSUM_MOD % SHOT_MOD
+                shot_len = SHOT_BASE + fake_checksum(blob) % SHOT_MOD
                 for sid, start in enumerate(range(0, n_frames, shot_len)):
                     ids.append(mid)
                     sids.append(sid)
@@ -230,7 +229,7 @@ def vad_segments(media: DataFrame) -> DataFrame:
             ids, sids, starts, ends = [], [], [], []
             for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 dur_ms = len(blob)
-                seg_len = VAD_BASE + int(sum(blob)) % CHECKSUM_MOD % VAD_MOD
+                seg_len = VAD_BASE + fake_checksum(blob) % VAD_MOD
                 for sid, start in enumerate(range(0, dur_ms, VAD_PERIOD)):
                     ids.append(mid)
                     sids.append(sid)
@@ -306,9 +305,7 @@ def resize_media(media: DataFrame, scale: int = 4) -> DataFrame:
                 {
                     "media_id": pdf["media_id"],
                     "out_bytes": outs.map(len),
-                    "out_checksum": outs.map(
-                        lambda b: int(sum(b)) % CHECKSUM_MOD
-                    ),
+                    "out_checksum": outs.map(fake_checksum),
                     "scale": scale,
                 }
             )
@@ -657,16 +654,14 @@ def image_near_duplicates(
     max_hamming: int = DHASH_MAX_HAMMING,
     max_bucket: int | None = None,
     bits: int = DHASH_BITS,
-    chunks: int = textanalysis.SIMHASH_CHUNKS,
 ) -> DataFrame:
     """Perceptual near-duplicate pairs over dHash fingerprints —
     REUSES the SimHash Hamming-band LSH verbatim (pigeonhole over
-    `chunks` exact chunks guarantees 100% recall for distance ≤
-    chunks-1, candidates from the bucket-pair miner on
+    SIMHASH_CHUNKS = 8 exact chunks guarantees 100% recall for
+    distance ≤ 7, candidates from the bucket-pair miner on
     (chunk_idx, chunk), never all-pairs). Returns (id_a, id_b,
-    hamming). `bits`/`chunks` select the geometry: the 64-bit /
-    8-bit-band default, or `bits=WIDE_DHASH_BITS,
-    chunks=WIDE_BAND_CHUNKS` over dhash_fingerprints(
+    hamming). `bits` selects the geometry: the 64-bit / 8-bit-band
+    default, or `bits=WIDE_DHASH_BITS` over dhash_fingerprints(
     rows=WIDE_DHASH_ROWS) — 128 bits in 16-bit bands. `max_bucket`
     applies the chain+star viral-bucket guard. Completes the dedup
     family across text (MinHash/SimHash/winnowing/spans), embedding
@@ -675,7 +670,6 @@ def image_near_duplicates(
         fingerprints.select(F.col(id_col), F.col("dhash").alias("simhash")),
         id_col,
         max_hamming=max_hamming,
-        chunks=chunks,
         max_bucket=max_bucket,
         bits=bits,
     )
@@ -693,8 +687,7 @@ def image_near_duplicates(
 # equal corpus size. Cost: 2× fingerprint bytes and 2× verify xors.
 WIDE_DHASH_ROWS = 16
 WIDE_DHASH_BITS = WIDE_DHASH_ROWS * (DHASH_COLS - 1)
-WIDE_BAND_CHUNKS = 8
-WIDE_BAND_WIDTH = WIDE_DHASH_BITS // WIDE_BAND_CHUNKS  # 16-bit bands
+WIDE_BAND_WIDTH = WIDE_DHASH_BITS // textanalysis.SIMHASH_CHUNKS  # 16-bit bands
 
 
 def dhash_band_density(

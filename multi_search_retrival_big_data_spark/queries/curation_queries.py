@@ -977,7 +977,6 @@ def pipeline_manifest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
             st["image_fp"],
             max_bucket=mm.DHASH_MAX_BUCKET,
             bits=mm.WIDE_DHASH_BITS,
-            chunks=mm.WIDE_BAND_CHUNKS,
         ),
     )
     clips = mm.synth_audio_clips(mm.as_media_table(docs))

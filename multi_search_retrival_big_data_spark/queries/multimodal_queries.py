@@ -883,7 +883,6 @@ def multimodal_image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp,
         max_bucket=mm.DHASH_MAX_BUCKET,
         bits=mm.WIDE_DHASH_BITS,
-        chunks=mm.WIDE_BAND_CHUNKS,
     )
     comp = dedup.connected_components_auto(pairs.select("id_a", "id_b"))
     out = (
@@ -954,7 +953,7 @@ def monitor_dhash_band_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     would hurt. The ACTION this trigger fires is implemented and
     priced since r10: the 128-bit / 16-bit-band geometry
     (dhash_fingerprints(rows=16, fill_empty=True) +
-    image_near_duplicates(bits=128, chunks=8)), graded against this path by
+    image_near_duplicates(bits=128)), graded against this path by
     multimodal_image_family_grid — at sf0.1 it erases the saturation
     entirely (68.1k/68.1k, max bucket 38) at planted recall 1.0."""
     docs = tables.load(spark, "documents", sf_dir)
@@ -1539,7 +1538,6 @@ def multimodal_image_family_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                     fp,
                     max_bucket=mm.DHASH_MAX_BUCKET,
                     bits=nrows * (mm.DHASH_COLS - 1),
-                    chunks=8,
                 )
                 found = fpairs.join(
                     pairs.select("id_a", "id_b"), ["id_a", "id_b"]
@@ -1621,7 +1619,6 @@ def multimodal_image_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFram
         fp,
         max_bucket=mm.DHASH_MAX_BUCKET,
         bits=mm.WIDE_DHASH_BITS,
-        chunks=mm.WIDE_BAND_CHUNKS,
     )
     return out.select(
         "id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming")

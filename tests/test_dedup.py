@@ -815,6 +815,23 @@ def test_bucket_pair_miner_matches_chain_star_reference(spark):
     df.unpersist()
 
 
+def test_bucket_pair_miner_viral_bucket_is_linear(spark):
+    """One 200k-member bucket (a duplicate storm) is collected into one
+    member array and, capped, emits exactly the star plus the chain:
+    2m - 3 pairs, m - 1 of them from the minimum."""
+    m = 200_000
+    df = spark.range(m).select(
+        F.col("id").alias("doc_id"), F.lit(0).alias("band"), F.lit("x").alias("bucket")
+    )
+    pairs = dedup.lsh_candidate_pairs(df, "doc_id", max_bucket=64)
+    got = pairs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("id_a") == 0, 1).otherwise(0)).alias("star"),
+        F.sum(F.when(F.col("id_b") == F.col("id_a") + 1, 1).otherwise(0)).alias("chain"),
+    ).collect()[0]
+    assert (got.n, got.star, got.chain) == (2 * m - 3, m - 1, m - 1)
+
+
 def test_bucket_pair_miner_plans_no_join_or_window(spark):
     """One exchange on the bucket key: the executed plans, capped and
     uncapped, carry no join and no window node."""

@@ -225,8 +225,9 @@ def test_cosine_kernel_unpickles_without_the_package(tmp_path):
 def test_worker_functions_unpickle_without_the_package(spark, monkeypatch, tmp_path):
     """The batch functions that carry encoder objects
     (cross_encoder_rerank's FakeCrossEncoder, encode_corpus's
-    FakeTextEncoder) and the fake-codec ingest stages (probe_video,
-    detect_shots, vad_segments) run in Python workers too: unpickled
+    FakeTextEncoder) and the fake-codec stages (decode_media,
+    probe_video, detect_shots, vad_segments, resize_media, all on
+    encoders.fake_checksum) run in Python workers too: unpickled
     outside the checkout they return what they return in the driver."""
     import pandas as pd
 
@@ -242,7 +243,8 @@ def test_worker_functions_unpickle_without_the_package(spark, monkeypatch, tmp_p
     docs = spark.createDataFrame([(0, "a", "s")], "doc_id BIGINT, text STRING, source STRING")
     monkeypatch.setattr(type(docs), "mapInPandas", capture)
     media = mm.as_media_table(docs)
-    for stage in (mm.probe_video, mm.detect_shots, mm.vad_segments):
+    stages = (mm.decode_media, mm.probe_video, mm.detect_shots, mm.vad_segments, mm.resize_media)
+    for stage in stages:
         stage(media)
     mm.encode_corpus(docs)
     cands = spark.createDataFrame([(1, 0.5, "a")], "doc_id BIGINT, score DOUBLE, text STRING")
@@ -250,8 +252,10 @@ def test_worker_functions_unpickle_without_the_package(spark, monkeypatch, tmp_p
     monkeypatch.undo()
 
     blobs = [b"the quick brown fox " * 30, b"x" * 777, b"short"]
-    media_pdf = pd.DataFrame({"media_id": [3, 4, 5], "content": blobs})
-    batches = [media_pdf] * 3 + [
+    media_pdf = pd.DataFrame(
+        {"media_id": [3, 4, 5], "media_type": ["video"] * 3, "content": blobs}
+    )
+    batches = [media_pdf] * len(stages) + [
         pd.DataFrame({"doc_id": [1, 2], "text": ["the quick fox", "lazy dog"]}),
         pd.DataFrame({"id": [1, 2], "s1": [0.5, 0.25], "txt": ["the quick fox", "lazy dog"]}),
     ]

@@ -244,9 +244,7 @@ def test_wide_dhash_finds_planted_and_interpolates(spark):
     assert all(len(r["dhash"]) == mm.WIDE_DHASH_BITS for r in got)
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in mm.image_near_duplicates(
-            fp, bits=mm.WIDE_DHASH_BITS, chunks=mm.WIDE_BAND_CHUNKS
-        ).collect()
+        for r in mm.image_near_duplicates(fp, bits=mm.WIDE_DHASH_BITS).collect()
     }
     for i in range(6):
         base = i * 3 * 10
@@ -278,9 +276,7 @@ def test_wide_dhash_capped_keeps_storms_connected(spark):
     )
     frames = mm.synth_keyframes(mm.as_media_table(docs), n_frames=1)
     fp = mm.dhash_fingerprints(frames, rows=mm.WIDE_DHASH_ROWS, fill_empty=True)
-    pairs = mm.image_near_duplicates(
-        fp, max_bucket=3, bits=mm.WIDE_DHASH_BITS, chunks=mm.WIDE_BAND_CHUNKS
-    )
+    pairs = mm.image_near_duplicates(fp, max_bucket=3, bits=mm.WIDE_DHASH_BITS)
     from multi_search_retrival_big_data_spark.operators import dedup
 
     comp = dedup.connected_components_auto(pairs.select("id_a", "id_b"))
@@ -618,7 +614,6 @@ def test_image_dedup_keep_wide_path_one_frame_per_cluster(spark):
         fp,
         max_bucket=mm.DHASH_MAX_BUCKET,
         bits=mm.WIDE_DHASH_BITS,
-        chunks=mm.WIDE_BAND_CHUNKS,
     )
     comp = dedup.connected_components_auto(pairs.select("id_a", "id_b"))
     got = {
