@@ -110,16 +110,16 @@ def simhash_near_duplicates(
     fingerprints: DataFrame,
     id_col: str,
     max_hamming: int = SIMHASH_CHUNKS - 1,
-    chunks: int = SIMHASH_CHUNKS,
     max_bucket: int | None = None,
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash: candidates share at least one
-    exact (bits/chunks)-bit chunk (pigeonhole guarantees 100% recall
-    for distance ≤ chunks-1), then verified hamming ≤ max_hamming.
-    Returns (id_a, id_b, hamming). `bits` is the fingerprint width
-    (a multiple of 32 and of `chunks`): the 64-bit SimHash / dHash
-    default, or the 128-bit wide dHash geometry with 16-bit chunks.
+    exact (bits/SIMHASH_CHUNKS)-bit chunk (pigeonhole guarantees 100%
+    recall for distance ≤ SIMHASH_CHUNKS-1), then verified hamming ≤
+    max_hamming. Returns (id_a, id_b, hamming). `bits` is the
+    fingerprint width (a multiple of 32 and of SIMHASH_CHUNKS): the
+    64-bit SimHash / dHash default, or the 128-bit wide dHash geometry
+    with 16-bit chunks.
 
     Candidates come from the one bucket-pair miner,
     dedup.lsh_candidate_pairs, on (chunk_idx, chunk), with the
@@ -142,9 +142,9 @@ def simhash_near_duplicates(
     the pairs dropped are only the non-adjacent combinations inside
     over-cap buckets (the same recall trade the SemDeDup viral-cell
     guard prices)."""
-    if bits % 32 != 0 or bits % chunks != 0:
-        raise ValueError(f"bits={bits} must be divisible by 32 and chunks={chunks}")
-    width = bits // chunks
+    if bits % 32 != 0 or bits % SIMHASH_CHUNKS != 0:
+        raise ValueError(f"bits={bits} must be divisible by 32 and {SIMHASH_CHUNKS}")
+    width = bits // SIMHASH_CHUNKS
     words = [f"p{w}" for w in range(bits // 32)]
     chunked = fingerprints.select(
         F.col(id_col),
@@ -159,7 +159,7 @@ def simhash_near_duplicates(
                         F.lit(c).alias("chunk_idx"),
                         F.substring("simhash", c * width + 1, width).alias("chunk"),
                     )
-                    for c in range(chunks)
+                    for c in range(SIMHASH_CHUNKS)
                 ]
             )
         ).alias("e"),
