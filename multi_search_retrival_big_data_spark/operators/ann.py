@@ -204,20 +204,6 @@ def query_bands(
     return [(b, sig[b * rows : (b + 1) * rows]) for b in range(bands)]
 
 
-def _subset_semi_join(
-    df: DataFrame, subset: DataFrame | None, id_col: str
-) -> DataFrame:
-    """Shared filtered-mode contract for every ANN serving path: when
-    `subset` (an allowed-id DataFrame, first column = the ids) is
-    given, restrict `df` to it with a left-semi join; otherwise
-    pass-through. Centralized so the contract (column-0 convention,
-    semi-join placement) changes in one place."""
-    if subset is None:
-        return df
-    allowed = subset.select(F.col(subset.columns[0]).alias(id_col))
-    return df.join(allowed, id_col, "left_semi")
-
-
 def banded_signatures(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -288,7 +274,7 @@ def ann_lsh_topk(
         for b, qband in query_bands(qsig, bands, rows):
             c = (F.col("band") == b) & (F.col("bval") == F.lit(qband))
             cond = c if cond is None else cond | c
-        cand = _subset_semi_join(
+        cand = dense.restrict_ids(
             banded.filter(cond).select(id_col).distinct(), subset, id_col
         )
         return dense.topk_cosine(
@@ -302,7 +288,7 @@ def ann_lsh_topk(
         c = F.substring(F.col("__sig"), b * rows + 1, rows) == F.lit(qband)
         cond = c if cond is None else cond | c
     return dense.topk_cosine(
-        _subset_semi_join(
+        dense.restrict_ids(
             emb.withColumn("__sig", sig).filter(cond), subset, id_col
         ),
         query_vec, k, id_col, vec_col, round_to=round_to,
@@ -569,11 +555,11 @@ def ann_ivf_topk(
     )
     if vec_col in assign.columns:
         # co-located layout: rank inside the pruned partitions
-        cand = _subset_semi_join(
+        cand = dense.restrict_ids(
             assign.join(F.broadcast(probed), "cid"), subset, id_col
         )
         return dense.topk_cosine(cand, query_vec, k, id_col, vec_col, round_to=round_to)
-    cand_ids = _subset_semi_join(
+    cand_ids = dense.restrict_ids(
         assign.join(F.broadcast(probed), "cid").select(id_col), subset, id_col
     )
     return dense.topk_cosine(
@@ -1204,7 +1190,7 @@ def ann_ivfpq_adc_topk(
                     vals.append(d * d)
                 arrs.append(vals)
             cell_luts.append((cid, arrs))
-        out = _subset_semi_join(
+        out = dense.restrict_ids(
             codes.filter(F.col("cid").isin(probe_cids)), subset, id_col
         )
         score = None
@@ -1233,7 +1219,7 @@ def ann_ivfpq_adc_topk(
         "cid", F.zip_with(q, F.col("cv").cast("array<double>"), lambda a, b: a - b).alias("__qr")
     )
     luts = qres.join(F.broadcast(codebook), F.lit(True))
-    out = _subset_semi_join(
+    out = dense.restrict_ids(
         codes.join(F.broadcast(probed.select("cid")), "cid"), subset, id_col
     )
     for i in range(m):
@@ -1338,7 +1324,7 @@ def ann_sq8_topk(
     semi-join is shuffle-free."""
     from multi_search_retrival_big_data_spark.functions.vector import l2_dist
 
-    codes = _subset_semi_join(codes, subset, id_col)
+    codes = dense.restrict_ids(codes, subset, id_col)
     b = sorted(
         ((int(r["dim"]), float(r["vmin"]), float(r["vmax"])) for r in bounds.collect())
     )

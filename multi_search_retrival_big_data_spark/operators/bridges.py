@@ -19,6 +19,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from multi_search_retrival_big_data_spark.functions.rounding import (
+    det_round,
+    quantized_sum,
+)
+
 
 def interval_join(
     left: DataFrame,
@@ -127,14 +132,9 @@ def propagate_scores(
 
     scores: (score_key, score); bridge: (score_key, target_key)."""
     joined = scores.join(bridge, score_key)
-    addend = F.col("score")
-    total = (
-        F.sum(F.floor(addend * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast("double")
-        / F.lit(1e12)
-    )
+    total = quantized_sum(F.col("score"))
     if round_to is not None:
-        m = float(10 ** round_to)
-        total = F.floor(total * m + F.lit(0.5)).cast("double") / m
+        total = det_round(total, round_to)
     out = joined.groupBy(target_key).agg(total.alias("score"))
     out = out.orderBy(F.desc("score"), F.asc(target_key))
     return out.limit(k) if k is not None else out

@@ -56,7 +56,11 @@ from multi_search_retrival_big_data_spark.functions.vector import (
 
 def restrict_ids(df: DataFrame, subset: DataFrame | None, id_col: str) -> DataFrame:
     """Id-subset restriction (reference: IDSelectorArray / `M[index,:]`
-    row-slice) as a LEFT SEMI join placed before any scoring."""
+    row-slice) as a LEFT SEMI join placed before any scoring: when
+    `subset` (an allowed-id DataFrame, first column = the ids) is
+    given, keep the rows of `df` whose `id_col` it holds; otherwise
+    pass `df` through. The one filtered-mode restriction of every
+    dense, ANN and sparse serving path."""
     if subset is None:
         return df
     return df.join(subset.select(F.col(subset.columns[0]).alias(id_col)), on=id_col, how="left_semi")

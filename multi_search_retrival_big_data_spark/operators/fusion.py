@@ -20,6 +20,11 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from multi_search_retrival_big_data_spark.functions.rounding import (
+    det_round,
+    quantized_sum,
+)
+
 MINMAX_EPS = 1e-6  # the reference's denominator epsilon (combine_utils.py:41)
 
 
@@ -60,16 +65,9 @@ def merge_by_addition(
         unioned = reduce(lambda a, b: a.unionByName(b), normed)
         # few addends per id (≤ #sources): quantized exact sum keeps
         # Spark's agg order and the oracle's sequential order identical
-        score = (
-            F.sum(F.floor(F.col("score") * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast(
-                "double"
-            )
-            / F.lit(1e12)
-        )
-        out = unioned.groupBy("id").agg(score.alias("score"))
+        out = unioned.groupBy("id").agg(quantized_sum(F.col("score")).alias("score"))
     if round_to is not None:
-        m = float(10 ** round_to)
-        out = out.select("id", (F.floor(F.col("score") * m + F.lit(0.5)).cast("double") / m).alias("score"))
+        out = out.select("id", det_round(F.col("score"), round_to).alias("score"))
     out = out.orderBy(F.desc("score"), F.asc("id"))
     return out.limit(k) if k is not None else out
 
@@ -95,8 +93,9 @@ def reciprocal_rank_fusion(
     Determinism: rank = row_number ordered by (score DESC, id ASC) —
     both engines rank det-rounded scores, so ranks are identical; each
     addend 1e12/(k0+rank) is FLOOR-quantized before an exact
-    DECIMAL(38,0) sum (the common.dsum rationale), making the
-    accumulation order-independent and bit-equal cross-engine.
+    DECIMAL(38,0) sum (the functions/rounding.quantized_sum
+    rationale), making the accumulation order-independent and
+    bit-equal cross-engine.
 
     Scale shape: every source is a request-sized top-k list, so the
     rank window is a single-partition sort over ≤k rows — never a
@@ -144,7 +143,6 @@ def merge_l2_dedup_max(
     unioned = reduce(lambda a, b: a.unionByName(b), normed)
     out = unioned.groupBy("id").agg(F.max("score").alias("score"))
     if round_to is not None:
-        m = float(10 ** round_to)
-        out = out.select("id", (F.floor(F.col("score") * m + F.lit(0.5)).cast("double") / m).alias("score"))
+        out = out.select("id", det_round(F.col("score"), round_to).alias("score"))
     out = out.orderBy(F.desc("score"), F.asc("id"))
     return out.limit(k) if k is not None else out

@@ -10,11 +10,12 @@ the canonical iterative Spark workload alongside k-means
 
 Determinism contract (what makes a float fixed-point loop
 oracle-checkable): contributions are summed with the quantized
-DECIMAL(38,0) trick (queries/common.dsum) so each round's ranks are
-EXACT, order-independent doubles — identical in Spark and DuckDB — and
-the iteration count is fixed (power iteration, not convergence-gated),
-so both engines run the same number of rounds. Scalar ops
-((1−d)/N + d·s, r/outdeg) are single IEEE ops, bit-deterministic.
+DECIMAL(38,0) trick (functions/rounding.quantized_sum) so each round's
+ranks are EXACT, order-independent doubles — identical in Spark and
+DuckDB — and the iteration count is fixed (power iteration, not
+convergence-gated), so both engines run the same number of rounds.
+Scalar ops ((1−d)/N + d·s, r/outdeg) are single IEEE ops,
+bit-deterministic.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from multi_search_retrival_big_data_spark.queries.common import dsum
+from multi_search_retrival_big_data_spark.functions.rounding import quantized_sum
 
 PAGERANK_DAMPING = 0.85
 PAGERANK_SUM_SCALE = 12
@@ -85,13 +86,13 @@ def pagerank(
         contrib = (
             ewd.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
             .groupBy(F.col("dst").alias("node"))
-            .agg(dsum(F.col("rank") / F.col("deg"), scale=PAGERANK_SUM_SCALE).alias("c"))
+            .agg(quantized_sum(F.col("rank") / F.col("deg"), PAGERANK_SUM_SCALE).alias("c"))
         )
         gain = F.coalesce("c", F.lit(0.0))
         joined = nodes.join(contrib, "node", "left")
         if dangling is not None:
             dmass = dangling.join(ranks, "node").agg(
-                dsum(F.col("rank"), scale=PAGERANK_SUM_SCALE).alias("__dm")
+                quantized_sum(F.col("rank"), PAGERANK_SUM_SCALE).alias("__dm")
             )
             joined = joined.crossJoin(F.broadcast(dmass))
             gain = gain + F.coalesce("__dm", F.lit(0.0)) / F.lit(float(n_nodes))

@@ -17,7 +17,7 @@ rather than weaker rows-only checks:
   with FLOOR(x·10^s + 0.5), summed exactly as DECIMAL(38,0)
   (order-independent — Spark's partial-agg order cannot diverge from
   DuckDB's sequential order), divided back as double/double (IEEE,
-  engine-identical). See queries/common.dsum.
+  engine-identical). See functions/rounding.quantized_sum.
 - empty clusters keep their previous centroid (COALESCE in the SQL
   mirror).
 
@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark import tables
+from multi_search_retrival_big_data_spark.functions.rounding import quantized_sum
 
 KMEANS_ITERS = 2
 KMEANS_SUM_SCALE = 9
@@ -157,17 +158,11 @@ def _quantized_mean_rows(
         ensure_min_partitions,
     )
 
-    m = float(10**sum_scale)
     exploded = ensure_min_partitions(assigned).select(
         "__cid", F.posexplode(F.col(vec_col).cast("array<double>")).alias("__dim", "__x")
     )
     agg = exploded.groupBy("__cid", "__dim").agg(
-        (
-            F.sum(F.floor(F.col("__x") * m + F.lit(0.5)).cast("decimal(38,0)")).cast(
-                "double"
-            )
-            / F.lit(m)
-        ).alias("__s"),
+        quantized_sum(F.col("__x"), sum_scale).alias("__s"),
         F.count(F.lit(1)).alias("__n"),
     )
     return [
@@ -260,14 +255,8 @@ def train_lloyd_pq(
         exploded = wide.select(F.explode(F.array(*entries)).alias("e")).select(
             "e.m", "e.code", F.posexplode("e.sub").alias("dim", "x"),
         )
-        mscale = float(10**sum_scale)
         agg = exploded.groupBy("m", "code", "dim").agg(
-            (
-                F.sum(
-                    F.floor(F.col("x") * mscale + F.lit(0.5)).cast("decimal(38,0)")
-                ).cast("double")
-                / F.lit(mscale)
-            ).alias("s"),
+            quantized_sum(F.col("x"), sum_scale).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         rows = agg.collect()

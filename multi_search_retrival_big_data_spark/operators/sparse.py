@@ -25,6 +25,22 @@ reference (SURVEY.md §4 "needs custom work" item 1):
     weight  = w_raw / ||w_raw||₂ over the doc   (norm='l2')
 Query vectors get the same treatment with the *corpus* idf, so the
 score is the exact TF-IDF cosine sklearn produces.
+
+Every lexical channel — word, n-gram, char, multichannel, batched,
+BM25 — is the same kernel under different grouping keys, so each step
+has one private spelling and the public functions compose them:
+
+- `_query_weights`: query rows → L2-normalized (…, term, qw) vectors,
+  one per key value (single query, channel or batch query_id);
+- `_match`: the broadcast join of the query vector into the postings
+  and the per-(key, doc) quantized-exact sum of qw·weight;
+- `_topk`: the best k by (score DESC, doc_id ASC), globally or per
+  key — the one place a scorer's k is checked;
+- `_l2_postings`: sklearn's norm='l2' weighting, for every fit and
+  transform; `_channel_term_counts` is the channel-tagged explode and
+  `_bm25_postings` the BM25 saturation.
+
+Scores are summed and rounded only through functions/rounding.
 """
 
 from __future__ import annotations
@@ -37,11 +53,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multi_search_retrival_big_data_spark import tables
+from multi_search_retrival_big_data_spark.functions.rounding import (
+    det_round,
+    quantized_sum,
+)
 from multi_search_retrival_big_data_spark.functions.text import (
     char_ngrams,
     tokenize,
     word_ngrams_range,
 )
+from multi_search_retrival_big_data_spark.operators.dense import restrict_ids
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
 TOKEN_RE = re.compile(r"\w+")
@@ -81,7 +102,7 @@ def term_counts(
     cheap enough that the extra round-robin shuffle (paid once per
     plan branch) costs more than the parallelism buys — measured at
     sf0.1. The multichannel fit, whose explode is ~5× wider, does
-    widen (fit_tfidf_multichannel).
+    widen (_channel_term_counts).
     """
     # the char analyzer explodes ~(n_max - n_min + 1)·len(text) terms
     # per doc — widen the (often single-row-group) input so the explode
@@ -98,6 +119,34 @@ def term_counts(
     )
 
 
+def _channel_term_counts(
+    docs: DataFrame, channels: dict[str, tuple[int, int]], id_col: str, text_col: str
+) -> DataFrame:
+    """(channel, doc_id, term, tf) for ALL channels in one pass: the
+    channel tag rides in the aggregation keys, so every channel shares
+    one scan, one explode and one shuffle chain. The explode is ~5×
+    wider than a single channel's, so the input is widened first."""
+    toks = tokenize(F.col(text_col))
+
+    def _tag(name: str):
+        # closure factory: a 2-parameter lambda would make F.transform
+        # pass the ARRAY INDEX as the second argument
+        return lambda t: F.struct(F.lit(name).alias("channel"), t.alias("term"))
+
+    tagged = []
+    for name, ngr in channels.items():
+        terms = toks if ngr == (1, 1) else word_ngrams_range(toks, ngr[0], ngr[1])
+        tagged.append(F.transform(terms, _tag(name)))
+    exploded = (
+        ensure_min_partitions(docs)
+        .select(F.col(id_col).alias("doc_id"), F.explode(F.flatten(F.array(*tagged))).alias("e"))
+        .select("doc_id", "e.channel", "e.term")
+    )
+    return exploded.groupBy("channel", "doc_id", "term").agg(
+        F.count("*").cast("double").alias("tf")
+    )
+
+
 def doc_frequencies(tf: DataFrame) -> DataFrame:
     """(term, df) — (doc_id, term) pairs are unique post-groupBy, so a
     plain count is the document frequency (no countDistinct shuffle)."""
@@ -110,43 +159,61 @@ def _corpus_size(docs: DataFrame, id_col: str) -> DataFrame:
     return docs.agg(F.count(F.col(id_col)).alias("n"))
 
 
+def _l2_postings(raw: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """sklearn's norm='l2' weighting: (*keys, term, doc_id, tf, idf) →
+    postings (*keys, term, doc_id, weight, idf) with
+    weight = tf·idf / ||tf·idf||₂ over each (*keys, doc_id) vector.
+    Fits and transforms differ only in where the idf comes from."""
+    raw = raw.withColumn("w_raw", F.col("tf") * F.col("idf"))
+    norms = raw.groupBy(*keys, "doc_id").agg(
+        F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw"))).alias("__norm")
+    )
+    return raw.join(norms, [*keys, "doc_id"]).select(
+        *keys,
+        "term",
+        "doc_id",
+        (F.col("w_raw") / F.col("__norm")).alias("weight"),
+        "idf",
+    )
+
+
+def _fit_l2_postings(
+    tf: DataFrame, docs: DataFrame, id_col: str, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """The TF-IDF fit over a (*keys, doc_id, term, tf) matrix: document
+    frequencies per (*keys, term), smooth idf against the corpus size,
+    then the L2 weighting."""
+    on = [*keys, "term"]
+    dfreq = tf.groupBy(*on).agg(F.count("*").alias("df"))
+    raw = (
+        tf.join(dfreq, on)
+        .crossJoin(F.broadcast(_corpus_size(docs, id_col)))
+        .withColumn(
+            "idf",
+            F.log((F.lit(1.0) + F.col("n")) / (F.lit(1.0) + F.col("df"))) + F.lit(1.0),
+        )
+    )
+    return _l2_postings(raw, keys)
+
+
 def fit_tfidf(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     ngram_range: tuple[int, int] = (1, 1),
-    cache: bool = False,
     analyzer: str = "word",
 ) -> DataFrame:
     """S14 — build the sklearn-parity TF-IDF posting lists:
     (term, doc_id, weight, idf). Persist/bucket this by `term` for
     repeated querying; recompute cost is one pass over the corpus.
 
-    cache=True marks the result for in-memory reuse: every scorer
-    consumes postings TWICE (query-idf branch + match branch), and
-    without materialization both branches recompute the fit. The
-    production analogue is the persisted, term-bucketed index table
+    Every scorer reads the postings twice (query-idf branch + match
+    branch), so an in-plan fit that serves a scorer recomputes in both
+    branches unless the caller `.cache()`s it. The production analogue
+    is the persisted, term-bucketed index table
     (index_store.tfidf_postings)."""
     tf = term_counts(docs, id_col, text_col, ngram_range, analyzer)
-    dfreq = doc_frequencies(tf)
-    n = _corpus_size(docs, id_col)
-    raw = (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n))
-        .withColumn("idf", F.log((F.lit(1.0) + F.col("n")) / (F.lit(1.0) + F.col("df"))) + F.lit(1.0))
-        .withColumn("w_raw", F.col("tf") * F.col("idf"))
-    )
-    norms = raw.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw"))).alias("__norm"))
-    out = (
-        raw.join(norms, "doc_id")
-        .select(
-            "term",
-            "doc_id",
-            (F.col("w_raw") / F.col("__norm")).alias("weight"),
-            "idf",
-        )
-    )
-    return out.cache() if cache else out
+    return _fit_l2_postings(tf, docs, id_col)
 
 
 def query_terms(
@@ -171,30 +238,81 @@ def query_terms(
     return sorted(Counter(grams).items())
 
 
+def _query_weights(
+    postings: DataFrame, rows: list[tuple], ddl: str, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """(*keys, term, qw) — L2-normalized TF-IDF query vectors in the
+    corpus vector space, one per `keys` value, from driver rows
+    (*keys, term, qtf). OOV query terms drop out (the fitted model
+    defines the space).
+
+    The idf comes from one lookup of the postings, joined on the
+    columns the query and the postings share (term, and channel for
+    multichannel postings). An isin filter (pushed into the scan)
+    before the distinct keeps it a few-row lookup instead of a
+    full-vocabulary de-duplication. The norm is a window sum over the
+    request-sized rows, computed in the same pass as the weights: a
+    separate norm aggregate would read the postings a second time and
+    attach the scalar with another join."""
+    q = tables.local_frame(postings.sparkSession, rows, ddl)
+    on = [c for c in q.columns if c in postings.columns]
+    idf = (
+        postings.filter(F.col("term").isin(sorted({r[-2] for r in rows})))
+        .select(*on, "idf")
+        .distinct()
+    )
+    w = F.col("qtf") * F.col("idf")
+    qnorm = F.sqrt(F.sum(w**2).over(Window.partitionBy(*keys)))
+    return q.join(idf, on).select(*keys, "term", (w / qnorm).alias("qw"))
+
+
 def query_vector(postings: DataFrame, qterms: list[tuple[str, int]]) -> DataFrame:
     """(term, qw) — the L2-normalized TF-IDF query vector in the
     corpus vector space. OOV query terms drop out (the fitted model
-    defines the space).
+    defines the space). The idf lookup (a scan of the postings) runs
+    once per request (_query_weights)."""
+    return _query_weights(
+        postings, [(t, float(c)) for t, c in qterms], "term STRING, qtf DOUBLE"
+    )
 
-    The query norm is a window sum over the request-sized (term, idf)
-    rows, computed in the same pass as the weights: the idf lookup
-    (a scan of the postings) runs once per request. A separate 1-row
-    norm aggregate would read `qv` a second time — a second postings
-    scan plus a nested-loop join to attach the scalar."""
-    q = tables.local_frame(
-        postings.sparkSession, [(t, float(c)) for t, c in qterms], "term STRING, qtf DOUBLE"
+
+def _match(
+    postings: DataFrame,
+    qv: DataFrame,
+    weight_col: str,
+    keys: tuple[str, ...] = (),
+    round_to: int | None = None,
+) -> DataFrame:
+    """(*keys, doc_id, score) — Σ qw·weight over the matched terms.
+    The query vector (request-sized) is broadcast into the postings on
+    the columns both share; the postings side pays one term-bucketed
+    join + one (*keys, doc_id) groupBy. The sum is quantized-exact, so
+    the partial-aggregation order cannot change a bit."""
+    on = [c for c in qv.columns if c in postings.columns]
+    score = quantized_sum(F.col("qw") * F.col(weight_col))
+    if round_to is not None:
+        score = det_round(score, round_to)
+    return (
+        postings.join(F.broadcast(qv), on)
+        .groupBy(*keys, "doc_id")
+        .agg(score.alias("score"))
     )
-    # idf is only needed for the query's own terms — an isin filter
-    # (pushed into the scan) before the distinct keeps this a
-    # few-row lookup instead of a full-vocabulary de-duplication
-    idf = (
-        postings.filter(F.col("term").isin([t for t, _ in qterms]))
-        .select("term", "idf")
-        .distinct()
-    )
-    qnorm = F.sqrt(F.sum((F.col("qtf") * F.col("idf")) ** 2).over(Window.partitionBy()))
-    return q.join(idf, "term").select(
-        "term", ((F.col("qtf") * F.col("idf")) / qnorm).alias("qw")
+
+
+def _topk(scored: DataFrame, k: int, by: tuple[str, ...] = ()) -> DataFrame:
+    """The best k rows by (score DESC, doc_id ASC): one global sort +
+    limit, or with `by` a row_number window per group — the windowed
+    relation holds only query-matched candidates, not the corpus."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    order = (F.desc("score"), F.asc("doc_id"))
+    if not by:
+        return scored.orderBy(*order).limit(k)
+    w = Window.partitionBy(*by).orderBy(*order)
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
     )
 
 
@@ -209,27 +327,8 @@ def score_vector(
     literal-compiled (query_vector) or plan-derived (PRF expansion).
     The vector side is broadcast (request-sized); the postings side
     pays one term-bucketed join + one doc_id groupBy."""
-    base = postings
-    if subset is not None:
-        base = base.join(
-            subset.select(F.col(subset.columns[0]).alias("doc_id")), "doc_id", "left_semi"
-        )
-    # exact order-independent accumulation (see queries/common.dsum)
-    addend = F.col("qw") * F.col("weight")
-    score = (
-        F.sum(F.floor(addend * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast("double")
-        / F.lit(1e12)
-    )
-    if round_to is not None:
-        score = F.floor(score * F.lit(float(10 ** round_to)) + F.lit(0.5)).cast("double") / F.lit(
-            float(10 ** round_to)
-        )
-    scored = (
-        base.join(F.broadcast(qv), "term")
-        .groupBy("doc_id")
-        .agg(score.alias("score"))
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    base = restrict_ids(postings, subset, "doc_id")
+    return _topk(_match(base, qv, "weight", round_to=round_to), k)
 
 
 def tfidf_score(
@@ -281,17 +380,11 @@ def tfidf_prf_search(
     own doc_id groupBy."""
     fb = tfidf_score(postings, qterms, n_fb, round_to=round_to)
     orig_terms = [t for t, _ in qterms]
-    mass = (
-        F.sum(
-            F.floor(F.col("weight") * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")
-        ).cast("double")
-        / F.lit(1e12)
-    )
     expansion = (
-        postings.join(F.broadcast(fb.select("doc_id")), "doc_id", "left_semi")
+        restrict_ids(postings, F.broadcast(fb.select("doc_id")), "doc_id")
         .filter(~F.col("term").isin(orig_terms))
         .groupBy("term")
-        .agg(mass.alias("__mass"))
+        .agg(quantized_sum(F.col("weight")).alias("__mass"))
         .orderBy(F.desc("__mass"), F.asc("term"))
         .limit(m_terms)
         .select("term", (F.lit(float(beta)) * F.col("__mass")).alias("qw"))
@@ -300,28 +393,14 @@ def tfidf_prf_search(
     return score_vector(postings, combined, k, round_to=round_to)
 
 
-def fit_bm25(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram_range: tuple[int, int] = (1, 1),
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    epsilon: float = BM25_EPSILON,
-    cache: bool = False,
+def _bm25_postings(
+    tf: DataFrame, idf: DataFrame, avgdl: DataFrame, k1: float, b: float
 ) -> DataFrame:
-    """S15 — BM25Okapi posting lists (term, doc_id, score_w) where
-    score_w is the full per-term BM25 contribution for tf in that doc;
-    query scoring is then Σ over query terms (bm25.py:80-109 scores
-    whole-corpus per query the same way).
-
-    Okapi idf = ln((N - df + 0.5)/(df + 0.5)); rank_bm25 floors
-    negative idf (common terms, df > N/2) to epsilon · avg(idf) —
-    replicated here as a conditional against the vocabulary average."""
-    tf = term_counts(docs, id_col, text_col, ngram_range)
-    idf, avgdl = bm25_model(tf, docs, id_col, epsilon)
+    """(term, doc_id, score_w) — the BM25 saturation of each tf under a
+    (term, idf) model and the 1-row avgdl; each doc's own length dl
+    enters the denominator."""
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    out = (
+    return (
         tf.join(idf, "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(avgdl))
@@ -338,7 +417,28 @@ def fit_bm25(
             ).alias("score_w"),
         )
     )
-    return out.cache() if cache else out
+
+
+def fit_bm25(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    ngram_range: tuple[int, int] = (1, 1),
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    epsilon: float = BM25_EPSILON,
+) -> DataFrame:
+    """S15 — BM25Okapi posting lists (term, doc_id, score_w) where
+    score_w is the full per-term BM25 contribution for tf in that doc;
+    query scoring is then Σ over query terms (bm25.py:80-109 scores
+    whole-corpus per query the same way).
+
+    Okapi idf = ln((N - df + 0.5)/(df + 0.5)); rank_bm25 floors
+    negative idf (common terms, df > N/2) to epsilon · avg(idf) —
+    replicated here as a conditional against the vocabulary average."""
+    tf = term_counts(docs, id_col, text_col, ngram_range)
+    idf, avgdl = bm25_model(tf, docs, id_col, epsilon)
+    return _bm25_postings(tf, idf, avgdl, k1, b)
 
 
 def bm25_model(
@@ -387,26 +487,9 @@ def transform_bm25(
     statistics stay frozen (dl is per-row state, avgdl/idf are model
     state — the same split transform_tfidf makes). Returns rows in the
     (term, doc_id, score_w) posting schema, ready to append."""
-    # term_counts normalizes the id column to "doc_id"; alias back out
+    # term_counts normalizes the id column to "doc_id"; rename back out
     tf = term_counts(docs, id_col, text_col, ngram_range)
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    return (
-        tf.join(idf_model, "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
-        .select(
-            "term",
-            F.col("doc_id").alias(id_col),
-            (
-                F.col("idf")
-                * (F.col("tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("tf")
-                    + F.lit(k1) * (1 - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-                )
-            ).alias("score_w"),
-        )
-    )
+    return _bm25_postings(tf, idf_model, avgdl, k1, b).withColumnRenamed("doc_id", id_col)
 
 
 def bm25_score(
@@ -417,28 +500,15 @@ def bm25_score(
     round_to: int | None = None,
 ) -> DataFrame:
     """Score = Σ_t qtf(t) · score_w(t, doc) over matched terms.
-    (BM25Okapi.get_scores counts each query occurrence — bm25.py:99.)"""
-    q = tables.local_frame(
+    (BM25Okapi.get_scores counts each query occurrence — bm25.py:99.)
+    The query weight is the raw term count: no idf lookup, no norm."""
+    qv = tables.local_frame(
         bm25_postings.sparkSession,
         [(t, float(c)) for t, c in qterms],
-        "term STRING, qtf DOUBLE",
+        "term STRING, qw DOUBLE",
     )
-    base = bm25_postings
-    if subset is not None:
-        base = base.join(
-            subset.select(F.col(subset.columns[0]).alias("doc_id")), "doc_id", "left_semi"
-        )
-    addend = F.col("qtf") * F.col("score_w")
-    score = (
-        F.sum(F.floor(addend * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast("double")
-        / F.lit(1e12)
-    )
-    if round_to is not None:
-        score = F.floor(score * F.lit(float(10 ** round_to)) + F.lit(0.5)).cast("double") / F.lit(
-            float(10 ** round_to)
-        )
-    scored = base.join(F.broadcast(q), "term").groupBy("doc_id").agg(score.alias("score"))
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    base = restrict_ids(bm25_postings, subset, "doc_id")
+    return _topk(_match(base, qv, "score_w", round_to=round_to), k)
 
 
 def fit_tfidf_multichannel(
@@ -459,46 +529,8 @@ def fit_tfidf_multichannel(
     map-side partial aggregation keeps the traffic ≈ Σ per-channel nnz,
     and the downstream multi-channel query becomes a single linear plan
     instead of C recomputed branches."""
-    toks = tokenize(F.col(text_col))
-
-    def _tag(name: str):
-        # closure factory: a 2-parameter lambda would make F.transform
-        # pass the ARRAY INDEX as the second argument
-        return lambda t: F.struct(F.lit(name).alias("channel"), t.alias("term"))
-
-    tagged = []
-    for name, ngr in channels.items():
-        terms = toks if ngr == (1, 1) else word_ngrams_range(toks, ngr[0], ngr[1])
-        tagged.append(F.transform(terms, _tag(name)))
-    exploded = (
-        ensure_min_partitions(docs)
-        .select(F.col(id_col).alias("doc_id"), F.explode(F.flatten(F.array(*tagged))).alias("e"))
-        .select("doc_id", "e.channel", "e.term")
-    )
-    tf = exploded.groupBy("channel", "doc_id", "term").agg(
-        F.count("*").cast("double").alias("tf")
-    )
-    dfreq = tf.groupBy("channel", "term").agg(F.count("*").alias("df"))
-    n = _corpus_size(docs, id_col)
-    raw = (
-        tf.join(dfreq, ["channel", "term"])
-        .crossJoin(F.broadcast(n))
-        .withColumn(
-            "idf",
-            F.log((F.lit(1.0) + F.col("n")) / (F.lit(1.0) + F.col("df"))) + F.lit(1.0),
-        )
-        .withColumn("w_raw", F.col("tf") * F.col("idf"))
-    )
-    norms = raw.groupBy("channel", "doc_id").agg(
-        F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw"))).alias("__norm")
-    )
-    return raw.join(norms, ["channel", "doc_id"]).select(
-        "channel",
-        "term",
-        "doc_id",
-        (F.col("w_raw") / F.col("__norm")).alias("weight"),
-        "idf",
-    )
+    tf = _channel_term_counts(docs, channels, id_col, text_col)
+    return _fit_l2_postings(tf, docs, id_col, ("channel",))
 
 
 def multichannel_tfidf_score(
@@ -518,45 +550,15 @@ def multichannel_tfidf_score(
     holds only query-matched candidates, not the corpus. Each channel's
     query norm is a window sum over the request-sized (channel, term,
     idf) rows, so the idf lookup scans the postings once (see
-    query_vector)."""
-    q = tables.local_frame(
-        postings.sparkSession,
-        [
-            (ch, t, float(c))
-            for ch, terms in channel_qterms.items()
-            for t, c in terms
-        ],
+    _query_weights)."""
+    qv = _query_weights(
+        postings,
+        [(ch, t, float(c)) for ch, terms in channel_qterms.items() for t, c in terms],
         "channel STRING, term STRING, qtf DOUBLE",
+        ("channel",),
     )
-    all_terms = sorted({t for terms in channel_qterms.values() for t, _ in terms})
-    idf = (
-        postings.filter(F.col("term").isin(all_terms))
-        .select("channel", "term", "idf")
-        .distinct()
-    )
-    qnorm = F.sqrt(
-        F.sum((F.col("qtf") * F.col("idf")) ** 2).over(Window.partitionBy("channel"))
-    )
-    qv = q.join(idf, ["channel", "term"]).select(
-        "channel", "term", ((F.col("qtf") * F.col("idf")) / qnorm).alias("qw")
-    )
-    addend = F.col("qw") * F.col("weight")
-    score = (
-        F.sum(F.floor(addend * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast("double")
-        / F.lit(1e12)
-    )
-    if round_to is not None:
-        m6 = F.lit(float(10 ** round_to))
-        score = F.floor(score * m6 + F.lit(0.5)).cast("double") / m6
-    scored = (
-        postings.join(F.broadcast(qv), ["channel", "term"])
-        .groupBy("channel", "doc_id")
-        .agg(score.alias("score"))
-    )
-    wk = Window.partitionBy("channel").orderBy(F.desc("score"), F.asc("doc_id"))
-    topk = scored.withColumn("__rn", F.row_number().over(wk)).filter(
-        F.col("__rn") <= k_per_channel
-    )
+    scored = _match(postings, qv, "weight", ("channel",), round_to)
+    topk = _topk(scored, k_per_channel, by=("channel",))
     wmm = Window.partitionBy("channel")
     normed = topk.select(
         "doc_id",
@@ -565,17 +567,10 @@ def multichannel_tfidf_score(
             / (F.max("score").over(wmm) - F.min("score").over(wmm) + F.lit(1e-6))
         ).alias("score"),
     )
-    fused = (
-        F.sum(F.floor(F.col("score") * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast(
-            "double"
-        )
-        / F.lit(1e12)
-    )
+    fused = quantized_sum(F.col("score"))
     if round_to is not None:
-        m6 = F.lit(float(10 ** round_to))
-        fused = F.floor(fused * m6 + F.lit(0.5)).cast("double") / m6
-    out = normed.groupBy("doc_id").agg(fused.alias("score"))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        fused = det_round(fused, round_to)
+    return _topk(normed.groupBy("doc_id").agg(fused.alias("score")), k)
 
 
 def batch_tfidf_score(
@@ -588,46 +583,20 @@ def batch_tfidf_score(
     posting index in ONE pass; per-query top-k via a partitioned
     window. The sparse analogue of dense.batch_topk_cosine — at scale
     the index is read once per batch instead of once per query, and
-    the broadcast query side carries (query_id, term, qw).
+    the broadcast query side carries (query_id, term, qw). Each
+    query's norm is a window sum partitioned by query_id, so the idf
+    lookup is the batch's only other postings read.
 
     Returns (query_id, doc_id, score)."""
-    q = tables.local_frame(
-        postings.sparkSession,
+    qv = _query_weights(
+        postings,
         [(qid, t, float(c)) for qid, terms in batch_qterms.items() for t, c in terms],
         "query_id INT, term STRING, qtf DOUBLE",
+        ("query_id",),
     )
-    all_terms = sorted({t for terms in batch_qterms.values() for t, _ in terms})
-    idf = (
-        postings.filter(F.col("term").isin(all_terms))
-        .select("term", "idf")
-        .distinct()
-    )
-    qv = q.join(idf, "term")
-    qnorm = qv.groupBy("query_id").agg(
-        F.sqrt(F.sum((F.col("qtf") * F.col("idf")) ** 2)).alias("__qnorm")
-    )
-    qv = qv.join(qnorm, "query_id").select(
-        "query_id", "term", ((F.col("qtf") * F.col("idf")) / F.col("__qnorm")).alias("qw")
-    )
-    addend = F.col("qw") * F.col("weight")
-    score = (
-        F.sum(F.floor(addend * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,0)")).cast("double")
-        / F.lit(1e12)
-    )
-    if round_to is not None:
-        m = F.lit(float(10 ** round_to))
-        score = F.floor(score * m + F.lit(0.5)).cast("double") / m
-    scored = (
-        postings.join(F.broadcast(qv), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(score.alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+    scored = _match(postings, qv, "weight", ("query_id",), round_to)
+    return _topk(scored, k, by=("query_id",)).orderBy(
+        "query_id", F.desc("score"), F.asc("doc_id")
     )
 
 
@@ -657,22 +626,11 @@ def transform_tfidf(
     index is refit offline and swapped (index_store generations +
     gc_stale_index_tables)."""
     # term_counts normalizes the id column to "doc_id" internally —
-    # group/join on that and alias back out, so a non-default id_col
-    # works (the multichannel transform already does this)
+    # group/join on that and rename back out, so a non-default id_col
+    # works
     tf = term_counts(docs, id_col, text_col, ngram_range, analyzer)
     model = model_postings.select("term", "idf").distinct()
-    raw = tf.join(model, "term").withColumn(
-        "w_raw", F.col("tf") * F.col("idf")
-    )
-    norms = raw.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw"))).alias("__norm")
-    )
-    return raw.join(norms, "doc_id").select(
-        "term",
-        F.col("doc_id").alias(id_col),
-        (F.col("w_raw") / F.col("__norm")).alias("weight"),
-        "idf",
-    )
+    return _l2_postings(tf.join(model, "term")).withColumnRenamed("doc_id", id_col)
 
 
 def oov_stats(
@@ -733,37 +691,6 @@ def transform_tfidf_multichannel(
     single-plan shape as fit_tfidf_multichannel (one scan, one
     explode, channel tag in the aggregation keys), so appending C
     channels costs one delta pass, not C."""
-    toks = tokenize(F.col(text_col))
-
-    def _tag(name: str):
-        return lambda t: F.struct(F.lit(name).alias("channel"), t.alias("term"))
-
-    tagged = []
-    for name, ngr in channels.items():
-        terms = toks if ngr == (1, 1) else word_ngrams_range(toks, ngr[0], ngr[1])
-        tagged.append(F.transform(terms, _tag(name)))
-    exploded = (
-        ensure_min_partitions(docs)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.flatten(F.array(*tagged))).alias("e"),
-        )
-        .select("doc_id", "e.channel", "e.term")
-    )
-    tf = exploded.groupBy("channel", "doc_id", "term").agg(
-        F.count("*").cast("double").alias("tf")
-    )
+    tf = _channel_term_counts(docs, channels, id_col, text_col)
     model = model_postings.select("channel", "term", "idf").distinct()
-    raw = tf.join(model, ["channel", "term"]).withColumn(
-        "w_raw", F.col("tf") * F.col("idf")
-    )
-    norms = raw.groupBy("channel", "doc_id").agg(
-        F.sqrt(F.sum(F.col("w_raw") * F.col("w_raw"))).alias("__norm")
-    )
-    return raw.join(norms, ["channel", "doc_id"]).select(
-        "channel",
-        "term",
-        "doc_id",
-        (F.col("w_raw") / F.col("__norm")).alias("weight"),
-        "idf",
-    )
+    return _l2_postings(tf.join(model, ["channel", "term"]), ("channel",))

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from multi_search_retrival_big_data_spark import tables
+from multi_search_retrival_big_data_spark.functions.rounding import det_round
 from multi_search_retrival_big_data_spark.functions.text import tokenize
 from multi_search_retrival_big_data_spark.operators import dedup
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
@@ -396,8 +397,6 @@ def char_bigram_lm_scores(docs: DataFrame, id_col: str, text_col: str) -> DataFr
         .crossJoin(F.broadcast(v))
         .select(F.col(id_col), "n", lp.alias("lp"))
     )
-    from multi_search_retrival_big_data_spark.queries.common import det_round
-
     # oracle parity: the reference sum quantizes lp PER OCCURRENCE at
     # scale 9 — n identical occurrences contribute n·floor(lp·1e9+0.5)
     # exactly, so weighting the quantized value keeps bit-parity with

@@ -21,8 +21,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# det_round is re-exported: the query modules import it from here
 from multi_search_retrival_big_data_spark.functions.rounding import (
-    det_round as _det_round,
+    det_round,  # noqa: F401
+    quantized_sum,
 )
 
 EMB_DIM = 64
@@ -52,10 +54,10 @@ def dsum(col: Column, scale: int = 6) -> Column:
     Fix: quantize each addend with FLOOR(x·10^s + 0.5) — multiply, add,
     floor are all exact IEEE ops with bit-identical results in any
     engine — then sum exactly as DECIMAL(38,0) (commutative), and
-    divide back to double. Valid while |x|·10^s < 2^53 per row."""
-    m = float(10**scale)
-    q = F.floor(col * m + F.lit(0.5)).cast("decimal(38,0)")
-    return (F.sum(q).cast("double") / F.lit(m))
+    divide back to double. Valid while |x|·10^s < 2^53 per row.
+    The expression is functions/rounding.quantized_sum's; only the
+    default scale differs (6 here, 12 there)."""
+    return quantized_sum(col, scale)
 
 
 def sql_dsum(expr: str, scale: int = 6) -> str:
@@ -63,14 +65,6 @@ def sql_dsum(expr: str, scale: int = 6) -> str:
     return (
         f"(CAST(SUM(CAST(FLOOR(({expr}) * {m} + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / {m})"
     )
-
-
-def det_round(col: Column, scale: int = 6) -> Column:
-    """Engine-portable rounding of a double: FLOOR(x·10^s + 0.5)/10^s
-    using only IEEE ops (plain ROUND differs between Spark and DuckDB
-    on shortest-repr boundary values). Canonical impl lives in
-    functions.rounding (operators use it directly)."""
-    return _det_round(col, scale)
 
 
 def sql_det_round(expr: str, scale: int = 6) -> str:

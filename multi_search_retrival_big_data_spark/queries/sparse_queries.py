@@ -726,7 +726,7 @@ def monitor_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_f, (d1, d2) = index_store.incremental_split_filters(
         spark, sf_dir, table="documents", id_col="doc_id"
     )
-    model = sparse.fit_tfidf(docs.filter(base_f), cache=True)
+    model = sparse.fit_tfidf(docs.filter(base_f)).cache()
     out = None
     for label, flt in (("delta1", d1), ("delta2", d2)):
         st = sparse.oov_stats(docs.filter(flt), model)

@@ -297,7 +297,7 @@ def test_index_table_layouts(spark, sf_dir, build, expected):
 def test_scoring_on_stored_postings_matches_inline(spark, sf_dir):
     q = sparse.query_terms("fast query join merge window", (1, 1))
     docs = tables.load(spark, "documents", sf_dir)
-    a = sparse.tfidf_score(sparse.fit_tfidf(docs, cache=True), q, k=20, round_to=6).collect()
+    a = sparse.tfidf_score(sparse.fit_tfidf(docs).cache(), q, k=20, round_to=6).collect()
     b = sparse.tfidf_score(index_store.tfidf_postings(spark, sf_dir), q, k=20, round_to=6).collect()
     assert [(r["doc_id"], r["score"]) for r in a] == [(r["doc_id"], r["score"]) for r in b]
 

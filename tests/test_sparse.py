@@ -3,7 +3,9 @@ math (smooth idf + L2 doc norm) — SURVEY.md §5 golden-math strategy."""
 
 from __future__ import annotations
 
+import ast
 import math
+import pathlib
 import re
 from collections import Counter
 
@@ -117,7 +119,7 @@ def test_tfidf_incremental_append_matches_fit_plus_transform(spark, sf_dir):
         spark, sf_dir, base_f, f"({d1}) OR ({d2})"
     )
     docs = tables.load(spark, "documents", sf_dir)
-    want = sparse.fit_tfidf(docs.filter(base_f), cache=True)
+    want = sparse.fit_tfidf(docs.filter(base_f)).cache()
     delta = sparse.transform_tfidf(docs.filter(f"({d1}) OR ({d2})"), want)
     key = lambda r: (r["term"], r["doc_id"], round(r["weight"], 9))  # noqa: E731
     expected = sorted(map(key, want.collect() + delta.collect()))
@@ -156,7 +158,7 @@ def test_transform_reproduces_fit_for_in_corpus_docs(spark):
         [(i, f"alpha beta w{i} gamma beta") for i in range(20)],
         ["doc_id", "text"],
     )
-    fit = sparse.fit_tfidf(docs, cache=True)
+    fit = sparse.fit_tfidf(docs).cache()
     redone = sparse.transform_tfidf(docs, fit)
     key = lambda r: (r["term"], r["doc_id"], r["weight"], r["idf"])  # noqa: E731
     assert sorted(map(key, redone.collect())) == sorted(map(key, fit.collect()))
@@ -169,7 +171,7 @@ def test_bm25_transform_reproduces_fit_for_in_corpus_docs(spark):
         [(i, f"alpha beta w{i} gamma beta beta") for i in range(20)],
         ["doc_id", "text"],
     )
-    fit = sparse.fit_bm25(docs, cache=True)
+    fit = sparse.fit_bm25(docs).cache()
     idf, avgdl = sparse.bm25_model(sparse.term_counts(docs), docs)
     redone = sparse.transform_bm25(docs, idf, avgdl)
     key = lambda r: (r["term"], r["doc_id"], r["score_w"])  # noqa: E731
@@ -192,7 +194,7 @@ def test_prf_expansion_excludes_original_terms_and_boosts(spark):
         ],
         "doc_id BIGINT, text STRING",
     )
-    postings = sparse.fit_tfidf(docs, cache=True)
+    postings = sparse.fit_tfidf(docs).cache()
     q = sparse.query_terms("apple")
     plain_ids = {r.doc_id for r in sparse.tfidf_score(postings, q, k=5, round_to=6).collect()}
     assert 4 not in plain_ids  # no 'apple' in doc 4
@@ -209,7 +211,7 @@ def test_prf_is_deterministic(spark):
         [(i, f"term{i % 3} term{i % 5} shared") for i in range(20)],
         "doc_id BIGINT, text STRING",
     )
-    postings = sparse.fit_tfidf(docs, cache=True)
+    postings = sparse.fit_tfidf(docs).cache()
     q = sparse.query_terms("shared")
     a = [(r.doc_id, r.score) for r in sparse.tfidf_prf_search(postings, q, k=10, round_to=6).collect()]
     b = [(r.doc_id, r.score) for r in sparse.tfidf_prf_search(postings, q, k=10, round_to=6).collect()]
@@ -232,14 +234,113 @@ def test_query_norm_shares_the_single_idf_lookup(spark, sf_dir):
 
     post = index_store.tfidf_postings(spark, sf_dir)
     single = sparse.tfidf_score(post, sparse.query_terms("slow scan table filter"), k=10)
+    batch = sparse.batch_tfidf_score(
+        post,
+        {1: sparse.query_terms("slow scan table filter"), 2: sparse.query_terms("hash group")},
+        k=10,
+    )
     mc = index_store.multichannel_postings(
         spark, sf_dir, {"bbox": (1, 1), "color": (1, 1), "tag": (1, 1), "number": (1, 1)}
     )
     multi = sparse.multichannel_tfidf_score(
         mc, {"tag": [("scan", 1), ("window", 1)], "color": [("red", 2)]}, 10, 10
     )
-    for df in (single, multi):
+    for df in (single, batch, multi):
         assert _postings_reads(df) == 2
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ExistingRDD" not in plan and "NestedLoopJoin" not in plan
+
+
+def test_sparse_scorers_degenerate_inputs(spark):
+    """The sparse row of the degenerate-input contract: k=0, an empty
+    query and an all-OOV query return no rows from every scorer; a null
+    or empty text gets no postings but still counts in the corpus size
+    n; a negative k raises a ValueError naming k in every scorer."""
+    docs = tables.local_frame(
+        spark,
+        [(1, "alpha beta"), (2, "alpha gamma"), (3, None), (4, "")],
+        "doc_id BIGINT, text STRING",
+    )
+    post = sparse.fit_tfidf(docs).cache()
+    bm25 = sparse.fit_bm25(docs).cache()
+    mc = sparse.fit_tfidf_multichannel(docs, {"w": (1, 1)}).cache()
+    assert {r.doc_id for r in post.collect()} == {1, 2}
+    assert {r.doc_id for r in mc.collect()} == {1, 2}
+    idf = {r.term: r.idf for r in post.select("term", "idf").distinct().collect()}
+    assert idf["alpha"] == pytest.approx(math.log(5 / 3) + 1.0, abs=1e-12)  # n = 4
+    scorers = {
+        "tfidf_score": lambda q, k: sparse.tfidf_score(post, q, k),
+        "tfidf_prf_search": lambda q, k: sparse.tfidf_prf_search(post, q, k),
+        "bm25_score": lambda q, k: sparse.bm25_score(bm25, q, k),
+        "batch_tfidf_score": lambda q, k: sparse.batch_tfidf_score(post, {1: q}, k),
+        "multichannel k_per_channel": lambda q, k: sparse.multichannel_tfidf_score(
+            mc, {"w": q}, k, 10
+        ),
+        "multichannel k": lambda q, k: sparse.multichannel_tfidf_score(mc, {"w": q}, 10, k),
+    }
+    for name, score in scorers.items():
+        assert len(score([("alpha", 1)], 10).collect()) == 2, name
+        assert score([("alpha", 1)], 0).collect() == [], name
+        assert score([], 10).collect() == [], name
+        assert score([("zzzquux", 1)], 10).collect() == [], name
+        with pytest.raises(ValueError, match=r"\bk\b"):
+            score([("alpha", 1)], -1)
+
+
+def test_one_rounding_spelling_in_operators():
+    """Operators quantize and round only through functions/rounding:
+    no `.cast("decimal(38,0)")` (a quantized sum) and no
+    `floor(...).cast("double")` (a det_round) spelled out under
+    operators/ or functions/, except two sums that are not
+    quantized_sum's shape — the RRF addend 1e12/(k0+r) (one division,
+    no multiply) and the occurrence-weighted scale-9 bigram sum."""
+    pkg = pathlib.Path(sparse.__file__).parent.parent
+    allowed = {
+        ("operators/fusion.py", "reciprocal_rank_fusion"),
+        ("operators/textanalysis.py", "char_bigram_lm_scores"),
+    }
+
+    def cast_to(node):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "cast"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and isinstance(node.args[0].value, str)
+        ):
+            return node.args[0].value.replace(" ", "").lower()
+        return None
+
+    def is_floor(node):
+        return isinstance(node, ast.Call) and (
+            (isinstance(node.func, ast.Attribute) and node.func.attr == "floor")
+            or (isinstance(node.func, ast.Name) and node.func.id == "floor")
+        )
+
+    offenders = []
+    for sub in ("operators", "functions"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            rel = path.relative_to(pkg).as_posix()
+            if rel == "functions/rounding.py":
+                continue
+            tree = ast.parse(path.read_text())
+            funcs = [
+                f
+                for f in ast.walk(tree)
+                if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for node in ast.walk(tree):
+                to = cast_to(node)
+                quantize = to == "decimal(38,0)"
+                rounding = to == "double" and is_floor(node.func.value)
+                if not (quantize or rounding):
+                    continue
+                inside = [f for f in funcs if f.lineno <= node.lineno <= f.end_lineno]
+                fn = min(inside, key=lambda f: f.end_lineno - f.lineno).name if inside else ""
+                if (rel, fn) not in allowed:
+                    offenders.append(f"{rel}:{node.lineno} ({fn})")
+    assert not offenders, (
+        "use functions/rounding.quantized_sum / det_round:\n" + "\n".join(offenders)
+    )

@@ -21,7 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # queries where a nested-loop join is BY DESIGN: broadcasting a 1-row
 # aggregate (min/max/count) back into the plan. Sparse query norms are
 # not on this list: they are window sums over the request-sized query
-# vector (operators/sparse.query_vector), so no sparse scorer adds one.
+# vectors (operators/sparse._query_weights), batched queries included,
+# so no sparse scorer adds one.
 SCALAR_BROADCAST_OK = {
     "fusion_dual_model_ensemble",
     "fusion_dual_model_d64_arms",  # min-max norm: 1-row scalar broadcast per list
@@ -49,7 +50,6 @@ SCALAR_BROADCAST_OK = {
     "text_bigram_lm_scores",    # 1-row vocabulary-size scalar broadcast
     "tpch_q22_dormant_balance", # 1-row avg-balance threshold broadcast
     "tpch_q11_important_parts", # 1-row total-value threshold broadcast
-    "sparse_batch_tfidf_topk",  # batched query-side scalar norms broadcast
     "skew_salted_join_lang",    # salted_join replicates the dim across shards BY DESIGN
     "sketch_kmv_distinct_tokens",  # 1-row sketch × 1-row exact-count scalar combine
     "sketch_binned_quantiles",     # bins × quantile-target theta join: both driver-sized
