@@ -18,9 +18,11 @@ ONE cosine kernel: every literal-query rank (`topk_cosine`,
 `batch_topk_cosine`) and every candidate-pair verify (`cosine_pairs`)
 scores an Arrow batch with `functions.cosine.cosine_rows`, a NumPy
 sequential fold whose bits equal `det_round(cosine_sim(...))` at every
-width. The Catalyst expression `functions.vector.cosine_sim`
-stays where the query vector is a column of the plan (knn_by_id,
-rocchio_rerank, the batched ANN probes, MMR).
+width; MMR's pairwise similarities (rerank.mmr_rerank) run the same
+kernel in the driver over the collected candidates. The Catalyst
+expression `functions.vector.cosine_sim` stays where the query vector
+is a column of the plan (knn_by_id, rocchio_rerank, the batched ANN
+probes).
 
 Every top-k appends `id ASC` as the tiebreaker: NumPy's argsort is
 stable on row order, SQL sort is not (SURVEY.md §4 item 3).

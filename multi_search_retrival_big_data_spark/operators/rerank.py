@@ -22,6 +22,11 @@ corpus size. Passage text is attached by broadcasting the TINY hit
 list into a corpus hash-join (one pruned scan; never a corpus shuffle,
 never a corpus-side broadcast), then a single Arrow batch flows
 through the encoder.
+
+The diversity tail, mmr_rerank, is request-sized the same way: one
+fenced collect of the (id, vector, rel) candidates, then the pairwise
+similarities (functions/cosine.cosine_rows, the package's one cosine
+kernel) and the greedy selection in the driver.
 """
 
 from __future__ import annotations
@@ -29,11 +34,13 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark import tables
 from multi_search_retrival_big_data_spark.encoders import CrossEncoder, FakeCrossEncoder
+from multi_search_retrival_big_data_spark.functions.cosine import cosine_rows, fold
 from multi_search_retrival_big_data_spark.functions.rounding import det_round
 
 if TYPE_CHECKING:
@@ -59,9 +66,9 @@ MMR_LAMBDA = 0.7
 # construction), but nothing upstream ENFORCES that — this cap does,
 # the same misuse-proofing as connected_components_auto's
 # driver_max_edges gate. Cost discipline: in mmr_rerank the fence is
-# FOLDED INTO the relevance collect (a limit(cap+1) on the frame the
-# collect reads — zero extra jobs; re-running the first-stage pipeline
-# for a standalone probe measured +1.4 s on the diverse-search
+# FOLDED INTO the one candidate collect (a limit(cap+1) on the frame
+# the collect reads — zero extra jobs; re-running the first-stage
+# pipeline for a standalone probe measured +1.4 s on the diverse-search
 # facade). cross_encoder_rerank has no driver materialization to fold
 # into, so its probe is a limit(cap+1) count; callers whose candidate
 # frame is bounded BY PLAN (a first-stage `.limit(n)` output — the
@@ -75,6 +82,26 @@ def _fence_error(max_candidates: int, op: str) -> ValueError:
         "(driver-side rerank tails are request-sized by contract; "
         "first-stage top-n the candidates before reranking, or raise "
         "the fence explicitly)"
+    )
+
+
+def _pair_sims(m: np.ndarray, round_to: int) -> np.ndarray:
+    """(n, n) det-rounded cosines of the rows of `m`, each bit-equal to
+    Catalyst's det_round(cosine_sim(a, b)) (functions/cosine). Zero-norm
+    guard: a degenerate candidate's cosine is undefined (NULL/NaN
+    depending on engine arithmetic), so a pair whose squared-norm
+    product fold(a·a)·fold(b·b) is 0 gets sim 0.0 — the same explicit
+    branch as the oracle's mirrored CASE (a NULL-skipping SQL max()
+    would diverge the moment a zero-norm vector reached an
+    oracle-compared query)."""
+    sq = fold(m * m)
+    norms = np.sqrt(sq)
+    return np.stack(
+        [
+            np.where(sq * sq[j] == 0.0, 0.0, cosine_rows(m, m[j], norms, norms[j], round_to))
+            for j in range(len(m))
+        ],
+        axis=1,
     )
 
 
@@ -95,77 +122,38 @@ def mmr_rerank(
     near-identical keyframes (the reference's dominant redundancy; its
     UI groups by video, MMR diversifies WITHIN the ranking).
 
-    Execution shape: relevance and the n·(n−1) pairwise similarities
-    are computed IN-PLAN (det-rounded Catalyst expressions over the
-    request-sized candidate list) and collected — n ≤ a few hundred by
-    construction, independent of corpus size; the greedy argmax chain
-    is inherently sequential (each step depends on the previous
-    selection), so it runs driver-side on the already-rounded values —
-    the same placement as the reference's NumPy rerank tail
-    (utils/faiss_processing.py re-query path). Every arithmetic step
-    (λ·rel − (1−λ)·max sim, IEEE doubles over det-rounded inputs) is
-    replicated verbatim by the recursive-CTE oracle, so the selection
-    is engine-exact. The selected page goes back as a driver-built
-    `LocalTableScan` (tables.local_frame): collecting it runs no job
-    and starts no Python worker. Returns (sel_rank, id, rel)."""
-    from multi_search_retrival_big_data_spark.functions.rounding import det_round
-    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim
-
-    spark = candidates.sparkSession
-    # ONE evaluation of the candidate pipeline (r11, guide §5/§2.4):
-    # without the materialization, the first-stage pipeline feeding
-    # `candidates` runs THREE times — once under the relevance collect
-    # and once per side of the n² similarity self-join (measured on
-    # endpoint_diverse_search: the sparse+dense+RRF+hydration lineage
-    # re-evaluated per action dominated the 3.5-4.3 s anchor; after:
-    # one evaluation + two reads of a ≤cap-row checkpoint). Eager
-    # localCheckpoint is within-query lineage control: the candidate
-    # list is request-sized BY CONTRACT (the fence below enforces the
-    # cap with bounded driver ingest; executor-side materialization of
-    # a miscalled corpus-sized input is bounded by the same storage
-    # that any shuffle of it would use).
-    sel = candidates.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), F.col(rel_col).alias("rel")
-    ).localCheckpoint()
-    a = sel.select(F.col("id").alias("id_a"), F.col("v").alias("__va"))
-    b = sel.select(F.col("id").alias("id_b"), F.col("v").alias("__vb"))
-    # zero-norm guard: a degenerate candidate's cosine is undefined
-    # (NULL/NaN depending on engine arithmetic) — an EXPLICIT branch on
-    # the squared-norm product pins sim = 0.0 identically in this plan
-    # and in the oracle's mirrored CASE (r7 advice: a coalesce here
-    # with a NULL-skipping SQL max() would diverge the moment a
-    # zero-norm vector reached an oracle-compared query)
-    from multi_search_retrival_big_data_spark.functions.vector import dot
-
-    zero_norm = (dot("__va", "__va") * dot("__vb", "__vb")) == F.lit(0.0)
-    sims_df = (
-        a.join(b, F.col("id_a") != F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.when(zero_norm, F.lit(0.0))
-            .otherwise(det_round(cosine_sim("__va", "__vb"), round_to))
-            .alias("sim"),
-        )
+    Execution shape: ONE action — a fenced `limit(cap+1)` collect of
+    the request-sized (id, vector, rel) candidate list (n ≤ a few
+    hundred by construction, independent of corpus size), so the
+    first-stage pipeline runs once. The n·(n−1) pairwise similarities
+    and the greedy argmax chain (inherently sequential: each step
+    depends on the previous selection) run in the driver — the same
+    placement as the reference's NumPy rerank tail
+    (utils/faiss_processing.py re-query path). The similarities come
+    from the package's one cosine kernel (_pair_sims). Every
+    arithmetic step (λ·rel − (1−λ)·max sim, IEEE doubles over
+    det-rounded inputs) is replicated verbatim by the recursive-CTE
+    oracle, so the selection is engine-exact. The selected page goes
+    back as a driver-built `LocalTableScan` (tables.local_frame):
+    collecting it runs no job and starts no Python worker. Returns
+    (sel_rank, id, rel)."""
+    rows = (
+        candidates.select(id_col, vec_col, rel_col).limit(max_candidates + 1).collect()
     )
-    # the FENCE rides the relevance collect: a limit(cap+1) on the
-    # two-column projection bounds the driver ingest (no standalone
-    # probe job — re-running the first-stage pipeline for one measured
-    # +1.4 s on the diverse-search facade), raising BEFORE the n²
-    # similarity collect runs; once it passes, n ≤ cap proves the
-    # unlimited sims frame is ≤ cap² rows
-    rel_rows = sel.select("id", "rel").limit(max_candidates + 1).collect()
-    if len(rel_rows) > max_candidates:
+    if len(rows) > max_candidates:
         raise _fence_error(max_candidates, "mmr_rerank")
-    rel = {r["id"]: r["rel"] for r in rel_rows}
-    sim = {(r["id_a"], r["id_b"]): r["sim"] for r in sims_df.collect()}
+    by_id = {r[0]: r for r in rows}  # a repeated id keeps its last row
+    pos = {cid: j for j, cid in enumerate(by_id)}
+    rel = {cid: r[2] for cid, r in by_id.items()}
+    vecs = np.array([r[1] for r in by_id.values()], dtype=np.float64)
+    sim = _pair_sims(vecs, round_to) if by_id else None
     remaining = set(rel)
     selected: list[int] = []
     while remaining and len(selected) < k:
         best = None
         for c in remaining:
             if selected:
-                mx = max(sim[(c, s)] for s in selected)
+                mx = max(float(sim[pos[c], pos[s]]) for s in selected)
                 score = lam * rel[c] - (1.0 - lam) * mx
             else:
                 score = lam * rel[c]
@@ -174,8 +162,10 @@ def mmr_rerank(
                 best = (key, c)
         selected.append(best[1])
         remaining.discard(best[1])
-    rows = [(i + 1, cid, rel[cid]) for i, cid in enumerate(selected)]
-    return tables.local_frame(spark, rows, f"sel_rank BIGINT, {id_col} BIGINT, rel DOUBLE")
+    page = [(i + 1, cid, rel[cid]) for i, cid in enumerate(selected)]
+    return tables.local_frame(
+        candidates.sparkSession, page, f"sel_rank BIGINT, {id_col} BIGINT, rel DOUBLE"
+    )
 
 
 def cross_encoder_rerank(

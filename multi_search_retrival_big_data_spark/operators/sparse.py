@@ -9,11 +9,14 @@ equivalent is a **posting-list inverted index** — a DataFrame
 `(term, doc_id, weight)` — because:
 
 - it IS the sparse representation: the q·Mᵀ CSR dot product becomes
-  `query_terms ⋈ postings ON term → groupBy(doc_id).sum(qw·w)`,
-  touching exactly the nnz entries of matched terms (never densified);
-- at 100 TB it shards naturally: bucket postings by `term` and the
-  scoring join co-locates without a shuffle of the index; the query
-  side is a handful of rows, always broadcast;
+  `postings WHERE term IN q → groupBy(doc_id).sum(qw·w)`, touching
+  exactly the nnz entries of matched terms (never densified);
+- the query is request-sized, so its weights are computed in the
+  driver (as the reference does on its serving thread) and enter the
+  plan as one constant-folded literal map: no join, no broadcast and
+  no window on the query side;
+- at 100 TB it shards naturally: postings are bucketed by `term`, so
+  the `term IN (…)` filter prunes the scan to the query's buckets;
 - the aggregation is partial (map-side combine), so per-executor
   traffic is ~|matched docs|, not |postings|.
 
@@ -30,10 +33,12 @@ Every lexical channel — word, n-gram, char, multichannel, batched,
 BM25 — is the same kernel under different grouping keys, so each step
 has one private spelling and the public functions compose them:
 
-- `_query_weights`: query rows → L2-normalized (…, term, qw) vectors,
-  one per key value (single query, channel or batch query_id);
-- `_match`: the broadcast join of the query vector into the postings
-  and the per-(key, doc) quantized-exact sum of qw·weight;
+- `_query_weights`: driver query rows → L2-normalized (…, term, qw)
+  rows, one vector per key value (single query, channel or batch
+  query_id), from one bucket-pruned idf lookup of the postings;
+- `_match`: the `term IN (…)`-filtered postings times qw from one
+  literal map, and the per-(key, doc) quantized-exact sum of
+  qw·weight;
 - `_topk`: the best k by (score DESC, doc_id ASC), globally or per
   key — the one place a scorer's k is checked;
 - `_l2_postings`: sklearn's norm='l2' weighting, for every fit and
@@ -45,6 +50,8 @@ Scores are summed and rounded only through functions/rounding.
 
 from __future__ import annotations
 
+import json
+import math
 import re
 from collections import Counter
 
@@ -66,6 +73,7 @@ from multi_search_retrival_big_data_spark.operators.dense import restrict_ids
 from multi_search_retrival_big_data_spark.partitioning import ensure_min_partitions
 
 TOKEN_RE = re.compile(r"\w+")
+QV_DDL = "term STRING, qw DOUBLE"  # a single query's (term, qw) rows
 
 # rank_bm25.BM25Okapi defaults, the reference's legacy scorer
 # (utils/object_retrieval_engine/bm25.py:24-57)
@@ -207,9 +215,10 @@ def fit_tfidf(
     (term, doc_id, weight, idf). Persist/bucket this by `term` for
     repeated querying; recompute cost is one pass over the corpus.
 
-    Every scorer reads the postings twice (query-idf branch + match
-    branch), so an in-plan fit that serves a scorer recomputes in both
-    branches unless the caller `.cache()`s it. The production analogue
+    Every TF-IDF scorer reads the postings in two actions (the
+    driver's idf lookup, then the match), so an in-plan fit that
+    serves a scorer is computed twice unless the caller `.cache()`s
+    it. The production analogue
     is the persisted, term-bucketed index table
     (index_store.tfidf_postings)."""
     tf = term_counts(docs, id_col, text_col, ngram_range, analyzer)
@@ -239,64 +248,114 @@ def query_terms(
 
 
 def _query_weights(
-    postings: DataFrame, rows: list[tuple], ddl: str, keys: tuple[str, ...] = ()
-) -> DataFrame:
+    postings: DataFrame, rows: list[tuple], keys: tuple[str, ...] = ()
+) -> list[tuple]:
     """(*keys, term, qw) — L2-normalized TF-IDF query vectors in the
     corpus vector space, one per `keys` value, from driver rows
     (*keys, term, qtf). OOV query terms drop out (the fitted model
     defines the space).
 
-    The idf comes from one lookup of the postings, joined on the
-    columns the query and the postings share (term, and channel for
-    multichannel postings). An isin filter (pushed into the scan)
-    before the distinct keeps it a few-row lookup instead of a
-    full-vocabulary de-duplication. The norm is a window sum over the
-    request-sized rows, computed in the same pass as the weights: a
-    separate norm aggregate would read the postings a second time and
-    attach the scalar with another join."""
-    q = tables.local_frame(postings.sparkSession, rows, ddl)
-    on = [c for c in q.columns if c in postings.columns]
-    idf = (
-        postings.filter(F.col("term").isin(sorted({r[-2] for r in rows})))
-        .select(*on, "idf")
-        .distinct()
+    The query is request-sized, so its weights are computed here in
+    the driver (the reference encodes queries on the serving thread,
+    object_retrieval.py:303-311). The idf of its terms comes from one
+    global `collect_set(struct(*on, idf))` over the `term`-filtered
+    postings, `on` being the columns query and postings share (term,
+    and channel for multichannel postings). The aggregate has no
+    grouping key, so nothing needs the term clustering and Spark reads
+    the pruned buckets' files as a plain scan: a 1–2 task job, where a
+    bucketed scan runs one task per bucket even when pruning selects a
+    few. Each key's qw = qtf·idf / sqrt(Σ (qtf·idf)²) is the same IEEE
+    multiply, sum (in row order), sqrt and divide as the Catalyst
+    expression it replaces. An empty query runs no job."""
+    terms = sorted({r[-2] for r in rows})
+    if not terms:
+        return []
+    on = [c for c in (*keys, "term") if c in postings.columns]
+    found = (
+        postings.filter(F.col("term").isin(terms))
+        .agg(F.collect_set(F.struct(*on, "idf")))
+        .first()[0]
     )
-    w = F.col("qtf") * F.col("idf")
-    qnorm = F.sqrt(F.sum(w**2).over(Window.partitionBy(*keys)))
-    return q.join(idf, on).select(*keys, "term", (w / qnorm).alias("qw"))
+    idf = {tuple(r[:-1]): r[-1] for r in found}
+    vecs: dict[tuple, list[tuple[str, float]]] = {}
+    for *kv, term, qtf in rows:
+        at = tuple(v for c, v in zip(keys, kv) if c in on) + (term,)
+        if at in idf:
+            vecs.setdefault(tuple(kv), []).append((term, qtf * idf[at]))
+    out = []
+    for kv, tw in vecs.items():
+        norm = math.sqrt(sum(w * w for _, w in tw))
+        out += [(*kv, t, w / norm) for t, w in tw]
+    return out
 
 
 def query_vector(postings: DataFrame, qterms: list[tuple[str, int]]) -> DataFrame:
     """(term, qw) — the L2-normalized TF-IDF query vector in the
-    corpus vector space. OOV query terms drop out (the fitted model
-    defines the space). The idf lookup (a scan of the postings) runs
-    once per request (_query_weights)."""
-    return _query_weights(
-        postings, [(t, float(c)) for t, c in qterms], "term STRING, qtf DOUBLE"
+    corpus vector space, as a driver-built LocalTableScan. OOV query
+    terms drop out (the fitted model defines the space). The idf
+    lookup is one small job per request (_query_weights)."""
+    return tables.local_frame(
+        postings.sparkSession,
+        _query_weights(postings, [(t, float(c)) for t, c in qterms]),
+        QV_DDL,
     )
 
 
 def _match(
     postings: DataFrame,
-    qv: DataFrame,
+    qv: list[tuple],
+    ddl: str,
     weight_col: str,
     keys: tuple[str, ...] = (),
     round_to: int | None = None,
 ) -> DataFrame:
-    """(*keys, doc_id, score) — Σ qw·weight over the matched terms.
-    The query vector (request-sized) is broadcast into the postings on
-    the columns both share; the postings side pays one term-bucketed
-    join + one (*keys, doc_id) groupBy. The sum is quantized-exact, so
-    the partial-aggregation order cannot change a bit."""
-    on = [c for c in qv.columns if c in postings.columns]
+    """(*keys, doc_id, score) — Σ qw·weight over the matched terms, for
+    driver rows `qv` (*keys, term, qw) typed by `ddl`.
+
+    The postings are filtered with `term IN (…)` (bucket pruning plus a
+    Parquet pushdown) and each row takes its qw from ONE constant-folded
+    literal, `from_json(lit(json), map<…>)`: term → qw, nested under a
+    map level per key the postings carry (channel), with keys they do
+    not carry (a batch's query_id) as an exploded array<struct> value.
+    No join, broadcast or window: the only exchange is the
+    (*keys, doc_id) groupBy, which needs no term clustering, so the
+    scan is not a bucketed scan and runs on the pruned buckets' files
+    alone. (The one literal matters: a struct-keyed `create_map` of
+    per-term Columns costs a py4j round trip per term.) The sum is
+    quantized-exact, so the partial-aggregation order cannot change a
+    bit. An empty `qv` (an empty or all-OOV query) gives an empty plan
+    that runs no job."""
+    types = dict(f.split() for f in ddl.split(","))
+    levels = [c for c in keys if c in postings.columns]
+    carried = [c for c in keys if c not in postings.columns]
+    tree: dict = {}
+    for row in qv:
+        r = dict(zip((*keys, "term", "qw"), row))
+        node = tree
+        for c in levels:
+            node = node.setdefault(r[c], {})
+        if carried:
+            node.setdefault(r["term"], []).append({c: r[c] for c in (*carried, "qw")})
+        else:
+            node[r["term"]] = r["qw"]
+    dtype = "double"
+    if carried:
+        fields = ",".join(f"{c}:{types[c]}" for c in carried)
+        dtype = f"array<struct<{fields},qw:double>>"
+    for _ in (*levels, "term"):
+        dtype = f"map<string,{dtype}>"
+    qw = F.from_json(F.lit(json.dumps(tree)), dtype)
+    for c in (*levels, "term"):
+        qw = qw[F.col(c)]
+    base = postings.filter(F.col("term").isin(sorted({r[-2] for r in qv})) if qv else F.lit(False))
+    if carried:
+        base = base.select("*", F.explode(qw).alias("__q")).select("*", "__q.*")
+    else:
+        base = base.withColumn("qw", qw).filter(F.col("qw").isNotNull())
     score = quantized_sum(F.col("qw") * F.col(weight_col))
     if round_to is not None:
         score = det_round(score, round_to)
-    return (
-        postings.join(F.broadcast(qv), on)
-        .groupBy(*keys, "doc_id")
-        .agg(score.alias("score"))
-    )
+    return base.groupBy(*keys, "doc_id").agg(score.alias("score"))
 
 
 def _topk(scored: DataFrame, k: int, by: tuple[str, ...] = ()) -> DataFrame:
@@ -323,12 +382,12 @@ def score_vector(
     subset: DataFrame | None = None,
     round_to: int | None = None,
 ) -> DataFrame:
-    """Score docs against ANY (term, qw) query-vector DataFrame —
-    literal-compiled (query_vector) or plan-derived (PRF expansion).
-    The vector side is broadcast (request-sized); the postings side
-    pays one term-bucketed join + one doc_id groupBy."""
+    """Score docs against ANY (term, qw) query-vector DataFrame, e.g.
+    query_vector's. The vector is request-sized: it is collected into
+    the driver and scored by the one literal-map match (_match)."""
+    rows = [tuple(r) for r in qv.select("term", "qw").collect()]
     base = restrict_ids(postings, subset, "doc_id")
-    return _topk(_match(base, qv, "weight", round_to=round_to), k)
+    return _topk(_match(base, rows, QV_DDL, "weight", round_to=round_to), k)
 
 
 def tfidf_score(
@@ -339,13 +398,15 @@ def tfidf_score(
     round_to: int | None = None,
 ) -> DataFrame:
     """Q4/Q5 — score docs against a compiled query: the CSR q·Mᵀ dot
-    re-expressed as an inverted-index join. Returns (doc_id, score)
+    re-expressed as an inverted-index match. Returns (doc_id, score)
     top-k, `score` = TF-IDF cosine.
 
     The subset path (`M[index,:]` row-slice in the reference,
     object_retrieval.py:320-323) is a semi-join applied *before*
     aggregation, so non-candidate postings never reach the shuffle."""
-    return score_vector(postings, query_vector(postings, qterms), k, subset, round_to)
+    qv = _query_weights(postings, [(t, float(c)) for t, c in qterms])
+    base = restrict_ids(postings, subset, "doc_id")
+    return _topk(_match(base, qv, QV_DDL, "weight", round_to=round_to), k)
 
 
 PRF_N_FB = 10  # feedback depth: docs assumed relevant
@@ -374,23 +435,24 @@ def tfidf_prf_search(
 
     Scale shape: the feedback-doc semi-join broadcasts n_fb ids into
     the term-bucketed postings scan; term election aggregates only the
-    feedback docs' postings (≤ n_fb rows per term); the re-score is the
-    same single broadcast-vector pass as every other sparse query. Two
-    passes over the index, zero corpus shuffles beyond the scorer's
-    own doc_id groupBy."""
-    fb = tfidf_score(postings, qterms, n_fb, round_to=round_to)
+    feedback docs' postings (≤ n_fb rows per term). The ≤ m_terms
+    elected rows are collected, so the re-score is the same literal-map
+    match as every other sparse query. Two passes over the index, zero
+    corpus shuffles beyond the scorer's own doc_id groupBy."""
+    qv = _query_weights(postings, [(t, float(c)) for t, c in qterms])
+    fb = _topk(_match(postings, qv, QV_DDL, "weight", round_to=round_to), n_fb)
     orig_terms = [t for t, _ in qterms]
-    expansion = (
+    elected = (
         restrict_ids(postings, F.broadcast(fb.select("doc_id")), "doc_id")
         .filter(~F.col("term").isin(orig_terms))
         .groupBy("term")
         .agg(quantized_sum(F.col("weight")).alias("__mass"))
         .orderBy(F.desc("__mass"), F.asc("term"))
         .limit(m_terms)
-        .select("term", (F.lit(float(beta)) * F.col("__mass")).alias("qw"))
+        .collect()
     )
-    combined = query_vector(postings, qterms).unionByName(expansion)
-    return score_vector(postings, combined, k, round_to=round_to)
+    combined = qv + [(r["term"], float(beta) * r["__mass"]) for r in elected]
+    return _topk(_match(postings, combined, QV_DDL, "weight", round_to=round_to), k)
 
 
 def _bm25_postings(
@@ -454,8 +516,13 @@ def bm25_model(
     the text-side train/add boundary (see transform_bm25)."""
     dfreq = doc_frequencies(tf)
     n = _corpus_size(docs, id_col)
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    avgdl = dl.agg(F.avg("dl").alias("avgdl"))
+    # rank_bm25 divides by every document (corpus_size), so a null or
+    # empty text counts in avgdl's denominator as it does in n
+    avgdl = (
+        tf.agg(F.sum("tf").alias("__dl"))
+        .crossJoin(n)
+        .select((F.col("__dl") / F.col("n")).alias("avgdl"))
+    )
     idf = dfreq.crossJoin(F.broadcast(n)).withColumn(
         "idf_raw",
         F.log((F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))),
@@ -502,13 +569,9 @@ def bm25_score(
     """Score = Σ_t qtf(t) · score_w(t, doc) over matched terms.
     (BM25Okapi.get_scores counts each query occurrence — bm25.py:99.)
     The query weight is the raw term count: no idf lookup, no norm."""
-    qv = tables.local_frame(
-        bm25_postings.sparkSession,
-        [(t, float(c)) for t, c in qterms],
-        "term STRING, qw DOUBLE",
-    )
+    qv = [(t, float(c)) for t, c in qterms]
     base = restrict_ids(bm25_postings, subset, "doc_id")
-    return _topk(_match(base, qv, "score_w", round_to=round_to), k)
+    return _topk(_match(base, qv, QV_DDL, "score_w", round_to=round_to), k)
 
 
 def fit_tfidf_multichannel(
@@ -548,16 +611,17 @@ def multichannel_tfidf_score(
     fit) with shared shuffles keyed by channel. Per-channel top-k is a
     row_number window partitioned by channel — the windowed relation
     holds only query-matched candidates, not the corpus. Each channel's
-    query norm is a window sum over the request-sized (channel, term,
-    idf) rows, so the idf lookup scans the postings once (see
-    _query_weights)."""
+    query vector is computed in the driver from one idf lookup and
+    scored through a literal map nested by channel (_query_weights,
+    _match)."""
     qv = _query_weights(
         postings,
         [(ch, t, float(c)) for ch, terms in channel_qterms.items() for t, c in terms],
-        "channel STRING, term STRING, qtf DOUBLE",
         ("channel",),
     )
-    scored = _match(postings, qv, "weight", ("channel",), round_to)
+    scored = _match(
+        postings, qv, "channel STRING, term STRING, qw DOUBLE", "weight", ("channel",), round_to
+    )
     topk = _topk(scored, k_per_channel, by=("channel",))
     wmm = Window.partitionBy("channel")
     normed = topk.select(
@@ -582,19 +646,21 @@ def batch_tfidf_score(
     """Multi-query batched sparse scoring: every query's terms join the
     posting index in ONE pass; per-query top-k via a partitioned
     window. The sparse analogue of dense.batch_topk_cosine — at scale
-    the index is read once per batch instead of once per query, and
-    the broadcast query side carries (query_id, term, qw). Each
-    query's norm is a window sum partitioned by query_id, so the idf
-    lookup is the batch's only other postings read.
+    the index is read once per batch instead of once per query. Every
+    query's weights come from the batch's one idf lookup; query_id is
+    not a postings column, so each matched posting explodes its term's
+    (query_id, qw) array out of the literal map (_match) — a Generate,
+    which keeps this scan bucketed.
 
     Returns (query_id, doc_id, score)."""
     qv = _query_weights(
         postings,
         [(qid, t, float(c)) for qid, terms in batch_qterms.items() for t, c in terms],
-        "query_id INT, term STRING, qtf DOUBLE",
         ("query_id",),
     )
-    scored = _match(postings, qv, "weight", ("query_id",), round_to)
+    scored = _match(
+        postings, qv, "query_id INT, term STRING, qw DOUBLE", "weight", ("query_id",), round_to
+    )
     return _topk(scored, k, by=("query_id",)).orderBy(
         "query_id", F.desc("score"), F.asc("doc_id")
     )

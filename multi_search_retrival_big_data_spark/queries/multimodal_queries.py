@@ -305,7 +305,7 @@ _ASR_CORPUS_CTE = """
     dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
     n AS (SELECT COUNT(*) AS n FROM asr),
     dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-    avgdl AS (SELECT AVG(dl) AS avgdl FROM dl),
+    avgdl AS (SELECT (SELECT SUM(dl) FROM dl) / n.n AS avgdl FROM n),
     idf0 AS (
       SELECT term, ln((n.n - d.df + 0.5) / (d.df + 0.5)) AS idf_raw
       FROM dfreq d CROSS JOIN n

@@ -165,9 +165,10 @@ def rerank_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR-diversified top-5 from the dense top-20: greedy
     λ·rel − (1−λ)·max-sim-to-selected (λ=0.7), the classic
     redundancy-removing rerank for pages of near-identical keyframes
-    (operators/rerank.mmr_rerank scale notes — in-plan det-rounded
-    rel/sims, request-sized driver greedy, the reference's NumPy
-    rerank-tail placement). The oracle replays the greedy chain as a
+    (operators/rerank.mmr_rerank scale notes — one collect of the
+    det-rounded candidates, pair sims by the cosine kernel and the
+    greedy in the driver, the reference's NumPy rerank-tail
+    placement). The oracle replays the greedy chain as a
     recursive CTE carrying the selected set as a LIST column, so the
     whole selection path — not just the final set — is engine-exact."""
     emb = tables.load(spark, "embeddings", sf_dir)

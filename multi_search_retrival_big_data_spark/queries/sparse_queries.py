@@ -157,7 +157,7 @@ def sparse_tfidf_ngram13_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
     n AS (SELECT COUNT(*) AS n FROM documents),
     dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-    avgdl AS (SELECT AVG(dl) AS avgdl FROM dl),
+    avgdl AS (SELECT (SELECT SUM(dl) FROM dl) / n.n AS avgdl FROM n),
     idf0 AS (
       SELECT term, ln((n.n - d.df + 0.5) / (d.df + 0.5)) AS idf_raw
       FROM dfreq d CROSS JOIN n
@@ -424,7 +424,7 @@ def index_incremental_tfidf_parity(spark: SparkSession, sf_dir: str) -> DataFram
     bdf AS (SELECT term, COUNT(*) AS df FROM btf GROUP BY 1),
     bn AS (SELECT COUNT(*) AS n FROM documents, t1 WHERE doc_id < t1.v),
     bdl AS (SELECT doc_id, SUM(tf) AS dl FROM btf GROUP BY 1),
-    bavgdl AS (SELECT AVG(dl) AS avgdl FROM bdl),
+    bavgdl AS (SELECT (SELECT SUM(dl) FROM bdl) / bn.n AS avgdl FROM bn),
     idf0 AS (
       SELECT term, ln((n.n - d.df + 0.5) / (d.df + 0.5)) AS idf_raw
       FROM bdf d CROSS JOIN bn n

@@ -84,6 +84,44 @@ def test_serving_plans_build_request_rows_in_the_driver(engine):
         assert "ExistingRDD" not in _executed_plan(df)
 
 
+def test_endpoint_jobs_and_tasks_stay_request_sized(engine, spark, sf_dir, job_group):
+    """Each endpoint request, counted in its own job group once its
+    indexes exist: no stage runs one task per postings bucket (a
+    bucketed scan of the whole index), panel runs at most 7 jobs,
+    diverse at most 5 and no localCheckpoint, text and image 2 each."""
+    from multi_search_retrival_big_data_spark import index_store
+    from multi_search_retrival_big_data_spark.queries.common import QUERY_VEC
+    from multi_search_retrival_big_data_spark.queries.sparse_queries import QUERY_TEXT
+
+    panel = {
+        "dragObject": [
+            {"type": "person", "position": {"xTop": 0.01, "yTop": 0.01, "xBottom": 0.2, "yBottom": 0.2}}
+        ],
+        "tags": ["scan", "window", "batch"],
+        "amount": "",
+    }
+    endpoints = {
+        "text": lambda: engine.text_search("fast spark join", k=100),
+        "image": lambda: engine.image_search(42, k=50),
+        "panel": lambda: engine.panel_search(panel, k=50, group=True),
+        "diverse": lambda: engine.diverse_search(QUERY_TEXT, query_vec=QUERY_VEC, n_fuse=20, k=8),
+        "feedback": lambda: engine.feedback(
+            engine.text_search("anything", k=20, group=False), [1, 2], [3], k=10
+        ),
+    }
+    index_store.tfidf_postings(spark, sf_dir)
+    runs = {
+        name: job_group(f"test_api/{name}", lambda ep=ep: ep().collect())
+        for name, ep in endpoints.items()
+    }
+    for name, (_, stages) in runs.items():
+        assert max(t for _, t in stages) < index_store.POSTINGS_BUCKETS, (name, stages)
+    assert runs["panel"][0] <= 7, runs["panel"]
+    assert runs["diverse"][0] <= 5, runs["diverse"]
+    assert not any("localCheckpoint" in s for s, _ in runs["diverse"][1])
+    assert runs["text"][0] == 2 and runs["image"][0] == 2, (runs["text"], runs["image"])
+
+
 def test_related_neighborhood_same_source(engine):
     out = engine.related(10, radius=2).collect()
     assert 1 <= len(out) <= 5

@@ -141,3 +141,34 @@ def test_rerank_candidate_fences(spark):
     assert rerank.cross_encoder_rerank(
         big_txt, "q", k=3, max_candidates=2000
     ).count() == 3
+
+
+def test_mmr_pair_sims_match_the_catalyst_expression(spark):
+    """MMR's driver-side similarities are bit-equal to the Catalyst
+    expression the recursive-CTE oracle mirrors — CASE WHEN
+    dot(a,a)·dot(b,b) = 0 THEN 0.0 ELSE det_round(cosine_sim(a, b)) END
+    — for a zero vector and for a tiny one whose squared norm is
+    subnormal (its self-pair's product underflows to 0, its other
+    pairs do not), at d=64."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from multi_search_retrival_big_data_spark import tables
+    from multi_search_retrival_big_data_spark.functions.rounding import det_round
+    from multi_search_retrival_big_data_spark.functions.vector import cosine_sim, dot
+
+    m = np.random.default_rng(7).standard_normal((12, 64))
+    m[3] = 0.0
+    m[5] *= 1e-160
+    df = tables.local_frame(
+        spark, [(i, v.tolist()) for i, v in enumerate(m)], "id BIGINT, v ARRAY<DOUBLE>"
+    )
+    pairs = df.select(F.col("id").alias("i"), F.col("v").alias("va")).crossJoin(
+        df.select(F.col("id").alias("j"), F.col("v").alias("vb"))
+    )
+    zero = dot("va", "va") * dot("vb", "vb") == F.lit(0.0)
+    sim = F.when(zero, F.lit(0.0)).otherwise(det_round(cosine_sim("va", "vb"), 6))
+    want = {(r.i, r.j): r.sim for r in pairs.select("i", "j", sim.alias("sim")).collect()}
+    got = rerank._pair_sims(m, 6)
+    assert got[5, 5] == 0.0 and got[5, 0] != 0.0
+    assert {(i, j): float(got[i, j]) for i, j in want} == want

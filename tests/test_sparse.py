@@ -178,6 +178,17 @@ def test_bm25_transform_reproduces_fit_for_in_corpus_docs(spark):
     assert sorted(map(key, redone.collect())) == sorted(map(key, fit.collect()))
 
 
+def test_bm25_avgdl_counts_every_document(spark):
+    """rank_bm25's BM25Okapi divides the total document length by every
+    document (corpus_size), as the idf's n does: an empty and a NULL
+    text add no length but count, so avgdl = 2/3, not 2."""
+    docs = tables.local_frame(
+        spark, [(1, "alpha beta"), (2, ""), (3, None)], "doc_id BIGINT, text STRING"
+    )
+    _, avgdl = sparse.bm25_model(sparse.term_counts(docs), docs)
+    assert avgdl.first()["avgdl"] == 2 / 3
+
+
 def test_prf_expansion_excludes_original_terms_and_boosts(spark):
     from multi_search_retrival_big_data_spark.operators import sparse
 
@@ -225,31 +236,108 @@ def _postings_reads(df) -> int:
     return sum(1 for line in plan.splitlines() if "Relation spark_catalog." in line)
 
 
-def test_query_norm_shares_the_single_idf_lookup(spark, sf_dir):
-    """The query side reads the postings once (idf lookup, norm in the
-    same pass) and the scoring join once more — a separate norm
-    aggregate would add a third read and a nested-loop join. The query
-    literal is a LocalTableScan, never a PythonRDD scan."""
+def _sparse_indexes(spark, sf_dir):
     from multi_search_retrival_big_data_spark import index_store
 
-    post = index_store.tfidf_postings(spark, sf_dir)
+    return index_store.tfidf_postings(spark, sf_dir), index_store.multichannel_postings(
+        spark, sf_dir, {"bbox": (1, 1), "color": (1, 1), "tag": (1, 1), "number": (1, 1)}
+    )
+
+
+def test_scoring_plan_reads_the_postings_once_without_a_join(spark, sf_dir, job_group):
+    """The query weights are computed in the driver, so a scoring plan
+    reads the postings once and carries the query as a literal: no
+    join, window or broadcast on the query side, and no PythonRDD
+    scan. The idf lookup is a global aggregate, so it is not a
+    bucketed scan: none of its stages runs one task per bucket."""
+    from multi_search_retrival_big_data_spark.index_store import POSTINGS_BUCKETS
+
+    post, mc = _sparse_indexes(spark, sf_dir)
+    q1 = [(t, float(c)) for t, c in sparse.query_terms("slow scan table filter")]
+    q2 = [(t, float(c)) for t, c in sparse.query_terms("hash group")]
+    mq = [("tag", "scan", 1.0), ("tag", "window", 1.0), ("color", "red", 2.0)]
     single = sparse.tfidf_score(post, sparse.query_terms("slow scan table filter"), k=10)
     batch = sparse.batch_tfidf_score(
         post,
         {1: sparse.query_terms("slow scan table filter"), 2: sparse.query_terms("hash group")},
         k=10,
     )
-    mc = index_store.multichannel_postings(
-        spark, sf_dir, {"bbox": (1, 1), "color": (1, 1), "tag": (1, 1), "number": (1, 1)}
-    )
     multi = sparse.multichannel_tfidf_score(
         mc, {"tag": [("scan", 1), ("window", 1)], "color": [("red", 2)]}, 10, 10
     )
-    for df in (single, batch, multi):
-        assert _postings_reads(df) == 2
+    matches = [
+        sparse._match(post, sparse._query_weights(post, q1), sparse.QV_DDL, "weight"),
+        sparse._match(
+            post,
+            sparse._query_weights(post, [(1, *r) for r in q1] + [(2, *r) for r in q2], ("query_id",)),
+            "query_id INT, term STRING, qw DOUBLE",
+            "weight",
+            ("query_id",),
+        ),
+        sparse._match(
+            mc,
+            sparse._query_weights(mc, mq, ("channel",)),
+            "channel STRING, term STRING, qw DOUBLE",
+            "weight",
+            ("channel",),
+        ),
+    ]
+    for df in (single, batch, multi, *matches):
+        assert _postings_reads(df) == 1
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" not in plan and "NestedLoopJoin" not in plan
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+        assert "ExistingRDD" not in plan
+    for df in (single, *matches):  # the keyed scorers' windows are their per-key top-k
+        assert "Window" not in df._jdf.queryExecution().executedPlan().toString()
+    for postings, rows, keys in ((post, q1, ()), (mc, mq, ("channel",))):
+        _, stages = job_group(
+            "test_sparse/idf_lookup", lambda: sparse._query_weights(postings, rows, keys)
+        )
+        assert stages and max(t for _, t in stages) < POSTINGS_BUCKETS, stages
+
+
+def test_driver_query_weights_equal_the_catalyst_window_sum(spark, sf_dir):
+    """For a repeated-term, a multichannel and a batched query, the
+    driver's qw is bit-equal to the Catalyst expression it replaced,
+    qtf·idf / sqrt(sum((qtf·idf)²) OVER (PARTITION BY keys)) over the
+    query rows joined with the distinct (…, term, idf) lookup; and
+    the JSON literal carries those doubles into a plan bit for bit."""
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    post, mc = _sparse_indexes(spark, sf_dir)
+    rep = [(t, float(c)) for t, c in sparse.query_terms("scan scan table filter scan join")]
+    assert any(c > 1 for _, c in rep)
+    cases = [
+        (post, rep, "term STRING, qtf DOUBLE", ()),
+        (
+            mc,
+            [("tag", "scan", 1.0), ("tag", "window", 2.0), ("color", "red", 2.0), ("bbox", "zz", 1.0)],
+            "channel STRING, term STRING, qtf DOUBLE",
+            ("channel",),
+        ),
+        (
+            post,
+            [(1, "scan", 2.0), (1, "table", 1.0), (2, "hash", 1.0), (2, "group", 3.0), (3, "zzq", 1.0)],
+            "query_id INT, term STRING, qtf DOUBLE",
+            ("query_id",),
+        ),
+    ]
+    for postings, rows, ddl, keys in cases:
+        q = tables.local_frame(spark, rows, ddl)
+        on = [c for c in q.columns if c in postings.columns]
+        idf = postings.select(*on, "idf").distinct()
+        w = F.col("qtf") * F.col("idf")
+        qw = w / F.sqrt(F.sum(w**2).over(Window.partitionBy(*keys)))
+        want = sorted(tuple(r) for r in q.join(idf, on).select(*keys, "term", qw).collect())
+        got = sorted(sparse._query_weights(postings, rows, keys))
+        assert want and got == want
+        vals = [r[-1] for r in got] + [0.1, 1 / 3, 5e-324, 2.2250738585072014e-308]
+        back = spark.range(1).select(F.from_json(F.lit(json.dumps(vals)), "array<double>"))
+        assert back.first()[0] == vals
 
 
 def test_sparse_scorers_degenerate_inputs(spark):

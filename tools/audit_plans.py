@@ -20,8 +20,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # queries where a nested-loop join is BY DESIGN: broadcasting a 1-row
 # aggregate (min/max/count) back into the plan. Sparse query norms are
-# not on this list: they are window sums over the request-sized query
-# vectors (operators/sparse._query_weights), batched queries included,
+# not on this list: the driver computes each query vector, norm
+# included, from one idf lookup (operators/sparse._query_weights),
+# batched queries included, and the match takes it as a literal map,
 # so no sparse scorer adds one.
 SCALAR_BROADCAST_OK = {
     "fusion_dual_model_ensemble",
