@@ -689,7 +689,6 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
 
     from multi_search_retrival_big_data_spark import index_store, tables
     from multi_search_retrival_big_data_spark.encoders import dim_expand_encode
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
     from multi_search_retrival_big_data_spark.operators import ann, dense
     from multi_search_retrival_big_data_spark.queries.common import QUERY_VEC
 
@@ -720,8 +719,7 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
     def pq_rerank():
         book, codes = pq_pair()
         return ann.ann_pq_rerank_topk(
-            emb(), codes, qv, k=DIM_K, m=ann.PQT_M, round_to=6,
-            codebook=book, literal_lut=True,
+            emb(), codes, qv, k=DIM_K, round_to=6, codebook=book
         )
 
     def sq8():
@@ -736,14 +734,9 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
         # table, rank the co-located pruned inverted lists with the
         # one cosine kernel)
         cents_t, assign_t = index_store.ivf_trained(spark, dim_dir, iters=2)
-        probed = (
-            cents_t.select("cid", l2_dist("cv", lit_vec(qv)).alias("__d"))
-            .orderBy(F.asc("__d"), F.asc("cid"))
-            .limit(ann.IVF_NPROBE)
-            .select("cid")
-        )
+        _, (probe,) = ann.elect_cells(cents_t, [qv], ann.IVF_NPROBE)
         return dense.topk_cosine(
-            assign_t.join(F.broadcast(probed), "cid"), qv, k=DIM_K, round_to=6
+            assign_t.filter(F.col("cid").isin(probe)), qv, k=DIM_K, round_to=6
         )
 
     def lsh_tuned():
@@ -761,14 +754,9 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
         # dimension-derived probe depth (ann.ivf_nprobe_frac)
         cents_t, assign_t = index_store.ivf_trained(spark, dim_dir, iters=2)
         nprobe = math.ceil(ann.ivf_nprobe_frac(DIM_TIER) * cents_t.count())
-        probed = (
-            cents_t.select("cid", l2_dist("cv", lit_vec(qv)).alias("__d"))
-            .orderBy(F.asc("__d"), F.asc("cid"))
-            .limit(nprobe)
-            .select("cid")
-        )
+        _, (probe,) = ann.elect_cells(cents_t, [qv], nprobe)
         return dense.topk_cosine(
-            assign_t.join(F.broadcast(probed), "cid"), qv, k=DIM_K, round_to=6
+            assign_t.filter(F.col("cid").isin(probe)), qv, k=DIM_K, round_to=6
         )
 
     thunks = {
@@ -830,16 +818,10 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
             banded.filter(cond).select("vec_id").distinct().count()
         )
     if "ann_ivf_topk" in thunks:
-        probed = (
-            ann.centroids(emb())
-            .select("cid", l2_dist("__cv", lit_vec(qv)).alias("__d"))
-            .orderBy(F.asc("__d"), F.asc("cid"))
-            .limit(ann.IVF_NPROBE)
-            .select("cid")
-        )
+        _, (probe,) = ann.elect_cells(ann.centroids(emb()), [qv], ann.IVF_NPROBE, "__cv")
         candidates["ivf_probed_cells"] = (
             index_store.ivf_assignments(spark, dim_dir)
-            .join(F.broadcast(probed), "cid")
+            .filter(F.col("cid").isin(probe))
             .count()
         )
 
@@ -866,15 +848,10 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
         # ann_ivf_recall_grid; cell geometry does not transfer across
         # dimension, so the tuning curve is re-measured here)
         assign = index_store.ivf_assignments(spark, dim_dir)
-        cents = ann.centroids(emb()).select(
-            "cid", l2_dist("__cv", lit_vec(qv)).alias("__d")
-        )
+        _, (ranked,) = ann.elect_cells(ann.centroids(emb()), [qv], 8, "__cv")
         ivf_grid = []
         for nprobe in (1, 2, 4, 8):
-            p = (
-                cents.orderBy(F.asc("__d"), F.asc("cid")).limit(nprobe).select("cid")
-            )
-            cand_n = assign.join(F.broadcast(p), "cid").count()
+            cand_n = assign.filter(F.col("cid").isin(ranked[:nprobe])).count()
             got = recall(
                 ann.ann_ivf_topk(
                     emb(), qv, k=DIM_K, round_to=6, assign=assign, nprobe=nprobe

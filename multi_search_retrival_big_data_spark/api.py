@@ -62,6 +62,9 @@ class SearchEngine:
         self._postings = index_store.multichannel_postings(
             spark, sf_dir, {"bbox": (1, 1), "color": (1, 1), "tag": (1, 1), "number": (1, 1)}
         )
+        # the diverse endpoint's lexical index, built here with the panel
+        # postings so no request builds an index
+        self._tfidf = index_store.tfidf_postings(spark, sf_dir)
 
     # -- /textsearch -------------------------------------------------
     def text_search(
@@ -185,7 +188,7 @@ class SearchEngine:
             else encoders.encode_query(text, self.encoder, self.translator)
         )
         sp = sparse.tfidf_score(
-            index_store.tfidf_postings(self.spark, self.sf_dir),
+            self._tfidf,
             sparse.query_terms(text),
             k=100,
             round_to=6,

@@ -24,6 +24,17 @@ table is written partitioned/bucketed by a signature band; the final
 exact rank touches only candidates (TakeOrderedAndProject top-k).
 The same banding powers embedding near-duplicate *pair* mining without
 an all-pairs cross join.
+
+The IVF, PQ and IVF-PQ paths (FAISS IndexIVFFlat / IndexPQ /
+IndexIVFPQ) share two driver-side steps over model state, each spelled
+once: `elect_cells` collects the centroid table and picks every
+query's nprobe cells, which the plan reads through a static
+`cid IN (…)` partition filter, and `adc_luts` collects the codebook
+and computes every ADC lookup table, which the plan reads as literal
+`element_at` arrays. Both replicate `functions/vector.l2_dist` op for
+op (`_l2`), so a probe set or a table entry is bit-equal to the
+oracles' `list_distance` spellings. No scoring plan joins a lookup
+table or sorts the centroids.
 """
 
 from __future__ import annotations
@@ -500,6 +511,59 @@ def centroids(
     )
 
 
+def _check_k(k: int) -> None:
+    """The IVF/PQ scorers' check of k, made before any Spark job."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+
+
+def _l2(a: Sequence[float], b: Sequence[float]) -> float:
+    """functions/vector.l2_dist in the driver, op for op: a left fold
+    of (x−y)² from 0.0, then sqrt. Python floats are IEEE doubles, so
+    a distance computed here is bit-equal to the engine's and to
+    DuckDB's `list_distance` (the signature_of precedent). Callers
+    check that the widths agree."""
+    s = 0.0
+    for x, y in zip(a, b):
+        s = s + (x - y) * (x - y)
+    return math.sqrt(s)
+
+
+def elect_cells(
+    cents: DataFrame,
+    query_vecs: Sequence[Sequence[float]],
+    nprobe: int,
+    vec_col: str = "cv",
+) -> tuple[dict[int, list[float]], list[list[int]]]:
+    """The one IVF probe election, for every IVF and IVF-PQ scorer:
+    collect the (cid, `vec_col`) centroid table — nlist rows of model
+    state, driver-sized by construction — and rank its cells for each
+    query by (l2 to the query, cid), NaN distances last as Spark's and
+    DuckDB's sorts put them; the first `nprobe` are the query's cells.
+    Returns ({cid: centroid}, [cids per query]).
+
+    The scorers turn the cids into a static `cid IN (…)` filter, which
+    the planner prunes to the probed partitions of the cid-partitioned
+    index before the job starts — no runtime subquery, no sort of the
+    centroid table in the plan. A query whose width differs from the
+    centroids' raises ValueError."""
+    model = {int(r["cid"]): [float(x) for x in r[vec_col]] for r in cents.collect()}
+    widths = {len(cv) for cv in model.values()}
+    elected = []
+    for qv in query_vecs:
+        q = [float(x) for x in qv]
+        if widths - {len(q)}:
+            raise ValueError(
+                f"query dim {len(q)} does not match centroid dim {min(widths)}"
+            )
+        rank = {}
+        for cid, cv in model.items():
+            d = _l2(cv, q)
+            rank[cid] = (True, 0.0, cid) if math.isnan(d) else (False, d, cid)
+        elected.append(sorted(model, key=rank.__getitem__)[:nprobe])
+    return model, elected
+
+
 def ann_ivf_topk(
     emb: DataFrame,
     query_vec: Sequence[float],
@@ -512,14 +576,15 @@ def ann_ivf_topk(
     assign: DataFrame | None = None,
     subset: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-flat ANN QUERY path: probe the `nprobe` centroids nearest
-    the query, prune to their inverted lists, rank the cell union by
-    exact cosine — the FAISS IndexIVFFlat search dataflow as joins.
+    """IVF-flat ANN QUERY path: elect the `nprobe` centroids nearest
+    the query in the driver (`elect_cells`), prune to their inverted
+    lists with a static `cid IN (…)` filter, rank the cell union by
+    exact cosine — the FAISS IndexIVFFlat search dataflow.
 
     `assign` is the precomputed, cid-partitioned assignment table
     (index_store.ivf_assignments); the executed plan then contains NO
-    quantizer-assignment recompute — only the |centroids|-row probe
-    (pushed-filter scan + top-nprobe) and a partition-prunable join.
+    quantizer-assignment recompute and no join — only the statically
+    pruned partitions of the index.
     When the table also carries the vectors (the (vec_id, embedding,
     cid) layout index_store persists — FAISS stores vectors inside the
     inverted lists), the exact-cosine rank reads them straight from the
@@ -540,28 +605,19 @@ def ann_ivf_topk(
     ann_pq_filtered_topk's prune. At 100 TB the filter column belongs
     IN the assignment table (predicate pushdown into the pruned
     partitions, no join)."""
+    _check_k(k)
+    _, (probe,) = elect_cells(
+        centroids(emb, id_col, vec_col, stride), [query_vec], nprobe, "__cv"
+    )
     emb = ensure_min_partitions(emb)
-    cent = centroids(emb, id_col, vec_col, stride)
     if assign is None:
         _, assign = ivf_assign(emb, id_col, vec_col, stride)
-    q = lit_vec(query_vec)
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist
-
-    probed = (
-        cent.select("cid", l2_dist("__cv", q).alias("__d"))
-        .orderBy(F.asc("__d"), F.asc("cid"))
-        .limit(nprobe)
-        .select("cid")
-    )
+    cells = assign.filter(F.col("cid").isin(probe))
     if vec_col in assign.columns:
         # co-located layout: rank inside the pruned partitions
-        cand = dense.restrict_ids(
-            assign.join(F.broadcast(probed), "cid"), subset, id_col
-        )
+        cand = dense.restrict_ids(cells, subset, id_col)
         return dense.topk_cosine(cand, query_vec, k, id_col, vec_col, round_to=round_to)
-    cand_ids = dense.restrict_ids(
-        assign.join(F.broadcast(probed), "cid").select(id_col), subset, id_col
-    )
+    cand_ids = dense.restrict_ids(cells.select(id_col), subset, id_col)
     return dense.topk_cosine(
         emb.join(cand_ids, id_col, "left_semi"),
         query_vec, k, id_col, vec_col, round_to=round_to,
@@ -657,28 +713,25 @@ def batch_lsh_topk(
     score = cosine_sim(vec_col, "__qv")
     if round_to is not None:
         score = det_round(score, round_to)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
+    scored = (
         cand.join(emb.select(id_col, vec_col), id_col)
         .join(F.broadcast(qdf), "query_id")
         .select("query_id", F.col(id_col), score.alias("score"))
-        .withColumn("__rn", F.row_number().over(w))
+    )
+    return _per_query_topk(scored, k, F.desc("score"), F.asc(id_col))
+
+
+def _per_query_topk(scored: DataFrame, k: int, *order: Column) -> DataFrame:
+    """The batched scorers' per-query top-k: a row_number window per
+    query_id (WindowGroupLimit pushes the limit map-side), rows
+    ordered by query then `order`."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .drop("__rn")
-        .orderBy("query_id", F.desc("score"), F.asc(id_col))
+        .orderBy("query_id", *order)
     )
-
-
-def _l2_py(a: Sequence[float], b: Sequence[float]) -> float:
-    """Driver-side L2 mirroring functions/vector.l2_dist's exact op
-    order (left fold of (x−y)², then sqrt) — required for probe
-    rankings computed on the driver to agree bit-for-bit with
-    engine-side rankings (same signature_of precedent)."""
-    s = 0.0
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        s += d * d
-    return math.sqrt(s)
 
 
 def batch_ivf_topk(
@@ -700,8 +753,8 @@ def batch_ivf_topk(
     `queries` is the request batch [(query_id, qvec), ...]
     (driver-sized, like FAISS's query matrix). Each query's nprobe
     cells are elected on the DRIVER against the collected centroid
-    model (model state × request — both tiny; `_l2_py` keeps the
-    election bit-identical to the engine), the UNION of probed cids
+    model (model state × request — both tiny; `elect_cells`, the
+    election every IVF scorer uses), the UNION of probed cids
     becomes ONE static `cid IN (...)` pruning predicate over the
     cid-partitioned assignment table, the (query_id, cid) probe pairs
     restrict each query to its own cells, the request-sized query-
@@ -711,15 +764,14 @@ def batch_ivf_topk(
     pays ONE pruned scan of |union of cells|, not |batch| scans.
 
     Returns (query_id, id, score), k rows per query, descending."""
+    _check_k(k)
     spark = emb.sparkSession
-    cent = [
-        (int(r["cid"]), [float(x) for x in r["__cv"]])
-        for r in centroids(emb, id_col, vec_col, stride).collect()
+    _, elected = elect_cells(
+        centroids(emb, id_col, vec_col, stride), [qv for _, qv in queries], nprobe, "__cv"
+    )
+    probe_pairs = [
+        (qid, cid) for (qid, _), cids in zip(queries, elected) for cid in cids
     ]
-    probe_pairs = []
-    for qid, qv in queries:
-        ranked = sorted(cent, key=lambda c: (_l2_py(c[1], qv), c[0]))
-        probe_pairs.extend((qid, cid) for cid, _ in ranked[:nprobe])
     all_cids = sorted({cid for _, cid in probe_pairs})
     probe_df = tables.local_frame(spark, probe_pairs, "query_id INT, cid BIGINT")
     qdf = tables.local_frame(
@@ -729,22 +781,17 @@ def batch_ivf_topk(
     )
     if assign is None:
         _, assign = ivf_assign(emb, id_col, vec_col, stride)
-    pruned = assign.filter(F.col("cid").isin([int(c) for c in all_cids]))
+    pruned = assign.filter(F.col("cid").isin(all_cids))
     cand = pruned.join(F.broadcast(probe_df), "cid")
     if vec_col not in cand.columns:
         cand = cand.join(emb.select(id_col, vec_col), id_col)
     score = cosine_sim(vec_col, "__qv")
     if round_to is not None:
         score = det_round(score, round_to)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        cand.join(F.broadcast(qdf), "query_id")
-        .select("query_id", F.col(id_col), score.alias("score"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-        .orderBy("query_id", F.desc("score"), F.asc(id_col))
+    scored = cand.join(F.broadcast(qdf), "query_id").select(
+        "query_id", F.col(id_col), score.alias("score")
     )
+    return _per_query_topk(scored, k, F.desc("score"), F.asc(id_col))
 
 
 def pq_codebook(
@@ -913,98 +960,96 @@ def pq_encode(
     )
 
 
+def adc_luts(
+    codebook: DataFrame, query_vecs: Sequence[Sequence[float]]
+) -> list[list[list[float]]]:
+    """The one ADC lookup-table builder, for every PQ and IVF-PQ scorer:
+    collect the (m, code, cv) codebook — M·KS rows of model state,
+    driver-sized by construction — read M and the sub-space width from
+    it, and return per query the M tables of KS entries
+    `||q_m − cv[m, code]||²`, each the oracles' `list_distance *
+    list_distance` (`_l2`, then square). `_adc_distance` reads them
+    as literal `element_at` arrays, so a scoring plan is one narrow
+    scan of the code table: no join, no extra job per query.
+
+    A query whose width differs from the codebook's M·dsub raises
+    ValueError, and so does a codebook whose sub-spaces are not
+    0..M−1 or whose codes are not 0..KS−1: a gap in the codes (a
+    stride id missing from the corpus) would shift the `element_at`
+    index onto the wrong codeword."""
+    books: dict[int, dict[int, list[float]]] = {}
+    for r in codebook.collect():
+        books.setdefault(int(r["m"]), {})[int(r["code"])] = [float(x) for x in r["cv"]]
+    subs = [books.get(i, {}) for i in range(len(books))]
+    if any(sorted(b) != list(range(len(b))) or not b for b in subs):
+        raise ValueError("codebook must hold sub-spaces 0..M-1 with codes 0..KS-1")
+    dsub = len(subs[0][0]) if subs else 0
+    luts = []
+    for qv in query_vecs:
+        q = [float(x) for x in qv]
+        if len(q) != len(subs) * dsub:
+            raise ValueError(
+                f"query dim {len(q)} does not match codebook dim {len(subs) * dsub}"
+            )
+        lut = []
+        for i, b in enumerate(subs):
+            sub = q[i * dsub : (i + 1) * dsub]
+            dists = [_l2(b[c], sub) for c in range(len(b))]
+            lut.append([d * d for d in dists])
+        luts.append(lut)
+    return luts
+
+
+def _adc_distance(lut: list[list[float]]) -> Column:
+    """One query's approximate distance over the wide code row
+    (c0..c{M-1}): Σ_m element_at(<LUT_m literal>, c_m + 1), summed
+    left to right like the oracles' `l0.d + l1.d + …`."""
+    score = None
+    for i, vals in enumerate(lut):
+        term = F.element_at(F.array(*[F.lit(v) for v in vals]), F.col(f"c{i}") + 1)
+        score = term if score is None else score + term
+    return score
+
+
+def _adc_topk(
+    codes: DataFrame, dist: Column, k: int, id_col: str, round_to: int | None
+) -> DataFrame:
+    """(id, approx_dist), the k smallest, ties by id."""
+    if round_to is not None:
+        dist = det_round(dist, round_to)
+    return (
+        codes.select(F.col(id_col), dist.alias("approx_dist"))
+        .orderBy(F.asc("approx_dist"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 def ann_pq_adc_topk(
     emb: DataFrame,
     codes: DataFrame,
     query_vec: Sequence[float],
     k: int,
     id_col: str = "vec_id",
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    stride: int = PQ_STRIDE,
     round_to: int | None = None,
     codebook: DataFrame | None = None,
-    literal_lut: bool = False,
 ) -> DataFrame:
     """PQ QUERY path (FAISS `IndexPQ.search`): asymmetric distance —
     approx ||q - x||² = Σ_m ||q_m - cb[m, code_m(x)]||² — computed
-    entirely from the code table. The per-sub-space lookup tables are
-    KS-row broadcast DataFrames derived in-plan from the codebook, so
-    the executed plan is: narrow scan of (id, c0..c{M-1}) + M
-    broadcast hash joins (map-side, zero shuffle) + a projection sum +
-    TakeOrderedAndProject — no vector is read at query time. Returns
-    (id, approx_dist) ascending.
+    entirely from the code table. The lookup tables come from
+    `adc_luts` (one collect of the codebook, the tables computed in the
+    driver, exactly FAISS's query flow), so the executed plan is one
+    narrow scan of (id, c0..c{M-1}) + a projection of literal
+    `element_at` sums + TakeOrderedAndProject — no join, no shuffle,
+    no vector read. Returns (id, approx_dist) ascending.
 
-    literal_lut=True is the serving fast path and exactly what FAISS
-    does on a query: the codebook (m·ks rows — driver-sized by
-    construction, like the SQ8 bounds) is collected ONCE, the M×KS
-    distance LUT is computed on the driver with the identical
-    left-to-right double arithmetic the in-plan expression uses
-    (fold (x−y)², sqrt, square — bit-equal results), and scoring
-    becomes `element_at(<literal array>, code+1)` sums: ONE narrow
-    scan of the code table, zero joins, zero extra jobs. Requires an
-    explicit `codebook` (a persisted trained table); the in-plan
-    derivation path keeps the joins so the untrained/ad-hoc flow
-    stays collect-free."""
-    import math
-
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
-
-    dim = len(query_vec)
-    dsub = dim // m
-    if literal_lut:
-        if codebook is None:
-            raise ValueError("literal_lut requires a persisted codebook")
-        luts: dict[int, dict[int, list[float]]] = {}
-        for r in codebook.collect():
-            luts.setdefault(r["m"], {})[r["code"]] = r["cv"]
-        score = None
-        for i in range(m):
-            qsub = [float(x) for x in query_vec[i * dsub : (i + 1) * dsub]]
-            lut = luts[i]
-            vals = []
-            for code in range(len(lut)):
-                s = 0.0
-                for x, y in zip(lut[code], qsub):
-                    s = s + (x - y) * (x - y)
-                d = math.sqrt(s)
-                vals.append(d * d)
-            term = F.element_at(
-                F.array(*[F.lit(v) for v in vals]), F.col(f"c{i}") + 1
-            )
-            score = term if score is None else score + term
-        if round_to is not None:
-            score = det_round(score, round_to)
-        return (
-            codes.select(F.col(id_col), score.alias("approx_dist"))
-            .orderBy(F.asc("approx_dist"), F.asc(id_col))
-            .limit(k)
-        )
-    cb = (
-        codebook
-        if codebook is not None
-        else pq_codebook(emb, id_col, "embedding", dim, m, ks, stride)
-    )
-    out = codes
-    for i in range(m):
-        qsub = lit_vec([float(x) for x in query_vec[i * dsub : (i + 1) * dsub]])
-        d = l2_dist("cv", qsub)
-        lut = cb.filter(F.col("m") == i).select(
-            F.col("code").alias(f"__code{i}"), (d * d).alias(f"__d{i}")
-        )
-        out = out.join(F.broadcast(lut), out[f"c{i}"] == lut[f"__code{i}"]).drop(
-            f"__code{i}"
-        )
-    score = F.col("__d0")
-    for i in range(1, m):
-        score = score + F.col(f"__d{i}")  # fixed left-to-right order, oracle-identical
-    if round_to is not None:
-        score = det_round(score, round_to)
-    return (
-        out.select(F.col(id_col), score.alias("approx_dist"))
-        .orderBy(F.asc("approx_dist"), F.asc(id_col))
-        .limit(k)
-    )
+    `codebook` is the (m, code, cv) table the codes were encoded with
+    (e.g. a persisted trained one); None means the stride codebook of
+    `emb` (pq_codebook at the query's width)."""
+    _check_k(k)
+    if codebook is None:
+        codebook = pq_codebook(emb, id_col, dim=len(query_vec))
+    (lut,) = adc_luts(codebook, [query_vec])
+    return _adc_topk(codes, _adc_distance(lut), k, id_col, round_to)
 
 
 PQ_RERANK_SHORTLIST = 200
@@ -1018,13 +1063,9 @@ def ann_pq_rerank_topk(
     shortlist: int = PQ_RERANK_SHORTLIST,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    stride: int = PQ_STRIDE,
     round_to: int | None = None,
     shortlist_round_to: int | None = None,
     codebook: DataFrame | None = None,
-    literal_lut: bool = False,
 ) -> DataFrame:
     """Two-stage PQ serving (the standard ADC deployment shape, FAISS
     `IndexPQ.search` + refine / IndexRefineFlat): stage 1 shortlists
@@ -1047,20 +1088,11 @@ def ann_pq_rerank_topk(
     """
     from multi_search_retrival_big_data_spark.functions.vector import l2_dist
 
+    _check_k(k)
     if shortlist_round_to is None:
         shortlist_round_to = round_to
     short = ann_pq_adc_topk(
-        emb,
-        codes,
-        query_vec,
-        k=shortlist,
-        id_col=id_col,
-        m=m,
-        ks=ks,
-        stride=stride,
-        round_to=shortlist_round_to,
-        codebook=codebook,
-        literal_lut=literal_lut,
+        emb, codes, query_vec, shortlist, id_col, shortlist_round_to, codebook
     ).select(id_col)
     d = l2_dist(vec_col, lit_vec(query_vec))
     if round_to is not None:
@@ -1127,125 +1159,32 @@ def ann_ivfpq_adc_topk(
     k: int,
     nprobe: int = IVFPQ_NPROBE,
     id_col: str = "vec_id",
-    m: int = PQ_M,
     round_to: int | None = None,
-    literal_lut: bool = False,
     subset: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-PQ QUERY path: probe the nprobe nearest centroids (a scan of
-    the k-row centroid table), prune the code table to those cells
-    (partition pruning at rest), then ADC with PER-CELL lookup tables —
-    each probed cell's LUT is built in-plan from the RESIDUAL query
-    (q − centroid) against the broadcast codebook (nprobe·M·KS rows),
-    and candidates join their cell's LUT on (cid, code). No vector is
-    read at query time; returns (id, approx_dist) ascending.
-
-    literal_lut=True is the serving fast path (exactly FAISS's query
-    flow): the centroid table (nlist rows) and codebook (m·ks rows) —
-    both driver-sized model state by construction — are collected
-    once; probe selection, residual queries and the nprobe·M·KS
-    distance LUT are computed on the driver with the identical IEEE
-    double arithmetic the in-plan expressions use; scoring becomes a
-    STATIC `cid IN (probes)` filter (static partition pruning on the
-    cid-partitioned code table — the planner prunes before launch,
-    no runtime subquery) plus per-cell when-chained `element_at`
-    literal lookups: one narrow scan, zero joins.
+    """IVF-PQ QUERY path (FAISS IndexIVFPQ.search): `elect_cells` picks
+    the nprobe nearest centroids from the collected centroid table,
+    `adc_luts` builds each probed cell's lookup tables from the
+    RESIDUAL query (q − centroid) against the collected codebook, and
+    the plan is one narrow scan of the code table pruned by a STATIC
+    `cid IN (probes)` partition filter (the planner prunes before
+    launch, no runtime subquery), scored by a per-cell CASE over the
+    cells' literal `element_at` sums — no join, no vector read.
+    Returns (id, approx_dist) ascending.
 
     `subset` (an allowed-id DataFrame) makes this the FILTERED IVFPQ
     search: the semi-join applies AFTER the cell prune and BEFORE the
     ADC score, same placement as ann_pq_filtered_topk / the IVF
     subset — every quantized serving path has a filtered mode."""
-    import math
-
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist
-
-    q = lit_vec(query_vec)
-    dim = len(query_vec)
-    dsub = dim // m
-    if literal_lut:
-        qd = [float(x) for x in query_vec]
-
-        def _fold_sq(a: Sequence[float], b: Sequence[float]) -> float:
-            s = 0.0
-            for x, y in zip(a, b):
-                s = s + (x - y) * (x - y)
-            return s
-
-        cents = {int(r["cid"]): [float(x) for x in r["cv"]] for r in cents_table.collect()}
-        ranked = sorted((math.sqrt(_fold_sq(cv, qd)), cid) for cid, cv in cents.items())
-        probe_cids = [cid for _d, cid in ranked[:nprobe]]
-        books: dict[int, dict[int, list[float]]] = {}
-        for r in codebook.collect():
-            books.setdefault(r["m"], {})[r["code"]] = [float(x) for x in r["cv"]]
-        cell_luts: list[tuple[int, list[list[float]]]] = []
-        for cid in probe_cids:
-            qr = [a - b for a, b in zip(qd, cents[cid])]
-            arrs = []
-            for i in range(m):
-                sub = qr[i * dsub : (i + 1) * dsub]
-                lut = books[i]
-                vals = []
-                for code in range(len(lut)):
-                    d = math.sqrt(_fold_sq(sub, lut[code]))
-                    vals.append(d * d)
-                arrs.append(vals)
-            cell_luts.append((cid, arrs))
-        out = dense.restrict_ids(
-            codes.filter(F.col("cid").isin(probe_cids)), subset, id_col
-        )
-        score = None
-        for i in range(m):
-            chain = None
-            for cid, arrs in cell_luts:
-                t = F.element_at(
-                    F.array(*[F.lit(v) for v in arrs[i]]), F.col(f"c{i}") + 1
-                )
-                cond = F.col("cid") == cid
-                chain = F.when(cond, t) if chain is None else chain.when(cond, t)
-            score = chain if score is None else score + chain
-        if round_to is not None:
-            score = det_round(score, round_to)
-        return (
-            out.select(F.col(id_col), score.alias("approx_dist"))
-            .orderBy(F.asc("approx_dist"), F.asc(id_col))
-            .limit(k)
-        )
-    probed = (
-        cents_table.select("cid", "cv", l2_dist("cv", q).alias("__d"))
-        .orderBy(F.asc("__d"), F.asc("cid"))
-        .limit(nprobe)
-    )
-    qres = probed.select(
-        "cid", F.zip_with(q, F.col("cv").cast("array<double>"), lambda a, b: a - b).alias("__qr")
-    )
-    luts = qres.join(F.broadcast(codebook), F.lit(True))
-    out = dense.restrict_ids(
-        codes.join(F.broadcast(probed.select("cid")), "cid"), subset, id_col
-    )
-    for i in range(m):
-        d = l2_dist(F.slice("__qr", i * dsub + 1, dsub), "cv")
-        lut_i = (
-            luts.filter(F.col("m") == i)
-            .select(
-                F.col("cid").alias(f"__cid{i}"),
-                F.col("code").alias(f"__code{i}"),
-                (d * d).alias(f"__d{i}"),
-            )
-        )
-        out = out.join(
-            F.broadcast(lut_i),
-            (out["cid"] == lut_i[f"__cid{i}"]) & (out[f"c{i}"] == lut_i[f"__code{i}"]),
-        ).drop(f"__cid{i}", f"__code{i}")
-    score = F.col("__d0")
-    for i in range(1, m):
-        score = score + F.col(f"__d{i}")  # fixed fold order, oracle-identical
-    if round_to is not None:
-        score = det_round(score, round_to)
-    return (
-        out.select(F.col(id_col), score.alias("approx_dist"))
-        .orderBy(F.asc("approx_dist"), F.asc(id_col))
-        .limit(k)
-    )
+    _check_k(k)
+    model, (probe,) = elect_cells(cents_table, [query_vec], nprobe)
+    q = [float(x) for x in query_vec]
+    luts = adc_luts(codebook, [[a - b for a, b in zip(q, model[c])] for c in probe])
+    dist = F.lit(None).cast("double")
+    for cid, lut in zip(probe, luts):
+        dist = F.when(F.col("cid") == cid, _adc_distance(lut)).otherwise(dist)
+    cells = dense.restrict_ids(codes.filter(F.col("cid").isin(probe)), subset, id_col)
+    return _adc_topk(cells, dist, k, id_col, round_to)
 
 
 # ---------------------------------------------------------------------------
@@ -1348,125 +1287,36 @@ def ann_sq8_topk(
 def batch_pq_adc_topk(
     emb: DataFrame,
     codes: DataFrame,
-    queries: DataFrame,
+    queries: Sequence[tuple[int, Sequence[float]]],
     k: int,
     id_col: str = "vec_id",
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    stride: int = PQ_STRIDE,
     round_to: int | None = None,
     codebook: DataFrame | None = None,
-    literal_lut: bool = False,
 ) -> DataFrame:
     """Batched multi-query PQ/ADC top-k — the serving-amortization
     shape (like dense.batch_topk_cosine / sparse.batch_tfidf_score)
-    applied to the code table: ALL queries' sub-space lookup tables are
-    built in one broadcast (|queries|·M·KS rows — request-sized ×
-    model-sized), the M-byte code table is scanned ONCE for the whole
-    batch, and the per-query top-k is a window partial sort. Returns
-    (query_id, id, approx_dist), k rows per query, ascending.
+    applied to the code table. `queries` is the request batch
+    [(query_id, qvec), ...] (driver-sized, like FAISS's query matrix —
+    IndexPQ.search takes a matrix and reuses the scan;
+    faiss_processing.py:307-314 batches its feedback searches).
 
-    `queries` is (query_id, qvec). FAISS batches exactly this way —
-    IndexPQ.search takes a query MATRIX and reuses the scan
-    (faiss_processing.py:307-314 batches its feedback searches).
-
-    literal_lut=True: the batch variant of the serving fast path —
-    codebook AND query batch (both driver-sized: model state and the
-    request) are collected once, each query's LUT becomes literal
-    element_at arrays, and one code-table scan explodes an
-    array-of-structs into (query_id, approx_dist) rows: zero joins,
-    no |codes|×|batch| pre-scoring cross join, same window top-k."""
-    import math
-
-    from pyspark.sql.window import Window
-
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist
-
-    qid, qvec = queries.columns[0], queries.columns[1]
-    if literal_lut:
-        if codebook is None:
-            raise ValueError("literal_lut requires a persisted codebook")
-        books: dict[int, dict[int, list[float]]] = {}
-        for r in codebook.collect():
-            books.setdefault(r["m"], {})[r["code"]] = [float(x) for x in r["cv"]]
-        structs = []
-        for r in queries.collect():
-            qv = [float(x) for x in r[qvec]]
-            dsub = len(qv) // m
-            score = None
-            for i in range(m):
-                sub = qv[i * dsub : (i + 1) * dsub]
-                lut = books[i]
-                vals = []
-                for code in range(len(lut)):
-                    s = 0.0
-                    for x, y in zip(sub, lut[code]):
-                        s = s + (x - y) * (x - y)
-                    d = math.sqrt(s)
-                    vals.append(d * d)
-                term = F.element_at(
-                    F.array(*[F.lit(v) for v in vals]), F.col(f"c{i}") + 1
-                )
-                score = term if score is None else score + term
-            if round_to is not None:
-                score = det_round(score, round_to)
-            structs.append(
-                F.struct(
-                    F.lit(r[qid]).alias("query_id"), score.alias("approx_dist")
-                )
-            )
-        scored = codes.select(
-            F.col(id_col), F.explode(F.array(*structs)).alias("__s")
-        ).select("__s.query_id", id_col, "__s.approx_dist")
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("approx_dist"), F.asc(id_col)
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-            .orderBy("query_id", F.asc("approx_dist"), F.asc(id_col))
-        )
-    cb = (
-        codebook
-        if codebook is not None
-        else pq_codebook(emb, id_col, "embedding", 64, m, ks, stride)
-    )
-    dsub_expr = F.size(F.col("cv"))  # sub-centroid length = dim/M
-    # per-(query, m, code) LUT: slice the query at m·dsub+1 in-plan
-    d = l2_dist(
-        F.slice(
-            F.col(qvec).cast("array<double>"),
-            F.col("m") * dsub_expr + F.lit(1),
-            dsub_expr,
-        ),
-        "cv",
-    )
-    luts = (
-        queries.crossJoin(cb)
-        .select(F.col(qid).alias("query_id"), "m", "code", (d * d).alias("__d"))
-    )
-    out = codes.crossJoin(F.broadcast(queries.select(F.col(qid).alias("query_id"))))
-    for i in range(m):
-        lut_i = luts.filter(F.col("m") == i).select(
-            F.col("query_id").alias(f"__q{i}"),
-            F.col("code").alias(f"__code{i}"),
-            F.col("__d").alias(f"__d{i}"),
-        )
-        out = out.join(
-            F.broadcast(lut_i),
-            (out["query_id"] == lut_i[f"__q{i}"]) & (out[f"c{i}"] == lut_i[f"__code{i}"]),
-        ).drop(f"__q{i}", f"__code{i}")
-    score = F.col("__d0")
-    for i in range(1, m):
-        score = score + F.col(f"__d{i}")  # fixed fold order, oracle-identical
-    if round_to is not None:
-        score = det_round(score, round_to)
-    scored = out.select("query_id", F.col(id_col), score.alias("approx_dist"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("approx_dist"), F.asc(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-        .orderBy("query_id", F.asc("approx_dist"), F.asc(id_col))
-    )
+    `adc_luts` builds every query's lookup tables from one collect of
+    the codebook; ONE scan of the M-byte code table explodes an
+    array of (query_id, approx_dist) structs per row — no join, no
+    |codes|×|batch| cross join — and the per-query top-k is a window
+    partial sort. `codebook=None` means the stride codebook of `emb`.
+    Returns (query_id, id, approx_dist), k rows per query, ascending."""
+    _check_k(k)
+    if codebook is None:
+        codebook = pq_codebook(emb, id_col, dim=len(queries[0][1]))
+    luts = adc_luts(codebook, [qv for _, qv in queries])
+    structs = []
+    for (qid, _), lut in zip(queries, luts):
+        dist = _adc_distance(lut)
+        if round_to is not None:
+            dist = det_round(dist, round_to)
+        structs.append(F.struct(F.lit(qid).alias("query_id"), dist.alias("approx_dist")))
+    scored = codes.select(
+        F.col(id_col), F.explode(F.array(*structs)).alias("__s")
+    ).select("__s.query_id", id_col, "__s.approx_dist")
+    return _per_query_topk(scored, k, F.asc("approx_dist"), F.asc(id_col))

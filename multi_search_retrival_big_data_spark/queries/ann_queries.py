@@ -517,18 +517,12 @@ def ann_ivf_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load(spark, "embeddings", sf_dir)
     assign = index_store.ivf_assignments(spark, sf_dir)
     exact = dense.topk_cosine(emb, QUERY_VEC, k=_RECALL_K, round_to=6).select("vec_id")
-
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
+    _, (ranked,) = ann.elect_cells(
+        ann.centroids(emb, stride=_STRIDE), [QUERY_VEC], max(_IVF_GRID_NPROBE), "__cv"
+    )
 
     def cfg_row(nprobe: int) -> DataFrame:
-        probed = (
-            ann.centroids(emb, stride=_STRIDE)
-            .select("cid", l2_dist("__cv", lit_vec(QUERY_VEC)).alias("__d"))
-            .orderBy(F.asc("__d"), F.asc("cid"))
-            .limit(nprobe)
-            .select("cid")
-        )
-        cand = assign.join(F.broadcast(probed), "cid")
+        cand = assign.filter(F.col("cid").isin(ranked[:nprobe]))
         n_cand = cand.agg(F.count("*").alias("candidates"))
         topk = ann.ann_ivf_topk(
             emb, QUERY_VEC, k=_RECALL_K, nprobe=nprobe, round_to=6, assign=assign
@@ -653,16 +647,14 @@ def _pq_ctes(stride: int = _PQ_STRIDE) -> str:
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ/ADC top-k (ann.ann_pq_adc_topk over the persisted
     index_store.pq_codes table): the query answers from M code bytes
-    per vector — narrow code scan + M broadcast LUT joins + projection
-    sum + TakeOrderedAndProject; no vector IO, no shuffle. The third
+    per vector — narrow code scan + a projection of literal lookup-table
+    sums (ann.adc_luts, built in the driver) + TakeOrderedAndProject;
+    no join, no vector IO, no shuffle. The third
     ANN scale path after hyperplane LSH and IVF (FAISS IndexPQ;
     the reference stays exact-flat, faiss_processing.py:17-22)."""
     emb = tables.load(spark, "embeddings", sf_dir)
     codes = index_store.pq_codes(spark, sf_dir)
-    return ann.ann_pq_adc_topk(
-        emb, codes, QUERY_VEC, k=_PQ_K, round_to=6,
-        codebook=ann.pq_codebook(emb), literal_lut=True,
-    )
+    return ann.ann_pq_adc_topk(emb, codes, QUERY_VEC, k=_PQ_K, round_to=6)
 
 
 @query(
@@ -691,10 +683,7 @@ def ann_pq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = index_store.pq_codes(spark, sf_dir)
     allowed = emb.filter(F.col("label") % 3 == 0).select("vec_id")
     codes_f = codes.join(allowed, "vec_id", "left_semi")
-    return ann.ann_pq_adc_topk(
-        emb, codes_f, QUERY_VEC, k=_PQ_K, round_to=6,
-        codebook=ann.pq_codebook(emb), literal_lut=True,
-    )
+    return ann.ann_pq_adc_topk(emb, codes_f, QUERY_VEC, k=_PQ_K, round_to=6)
 
 
 @query(
@@ -891,8 +880,7 @@ def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load(spark, "embeddings", sf_dir)
     codes = index_store.pq_codes(spark, sf_dir)
     return ann.ann_pq_rerank_topk(
-        emb, codes, QUERY_VEC, k=_PQ_RERANK_K, shortlist=_PQ_RERANK_R, round_to=6,
-        codebook=ann.pq_codebook(emb), literal_lut=True,
+        emb, codes, QUERY_VEC, k=_PQ_RERANK_K, shortlist=_PQ_RERANK_R, round_to=6
     )
 
 
@@ -1021,21 +1009,13 @@ def ann_ivf_trained_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     because every Lloyd step is engine-portable — see
     operators/kmeans.py) and doubles as a staleness check on the
     stored model."""
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
-
     emb = tables.load(spark, "embeddings", sf_dir)
     cent_df, assign = index_store.ivf_trained(spark, sf_dir, iters=_KM_ITERS)
     exact = dense.topk_cosine(emb, QUERY_VEC, k=_RECALL_K, round_to=6).select("vec_id")
-    score = None
+    _, (ranked,) = ann.elect_cells(cent_df, [QUERY_VEC], max(_IVF_GRID_NPROBE))
 
     def cfg_row(nprobe: int) -> DataFrame:
-        probed = (
-            cent_df.select("cid", l2_dist("cv", lit_vec(QUERY_VEC)).alias("__d"))
-            .orderBy(F.asc("__d"), F.asc("cid"))
-            .limit(nprobe)
-            .select("cid")
-        )
-        cand = assign.join(F.broadcast(probed), "cid")
+        cand = assign.filter(F.col("cid").isin(ranked[:nprobe]))
         n_cand = cand.agg(F.count(F.lit(1)).alias("candidates"))
         # vectors are co-located in the pruned inverted-list partitions —
         # rank them directly, no second corpus scan
@@ -1148,7 +1128,7 @@ def ann_pq_trained_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def cfg_row(r: int) -> DataFrame:
         reranked = ann.ann_pq_rerank_topk(
-            emb, codes, QUERY_VEC, k=_PQ_RERANK_K, shortlist=r, m=_PQT_M,
+            emb, codes, QUERY_VEC, k=_PQ_RERANK_K, shortlist=r,
             round_to=None, shortlist_round_to=6, codebook=book_df,
         ).select("vec_id")
         return grid_row(_PQ_RERANK_K, grid_hits(reranked, exact), shortlist=r)
@@ -1448,16 +1428,17 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-k (FAISS IndexIVFPQ.search): probe nprobe trained
     cells, score their members from the RESIDUAL code table alone via
     per-cell ADC lookup tables (ann.ann_ivfpq_adc_topk over the
-    persisted index_store.ivfpq tables). The plan reads the k-row
-    centroid table + the probed partitions of the M-byte code table —
-    no vector IO; cells compose with codes exactly as in Jégou et al.
-    TPAMI'11 §IV. Oracle re-derives coarse training, residuals,
-    residual-PQ training, encode and the per-cell LUTs from the raw
-    corpus — full hash-match."""
+    persisted index_store.ivfpq tables). The cells are elected and the
+    tables built in the driver (ann.elect_cells, ann.adc_luts); the
+    plan reads only the statically pruned partitions of the M-byte
+    code table — no join, no vector IO; cells compose with codes
+    exactly as in Jégou et al. TPAMI'11 §IV. Oracle re-derives coarse
+    training, residuals, residual-PQ training, encode and the per-cell
+    LUTs from the raw corpus — full hash-match."""
     cents_t, book_t, codes_t = index_store.ivfpq(spark, sf_dir, iters=_KM_ITERS)
     return ann.ann_ivfpq_adc_topk(
         codes_t, cents_t, book_t, QUERY_VEC, k=_IVFPQ_K,
-        nprobe=_IVFPQ_NPROBE, round_to=6, literal_lut=True,
+        nprobe=_IVFPQ_NPROBE, round_to=6,
     )
 
 
@@ -1641,7 +1622,7 @@ def ann_pq_rerank_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     book_df, codes = index_store.pq_trained(spark, sf_dir, iters=_KM_ITERS)
     return ann.ann_pq_rerank_topk(
         emb, codes, QUERY_VEC, k=_PQ_RERANK_K, shortlist=_PQ_RERANK_R,
-        m=_PQT_M, round_to=6, codebook=book_df, literal_lut=True,
+        round_to=6, codebook=book_df,
     )
 
 
@@ -1697,21 +1678,15 @@ def _pq_adc_b_ctes() -> str:
 )
 def ann_pq_batch_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched multi-query PQ/ADC (ann.batch_pq_adc_topk): both query
-    vectors' lookup tables broadcast together, ONE scan of the
+    vectors' lookup tables built in the driver as literals, ONE scan of the
     persisted code table for the whole batch, per-query top-{k} via a
     window partial sort — completing the batched-serving trio (dense
     and sparse batch paths measured 2.3-2.7× amortization in r2; the
     code-table scan is even cheaper to amortize)."""
     emb = tables.load(spark, "embeddings", sf_dir)
     codes = index_store.pq_codes(spark, sf_dir)
-    qdf = tables.local_frame(
-        spark,
-        [(0, [float(x) for x in QUERY_VEC]), (1, [float(x) for x in QUERY_VEC_B])],
-        "query_id INT, qvec ARRAY<DOUBLE>",
-    )
     return ann.batch_pq_adc_topk(
-        emb, codes, qdf, k=_BATCH_ADC_K, round_to=6,
-        codebook=ann.pq_codebook(emb), literal_lut=True,
+        emb, codes, [(0, QUERY_VEC), (1, QUERY_VEC_B)], k=_BATCH_ADC_K, round_to=6
     )
 
 
@@ -1916,13 +1891,8 @@ def ann_incremental_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("vec_id").alias("cid"), F.col("embedding").alias("__cv"))
 
     def arm(model: str, assign_df: DataFrame, cent_df: DataFrame) -> DataFrame:
-        probed = (
-            cent_df.select("cid", l2_dist("__cv", qv).alias("__d"))
-            .orderBy(F.asc("__d"), F.asc("cid"))
-            .limit(_DRIFT_NPROBE)
-            .select("cid")
-        )
-        cand = assign_df.join(F.broadcast(probed), "cid")
+        _, (probe,) = ann.elect_cells(cent_df, [_DRIFT_QV], _DRIFT_NPROBE, "__cv")
+        cand = assign_df.filter(F.col("cid").isin(probe))
         n_cand = cand.agg(F.count(F.lit(1)).alias("candidates"))
         topk = (
             cand.select("vec_id", l2_dist("embedding", qv).alias("__d"))
@@ -2029,10 +1999,11 @@ def ann_ivf_filtered_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollout gate must measure the interaction, not the unfiltered
     sweep. Same plan shape per cell as ann_ivf_filtered_topk: semi-join
     AFTER the cell prune, BEFORE the rank."""
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
-
     emb = tables.load(spark, "embeddings", sf_dir)
     assign = index_store.ivf_assignments(spark, sf_dir)
+    _, (ranked,) = ann.elect_cells(
+        ann.centroids(emb, stride=_STRIDE), [QUERY_VEC], max(_IVFF_NPROBE), "__cv"
+    )
     out = []
     for sel, mod in _IVFF_SELS:
         allowed = emb.filter(F.col("label") % mod == 0).select("vec_id")
@@ -2045,14 +2016,7 @@ def ann_ivf_filtered_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("vec_id")
         )
         for nprobe in _IVFF_NPROBE:
-            probed = (
-                ann.centroids(emb, stride=_STRIDE)
-                .select("cid", l2_dist("__cv", lit_vec(QUERY_VEC)).alias("__d"))
-                .orderBy(F.asc("__d"), F.asc("cid"))
-                .limit(nprobe)
-                .select("cid")
-            )
-            cand = assign.join(F.broadcast(probed), "cid").join(
+            cand = assign.filter(F.col("cid").isin(ranked[:nprobe])).join(
                 allowed, "vec_id", "left_semi"
             )
             n_cand = cand.agg(F.count("*").alias("candidates"))
@@ -2269,7 +2233,7 @@ def ann_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowed = emb.filter(F.col("label") % 3 == 0).select("vec_id")
     return ann.ann_ivfpq_adc_topk(
         codes_t, cents_t, book_t, QUERY_VEC, k=_IVFPQ_K,
-        nprobe=_IVFPQ_NPROBE, round_to=6, literal_lut=True, subset=allowed,
+        nprobe=_IVFPQ_NPROBE, round_to=6, subset=allowed,
     )
 
 
@@ -2633,27 +2597,21 @@ def ann_ivf_d768_tuned_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan probes the persisted cid-partitioned lists."""
     import math as _math
 
-    from multi_search_retrival_big_data_spark.functions.vector import l2_dist, lit_vec
-
     wide = index_store.dim_corpus(spark, sf_dir, _D768)
     qv = _d768_qv()
     cents_df, assign = index_store.ivf_trained_dim(spark, sf_dir, _D768, iters=2)
     nlist = cents_df.count()
     exact = dense.topk_cosine(wide, qv, k=_D768_K, round_to=6).select("vec_id")
 
+    tuned = _math.ceil(ann.ivf_nprobe_frac(_D768) * nlist)
+    _, (ranked,) = ann.elect_cells(cents_df, [qv], max(ann.IVF_NPROBE, tuned))
+
     def cfg_row(nprobe: int) -> DataFrame:
-        probed = (
-            cents_df.select("cid", l2_dist("cv", lit_vec(qv)).alias("__d"))
-            .orderBy(F.asc("__d"), F.asc("cid"))
-            .limit(nprobe)
-            .select("cid")
-        )
-        cand = assign.join(F.broadcast(probed), "cid")
+        cand = assign.filter(F.col("cid").isin(ranked[:nprobe]))
         n_cand = cand.agg(F.count(F.lit(1)).alias("candidates"))
         topk = dense.topk_cosine(cand, qv, k=_D768_K, round_to=6)
         return grid_row(_D768_K, grid_hits(topk, exact), n_cand, nprobe=nprobe)
 
-    tuned = _math.ceil(ann.ivf_nprobe_frac(_D768) * nlist)
     return union_rows([cfg_row(ann.IVF_NPROBE), cfg_row(tuned)]).orderBy("nprobe")
 
 

@@ -158,8 +158,8 @@ def test_lsh_recall_grid_monotone_in_bands(spark, sf_dir):
 def test_ivf_query_plan_has_no_quantizer_recompute(spark, sf_dir):
     """With precomputed inverted lists the executed query plan must
     not re-run the coarse-quantizer assignment (corpus × centroids
-    argmin = a per-vec_id row_number window). The only windows/joins
-    allowed are the nprobe probe + pruned candidate join."""
+    argmin = a per-vec_id row_number window): the cells are elected in
+    the driver and the plan only reads their pruned partitions."""
     from multi_search_retrival_big_data_spark import index_store, tables
     from multi_search_retrival_big_data_spark.operators import ann
 
@@ -224,11 +224,11 @@ def test_pq_adc_no_shuffle_and_reads_code_table(spark, sf_dir):
     codes = index_store.pq_codes(spark, sf_dir)
     df = ann.ann_pq_adc_topk(emb, codes, QUERY_VEC, k=10, round_to=6)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "msrbd_pq" in plan           # reads the persisted code table
-    assert "BroadcastHashJoin" in plan  # LUTs arrive by broadcast
-    # the only acceptable exchange is the broadcast itself — no
-    # hash-partition shuffle anywhere in the ADC path
-    assert "hashpartitioning" not in plan
+    assert "msrbd_pq" in plan    # reads the persisted code table
+    assert "element_at([" in plan  # LUTs arrive as driver-built literals
+    # no join and no exchange anywhere in the ADC path
+    assert "Join" not in plan
+    assert "Exchange" not in plan
 
 
 def test_ivfpq_residuals_reconstruct(spark):
@@ -310,96 +310,12 @@ def test_batch_pq_adc_matches_single_query(spark, sf_dir):
 
     emb = _tables.load(spark, "embeddings", sf_dir)
     codes = index_store.pq_codes(spark, sf_dir)
-    qdf = spark.createDataFrame(
-        [(0, [float(x) for x in QUERY_VEC]), (1, [float(x) for x in QUERY_VEC_B])],
-        "query_id INT, qvec ARRAY<DOUBLE>",
-    )
-    batch = _ann.batch_pq_adc_topk(emb, codes, qdf, k=10, round_to=6).collect()
+    queries = [(0, QUERY_VEC), (1, QUERY_VEC_B)]
+    batch = _ann.batch_pq_adc_topk(emb, codes, queries, k=10, round_to=6).collect()
     for qi, qv in ((0, QUERY_VEC), (1, QUERY_VEC_B)):
         single = _ann.ann_pq_adc_topk(emb, codes, qv, k=10, round_to=6).collect()
         got = [(r["vec_id"], r["approx_dist"]) for r in batch if r["query_id"] == qi]
         assert got == [(r["vec_id"], r["approx_dist"]) for r in single]
-
-
-@pytest.mark.slow
-def test_literal_lut_matches_join_path(spark, sf_dir):
-    """The serving fast path (driver-collected codebook -> literal
-    element_at LUTs, zero joins) must reproduce the join-LUT plan's
-    output bit-for-bit — the LUT entries are computed with the same
-    left-to-right double arithmetic as the in-plan expression."""
-    from multi_search_retrival_big_data_spark import index_store
-
-    book, codes = index_store.pq_trained(spark, sf_dir, iters=2)
-    emb = tables.load(spark, "embeddings", sf_dir)
-    kw = dict(k=20, shortlist=60, m=ann.PQT_M, round_to=None, codebook=book)
-    joins = ann.ann_pq_rerank_topk(emb, codes, QUERY_VEC, **kw).collect()
-    lits = ann.ann_pq_rerank_topk(
-        emb, codes, QUERY_VEC, literal_lut=True, **kw
-    ).collect()
-    assert [(r["vec_id"], r["dist"]) for r in lits] == [
-        (r["vec_id"], r["dist"]) for r in joins
-    ]
-    # zero joins in the fast path's shortlist stage
-    plan = (
-        ann.ann_pq_adc_topk(
-            emb, codes, QUERY_VEC, k=60, m=ann.PQT_M,
-            codebook=book, literal_lut=True,
-        )._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Join" not in plan
-
-
-def test_literal_lut_requires_codebook(spark, sf_dir):
-    emb = tables.load(spark, "embeddings", sf_dir)
-    with pytest.raises(ValueError, match="persisted codebook"):
-        ann.ann_pq_adc_topk(emb, emb, QUERY_VEC, k=5, literal_lut=True)
-
-
-def test_ivfpq_literal_lut_matches_join_path(spark, sf_dir):
-    """The IVFPQ serving fast path (driver-side probe selection +
-    per-cell literal LUTs + static cid IN partition filter) must
-    reproduce the join-LUT plan's output bit-for-bit."""
-    from multi_search_retrival_big_data_spark import index_store
-
-    cents_t, book_t, codes_t = index_store.ivfpq(spark, sf_dir, iters=2)
-    kw = dict(k=30, nprobe=2, round_to=None)
-    joins = ann.ann_ivfpq_adc_topk(
-        codes_t, cents_t, book_t, QUERY_VEC, **kw
-    ).collect()
-    lits_df = ann.ann_ivfpq_adc_topk(
-        codes_t, cents_t, book_t, QUERY_VEC, literal_lut=True, **kw
-    )
-    lits = lits_df.collect()
-    assert [(r["vec_id"], r["approx_dist"]) for r in lits] == [
-        (r["vec_id"], r["approx_dist"]) for r in joins
-    ]
-    plan = lits_df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert "PartitionFilters: [cid" in plan  # static prune, no runtime subquery
-
-
-def test_batch_literal_lut_matches_join_path(spark, sf_dir):
-    emb = tables.load(spark, "embeddings", sf_dir)
-    from multi_search_retrival_big_data_spark import index_store
-    from multi_search_retrival_big_data_spark.queries.common import (
-        QUERY_VEC_B,
-    )
-
-    codes = index_store.pq_codes(spark, sf_dir)
-    qdf = spark.createDataFrame(
-        [(0, [float(x) for x in QUERY_VEC]), (1, [float(x) for x in QUERY_VEC_B])],
-        "query_id INT, qvec ARRAY<DOUBLE>",
-    )
-    kw = dict(k=15, round_to=None)
-    joins = ann.batch_pq_adc_topk(emb, codes, qdf, **kw).collect()
-    lits_df = ann.batch_pq_adc_topk(
-        emb, codes, qdf, codebook=ann.pq_codebook(emb), literal_lut=True, **kw
-    )
-    lits = lits_df.collect()
-    key = lambda r: (r["query_id"], r["vec_id"], r["approx_dist"])  # noqa: E731
-    assert [key(r) for r in lits] == [key(r) for r in joins]
-    plan = lits_df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
 
 
 def test_multiprobe_values_hamming1():
@@ -914,3 +830,219 @@ def test_argmin_arrow_nonfinite_row_keeps_lowest_id(spark):
     )
     assert by_id[1] == [0] * 26
     assert by_id[3] == [1] * 26
+
+
+# ---- the one ADC lookup-table builder and the one cell election ---------
+
+
+def _duck_luts(book_rows, q, dsub) -> dict[tuple[int, int], float]:
+    """The oracles' ADC entry spelling, `list_distance(cv, q_m) *
+    list_distance(cv, q_m)`, per (m, code) of (m, code, cv) rows."""
+    ks = 1 + max(code for _, code, _ in book_rows)
+    rows = _duck_rows(
+        f"""SELECT c.vec_id // {ks} AS m, c.vec_id % {ks} AS code,
+                   list_distance(c.v, list_slice(q.v, m * {dsub} + 1, (m + 1) * {dsub}))
+                   * list_distance(c.v, list_slice(q.v, m * {dsub} + 1, (m + 1) * {dsub}))
+            FROM c, q""",
+        c=([m * ks + code for m, code, _ in book_rows], [cv for _, _, cv in book_rows]),
+        q=([0], [[float(x) for x in q]]),
+    )
+    return {(int(m), int(code)): d for m, code, d in rows}
+
+
+def _duck_adc_ranking(codes_rows, book_rows, q, dsub) -> list[tuple[int, float]]:
+    """Every code row's approximate distance as the oracles sum it
+    (`l0.d + l1.d + …` over per-sub-space LUT joins), ranked by
+    (distance, id)."""
+    m_count = 1 + max(m for m, _, _ in book_rows)
+    ks = 1 + max(code for _, code, _ in book_rows)
+    lut = (
+        f"SELECT c.vec_id // {ks} AS m, c.vec_id % {ks} AS code, "
+        f"list_distance(c.v, list_slice(q.v, m * {dsub} + 1, (m + 1) * {dsub})) "
+        f"* list_distance(c.v, list_slice(q.v, m * {dsub} + 1, (m + 1) * {dsub})) AS d "
+        "FROM c, q"
+    )
+    joins = " ".join(
+        f"JOIN lut l{i} ON l{i}.m = {i} AND l{i}.code = CAST(k.v[{i + 1}] AS INT)"
+        for i in range(m_count)
+    )
+    dist = " + ".join(f"l{i}.d" for i in range(m_count))
+    return _duck_rows(
+        f"""WITH lut AS ({lut})
+            SELECT k.vec_id, {dist} AS d FROM k {joins} ORDER BY d, k.vec_id""",
+        c=([m * ks + code for m, code, _ in book_rows], [cv for _, _, cv in book_rows]),
+        q=([0], [[float(x) for x in q]]),
+        k=([r[0] for r in codes_rows], [[float(c) for c in r[1:]] for r in codes_rows]),
+    )
+
+
+def test_adc_luts_and_elect_cells_match_duckdb(spark, sf_dir):
+    """`ann.adc_luts` and `ann.elect_cells` are bit-equal to the
+    oracles' spellings. Every LUT entry equals DuckDB's `list_distance
+    * list_distance` for the trained M=16 codebook and for a planted
+    book whose duplicate codewords tie, and ann_pq_adc_topk's full
+    ranking equals DuckDB's summed ADC, ties by id. The election equals
+    `ORDER BY list_distance(cv, q), cid LIMIT n` at every n, with
+    planted equal-distance cells (a duplicate and a mirrored pair) and
+    a NaN cell, which ranks last."""
+    from multi_search_retrival_big_data_spark import index_store
+
+    emb = tables.load(spark, "embeddings", sf_dir)
+    trained_book, trained_codes = index_store.pq_trained(spark, sf_dir)
+    row = [float(x) for x in emb.limit(1).collect()[0]["embedding"]]
+    tie_rows = []
+    for mi in range(4):
+        sub = row[mi * 16 : (mi + 1) * 16]
+        tie_rows += [
+            (mi, 0, [x + 0.5 for x in sub]),
+            (mi, 1, sub),
+            (mi, 2, sub),  # a duplicate codeword: equal LUT entries
+            (mi, 3, [-x for x in sub]),
+        ]
+    tie_book = tables.local_frame(spark, tie_rows, "m INT, code INT, cv ARRAY<DOUBLE>")
+    tie_codes = ann.pq_encode(emb, dim=EMB_DIM, m=4, ks=4, codebook=tie_book)
+    for book, codes, dsub in (
+        (trained_book, trained_codes, EMB_DIM // ann.PQT_M),
+        (tie_book, tie_codes, 16),
+    ):
+        book_rows = [(r.m, r.code, [float(x) for x in r.cv]) for r in book.collect()]
+        (lut,) = ann.adc_luts(book, [QUERY_VEC])
+        want = _duck_luts(book_rows, QUERY_VEC, dsub)
+        assert {(m, c): d for m, t in enumerate(lut) for c, d in enumerate(t)} == want
+        got = ann.ann_pq_adc_topk(emb, codes, QUERY_VEC, k=10**6, codebook=book)
+        ranking = [(r.vec_id, r.approx_dist) for r in got.collect()]
+        assert ranking == _duck_adc_ranking(
+            [tuple(r) for r in codes.collect()], book_rows, QUERY_VEC, dsub
+        )
+    # 4 codes × 4 sub-spaces: many rows share a code tuple, so the
+    # planted book's ranking holds equal distances, ordered by id
+    assert len({d for _, d in ranking}) < len(ranking)
+
+    ids, vecs = _ids_vecs(emb.limit(30))
+    q0 = vecs[0]
+    mirror = [[q0[0] + s * 0.125] + q0[1:] for s in (1.0, -1.0)]  # both at exactly 0.125
+    # the NaN cell comes first, so only a NaN-aware rank can move it last
+    cids = [1003] + ids + [1000, 1001, 1002]
+    cvs = [[float("nan")] + vecs[5][1:]] + vecs + [list(vecs[3]), mirror[0], mirror[1]]
+    cents = tables.local_frame(spark, list(zip(cids, cvs)), "cid BIGINT, cv ARRAY<DOUBLE>")
+    for q in (QUERY_VEC, q0):
+        for n in (1, 2, 3, 5, len(cids)):
+            _, (got,) = ann.elect_cells(cents, [q], n)
+            want = _duck_rows(
+                f"""SELECT c.vec_id FROM c, q
+                    ORDER BY list_distance(c.v, q.v), c.vec_id LIMIT {n}""",
+                c=(cids, cvs),
+                q=([0], [[float(x) for x in q]]),
+            )
+            assert got == [r[0] for r in want], (n, got)
+    _, (everything,) = ann.elect_cells(cents, [q0], len(cids))
+    assert everything[-1] == 1003  # NaN distance ranks last
+    assert everything.index(1001) == everything.index(1002) - 1  # mirrored tie by cid
+    assert everything.index(ids[3]) == everything.index(1000) - 1  # duplicate tie by cid
+
+
+def _plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_ivf_and_pq_scorers_plan_without_join(spark, sf_dir):
+    """With driver-built LUTs and cell elections, each IVF/PQ scorer's
+    plan reads its persisted code or assignment table with no Join and
+    no hash exchange — except the batch scorer's per-query top-k
+    window, keyed by query_id alone — and the IVF scorers read only
+    the elected cells through a static `cid IN (…)` partition filter."""
+    import re
+
+    from multi_search_retrival_big_data_spark import index_store
+    from multi_search_retrival_big_data_spark.queries.common import QUERY_VEC_B
+
+    emb = tables.load(spark, "embeddings", sf_dir)
+    codes = index_store.pq_codes(spark, sf_dir)
+    cents_t, book_t, codes_t = index_store.ivfpq(spark, sf_dir)
+    assign = index_store.ivf_assignments(spark, sf_dir)
+    plans = {
+        "ann_pq_adc_topk": ("msrbd_pq_", ann.ann_pq_adc_topk(emb, codes, QUERY_VEC, k=10)),
+        "batch_pq_adc_topk": (
+            "msrbd_pq_",
+            ann.batch_pq_adc_topk(emb, codes, [(0, QUERY_VEC), (1, QUERY_VEC_B)], k=10),
+        ),
+        "ann_ivfpq_adc_topk": (
+            "msrbd_ivfpq",
+            ann.ann_ivfpq_adc_topk(codes_t, cents_t, book_t, QUERY_VEC, k=10),
+        ),
+        "ann_ivf_topk": (
+            "msrbd_ivf_",
+            ann.ann_ivf_topk(emb, QUERY_VEC, k=10, round_to=6, assign=assign),
+        ),
+    }
+    for name, (table, df) in plans.items():
+        plan = _plan_of(df)
+        assert table in plan, name
+        assert "Join" not in plan, name
+        keys = set(re.findall(r"hashpartitioning\((\w+)#", plan))
+        assert keys == ({"query_id"} if name.startswith("batch") else set()), name
+        if "ivf" in name:
+            assert "PartitionFilters: [cid" in plan, name
+
+
+def test_ivf_and_pq_scorers_degenerate_inputs(spark, job_group):
+    """The IVF/PQ row of the degenerate-input contract, for every
+    scorer: a query whose width differs from the codebook's M·dsub or
+    from the centroids' raises a ValueError naming both widths; k < 0
+    raises a ValueError naming k before any Spark job; k = 0 and an
+    empty code or assignment table return no rows. A codebook with a
+    gap in its codes raises instead of indexing the wrong codeword."""
+    rows = [(i, [float(i % 3), float(-i), 1.0, 0.5]) for i in range(8)]
+    emb = tables.local_frame(spark, rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    book = tables.local_frame(
+        spark,
+        [(m, c, [float(c), float(m)]) for m in range(2) for c in range(2)],
+        "m INT, code INT, cv ARRAY<DOUBLE>",
+    )
+    codes = ann.pq_encode(emb, dim=4, m=2, ks=2, codebook=book)
+    cents = tables.local_frame(
+        spark, [(0, [0.0, 0.0, 1.0, 0.5]), (4, [1.0, -4.0, 1.0, 0.5])], "cid INT, cv ARRAY<DOUBLE>"
+    )
+    cell = (F.col("vec_id") - F.col("vec_id") % 4).alias("cid")  # stride-4 centroid ids
+    cell_codes = codes.select("*", cell.cast("int"))
+    assign = emb.select("vec_id", "embedding", cell)
+    scorers = {
+        "ann_pq_adc_topk": (
+            codes, lambda c, q, k: ann.ann_pq_adc_topk(emb, c, q, k, codebook=book)
+        ),
+        "ann_pq_rerank_topk": (
+            codes, lambda c, q, k: ann.ann_pq_rerank_topk(emb, c, q, k, codebook=book)
+        ),
+        "batch_pq_adc_topk": (
+            codes, lambda c, q, k: ann.batch_pq_adc_topk(emb, c, [(0, q)], k, codebook=book)
+        ),
+        "ann_ivfpq_adc_topk": (
+            cell_codes, lambda c, q, k: ann.ann_ivfpq_adc_topk(c, cents, book, q, k)
+        ),
+        "ann_ivf_topk": (
+            assign, lambda c, q, k: ann.ann_ivf_topk(emb, q, k, stride=4, assign=c)
+        ),
+        "batch_ivf_topk": (
+            assign, lambda c, q, k: ann.batch_ivf_topk(emb, [(0, q)], k, stride=4, assign=c)
+        ),
+    }
+    q = [0.5, -1.0, 1.0, 0.5]
+    for name, (table, score) in scorers.items():
+        assert len(score(table, q, 3).collect()) == 3, name
+        assert score(table, q, 0).collect() == [], name
+        assert score(table.limit(0), q, 3).collect() == [], name
+        mismatch = r"query dim 3 does not match (codebook|centroid) dim 4"
+        with pytest.raises(ValueError, match=mismatch):
+            score(table, q[:3], 3)
+
+        def negative_k(table=table, score=score):
+            with pytest.raises(ValueError, match=r"\bk\b"):
+                score(table, q, -1)
+
+        jobs, _ = job_group(f"test_ann/degenerate/{name}", negative_k)
+        assert jobs == 0, name
+    gappy = book.filter(F.col("code") == 0).union(
+        book.filter(F.col("code") == 1).selectExpr("m", "2 AS code", "cv")
+    )
+    with pytest.raises(ValueError, match="codes 0..KS-1"):
+        ann.ann_pq_adc_topk(emb, codes, q, 3, codebook=gappy)

@@ -84,11 +84,13 @@ def test_serving_plans_build_request_rows_in_the_driver(engine):
         assert "ExistingRDD" not in _executed_plan(df)
 
 
-def test_endpoint_jobs_and_tasks_stay_request_sized(engine, spark, sf_dir, job_group):
-    """Each endpoint request, counted in its own job group once its
-    indexes exist: no stage runs one task per postings bucket (a
-    bucketed scan of the whole index), panel runs at most 7 jobs,
-    diverse at most 5 and no localCheckpoint, text and image 2 each."""
+def test_endpoint_jobs_and_tasks_stay_request_sized(engine, job_group):
+    """Each endpoint request, counted in its own job group after the
+    engine's construction built its indexes: no stage runs one task
+    per postings bucket (a bucketed scan of the whole index), panel
+    runs at most 7 jobs, the engine's first diverse request at most 5
+    (it builds no index) and no localCheckpoint, text and image 2
+    each."""
     from multi_search_retrival_big_data_spark import index_store
     from multi_search_retrival_big_data_spark.queries.common import QUERY_VEC
     from multi_search_retrival_big_data_spark.queries.sparse_queries import QUERY_TEXT
@@ -109,7 +111,6 @@ def test_endpoint_jobs_and_tasks_stay_request_sized(engine, spark, sf_dir, job_g
             engine.text_search("anything", k=20, group=False), [1, 2], [3], k=10
         ),
     }
-    index_store.tfidf_postings(spark, sf_dir)
     runs = {
         name: job_group(f"test_api/{name}", lambda ep=ep: ep().collect())
         for name, ep in endpoints.items()

@@ -59,24 +59,27 @@ def test_real_hydration_query_is_broadcast(spark):
 
 
 def test_catches_unpruned_ivf_index_scan(spark):
-    """An IVF query whose executed plan lost its dynamic partition
-    pruning (e.g. the index table stopped being cid-partitioned) must
-    be flagged — simulated by auditing a pruning-free plan under the
-    IVF query's name."""
+    """An IVF query whose executed plan lost its static cell prune
+    (e.g. the index table stopped being cid-partitioned) must be
+    flagged — simulated by auditing a pruning-free plan under the IVF
+    query's name."""
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     plan = _plan(li.filter(F.col("l_quantity") > 10.0).select("l_orderkey"))
-    assert "index scan not dynamically pruned" in audit("ann_ivf_topk_cosine", plan)
+    assert "partition filter did not prune" in audit("ann_ivf_topk_cosine", plan)
 
 
-def test_real_ivf_query_is_dynamically_pruned(spark):
+def test_real_ivf_query_is_statically_pruned(spark):
     """ann_ivf_topk_cosine must rank straight out of the nprobe pruned
-    partitions of the co-located inverted lists — the plan carries
-    dynamicpruningexpression on the index scan and audits clean."""
+    partitions of the co-located inverted lists: the driver elects the
+    cells, so the index scan carries a static `cid IN (…)` partition
+    filter (pruned at planning time, no runtime subquery) and the plan
+    audits clean."""
     from multi_search_retrival_big_data_spark.queries import load_registry
 
     df = load_registry()["ann_ivf_topk_cosine"].fn(spark, SF)
     plan = _plan(df)
-    assert "dynamicpruningexpression" in plan.lower()
+    assert "PartitionFilters: [cid" in plan
+    assert "dynamicpruningexpression" not in plan.lower()
     assert audit("ann_ivf_topk_cosine", plan) == []
 
 

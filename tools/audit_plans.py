@@ -43,10 +43,7 @@ SCALAR_BROADCAST_OK = {
     # the quantizer assignment is precomputed — index_store.ivf_assignments)
     "ann_lsh_family_grid",   # 1-row candidates × 1-row hits scalar combine per config
     "ann_ivf_family_grid",   # same 1-row scalar combine per (variant, config)
-    "ann_pq_family_grid",    # tiny LUT crosses + 1-row scalar combines per variant
     "multimodal_audio_family_grid",  # 1-row stats × planted × found scalar combine per arm
-    "ann_ivfpq_adc_topk",     # nprobe-row probe x M.KS-row codebook LUT build
-    "ann_pq_batch_adc_topk",  # request-sized query batch fanout + LUT cross
     "dense_batch_topk_cosine",  # corpus × request-sized query batch
     "text_bigram_lm_scores",    # 1-row vocabulary-size scalar broadcast
     "tpch_q22_dormant_balance", # 1-row avg-balance threshold broadcast
@@ -80,8 +77,12 @@ HYDRATION_BROADCAST_EXPECTED = {
 # (directory-level pruning on a partitioned layout)
 PARTITION_PRUNING_EXPECTED = {
     "sink_partitioned_parquet_pruned",
-    # IVFPQ serving fast path: driver-side probe selection makes the
-    # nprobe cell prune a STATIC `cid IN (...)` partition filter
+    # IVF and IVF-PQ: the driver elects the nprobe cells
+    # (ann.elect_cells), so the cell prune is a STATIC `cid IN (...)`
+    # partition filter, pruned at planning time (only the elected
+    # cells are read, and for IVF the co-located vectors make that the
+    # ONLY data the query touches)
+    "ann_ivf_topk_cosine",
     "ann_ivfpq_adc_topk",
 }
 
@@ -109,15 +110,6 @@ WINDOW_GROUP_LIMIT_EXPECTED = {
     "group_quota_topk",  # quota rank-filter must prune per-group before the shuffle
 }
 
-# queries whose index scan MUST be pruned by a runtime probe result —
-# the plan must contain dynamicpruningexpression on the partitioned
-# index table (IVF inverted lists: only the nprobe cells are read, and
-# the co-located vectors make that the ONLY data the query touches)
-DYNAMIC_PRUNING_EXPECTED = {
-    "ann_ivf_topk_cosine",
-}
-
-
 def audit(name: str, plan: str) -> list[str]:
     flags = []
     if "CartesianProduct" in plan and name not in SCALAR_BROADCAST_OK:
@@ -141,8 +133,6 @@ def audit(name: str, plan: str) -> list[str]:
         r"PartitionFilters: \[(?!\])", plan
     ):
         flags.append("partition filter did not prune")
-    if name in DYNAMIC_PRUNING_EXPECTED and "dynamicpruningexpression" not in plan:
-        flags.append("index scan not dynamically pruned")
     if name in NO_EXCHANGE_EXPECTED and "Exchange" in plan:
         flags.append("exchange in a co-located bucketed plan")
     if name in BLOOM_FILTER_EXPECTED and "bloom_filter_agg" not in plan:
