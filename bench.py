@@ -808,14 +808,9 @@ def _run_dim_tier(spark, sf_dir: str, paths=None, grids: bool = True) -> dict:
     }
     if "ann_lsh_topk" in thunks:
         banded = index_store.emb_lsh_bands(spark, dim_dir, dim=DIM_TIER)
-        planes = ann.hyperplanes(DIM_TIER, ann.NUM_PLANES)
-        qsig = ann.signature_of(qv, planes)
-        cond = None
-        for b, qband in ann.query_bands(qsig):
-            c = (F.col("band") == b) & (F.col("bval") == F.lit(qband))
-            cond = c if cond is None else cond | c
+        _, probe = ann.band_probe([(0, qv)])
         candidates["lsh_bucket_union"] = (
-            banded.filter(cond).select("vec_id").distinct().count()
+            banded.filter(probe).select("vec_id").distinct().count()
         )
     if "ann_ivf_topk" in thunks:
         _, (probe,) = ann.elect_cells(ann.centroids(emb()), [qv], ann.IVF_NPROBE, "__cv")

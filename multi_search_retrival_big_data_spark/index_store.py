@@ -310,17 +310,15 @@ def ivf_assignments(
     corpus×centroids pass per query, the scale killer this removes).
 
     The VECTORS are co-located inside the lists, exactly as FAISS
-    IndexIVFFlat stores them: the exact-rank stage of ann_ivf_topk
-    reads (vec_id, embedding) straight out of the nprobe pruned
-    partitions and never touches the full embeddings scan — without
-    this the final rank re-probed the whole corpus to fetch vectors,
-    which at 100 TB reads 1000× more than the cells it ranks."""
+    IndexIVFFlat stores them (ann.ivf_assign returns them with the
+    cid): the exact-rank stage of ann_ivf_topk reads (vec_id,
+    embedding) straight out of the nprobe pruned partitions and never
+    touches the full embeddings scan."""
     name = _table_name("ivf", sf_dir, f"s{stride}v2", "embeddings")
 
     def build() -> None:
         emb = tables.load(spark, "embeddings", sf_dir)
-        _, assign = ann.ivf_assign(emb, stride=stride)
-        lists = assign.join(emb.select("vec_id", "embedding"), "vec_id")
+        _, lists = ann.ivf_assign(emb, stride=stride)
         _write(lists, name, ("partition", "cid"))
 
     return _materialize(spark, [name], build)[0]

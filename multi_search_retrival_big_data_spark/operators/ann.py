@@ -19,11 +19,21 @@ sequential double folds, bit-identical between the kernel's prefix
 sum and DuckDB's `list_dot_product`; see `signature_bits`).
 
 Scale notes: the signature computation is one narrow projection (no
-shuffle); candidate selection is a partition-pruned scan when the
-table is written partitioned/bucketed by a signature band; the final
-exact rank touches only candidates (TakeOrderedAndProject top-k).
-The same banding powers embedding near-duplicate *pair* mining without
-an all-pairs cross join.
+shuffle). LSH has one banding and one probe: `banded_signatures` cuts
+the signature into (id, band, bval) rows with dedup.band_cut, and
+`band_probe` turns the request's query vectors into probe rows and
+one static `band = b AND bval IN (…)` predicate (Hamming radius 0 or
+1). On the (band, bval)-partitioned index (index_store.emb_lsh_bands)
+that predicate is a planning-time partition prune; without a
+persisted banding the scorers band the corpus in the plan through the
+same function and filter it with the same predicate. The final exact
+rank touches only candidates (TakeOrderedAndProject top-k). The same
+banding powers embedding near-duplicate *pair* mining without an
+all-pairs cross join.
+
+The IVF inverted lists carry their vectors (`ivf_assign` returns
+(id, vector, cid)), so an IVF scorer ranks the probed cells where it
+reads them and never re-joins the corpus.
 
 The IVF, PQ and IVF-PQ paths (FAISS IndexIVFFlat / IndexPQ /
 IndexIVFPQ) share two driver-side steps over model state, each spelled
@@ -215,6 +225,60 @@ def query_bands(
     return [(b, sig[b * rows : (b + 1) * rows]) for b in range(bands)]
 
 
+def multiprobe_values(qband: str) -> list[str]:
+    """The query band value plus its Hamming-1 neighbors (one bit
+    flipped per position) — the standard multi-probe LSH perturbation
+    set: sign bits nearest the hyperplane are the likeliest to differ
+    for a true neighbor, so probing the 1-flip buckets recovers most
+    of the recall an extra table would buy, for zero extra index."""
+    flips = [
+        qband[:i] + ("0" if qband[i] == "1" else "1") + qband[i + 1 :]
+        for i in range(len(qband))
+    ]
+    return [qband] + flips
+
+
+def band_probe(
+    queries: Sequence[tuple[int, Sequence[float]]],
+    num_planes: int = NUM_PLANES,
+    bands: int = ANN_BANDS,
+    radius: int = 0,
+) -> tuple[list[tuple[int, int, str]], Column]:
+    """The package's one LSH probe, for every LSH scorer, grid and
+    bench count: the request's query vectors [(query_id, qvec)] →
+    ((query_id, band, bval) probe rows, predicate). Each query's
+    signature is computed in the driver (`signature_of`); band b
+    probes the query's own value at `radius` 0, and it plus its
+    Hamming-1 flips (`multiprobe_values`) at `radius` 1.
+
+    The predicate is the static `band = b AND bval IN (…)` disjunction
+    over the union of the probes, so on the (band, bval)-partitioned
+    banding (index_store.emb_lsh_bands) the planner prunes to the
+    probed partitions before the job starts — bands·(1 + radius·rows)
+    of the bands·2^rows partitions per query, never the corpus. An
+    empty request probes nothing (a false predicate)."""
+    if radius not in (0, 1):
+        raise ValueError(f"radius must be 0 or 1, got {radius}")
+    rows = num_planes // bands
+    planes = hyperplanes(len(queries[0][1]), num_planes) if queries else []
+    probes = []
+    for qid, qv in queries:
+        for b, qband in query_bands(signature_of(qv, planes), bands, rows):
+            vals = multiprobe_values(qband) if radius else [qband]
+            probes.extend((qid, b, v) for v in vals)
+    by_band: dict[int, set[str]] = {}
+    for _, b, v in probes:
+        by_band.setdefault(b, set()).add(v)
+    terms = [
+        (F.col("band") == b) & F.col("bval").isin(sorted(vals))
+        for b, vals in sorted(by_band.items())
+    ]
+    cond = terms[0] if terms else F.lit(False)
+    for t in terms[1:]:
+        cond = cond | t
+    return probes, cond
+
+
 def banded_signatures(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -223,28 +287,15 @@ def banded_signatures(
     num_planes: int = NUM_PLANES,
     bands: int = ANN_BANDS,
 ) -> DataFrame:
-    """LSH BUILD job: (id, band, bval) — one row per (vector, band).
-    Persist PARTITIONED BY (band, bval) (index_store.emb_lsh_bands)
-    and a query's band probe becomes partition pruning: it reads
-    `bands` of the `bands × 2^rows` partitions, never the corpus. This
-    is the at-rest layout the module header promises."""
-    planes = hyperplanes(dim, num_planes)
-    rows = num_planes // bands
-    sig = emb.select(F.col(id_col), signature_bits(vec_col, planes).alias("__sig"))
-    return sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.substring("__sig", b * rows + 1, rows).alias("bval"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("e"),
-    ).select(id_col, "e.band", "e.bval")
+    """LSH BUILD job: (id, band, bval) — one row per (vector, band),
+    the `signature_bits` string cut by dedup.band_cut. Persist
+    PARTITIONED BY (band, bval) (index_store.emb_lsh_bands) and a
+    query's band probe (`band_probe`) becomes partition pruning: it
+    reads `bands` of the `bands × 2^rows` partitions, never the
+    corpus. The scorers band the corpus in the plan through this same
+    function when no persisted banding is given."""
+    sig = signature_bits(vec_col, hyperplanes(dim, num_planes))
+    return dedup.band_cut(emb, sig, bands, num_planes // bands, carry=(id_col,))
 
 
 def ann_lsh_topk(
@@ -258,50 +309,45 @@ def ann_lsh_topk(
     round_to: int | None = None,
     banded: DataFrame | None = None,
     subset: DataFrame | None = None,
+    radius: int = 0,
 ) -> DataFrame:
-    """ANN top-k: keep rows sharing ≥1 signature band with the query,
-    rank candidates by exact cosine. Returns (id, score) — a strict
-    subset of the exact scan's candidate set, identical ranking within
-    it.
+    """ANN top-k: keep rows sharing ≥1 signature band with the query
+    at Hamming distance ≤ `radius`, rank candidates by exact cosine.
+    Returns (id, score) — a strict subset of the exact scan's
+    candidate set, identical ranking within it.
+
+    `radius=1` is MULTI-PROBE LSH (Lv et al., VLDB'07): each band
+    probes its own bucket plus the `rows` Hamming-1 flips
+    (`multiprobe_values`) — recall comparable to several extra hash
+    tables at the cost of probing bands·(rows+1) buckets of the SAME
+    index; at 100 TB that is the difference between widening the
+    at-rest banding table (rows × corpus) and touching a few more
+    partitions per query.
 
     `banded` is the precomputed (id, band, bval) table
     (index_store.emb_lsh_bands): candidate selection is then a
-    partition-pruned read of the query's `bands` buckets + a semi-join
-    — the per-query 16-hyperplane signature pass over the corpus
-    disappears from the plan. Without it the signature is computed
-    inline (self-contained mode).
+    partition-pruned read of the probed buckets (`band_probe`'s static
+    predicate) + a semi-join — the per-query signature pass over the
+    corpus disappears from the plan. Without it the corpus is banded
+    in the plan by `banded_signatures` (self-contained mode), and the
+    same predicate filters those rows.
 
     `subset` (an allowed-id DataFrame) makes this the FILTERED LSH
     search: the semi-join applies AFTER the bucket probe and BEFORE
     the exact-cosine rank — pre-filter semantics inside the probed
     buckets, same placement as every other filtered serving path."""
-    dim = len(query_vec)
-    planes = hyperplanes(dim, num_planes)
-    rows = num_planes // bands
-    qsig = signature_of(query_vec, planes)
-
-    if banded is not None:
-        cond = None
-        for b, qband in query_bands(qsig, bands, rows):
-            c = (F.col("band") == b) & (F.col("bval") == F.lit(qband))
-            cond = c if cond is None else cond | c
-        cand = dense.restrict_ids(
-            banded.filter(cond).select(id_col).distinct(), subset, id_col
+    _check_k(k)
+    _, probe = band_probe([(0, query_vec)], num_planes, bands, radius)
+    if banded is None:
+        emb = ensure_min_partitions(emb)  # one signature per row: CPU-bound
+        banded = banded_signatures(
+            emb, id_col, vec_col, len(query_vec), num_planes, bands
         )
-        return dense.topk_cosine(
-            emb.join(cand, id_col, "left_semi"),
-            query_vec, k, id_col, vec_col, round_to=round_to,
-        )
-    emb = ensure_min_partitions(emb)  # one signature per row: CPU-bound
-    sig = signature_bits(vec_col, planes)
-    cond = None
-    for b, qband in query_bands(qsig, bands, rows):
-        c = F.substring(F.col("__sig"), b * rows + 1, rows) == F.lit(qband)
-        cond = c if cond is None else cond | c
+    cand = dense.restrict_ids(
+        banded.filter(probe).select(id_col).distinct(), subset, id_col
+    )
     return dense.topk_cosine(
-        dense.restrict_ids(
-            emb.withColumn("__sig", sig).filter(cond), subset, id_col
-        ),
+        emb.join(cand, id_col, "left_semi"),
         query_vec, k, id_col, vec_col, round_to=round_to,
     )
 
@@ -333,90 +379,24 @@ def ann_cascade_topk(
 
     The gate probe is ONE driver-side count over the partition-pruned
     bucket read (a single long — the connected_components_auto router
-    pattern). The served branch re-reads the pruned buckets rather
-    than persisting the candidate set: the probe read touches only
-    `bands` partitions (cheap by construction), while a per-request
-    `.persist()` pins executor storage with no in-function release
-    point (the returned plan is lazy), which under concurrent serving
-    accumulates one cache entry per query — the leak, not the
-    re-read, is what hurts a serving tier. Both branches rank by the
-    identical det-rounded cosine, so the router changes WHICH rows
-    are scored, never how."""
-    dim = len(query_vec)
-    planes = hyperplanes(dim, num_planes)
-    rows = num_planes // bands
-    qsig = signature_of(query_vec, planes)
-    cond = None
-    for b, qband in query_bands(qsig, bands, rows):
-        c = (F.col("band") == b) & (F.col("bval") == F.lit(qband))
-        cond = c if cond is None else cond | c
-    cand = banded.filter(cond).select(id_col).distinct()
-    n_cand = cand.count()
-    base = emb.join(cand, id_col, "left_semi") if n_cand >= min_candidates else emb
-    return dense.topk_cosine(base, query_vec, k, id_col, vec_col, round_to=round_to)
-
-
-def multiprobe_values(qband: str) -> list[str]:
-    """The query band value plus its Hamming-1 neighbors (one bit
-    flipped per position) — the standard multi-probe LSH perturbation
-    set: sign bits nearest the hyperplane are the likeliest to differ
-    for a true neighbor, so probing the 1-flip buckets recovers most
-    of the recall an extra table would buy, for zero extra index."""
-    flips = [
-        qband[:i] + ("0" if qband[i] == "1" else "1") + qband[i + 1 :]
-        for i in range(len(qband))
-    ]
-    return [qband] + flips
-
-
-def ann_lsh_multiprobe_topk(
-    emb: DataFrame,
-    query_vec: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = NUM_PLANES,
-    bands: int = ANN_BANDS,
-    round_to: int | None = None,
-    banded: DataFrame | None = None,
-) -> DataFrame:
-    """MULTI-PROBE LSH top-k: candidates share ≥1 band with the query
-    at Hamming distance ≤ 1 (the band's own bucket plus each 1-bit
-    flip — `multiprobe_values`), ranked by exact cosine. Lv Qin et
-    al.'s multi-probe trade: recall comparable to several extra hash
-    tables at the cost of probing bands·(rows+1) buckets of the SAME
-    index — at 100 TB that is the difference between widening the
-    at-rest banding table (rows × corpus) and touching a few more
-    partitions per query. Against the persisted (band, bval)-
-    partitioned table the probe list is still a static partition-
-    pruning predicate: `bands·(rows+1)` of the `bands·2^rows`
-    partitions are read, never the corpus."""
-    dim = len(query_vec)
-    planes = hyperplanes(dim, num_planes)
-    rows = num_planes // bands
-    qsig = signature_of(query_vec, planes)
-    probes = [
-        (b, multiprobe_values(qband)) for b, qband in query_bands(qsig, bands, rows)
-    ]
-    if banded is not None:
-        cond = None
-        for b, vals in probes:
-            c = (F.col("band") == b) & F.col("bval").isin(vals)
-            cond = c if cond is None else cond | c
-        cand = banded.filter(cond).select(id_col).distinct()
-        return dense.topk_cosine(
-            emb.join(cand, id_col, "left_semi"),
-            query_vec, k, id_col, vec_col, round_to=round_to,
-        )
-    emb = ensure_min_partitions(emb)
-    sig = signature_bits(vec_col, planes)
-    cond = None
-    for b, vals in probes:
-        c = F.substring(F.col("__sig"), b * rows + 1, rows).isin(vals)
-        cond = c if cond is None else cond | c
-    return dense.topk_cosine(
-        emb.withColumn("__sig", sig).filter(cond),
-        query_vec, k, id_col, vec_col, round_to=round_to,
+    pattern). The served branch is `ann_lsh_topk`, which re-reads the
+    pruned buckets rather than persisting the candidate set: the probe
+    read touches only `bands` partitions (cheap by construction),
+    while a per-request `.persist()` pins executor storage with no
+    in-function release point (the returned plan is lazy), which under
+    concurrent serving accumulates one cache entry per query — the
+    leak, not the re-read, is what hurts a serving tier. Both branches
+    rank by the identical det-rounded cosine, so the router changes
+    WHICH rows are scored, never how. An empty banding falls back to
+    the exact scan."""
+    _check_k(k)
+    _, probe = band_probe([(0, query_vec)], num_planes, bands)
+    n_cand = banded.filter(probe).select(id_col).distinct().count()
+    if n_cand < min_candidates:
+        return dense.topk_cosine(emb, query_vec, k, id_col, vec_col, round_to=round_to)
+    return ann_lsh_topk(
+        emb, query_vec, k, id_col, vec_col, num_planes, bands,
+        round_to=round_to, banded=banded,
     )
 
 
@@ -480,21 +460,25 @@ def ivf_assign(
     `stride`-th vector (a k-means iteration would drift between
     engines; fixed sampling keeps the oracle exact while the
     partitioning math — argmin-L2 assignment, inverted lists — is the
-    real IVF shape). Returns (centroids, assignments(id, cid)).
+    real IVF shape). Returns (centroids, lists(id, vector, cid)): the
+    inverted lists carry their vectors, as FAISS IndexIVFFlat stores
+    them, so a scorer ranks a probed cell straight from its rows.
 
-    This is NOT the query path: persist the assignments cid-partitioned
-    (index_store.ivf_assignments) and pass the
-    stored table to `ann_ivf_topk(assign=...)`, which then only probes
-    and prunes. The |N|/stride centroids are collected to the driver
+    This is NOT the query path: persist the lists cid-partitioned
+    (index_store.ivf_assignments) and pass the stored table to
+    `ann_ivf_topk(assign=...)`, which then only probes and prunes. The
+    |N|/stride centroids are collected to the driver
     (kmeans.stride_init) and the assignment is `kmeans.assign_cid` — a
     narrow projection, one corpus pass at build time, no join, no
-    shuffle, zero work at query time."""
+    shuffle, zero work at query time. cid takes the id column's type."""
     cents = kmeans.stride_init(emb, id_col, vec_col, stride)
     id_type = dict(emb.dtypes)[id_col]
-    assign = emb.select(
-        F.col(id_col), kmeans.assign_cid(vec_col, cents).cast(id_type).alias("cid")
+    lists = emb.select(
+        F.col(id_col),
+        F.col(vec_col),
+        kmeans.assign_cid(vec_col, cents).cast(id_type).alias("cid"),
     )
-    return centroids(emb, id_col, vec_col, stride), assign
+    return centroids(emb, id_col, vec_col, stride), lists
 
 
 def centroids(
@@ -512,9 +496,19 @@ def centroids(
 
 
 def _check_k(k: int) -> None:
-    """The IVF/PQ scorers' check of k, made before any Spark job."""
+    """The ANN scorers' check of k, made before any Spark job."""
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
+
+
+def _check_lists(assign: DataFrame | None, vec_col: str) -> None:
+    """The IVF scorers rank the vectors co-located in the inverted
+    lists; an `assign` table without them raises, before any job."""
+    if assign is not None and vec_col not in assign.columns:
+        raise ValueError(
+            f"assign has no {vec_col!r} column: the IVF scorers rank the "
+            "vectors stored in the inverted lists (ann.ivf_assign)"
+        )
 
 
 def _l2(a: Sequence[float], b: Sequence[float]) -> float:
@@ -581,21 +575,18 @@ def ann_ivf_topk(
     lists with a static `cid IN (…)` filter, rank the cell union by
     exact cosine — the FAISS IndexIVFFlat search dataflow.
 
-    `assign` is the precomputed, cid-partitioned assignment table
+    `assign` is the precomputed, cid-partitioned inverted-list table
     (index_store.ivf_assignments); the executed plan then contains NO
     quantizer-assignment recompute and no join — only the statically
-    pruned partitions of the index.
-    When the table also carries the vectors (the (vec_id, embedding,
-    cid) layout index_store persists — FAISS stores vectors inside the
-    inverted lists), the exact-cosine rank reads them straight from the
+    pruned partitions of the index. The lists carry their vectors (the
+    (vec_id, embedding, cid) layout `ivf_assign` returns and
+    index_store persists — FAISS stores vectors inside the inverted
+    lists), so the exact-cosine rank reads them straight from the
     nprobe pruned partitions: the query touches nprobe/nlist of the
-    index and NOTHING else. Without co-located vectors the final rank
-    must semi-join the full embeddings scan to fetch them — at 100 TB
-    that second scan reads ~nlist/nprobe× more bytes than the cells
-    being ranked, so the co-located layout is the serving shape.
-    When omitted, assignment is computed inline (audit/self-contained
-    mode — a full corpus×centroids pass per query, never the serving
-    shape).
+    index and NOTHING else. An `assign` without the vector column
+    raises a ValueError before any job. When omitted, the lists are
+    computed inline (audit/self-contained mode — a full
+    corpus×centroids pass per query, never the serving shape).
 
     `subset` (an allowed-id DataFrame) makes this the FILTERED IVF
     search: the semi-join applies AFTER the cell prune and BEFORE the
@@ -606,22 +597,14 @@ def ann_ivf_topk(
     IN the assignment table (predicate pushdown into the pruned
     partitions, no join)."""
     _check_k(k)
+    _check_lists(assign, vec_col)
     _, (probe,) = elect_cells(
         centroids(emb, id_col, vec_col, stride), [query_vec], nprobe, "__cv"
     )
-    emb = ensure_min_partitions(emb)
     if assign is None:
-        _, assign = ivf_assign(emb, id_col, vec_col, stride)
-    cells = assign.filter(F.col("cid").isin(probe))
-    if vec_col in assign.columns:
-        # co-located layout: rank inside the pruned partitions
-        cand = dense.restrict_ids(cells, subset, id_col)
-        return dense.topk_cosine(cand, query_vec, k, id_col, vec_col, round_to=round_to)
-    cand_ids = dense.restrict_ids(cells.select(id_col), subset, id_col)
-    return dense.topk_cosine(
-        emb.join(cand_ids, id_col, "left_semi"),
-        query_vec, k, id_col, vec_col, round_to=round_to,
-    )
+        _, assign = ivf_assign(ensure_min_partitions(emb), id_col, vec_col, stride)
+    cand = dense.restrict_ids(assign.filter(F.col("cid").isin(probe)), subset, id_col)
+    return dense.topk_cosine(cand, query_vec, k, id_col, vec_col, round_to=round_to)
 
 
 # ---------------------------------------------------------------------------
@@ -668,39 +651,27 @@ def batch_lsh_topk(
 ) -> DataFrame:
     """Batched multi-query LSH top-k — the serving-amortization shape
     (reference batching precedent: faiss_processing.py:307-314, the
-    FAISS query-matrix search) applied to the banding table: every
-    query's band signature is
-    computed on the driver (pure Python, `signature_of`), the UNION of
-    all probed (band, bval) keys becomes ONE partition-pruning
-    predicate over the persisted banding, a request-sized
-    (query_id, band, bval) probe table tags which candidates belong to
-    which query, vectors join back once for the whole batch, and
-    per-query top-k is a window partial sort. The banding is read
-    ONCE for the batch — |union of buckets| partitions, not
-    |batch| × |buckets|.
+    FAISS query-matrix search) applied to the banding table:
+    `band_probe` turns the request's queries into (query_id, band,
+    bval) probe rows in the driver, the UNION of all probed keys is
+    ONE static partition-pruning predicate over the persisted banding
+    (or over the corpus banded in the plan when `banded` is None), the
+    request-sized probe table tags which candidates belong to which
+    query, vectors join back once for the whole batch, and per-query
+    top-k is a window partial sort. The banding is read ONCE for the
+    batch — |union of buckets| partitions, not |batch| × |buckets|.
 
-    Returns (query_id, id, score), k rows per query, descending."""
+    Returns (query_id, id, score), k rows per query, descending; an
+    empty batch returns no rows."""
+    _check_k(k)
     spark = emb.sparkSession
-    dim = len(queries[0][1])
-    planes = hyperplanes(dim, num_planes)
-    rows = num_planes // bands
-    probe_pairs = []
-    for qid, qv in queries:
-        qsig = signature_of(qv, planes)
-        probe_pairs.extend(
-            (qid, b, qband) for b, qband in query_bands(qsig, bands, rows)
-        )
-    probe_df = tables.local_frame(
-        spark, probe_pairs, "query_id INT, band INT, bval STRING"
-    )
+    probes, probe = band_probe(queries, num_planes, bands)
+    probe_df = tables.local_frame(spark, probes, "query_id INT, band INT, bval STRING")
     if banded is None:
+        dim = len(queries[0][1]) if queries else 0  # nothing probes an empty batch
         banded = banded_signatures(emb, id_col, vec_col, dim, num_planes, bands)
-    cond = None
-    for _qid, b, v in probe_pairs:
-        c = (F.col("band") == b) & (F.col("bval") == F.lit(v))
-        cond = c if cond is None else cond | c
     cand = (
-        banded.filter(cond)
+        banded.filter(probe)
         .join(F.broadcast(probe_df), ["band", "bval"])
         .select("query_id", id_col)
         .distinct()
@@ -756,8 +727,9 @@ def batch_ivf_topk(
     model (model state × request — both tiny; `elect_cells`, the
     election every IVF scorer uses), the UNION of probed cids
     becomes ONE static `cid IN (...)` pruning predicate over the
-    cid-partitioned assignment table, the (query_id, cid) probe pairs
-    restrict each query to its own cells, the request-sized query-
+    cid-partitioned inverted lists, the (query_id, cid) probe pairs
+    restrict each query to its own cells, the lists' co-located
+    vectors are ranked where they are read, the request-sized query-
     vector table broadcasts onto the candidates for exact-cosine
     scoring, and per-query top-k is a window partial sort
     (WindowGroupLimit pushes the limit map-side). Net: the whole batch
@@ -765,6 +737,7 @@ def batch_ivf_topk(
 
     Returns (query_id, id, score), k rows per query, descending."""
     _check_k(k)
+    _check_lists(assign, vec_col)
     spark = emb.sparkSession
     _, elected = elect_cells(
         centroids(emb, id_col, vec_col, stride), [qv for _, qv in queries], nprobe, "__cv"
@@ -781,10 +754,7 @@ def batch_ivf_topk(
     )
     if assign is None:
         _, assign = ivf_assign(emb, id_col, vec_col, stride)
-    pruned = assign.filter(F.col("cid").isin(all_cids))
-    cand = pruned.join(F.broadcast(probe_df), "cid")
-    if vec_col not in cand.columns:
-        cand = cand.join(emb.select(id_col, vec_col), id_col)
+    cand = assign.filter(F.col("cid").isin(all_cids)).join(F.broadcast(probe_df), "cid")
     score = cosine_sim(vec_col, "__qv")
     if round_to is not None:
         score = det_round(score, round_to)

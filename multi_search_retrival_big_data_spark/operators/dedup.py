@@ -29,6 +29,8 @@ the driver's oracle gate able to verify these operators value-for-value.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -169,6 +171,42 @@ def lsh_buckets(
     ).select(id_col, "e.band", "e.bucket")
 
 
+def band_cut(
+    rows: DataFrame,
+    bits: str | Column,
+    n: int,
+    width: int,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """The package's one bit-string banding: `bits` cut into `n` bands
+    of `width` characters → one (*carry, band, bval) row per (row,
+    band), band b's value being characters b·width+1 … (b+1)·width.
+    Every bit-string family bands through it — the embedding LSH
+    index (ann.banded_signatures, persisted by index_store), SemDeDup's
+    mega-cell sub-buckets, SimHash/dHash pair mining and the dHash
+    band-density gauges — and its (band, bval) rows are the bucket
+    keys lsh_candidate_pairs mines and ann.band_probe prunes.
+
+    `bits` is selected once under its own alias before the explode, so
+    a Python-UDF signature runs once per row, not once per band. A
+    narrow projection: no shuffle."""
+    cut = rows.select(
+        *carry, (F.col(bits) if isinstance(bits, str) else bits).alias("__bits")
+    )
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.substring("__bits", b * width + 1, width).alias("bval"),
+            )
+            for b in range(n)
+        ]
+    )
+    return cut.select(*carry, F.explode(bands).alias("__e")).select(
+        *carry, "__e.band", "__e.bval"
+    )
+
+
 def lsh_candidate_pairs(
     rows: DataFrame,
     id_col: str,
@@ -180,8 +218,9 @@ def lsh_candidate_pairs(
     (id_a < id_b) of rows that share a bucket key `keys`, each side
     carrying its `payload` columns as `<col>_a` / `<col>_b`. Every
     banded near-duplicate family calls it: MinHash (band, bucket),
-    SimHash/dHash (chunk_idx, chunk), SemDeDup cells (cid) and mega-cell
-    sub-buckets (cid, band, bval), embedding LSH (band, bval).
+    SimHash/dHash (band, bval), SemDeDup cells (cid) and mega-cell
+    sub-buckets (cid, band, bval), embedding LSH (band, bval) — every
+    (band, bval) key cut by band_cut.
 
     Spelling: one groupBy on the key collects each bucket's members as
     ONE id-sorted array L (`array_sort(collect_list(struct(id,
@@ -957,8 +996,8 @@ def _mega_cell_band_pairs(
     sub_cap: int | None = None,
 ) -> DataFrame:
     """SRP band sub-bucket pairs inside over-cap (mega) cells: sign
-    signatures over md5-derived hyperplanes, banded, and mined by
-    lsh_candidate_pairs on (cid, band, bval).
+    signatures over md5-derived hyperplanes, banded by band_cut, and
+    mined by lsh_candidate_pairs on (cid, band, bval).
 
     Two guards compose here, each against a different viral shape:
     - DISSIMILAR vectors crowding one Voronoi cell are split by the
@@ -983,25 +1022,13 @@ def _mega_cell_band_pairs(
     from multi_search_retrival_big_data_spark.operators import ann as _ann
 
     planes = _ann.hyperplanes(dim, _ann.NUM_PLANES)
-    rows = _ann.NUM_PLANES // _ann.ANN_BANDS
-    sig = mega.select(
-        F.col(cid_col), F.col(id_col), _ann.signature_bits(vec_col, planes).alias("__sig")
+    banded = band_cut(
+        mega,
+        _ann.signature_bits(vec_col, planes),
+        _ann.ANN_BANDS,
+        _ann.ANN_ROWS,
+        carry=(cid_col, id_col),
     )
-    banded = sig.select(
-        cid_col,
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.substring("__sig", b * rows + 1, rows).alias("bval"),
-                    )
-                    for b in range(_ann.ANN_BANDS)
-                ]
-            )
-        ).alias("e"),
-    ).select(cid_col, id_col, "e.band", "e.bval")
     return lsh_candidate_pairs(
         banded, id_col, sub_cap, keys=(cid_col, "band", "bval")
     )

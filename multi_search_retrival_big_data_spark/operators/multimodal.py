@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from multi_search_retrival_big_data_spark.encoders import CHECKSUM_MOD, fake_checksum
-from multi_search_retrival_big_data_spark.operators import textanalysis
+from multi_search_retrival_big_data_spark.operators import dedup, textanalysis
 
 MEDIA_TYPES = ("image", "audio", "video")
 
@@ -583,7 +583,7 @@ def dhash_fingerprints(
     persisted/banded, exactly like the MinHash signature table. If a
     production corpus still produces a viral chunk bucket (byte-true
     duplicate storms), image_near_duplicates(max_bucket=) applies the
-    bucket-pair miner's chain+star cap to the (chunk_idx, chunk)
+    bucket-pair miner's chain+star cap to the (band, bval)
     buckets.
 
     `rows`/`cols` widen the fingerprint when the band-density gauge
@@ -658,8 +658,8 @@ def image_near_duplicates(
     """Perceptual near-duplicate pairs over dHash fingerprints —
     REUSES the SimHash Hamming-band LSH verbatim (pigeonhole over
     SIMHASH_CHUNKS = 8 exact chunks guarantees 100% recall for
-    distance ≤ 7, candidates from the bucket-pair miner on
-    (chunk_idx, chunk), never all-pairs). Returns (id_a, id_b,
+    distance ≤ 7, candidates from the bucket-pair miner on the
+    (band, bval) rows of dedup.band_cut, never all-pairs). Returns (id_a, id_b,
     hamming). `bits` selects the geometry: the 64-bit / 8-bit-band
     default, or `bits=WIDE_DHASH_BITS` over dhash_fingerprints(
     rows=WIDE_DHASH_ROWS) — 128 bits in 16-bit bands. `max_bucket`
@@ -697,27 +697,17 @@ def dhash_band_density(
     max_bucket: int = DHASH_MAX_BUCKET,
 ) -> DataFrame:
     """ONE-PASS pair-budget gauge for any (chunks × width) banding of a
-    fingerprint table: per (chunk_idx, chunk) bucket size m, the
+    fingerprint table: per (band, bval) bucket size m (dedup.band_cut's
+    cut of `dhash` into `chunks` bands of `width` bits), the
     all-pairs and chain+star-capped candidate budgets — the COUNTED
     scaling variable the image family grid and the bench x10 tier read
     the banding geometry against (monitor_dhash_band_density is this
     at the default geometry). Never touches pairs, only the
     fingerprint table: one groupBy."""
-    chunked = fingerprints.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_idx"),
-                        F.substring("dhash", c * width + 1, width).alias("chunk"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("e"),
-    ).select("e.chunk_idx", "e.chunk")
-    bsz = chunked.groupBy("chunk_idx", "chunk").agg(
-        F.count(F.lit(1)).cast("bigint").alias("m")
+    bsz = (
+        dedup.band_cut(fingerprints, "dhash", chunks, width)
+        .groupBy("band", "bval")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     )
     capped = F.when(F.col("m") > max_bucket, 2 * F.col("m") - 3).otherwise(
         F.col("m") * (F.col("m") - 1) / 2

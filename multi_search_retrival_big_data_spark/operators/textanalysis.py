@@ -16,8 +16,8 @@ Scale notes:
 - SimHash near-dup pairs: 8-chunk pigeonhole banding — any two
   fingerprints within Hamming distance 7 agree exactly on at least one
   8-bit chunk, so candidates come from the bucket-pair miner
-  (dedup.lsh_candidate_pairs) on (chunk_idx, chunk_value), never an
-  all-pairs scan.
+  (dedup.lsh_candidate_pairs) on the (band, bval) chunks dedup.band_cut
+  cuts, never an all-pairs scan.
 - Winnowing: window-function MIN over a w-row frame inside each doc
   partition; one shuffle on doc_id.
 """
@@ -123,7 +123,8 @@ def simhash_near_duplicates(
     with 16-bit chunks.
 
     Candidates come from the one bucket-pair miner,
-    dedup.lsh_candidate_pairs, on (chunk_idx, chunk), with the
+    dedup.lsh_candidate_pairs, on the (band, bval) rows dedup.band_cut
+    cuts from the fingerprint (SIMHASH_CHUNKS bands), with the
     fingerprint packed into bits/32 bigint words as the payload: the
     miner groups each bucket into one member array (one exchange, one
     evaluation of the fingerprint lineage — for the image/video
@@ -147,26 +148,19 @@ def simhash_near_duplicates(
         raise ValueError(f"bits={bits} must be divisible by 32 and {SIMHASH_CHUNKS}")
     width = bits // SIMHASH_CHUNKS
     words = [f"p{w}" for w in range(bits // 32)]
-    chunked = fingerprints.select(
+    packed = fingerprints.select(
         F.col(id_col),
+        "simhash",
         *[
             F.conv(F.substring("simhash", w * 32 + 1, 32), 2, 10).cast("bigint").alias(p)
             for w, p in enumerate(words)
         ],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_idx"),
-                        F.substring("simhash", c * width + 1, width).alias("chunk"),
-                    )
-                    for c in range(SIMHASH_CHUNKS)
-                ]
-            )
-        ).alias("e"),
-    ).select(id_col, *words, "e.chunk_idx", "e.chunk")
+    )
+    banded = dedup.band_cut(
+        packed, "simhash", SIMHASH_CHUNKS, width, carry=(id_col, *words)
+    )
     cand = dedup.lsh_candidate_pairs(
-        chunked, id_col, max_bucket, keys=("chunk_idx", "chunk"), payload=tuple(words)
+        banded, id_col, max_bucket, keys=("band", "bval"), payload=tuple(words)
     )
     hamming = sum(
         F.bit_count(F.col(f"{p}_a").bitwiseXOR(F.col(f"{p}_b"))) for p in words

@@ -381,6 +381,18 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits_row(ivf, "ivf").union(hits_row(lsh, "lsh")).orderBy("method")
 
 
+def _probed_count(banded: DataFrame, qv: list, **probe) -> DataFrame:
+    """One-row `candidates` frame: the distinct ids `ann.band_probe`
+    selects from `banded` for the query `qv`."""
+    _, cond = ann.band_probe([(0, qv)], **probe)
+    return (
+        banded.filter(cond)
+        .select("vec_id")
+        .distinct()
+        .agg(F.count(F.lit(1)).alias("candidates"))
+    )
+
+
 def _band_filter_sql_for(bands: int) -> str:
     rows = ann.NUM_PLANES // bands
     return " OR ".join(
@@ -438,17 +450,11 @@ def ann_lsh_recall_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = dense.topk_cosine(emb, QUERY_VEC, k=_RECALL_K, round_to=6).select("vec_id")
 
     def cfg_row(bands: int) -> DataFrame:
-        rows = ann.NUM_PLANES // bands
-        planes = ann.hyperplanes(EMB_DIM, ann.NUM_PLANES)
-        qsig = ann.signature_of(QUERY_VEC, planes)
-        sig = emb.withColumn("__sig", ann.signature_bits("embedding", planes))
-        cond = None
-        for b, qband in ann.query_bands(qsig, bands, rows):
-            c = F.substring(F.col("__sig"), b * rows + 1, rows) == F.lit(qband)
-            cond = c if cond is None else cond | c
-        cand = sig.filter(cond)
-        n_cand = cand.agg(F.count("*").alias("candidates"))
-        topk = ann.ann_lsh_topk(emb, QUERY_VEC, k=_RECALL_K, bands=bands, round_to=6)
+        banded = ann.banded_signatures(emb, dim=EMB_DIM, bands=bands)
+        n_cand = _probed_count(banded, QUERY_VEC, bands=bands)
+        topk = ann.ann_lsh_topk(
+            emb, QUERY_VEC, k=_RECALL_K, bands=bands, round_to=6, banded=banded
+        )
         return grid_row(_RECALL_K, grid_hits(topk, exact), n_cand, bands=bands)
 
     return union_rows([cfg_row(b) for b in _GRID_BANDS]).orderBy("bands")
@@ -2068,7 +2074,7 @@ def _multiprobe_filter_sql() -> str:
     """,
 )
 def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH top-k (ann.ann_lsh_multiprobe_topk): each band
+    """Multi-probe LSH top-k (ann.ann_lsh_topk at radius=1): each band
     probes its own bucket PLUS the `rows` Hamming-1 flip buckets —
     recall comparable to extra hash tables for zero extra index, the
     multi-probe trade (Lv et al., VLDB'07). Against the persisted
@@ -2076,8 +2082,8 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruning predicate: bands·(rows+1) partitions read."""
     emb = tables.load(spark, "embeddings", sf_dir)
     banded = index_store.emb_lsh_bands(spark, sf_dir)
-    return ann.ann_lsh_multiprobe_topk(
-        emb, QUERY_VEC, k=50, round_to=6, banded=banded
+    return ann.ann_lsh_topk(
+        emb, QUERY_VEC, k=50, round_to=6, banded=banded, radius=1
     )
 
 
@@ -2127,21 +2133,12 @@ def ann_lsh_multiprobe_recall_grid(spark: SparkSession, sf_dir: str) -> DataFram
     exact = dense.topk_cosine(emb, QUERY_VEC, k=_RECALL_K, round_to=6).select(
         "vec_id"
     )
-    rows = ann.NUM_PLANES // ann.ANN_BANDS
 
     def cfg_row(level: int) -> DataFrame:
-        probes = [
-            (b, ann.multiprobe_values(qb)[: 1 + level * rows])
-            for b, qb in ann.query_bands(_QSIG)
-        ]
-        cond = None
-        for b, vals in probes:
-            c = (F.col("band") == b) & F.col("bval").isin(vals)
-            cond = c if cond is None else cond | c
-        cand = banded.filter(cond).select("vec_id").distinct()
-        n_cand = cand.agg(F.count("*").alias("candidates"))
-        fn = ann.ann_lsh_multiprobe_topk if level else ann.ann_lsh_topk
-        topk = fn(emb, QUERY_VEC, k=_RECALL_K, round_to=6, banded=banded)
+        n_cand = _probed_count(banded, QUERY_VEC, radius=level)
+        topk = ann.ann_lsh_topk(
+            emb, QUERY_VEC, k=_RECALL_K, round_to=6, banded=banded, radius=level
+        )
         return grid_row(
             _RECALL_K, grid_hits(topk, exact), n_cand, probe_level=level
         )
@@ -2505,17 +2502,12 @@ def ann_lsh_d768_tuned_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = dense.topk_cosine(wide, qv, k=_D768_K, round_to=6).select("vec_id")
 
     def cfg_row(num_planes: int, bands: int) -> DataFrame:
-        rows = num_planes // bands
-        planes = ann.hyperplanes(_D768, num_planes)
-        qsig = ann.signature_of(qv, planes)
-        sig = wide.withColumn("__sig", ann.signature_bits("embedding", planes))
-        cond = None
-        for b, qband in ann.query_bands(qsig, bands, rows):
-            c = F.substring(F.col("__sig"), b * rows + 1, rows) == F.lit(qband)
-            cond = c if cond is None else cond | c
-        cand = sig.filter(cond)
-        n_cand = cand.agg(F.count(F.lit(1)).alias("candidates"))
-        topk = dense.topk_cosine(cand, qv, k=_D768_K, round_to=6)
+        geometry = {"num_planes": num_planes, "bands": bands}
+        banded = ann.banded_signatures(wide, dim=_D768, **geometry)
+        n_cand = _probed_count(banded, qv, **geometry)
+        topk = ann.ann_lsh_topk(
+            wide, qv, k=_D768_K, round_to=6, banded=banded, **geometry
+        )
         return grid_row(
             _D768_K, grid_hits(topk, exact), n_cand,
             planes=num_planes, bands=bands,

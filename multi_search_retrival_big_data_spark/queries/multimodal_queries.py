@@ -934,7 +934,7 @@ def multimodal_image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def monitor_dhash_band_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band-density gauge for the perceptual fingerprint family — the
     measured signal that 8-bit Hamming banding is SATURATING: per
-    bucket size m, how many (chunk_idx, chunk) buckets exist and what
+    bucket size m, how many (band, bval) buckets exist and what
     pair budget they imply, uncapped vs chain+star-capped. Bucket
     population is density-bound (a fixed 256-value band space over a
     growing corpus ⇒ mean bucket size grows linearly ⇒ UNCAPPED pair
@@ -956,22 +956,15 @@ def monitor_dhash_band_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     image_near_duplicates(bits=128)), graded against this path by
     multimodal_image_family_grid — at sf0.1 it erases the saturation
     entirely (68.1k/68.1k, max bucket 38) at planted recall 1.0."""
+    from multi_search_retrival_big_data_spark.operators import dedup, textanalysis
+
+    chunks = textanalysis.SIMHASH_CHUNKS
     docs = tables.load(spark, "documents", sf_dir)
     fp = mm.dhash_fingerprints(mm.synth_keyframes(mm.as_media_table(docs)))
-    chunked = fp.select(
-        "frame_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(c).alias("chunk_idx"),
-                    F.substring("dhash", c * 8 + 1, 8).alias("chunk"),
-                )
-                for c in range(8)
-            ])
-        ).alias("e"),
-    ).select("frame_id", "e.chunk_idx", "e.chunk")
-    bsz = chunked.groupBy("chunk_idx", "chunk").agg(
-        F.count(F.lit(1)).cast("bigint").alias("m")
+    bsz = (
+        dedup.band_cut(fp, "dhash", chunks, _DH_BITS // chunks)
+        .groupBy("band", "bval")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     )
     capped_per_bucket = F.when(
         F.col("m") > mm.DHASH_MAX_BUCKET, 2 * F.col("m") - 3

@@ -81,6 +81,9 @@ def test_ivf_topk_subset_of_exact_with_same_scores(spark, sf_dir):
 def test_ivf_assignment_is_nearest_centroid(spark, sf_dir):
     emb = tables.load(spark, "embeddings", sf_dir).limit(50)
     cent, assign = ann.ivf_assign(emb)
+    # the inverted lists carry their vectors; cid takes the id type
+    assert assign.columns == ["vec_id", "embedding", "cid"]
+    assert dict(assign.dtypes)["cid"] == dict(emb.dtypes)["vec_id"] == "bigint"
     cents = {r["cid"]: r["__cv"] for r in cent.collect()}
     vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
     got = {r["vec_id"]: r["cid"] for r in assign.collect()}
@@ -327,17 +330,33 @@ def test_multiprobe_values_hamming1():
     assert len(set(vals)) == 5
 
 
-def test_multiprobe_candidates_superset_of_plain(spark, sf_dir):
-    from multi_search_retrival_big_data_spark import tables
-    from multi_search_retrival_big_data_spark.operators import ann
-    from multi_search_retrival_big_data_spark.queries.common import QUERY_VEC
+def test_lsh_inline_and_persisted_banding_agree(spark, sf_dir):
+    """The corpus banded in the plan and the persisted (band, bval)
+    table give identical (vec_id, score) rows at radius 0 and 1 and at
+    2, 4 and 8 bands — the scorers have one banding and one probe —
+    and the radius-1 candidates contain the radius-0 ones."""
+    from multi_search_retrival_big_data_spark import index_store
 
     emb = tables.load(spark, "embeddings", sf_dir)
-    plain = ann.ann_lsh_topk(emb, QUERY_VEC, k=1000, round_to=6)
-    multi = ann.ann_lsh_multiprobe_topk(emb, QUERY_VEC, k=1000, round_to=6)
-    p = {r["vec_id"] for r in plain.collect()}
-    m = {r["vec_id"] for r in multi.collect()}
-    assert p <= m  # Hamming-0 buckets are in the Hamming-<=1 probe set
+    for bands in (2, 4, 8):
+        banded = index_store.emb_lsh_bands(spark, sf_dir, bands=bands)
+        ids = {}
+        for radius in (0, 1):
+            inline, stored = (
+                [
+                    (r["vec_id"], r["score"])
+                    for r in ann.ann_lsh_topk(
+                        emb, QUERY_VEC, k=10**6, bands=bands, round_to=6,
+                        banded=b, radius=radius,
+                    ).collect()
+                ]
+                for b in (None, banded)
+            )
+            assert inline and inline == stored, (bands, radius)
+            ids[radius] = {v for v, _ in inline}
+        # Hamming-0 buckets are in the Hamming-<=1 probe set
+        assert ids[0] <= ids[1], bands
+        assert len(ids[0]) < len(ids[1]), bands
 
 
 def test_batch_ivf_matches_per_query_path(spark, sf_dir):
@@ -991,7 +1010,10 @@ def test_ivf_and_pq_scorers_degenerate_inputs(spark, job_group):
     from the centroids' raises a ValueError naming both widths; k < 0
     raises a ValueError naming k before any Spark job; k = 0 and an
     empty code or assignment table return no rows. A codebook with a
-    gap in its codes raises instead of indexing the wrong codeword."""
+    gap in its codes raises instead of indexing the wrong codeword. The
+    IVF scorers rank the vectors stored in the inverted lists, so an
+    assignment table without the vector column raises a ValueError
+    naming it before any Spark job."""
     rows = [(i, [float(i % 3), float(-i), 1.0, 0.5]) for i in range(8)]
     emb = tables.local_frame(spark, rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
     book = tables.local_frame(
@@ -1041,8 +1063,128 @@ def test_ivf_and_pq_scorers_degenerate_inputs(spark, job_group):
 
         jobs, _ = job_group(f"test_ann/degenerate/{name}", negative_k)
         assert jobs == 0, name
+        if "ivf_topk" in name:
+
+            def no_vectors(table=table, score=score):
+                with pytest.raises(ValueError, match="'embedding'"):
+                    score(table.drop("embedding"), q, 3)
+
+            jobs, _ = job_group(f"test_ann/degenerate/{name}/lists", no_vectors)
+            assert jobs == 0, name
     gappy = book.filter(F.col("code") == 0).union(
         book.filter(F.col("code") == 1).selectExpr("m", "2 AS code", "cv")
     )
     with pytest.raises(ValueError, match="codes 0..KS-1"):
         ann.ann_pq_adc_topk(emb, codes, q, 3, codebook=gappy)
+
+
+def test_lsh_scorers_degenerate_inputs(spark, job_group):
+    """The LSH row of the degenerate-input contract, for every LSH
+    scorer (radius 0 and 1, persisted and inline banding, the cascade
+    and the batch): k < 0 raises a ValueError naming k before any
+    Spark job; k = 0 and an empty corpus return no rows; an empty
+    batch returns no rows; the cascade over an empty banding falls
+    back to the exact scan."""
+    near = [(i, [0.5 + 0.01 * i, -1.0, 1.0, 0.5]) for i in range(6)]
+    far = [(6, [-0.5, 1.0, -1.0, -0.5]), (7, [-0.5, 1.0, -1.0, -0.4])]
+    emb = tables.local_frame(spark, near + far, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    banded = ann.banded_signatures(emb, dim=4)
+    q = [0.5, -1.0, 1.0, 0.5]
+    scorers = {
+        "ann_lsh_topk": lambda e, b, k: ann.ann_lsh_topk(e, q, k, banded=b),
+        "ann_lsh_topk radius=1": lambda e, b, k: ann.ann_lsh_topk(
+            e, q, k, banded=b, radius=1
+        ),
+        "ann_lsh_topk inline": lambda e, b, k: ann.ann_lsh_topk(e, q, k),
+        "ann_lsh_topk inline radius=1": lambda e, b, k: ann.ann_lsh_topk(
+            e, q, k, radius=1
+        ),
+        "ann_cascade_topk": lambda e, b, k: ann.ann_cascade_topk(
+            e, q, k, b, min_candidates=1
+        ),
+        "batch_lsh_topk": lambda e, b, k: ann.batch_lsh_topk(e, [(0, q)], k, banded=b),
+        "batch_lsh_topk inline": lambda e, b, k: ann.batch_lsh_topk(e, [(0, q)], k),
+    }
+    empty, empty_banded = emb.limit(0), banded.limit(0)
+    for name, score in scorers.items():
+        assert len(score(emb, banded, 3).collect()) == 3, name
+        assert score(emb, banded, 0).collect() == [], name
+        assert score(empty, empty_banded, 3).collect() == [], name
+
+        def negative_k(score=score):
+            with pytest.raises(ValueError, match=r"\bk\b"):
+                score(emb, banded, -1)
+
+        jobs, _ = job_group(f"test_ann/lsh_degenerate/{name}", negative_k)
+        assert jobs == 0, name
+    assert ann.batch_lsh_topk(emb, [], 3, banded=banded).collect() == []
+    assert ann.batch_lsh_topk(emb, [], 3).collect() == []
+    fallback = ann.ann_cascade_topk(emb, q, 3, empty_banded, min_candidates=1, round_to=6)
+    exact = dense.topk_cosine(emb, q, 3, round_to=6)
+    assert fallback.collect() == exact.collect()
+    with pytest.raises(ValueError, match="radius"):
+        ann.ann_lsh_topk(emb, q, 3, banded=banded, radius=2)
+
+
+def test_one_lsh_banding_and_probe_in_package():
+    """One LSH banding and one band probe on the Spark side of the
+    package and bench.py: a bit string is exploded into bands only in
+    `dedup.band_cut`, and a band/bval predicate is built only in
+    `ann.band_probe`. A band explode is an explode whose argument
+    takes a substring; a probe predicate is any `F.col("band")` or
+    `F.col("bval")`; no `__sig` column is cut by substring anywhere.
+    The DuckDB oracle SQL is string data, not Spark code, so the
+    builders in queries/ are not flagged."""
+    import ast
+    import pathlib
+
+    import multi_search_retrival_big_data_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = {p.relative_to(root).as_posix(): p for p in root.rglob("*.py")}
+    files["../bench.py"] = root.parent / "bench.py"
+    allowed = {
+        "band explode": ("operators/dedup.py", "band_cut"),
+        "probe predicate": ("operators/ann.py", "band_probe"),
+    }
+
+    def called(call: ast.Call) -> str | None:
+        f = call.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    def kinds(call: ast.Call):
+        name = called(call)
+        sub = {"substring", "substr"}
+        if "explode" in (name or "") and any(
+            isinstance(n, ast.Call) and called(n) in sub
+            for a in call.args
+            for n in ast.walk(a)
+        ):
+            yield "band explode"
+        if name == "col" and any(
+            isinstance(a, ast.Constant) and a.value in ("band", "bval") for a in call.args
+        ):
+            yield "probe predicate"
+        if name in sub and any(
+            isinstance(n, ast.Constant) and n.value == "__sig" for n in ast.walk(call)
+        ):
+            yield "__sig substring"
+
+    found = []
+
+    def visit(node: ast.AST, rel: str, fn: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if fn is None and isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if isinstance(child, ast.Call):
+                found.extend(
+                    f"{rel}:{child.lineno} {kind} in {inner}"
+                    for kind in kinds(child)
+                    if allowed.get(kind) != (rel, inner)
+                )
+            visit(child, rel, inner)
+
+    for rel, path in sorted(files.items()):
+        visit(ast.parse(path.read_text()), rel, None)
+    assert found == []

@@ -84,6 +84,14 @@ PARTITION_PRUNING_EXPECTED = {
     # ONLY data the query touches)
     "ann_ivf_topk_cosine",
     "ann_ivfpq_adc_topk",
+    # LSH: ann.band_probe's static `band = b AND bval IN (...)`
+    # predicate prunes the (band, bval)-partitioned banding at planning
+    # time, at radius 0 and 1, filtered, batched and behind the cascade
+    "ann_lsh_topk_cosine",
+    "ann_lsh_multiprobe_topk",
+    "ann_lsh_filtered_topk",
+    "ann_lsh_batch_topk",
+    "ann_cascade_topk_pruned",
 }
 
 # queries whose whole plan must be Exchange-free: every input reads
